@@ -228,14 +228,6 @@ object Dedup {
             .map(j => element_at(col("sig"), j + 1)): _*).as("bkey"))
       }: _*)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    // Same-bucket pairs explode from a per-bucket sorted doc list
-    // (i < j ⇒ doc_a < doc_b) — ONE band exchange and ONE signature
-    // pass. The old l⋈r self-join recomputed the full MinHash
-    // signature pipeline on each join side (2 corpus scans + 2 sig
-    // passes, plans/r21/dedup_minhash_before.txt) and shuffled the
-    // band rows twice. Bucket lists stay small by LSH design (a band
-    // collision IS the rarity being hunted); the pair fan-out per
-    // bucket is the same candidate set the join produced.
     // The pair join stays a JOIN (broadcast/hash-distributed, so a hot
     // band bucket's k² candidate probes spread across every task of
     // the probe side — a groupBy+in-bucket-pair-explode funnels the

@@ -5,7 +5,10 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, In,
+  LessThanOrEqual}
 
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
@@ -425,7 +428,7 @@ final case class Snapshot(version: Long, parent: Long, operation: String,
     * (see [[GraftPrune.segMayMatch]] for the soundness argument). At
     * 1M files a point lookup on the layout key plans from the
     * handful of overlapping segments instead of ~2k pool reads. */
-  def prunedFiles(filters: Seq[org.apache.spark.sql.sources.Filter])
+  def prunedFiles(filters: Seq[Filter])
       : Seq[DataFile] = files match {
     case sf: SegmentedFiles if filters.nonEmpty =>
       val live = sf.segs.filter(s =>
@@ -763,88 +766,60 @@ final class LogTable private (val spark: SparkSession, val root: String,
     if (keep.isEmpty) emptyLike() else readLive(snap, keep)
   }
 
-  /** Column-stats file skipping (Iceberg's min/max pruning): rows with
-    * `column` in [lo, hi], scanning ONLY the data files whose manifest
-    * [min, max] range overlaps the window. Files without recorded
-    * stats for the column are conservatively scanned. The residual
-    * row-level filter still applies (file-level pruning is necessarily
-    * coarser than row-level) — so the result is exact while the I/O is
-    * proportional to the files that can actually contain matches. On a
-    * time-ordered log table at 100 TB this is what turns "last hour"
-    * into a handful-of-files scan with zero data I/O spent planning. */
-  def readRange(column: String, lo: Long, hi: Long): DataFrame = {
+  /** The current snapshot and the files `filters` (built from that
+    * snapshot, so its transforms apply) cannot rule out. */
+  private def pruned(filters: Snapshot => Seq[Filter]): (Snapshot, Seq[DataFile]) = {
     val snap = snapshot() // ONE read: file list and schema must pair up
-    val keep = prunedByRange(snap, column, lo, hi)
-    import org.apache.spark.sql.functions.col
-    val base = if (keep.isEmpty) emptyLike()
-      else readLive(snap, keep)
+    (snap, snap.prunedFiles(filters(snap)))
+  }
+
+  /** The typed reads' one body: the [[pruned]] files, read
+    * delete-aware, then the exact row-level `residual`. */
+  private def readPruned(filters: Snapshot => Seq[Filter],
+      residual: Option[Column] = None): DataFrame = {
+    val (snap, keep) = pruned(filters)
+    val base = if (keep.isEmpty) emptyLike() else readLive(snap, keep)
     // a never-committed table has no schema to resolve the residual
     // filter against — its empty frame is already the right answer;
     // on a table WITH a schema a bad column name still fails loudly
-    if (base.columns.isEmpty) base
-    else base.filter(col(column) >= lo && col(column) <= hi)
+    residual match {
+      case Some(r) if base.columns.nonEmpty => base.filter(r)
+      case _ => base
+    }
   }
 
-  /** Files pruned-in by a [lo, hi] window on `column` — exposed so
-    * tests (and operators) can assert skipping actually happened. */
+  private def within(column: String, lo: Any, hi: Any): Seq[Filter] =
+    Seq(GreaterThanOrEqual(column, lo), LessThanOrEqual(column, hi))
+
+  /** Rows with `column` in [lo, hi], opening only the files the
+    * manifest cannot rule out. The typed reads (this, [[readPoint]],
+    * [[readBuckets]], [[readRangeStr]], [[readPointStr]]) and their
+    * `files*` twins prune through [[Snapshot.prunedFiles]], the same
+    * evaluator as the SQL/DSv2 scan: column stats, identity and
+    * hidden-transform directory keys, dictionary value sets and
+    * segment summaries (only segments that can match are loaded). A
+    * file is skipped only when that metadata proves no row in it
+    * matches, and the residual row filter keeps the result exact. On
+    * a time-ordered log table this turns "last hour" into a
+    * handful-of-files scan with zero data I/O spent planning. */
+  def readRange(column: String, lo: Long, hi: Long): DataFrame =
+    readPruned(_ => within(column, lo, hi),
+      Some(col(column) >= lo && col(column) <= hi))
+
+  /** Files a [lo, hi] window on `column` opens — exposed so tests (and
+    * operators) can assert skipping actually happened. */
   def filesInRange(column: String, lo: Long, hi: Long): Seq[DataFile] =
-    prunedByRange(snapshot(), column, lo, hi)
+    pruned(_ => within(column, lo, hi))._2
 
-  private def prunedByRange(snap: Snapshot, column: String,
-      lo: Long, hi: Long): Seq[DataFile] = {
-    // two independent pruning axes, both from manifest metadata only:
-    // per-file column stats, and — on hidden-partitioned tables — the
-    // MONOTONIC transforms' derived directory keys (hour/day/truncate
-    // ranges map [lo, hi] to [derive(lo), derive(hi)]). A file missing
-    // either signal is conservatively scanned, never wrongly skipped.
-    val monos = hiddenBy.filter(t => t.monotonic && t.source == column)
-    snap.files.filter { f =>
-      val statsHit = f.ranges.get(column) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-      statsHit && monos.forall { t =>
-        f.partitions.get(t.colName) match {
-          case Some(v) => v.toLong >= t.derive(lo) && v.toLong <= t.derive(hi)
-          case None => true
-        }
-      }
-    }
-  }
+  /** Rows with `column` = `value`, pruned like [[readRange]] (the
+    * SQL/DSv2 scan's evaluator). On a `bucket(n, user_id)`-laid table
+    * this is the "all activity of user X" query at 1/n of the I/O. */
+  def readPoint(column: String, value: Long): DataFrame =
+    readPruned(_ => Seq(EqualTo(column, value)), Some(col(column) === value))
 
-  /** Point lookup pruned through EVERY manifest signal — column
-    * stats, monotonic hidden transforms, and hash-BUCKET transforms
-    * (the one pruning a bucket layout exists for: only the key's
-    * bucket directory is opened, 1/n of the table regardless of value
-    * order). Residual filter keeps the result exact. On a
-    * `bucket(n, user_id)`-laid 100 TB table this is the "all activity
-    * of user X" query at 1/n of the I/O with zero planning scans. */
-  def readPoint(column: String, value: Long): DataFrame = {
-    val snap = snapshot()
-    val keep = prunedForPoint(snap, column, value)
-    import org.apache.spark.sql.functions.col
-    val base = if (keep.isEmpty) emptyLike()
-      else readLive(snap, keep)
-    if (base.columns.isEmpty) base else base.filter(col(column) === value)
-  }
-
-  /** Files a point lookup must open — exposed so specs can assert the
-    * bucket pruning actually happened. */
+  /** Files a point lookup must open. */
   def filesForPoint(column: String, value: Long): Seq[DataFile] =
-    prunedForPoint(snapshot(), column, value)
-
-  private def prunedForPoint(snap: Snapshot, column: String,
-      value: Long): Seq[DataFile] = {
-    val buckets = hiddenBy.filter(t => !t.monotonic && t.source == column)
-    prunedByRange(snap, column, value, value).filter { f =>
-      buckets.forall { t =>
-        f.partitions.get(t.colName) match {
-          case Some(v) => v.toLong == t.derive(value)
-          case None => true
-        }
-      }
-    }
-  }
+    pruned(_ => Seq(EqualTo(column, value)))._2
 
   /** BUCKET-SET read for probe joins (the continuous-ingest band
     * index's pruning lever): on a table laid out by a bucket
@@ -852,99 +827,46 @@ final class LogTable private (val spark: SparkSession, val root: String,
     * directory value is in `bucketIds` — an arriving batch's own
     * bucket footprint, so a probe's I/O scales with the BATCH, not
     * with the index it probes. No residual filter: callers JOIN on
-    * the key (the join is the exact filter); files without a
-    * recorded bucket value are conservatively included. On a table
-    * without a bucket layout this degrades to a full read (pruning
-    * is a layout property, never a correctness one). */
-  def readBuckets(column: String, bucketIds: Set[Long]): DataFrame = {
-    val snap = snapshot()
-    val keep = prunedForBuckets(snap, column, bucketIds)
-    if (keep.isEmpty) emptyLike() else readLive(snap, keep)
-  }
+    * the key (the join is the exact filter). Pruned like
+    * [[readRange]] (the SQL/DSv2 scan's evaluator), as an `In` over
+    * each bucket transform's directory key; on a table without a
+    * bucket layout this degrades to a full read (pruning is a layout
+    * property, never a correctness one). */
+  def readBuckets(column: String, bucketIds: Set[Long]): DataFrame =
+    readPruned(bucketFilters(_, column, bucketIds))
 
-  /** Files a bucket-set probe must open — exposed so specs can assert
-    * the pruning actually bounded the I/O. */
+  /** Files a bucket-set probe must open. */
   def filesForBuckets(column: String, bucketIds: Set[Long]): Seq[DataFile] =
-    prunedForBuckets(snapshot(), column, bucketIds)
+    pruned(bucketFilters(_, column, bucketIds))._2
 
-  private def prunedForBuckets(snap: Snapshot, column: String,
-      bucketIds: Set[Long]): Seq[DataFile] = {
-    val buckets = hiddenBy.filter(t =>
-      !t.monotonic && t.source.equalsIgnoreCase(column))
-    snap.files.filter(f => buckets.forall { t =>
-      f.partitions.get(t.colName) match {
-        case Some(v) => v.toLongOption.forall(bucketIds.contains)
-        case None => true
-      }
-    })
-  }
+  private def bucketFilters(snap: Snapshot, column: String,
+      bucketIds: Set[Long]): Seq[Filter] =
+    snap.transforms.filter(t => !t.monotonic && t.source.equalsIgnoreCase(column))
+      .map(t => In(t.colName, bucketIds.toArray[Any]))
 
   /** [[readRange]] for STRING columns: rows with `column` in the
-    * CLOSED lexical interval [lo, hi], opening only files whose
-    * manifest string bounds overlap it. A dictionary-ish log column
-    * (op name, event type, language, ...) clustered by recluster()
-    * prunes to the few files holding the wanted values; files without
-    * recorded bounds are conservatively scanned and the residual
-    * filter keeps the result exact either way. Point lookups are
-    * `readRangeStr(c, v, v)`. */
-  def readRangeStr(column: String, lo: String, hi: String): DataFrame = {
-    val snap = snapshot()
-    val keep = prunedByRangeStr(snap, column, lo, hi)
-    import org.apache.spark.sql.functions.col
-    val base = if (keep.isEmpty) emptyLike()
-      else readLive(snap, keep)
-    if (base.columns.isEmpty) base
-    else base.filter(col(column) >= lo && col(column) <= hi)
-  }
+    * CLOSED lexical interval [lo, hi], pruned like [[readRange]] (the
+    * SQL/DSv2 scan's evaluator). A dictionary-ish log column (op name,
+    * event type, language, ...) clustered by recluster() prunes to the
+    * few files holding the wanted values. */
+  def readRangeStr(column: String, lo: String, hi: String): DataFrame =
+    readPruned(_ => within(column, lo, hi),
+      Some(col(column) >= lo && col(column) <= hi))
 
-  /** Files pruned-in by a lexical [lo, hi] window on string `column`. */
+  /** Files a lexical [lo, hi] window on string `column` opens. */
   def filesInRangeStr(column: String, lo: String, hi: String): Seq[DataFile] =
-    prunedByRangeStr(snapshot(), column, lo, hi)
+    pruned(_ => within(column, lo, hi))._2
 
-  /** [[readPoint]] for STRING columns: every manifest signal a string
-    * point lookup can use — per-file string stats, recorded value
-    * sets, AND mbucket hidden transforms over the column (Iceberg's
-    * UTF-8 bucket: only the key's bucket directory opens, 1/n of the
-    * table regardless of value order — the "all rows of doc X" query
-    * on a string-keyed 100 TB corpus). Residual filter keeps the
-    * result exact. */
-  def readPointStr(column: String, value: String): DataFrame = {
-    val snap = snapshot()
-    val keep = prunedForPointStr(snap, column, value)
-    import org.apache.spark.sql.functions.col
-    val base = if (keep.isEmpty) emptyLike()
-      else readLive(snap, keep)
-    if (base.columns.isEmpty) base else base.filter(col(column) === value)
-  }
+  /** [[readPoint]] for STRING columns, pruned like [[readRange]] (the
+    * SQL/DSv2 scan's evaluator): on an `mbucket(n, doc_id)`-laid
+    * corpus only the key's bucket directory opens, 1/n of the table
+    * regardless of value order. */
+  def readPointStr(column: String, value: String): DataFrame =
+    readPruned(_ => Seq(EqualTo(column, value)), Some(col(column) === value))
 
-  /** Files a string point lookup must open — exposed so specs can
-    * assert the bucket pruning actually happened. */
+  /** Files a string point lookup must open. */
   def filesForPointStr(column: String, value: String): Seq[DataFile] =
-    prunedForPointStr(snapshot(), column, value)
-
-  private def prunedForPointStr(snap: Snapshot, column: String,
-      value: String): Seq[DataFile] = {
-    val buckets = hiddenBy.filter(t =>
-      t.kind == "mbucket" && t.source.equalsIgnoreCase(column))
-    prunedByRangeStr(snap, column, value, value).filter { f =>
-      f.valueSets.find(_._1.equalsIgnoreCase(column))
-        .forall(_._2.contains(value)) &&
-      buckets.forall { t =>
-        f.partitions.get(t.colName) match {
-          case Some(v) => v.toLongOption.forall(_ == t.deriveStr(value))
-          case None => true
-        }
-      }
-    }
-  }
-
-  private def prunedByRangeStr(snap: Snapshot, column: String,
-      lo: String, hi: String): Seq[DataFile] =
-    snap.files.filter(f =>
-      f.strRanges.get(column) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      })
+    pruned(_ => Seq(EqualTo(column, value)))._2
 
   /** Incremental read (Iceberg's incremental append scan): the rows
     * ADDED between `fromVersion` (exclusive) and `toVersion`

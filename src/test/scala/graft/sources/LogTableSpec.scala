@@ -985,6 +985,24 @@ class LogTableSpec extends SparkSpec {
       .forall(_.partitions("_p_ts_us_hour") === "0") === true)
   }
 
+  test("hidden partitioning: a null hour(ts_us) directory neither breaks nor widens typed range reads") {
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("lt_hidden_null_").toString
+    val t = LogTable(spark, dir, hiddenBy = Seq(graft.sources.Transform.hour("ts_us")))
+    val hourUs = 3600000000L
+    t.append(Seq((1L, Some(10L)), (2L, Some(2L * hourUs)), (3L, None: Option[Long]))
+      .toDF("id", "ts_us"))
+    // the null row lands in the null directory
+    assert(t.snapshot().files.exists(
+      _.partitions.get("_p_ts_us_hour").contains("__HIVE_DEFAULT_PARTITION__")))
+    val viaSource = spark.read.format("graft").load(dir)
+      .filter(col("ts_us") >= 0L && col("ts_us") <= hourUs).count()
+    assert(viaSource === 1L)
+    assert(t.readRange("ts_us", 0L, hourUs).count() === viaSource)
+    val kept = t.filesInRange("ts_us", 0L, hourUs)
+    assert(kept.map(_.partitions("_p_ts_us_hour")) === Seq("0"))
+  }
+
   test("hidden partitioning: year/month calendar ordinals — whole domain incl. pre-1970, write/derive parity, pruning") {
     import org.apache.spark.sql.functions.col
     val day = 86400000000L

@@ -305,6 +305,15 @@ class SegmentedManifestSpec extends SparkSpec {
       // unrecognized filter shape: absence of leverage loads EVERYTHING
       assert(freshSnap().prunedFiles(Seq(Not(EqualTo("k", "a")))).size === 6)
       assert(cio.segReads.size === 3, "an unusable filter must keep all segments")
+      // the LogTable typed-read API plans through the same summaries
+      def freshApi(): LogTable = { freshSnap(); LogTable(spark, root.toString, io = cio) }
+      assert(freshApi().filesInRange("ts_us", 2 * 86400000000L, Long.MaxValue).size === 2)
+      assert(cio.segReads.size === 1,
+        s"filesInRange must load exactly one segment, read: ${cio.segReads}")
+      val kA = freshApi().filesInRangeStr("k", "a", "a")
+      assert(kA.size === 2 && kA.forall(_.partitions("k") == "a"))
+      assert(cio.segReads.size === 1,
+        s"filesInRangeStr must load exactly one segment, read: ${cio.segReads}")
     }
   }
 

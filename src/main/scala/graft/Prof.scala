@@ -4,11 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Optimization-round measurement harness (guide §1: measure first).
-  * Times LABELED PHASES of the expensive lifecycle queries and counts
-  * the Spark jobs each phase schedules, so optimization targets the
-  * measured cost, not a guess. Never run by the driver; results land
-  * on stdout only. Usage:
-  *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Prof near"
+  * Times one driver query (two passes) and counts the Spark jobs it
+  * schedules, or dumps formatted plans with `explain:<q1,q2>`. Never
+  * run by the driver; results land on stdout only. Usage:
+  *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Prof pipeline_ingest_near"
   */
 object Prof {
   @volatile private var jobs = 0
@@ -39,7 +38,7 @@ object Prof {
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.all.foreach(t => Tables(spark, sfDir, t).count())
 
-    val what = args.headOption.getOrElse("near")
+    val what = args.headOption.getOrElse("pipeline_ingest_near")
     // plan evidence: `explain:<q1,q2>` writes plans/r21/<q>_<suffix>.txt
     // (`.explain("formatted")` text; suffix from GRAFT_PLAN_SUFFIX,
     // default "before") for the brief's before/after plan dumps
@@ -60,278 +59,10 @@ object Prof {
     }
     (1 to 2).foreach { round =>
       println(s"== pass $round ==")
-      what match {
-        case "near" => profNear(spark, sfDir)
-        case "apilog" => profApiLog(spark, sfDir)
-        case "ice" => profIce(spark, sfDir)
-        case "ingest" => profIngest(spark, sfDir)
-        case "lake" => profLake(spark, sfDir)
-        case q =>
-          phase(q) {
-            SparkEntry.queries(q)(spark, sfDir)
-              .queryExecution.toRdd.count()
-          }
-          ()
+      phase(what) {
+        SparkEntry.queries(what)(spark, sfDir).queryExecution.toRdd.count()
       }
     }
     spark.stop()
-  }
-
-  private def profNear(s: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.Pipeline
-    val work = graft.Scratch.dir("graft_prof_requeue_")
-    val st = Pipeline.nearDedupState(s, work)
-    val dp = phase("nearSigFrame+persist") {
-      val d = Pipeline.nearSigFrame(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      d.count()
-      d
-    }
-    (0L until 3L).foreach { b =>
-      // the step body, phase by phase (mirrors ingestNearStep exactly)
-      val batch0 = dp.filter(pmod(col("doc_id"), lit(3L)) === b)
-      val (fates0, release) = Pipeline.nearFates(st, batch0)
-      val fate = fates0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      phase(s"b$b fates+count") { fate.count() }
-      release()
-      val survivors = fate.filter(col("fate") === "kept")
-      phase(s"b$b fateLog.append") {
-        st.fateLog.append(
-          Pipeline.fateLogRows(fate, Seq("near_dup")).coalesce(4))
-      }
-      phase(s"b$b table.append") {
-        st.table.append(survivors
-          .select(col("doc_id"), col("digest"), col("source")).coalesce(4))
-      }
-      phase(s"b$b bands.append") {
-        st.bands.append(Pipeline.nearBandRows(survivors).coalesce(4))
-      }
-      phase(s"b$b mv.refresh") { st.mv.refresh() }
-      fate.unpersist()
-    }
-    dp.unpersist()
-    val cond = pmod(col("doc_id"), lit(7L)) === 0L || col("doc_id") >= 1000000L
-    phase("  del table.deleteMor") { st.table.deleteMor(cond) }
-    phase("  del bands.deleteMor") { st.bands.deleteMor(cond) }
-    phase("  del mv.refreshOrFull") { st.mv.refreshOrFull() }
-    // requeueStep interior, phase by phase (mirrors the body)
-    locally {
-      import org.apache.spark.storage.StorageLevel
-      val fl = st.fateLog.read()
-      val resolved = fl
-        .filter(col("fate").isin("requeued", "requeue_exact"))
-        .select(col("doc_id"))
-      val q = fl.filter(col("fate") === "near_dup")
-        .join(resolved, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("source"), col("digest"), col("sigs"),
-          col("len"))
-      val (fates0, release) = Pipeline.nearFates(st, q)
-      val fate = fates0
-        .withColumn("fate",
-          when(col("fate") === "kept", lit("requeued"))
-            .when(col("fate") === "exact_dup", lit("requeue_exact"))
-            .otherwise(lit("requeue_near")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      phase("  rq fates+count") { fate.count() }
-      release()
-      val survivors = fate.filter(col("fate") === "requeued")
-      phase("  rq fateLog.append") {
-        st.fateLog.append(Pipeline.fateLogRows(fate,
-          Seq("requeued", "requeue_exact", "requeue_near")).coalesce(4))
-      }
-      phase("  rq table.append") {
-        st.table.append(survivors
-          .select(col("doc_id"), col("digest"), col("source")).coalesce(4))
-      }
-      phase("  rq bands.append") {
-        st.bands.append(Pipeline.nearBandRows(survivors).coalesce(4))
-      }
-      phase("  rq mv.refresh") { st.mv.refresh() }
-      fate.unpersist()
-    }
-    phase("final census") {
-      st.fateLog.read()
-        .groupBy(col("source"), col("fate"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("source"), col("fate"))
-        .queryExecution.toRdd.count()
-    }
-    ()
-  }
-
-  private def profApiLog(s: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.ApiLog
-    import graft.sources.{LogTable, MarkerCommit, Transform}
-    // lifecycle body, phase by phase
-    locally {
-      val tmp = graft.Scratch.dir("graft_prof_api_life_")
-      val buffer = tmp.resolve("buffer").toString
-      val ckpt = tmp.resolve("ckpt").toString
-      val root = tmp.resolve("table").toString
-      val frame = ApiLog.apiFrame(s, dir)
-      val countLimit = phase("life frame.count") {
-        math.max(1L, frame.count() / 8L).toInt
-      }
-      val flushed = ApiLog.flushBuffer(frame, "node", "time",
-        countLimit, intervalUs = 10L * 86400000000L)
-      phase("life buffer write") {
-        flushed.write.partitionBy("_flush").parquet(buffer)
-      }
-      val table = LogTable(s, root, hiddenBy = Seq(Transform.day("time")))
-      phase("life stream commit loop") {
-        val stream = s.readStream.schema(flushed.schema)
-          .option("maxFilesPerTrigger", 2).parquet(buffer)
-          .drop("_flush")
-        graft.streaming.Streams.streamIngest(stream, table, ckpt)
-          .awaitTermination()
-      }
-      phase("life catalogFold") {
-        ApiLog.catalogFold(s, table).queryExecution.toRdd.count()
-      }
-      ()
-    }
-    // markers body, phase by phase
-    locally {
-      import java.nio.file.Files
-      val tmp = graft.Scratch.dir("graft_prof_api_mark_")
-      val buffer = tmp.resolve("buffer").toString
-      val root = tmp.resolve("table").toString
-      val frame = ApiLog.apiFrame(s, dir)
-      val countLimit = math.max(1L, frame.count() / 8L).toInt
-      val flushed = ApiLog.flushBuffer(frame, "node", "time",
-        countLimit, intervalUs = 10L * 86400000000L)
-      phase("mark buffer write") {
-        flushed.write.partitionBy("_flush").parquet(buffer)
-      }
-      val table = LogTable(s, root, hiddenBy = Seq(Transform.day("time")))
-      table.declareSchema(flushed.drop("_flush").schema)
-      val flushDirs = scala.util.Using.resource(
-          Files.list(tmp.resolve("buffer"))) { ls =>
-        import scala.jdk.CollectionConverters._
-        ls.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("_flush=")).toSeq.sorted
-      }
-      phase(s"mark flush+stage x${flushDirs.size}") {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        Await.result(Future.traverse(flushDirs) { fd => Future {
-          MarkerCommit.flush(table,
-            s.read.schema(flushed.drop("_flush").schema)
-              .parquet(s"$buffer/$fd"))
-        }}, Duration.Inf)
-        ()
-      }
-      phase("mark leader round 1") {
-        MarkerCommit.runOnce(s, root, maxMarkers = 4)
-      }
-      phase("mark leader round 2") {
-        MarkerCommit.runOnce(s, root, maxMarkers = 4)
-      }
-      phase("mark leader rounds rest") {
-        var i = 0
-        while (MarkerCommit.pending(root).nonEmpty) {
-          i += 1
-          val r = phase(s"  drain round $i") {
-            MarkerCommit.runOnce(s, root, maxMarkers = 4)
-          }
-          println(s"[prof]   drain round $i -> $r")
-        }
-      }
-      phase("mark leader round noop") {
-        MarkerCommit.runOnce(s, root, maxMarkers = 4)
-      }
-      phase("mark catalogFold") {
-        ApiLog.catalogFold(s, table).queryExecution.toRdd.count()
-      }
-      ()
-    }
-    ()
-  }
-
-  /** pipeline_ingest_dedup body, phase by phase (mirrors ingestDedupLoop). */
-  private def profIngest(s: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.Pipeline
-    val work = graft.Scratch.dir("graft_prof_ingest_")
-    val d = Tables(s, dir, "documents")
-      .select(col("doc_id"), col("source"), md5(col("text")).as("digest"))
-    val table = graft.sources.LogTable(s, work.resolve("t").toString)
-    val mv = graft.sources.MaterializedView(s, table,
-      work.resolve("mv").toString, keyCols = Seq("digest"),
-      aggs = Seq(graft.sources.MvAgg.Count("n")))
-    val dp = phase("ingest pin d") {
-      val p = d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count(); p
-    }
-    (0L until 3L).foreach { b =>
-      val batch = dp.filter(pmod(col("doc_id"), lit(3L)) === b)
-      val survivors0 = Pipeline.ingestSurvivors(table, mv, batch)
-      val survivors = survivors0.withColumn("min_id",
-          min(col("doc_id")).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("digest"))))
-        .filter(col("doc_id") === col("min_id"))
-      phase(s"b$b append") {
-        table.append(survivors
-          .select(col("doc_id"), col("digest"), col("source")).coalesce(4))
-      }
-      phase(s"b$b mv.refresh") { mv.refresh() }
-    }
-    dp.unpersist()
-    phase("final census") {
-      table.read().groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          min(col("doc_id")).cast("long").as("first_id"),
-          max(col("doc_id")).cast("long").as("last_id"))
-        .orderBy(col("source")).queryExecution.toRdd.count()
-    }
-    ()
-  }
-
-  /** lake_iceberg body, phase by phase (mirrors Lakehouse.lakeIceberg). */
-  private def profIce(s: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.sources.{IcebergExport, IcebergImport, IcebergRead, LogTable, Transform}
-    val tmp = graft.Scratch.dir("graft_prof_ice_").toString
-    val table = LogTable(s, tmp, partitionBy = Seq("event_type"),
-      hiddenBy = Seq(Transform.day("ts_us")))
-    val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
-      col("event_type"), col("value"), col("ts_us"))
-    phase("ice append even") {
-      table.append(ev.filter(pmod(col("event_id"), lit(2)) === 0)) }
-    phase("ice renameColumn") { table.renameColumn("value", "amount") }
-    phase("ice append odd") {
-      table.append(ev.filter(pmod(col("event_id"), lit(2)) === 1)
-        .withColumnRenamed("value", "amount")) }
-    phase("ice deleteEq") {
-      table.deleteEq(ev.filter(col("event_type") === "error")
-        .select(col("event_id"))) }
-    val dest = graft.Scratch.dir("graft_prof_ice_out_").toString
-    phase("ice export") { IcebergExport.export(table, dest) }
-    def agg(df: org.apache.spark.sql.DataFrame) = df
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"),
-        graft.Cols.asDouble(sum(graft.Cols.money(col("amount")))).as("t"))
-    phase("ice spec read agg") {
-      agg(IcebergRead.read(s, dest)).queryExecution.toRdd.count() }
-    val imp = phase("ice import") {
-      IcebergImport.importTable(s, dest,
-        graft.Scratch.dir("graft_prof_ice_imp_").toString) }
-    phase("ice import read agg") {
-      agg(imp.read()).queryExecution.toRdd.count() }
-    ()
-  }
-
-  private def profLake(s: SparkSession, dir: String): Unit = {
-    Seq("lake_iceberg", "lake_mv_ivm", "lake_dsv2", "lake_catalog",
-      "stream_cdc", "lake_cdc").foreach { q =>
-      phase(q) {
-        SparkEntry.queries(q)(s, dir).queryExecution.toRdd.count()
-      }
-    }
-    ()
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Cols, Tables}
+import graft.{Cols, Pins, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -239,17 +239,16 @@ object Analytics {
     * converted (one correctly-rounded step, matching the oracle's
     * decimal→double cast). */
   def qNtile(s: SparkSession, dir: String,
-      buckets: Option[Int] = None): DataFrame = {
+      buckets: Option[Int] = None): DataFrame = Pins.scope { pins =>
     import org.apache.spark.sql.expressions.Window
     val base = t(s, dir, "orders")
       .select((Cols.money(col("o_totalprice")) * 100).cast("long").as("cents"),
         col("o_orderkey").as("key"))
     val k = 4L
     val b = buckets.getOrElse(graft.Tables.sliceCount(s))
-    val bucketed = base
+    val bucketed = pins(base
       .repartitionByRange(b, col("cents"), col("key"))
-      .withColumn("bkt", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("bkt", spark_partition_id()))
     // census: per-bucket counts → global rank offsets AND n (B rows)
     val counts = bucketed.groupBy(col("bkt")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -273,10 +272,7 @@ object Analytics {
         (sum(col("cents")).cast(org.apache.spark.sql.types.DecimalType(20, 0)) / 100)
           .cast("double").as("total_price"))
       .orderBy(col("quartile"))
-    val rows = agg.collect().toIndexedSeq
-    bucketed.unpersist(blocking = false)
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.asJava, agg.schema)
+    Pins.collected(agg)
   }
 
   /** Sorted string aggregation per group (LISTAGG): deterministic via

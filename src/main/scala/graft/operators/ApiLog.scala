@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.functions.ParseDuration
 import graft.sources.{LogTable, MarkerCommit, Transform}
 import graft.streaming.Streams
@@ -195,7 +195,8 @@ object ApiLog {
     * the committed table, folded into one totally-ordered frame —
     * shared by every lifecycle variant (streaming commit loop, marker
     * commit loop): identical table contents must fold identically. */
-  private[graft] def catalogFold(s: SparkSession, table: LogTable): DataFrame = {
+  private[graft] def catalogFold(s: SparkSession, table: LogTable)
+      : DataFrame = Pins.scope { pins =>
     // ONE SCAN, SIX CONSUMERS (guide §5 multi-consumer recompute): the
     // six catalog queries each scan the committed table — ~100
     // day-partition files listed, footer'd and decoded SIX times when
@@ -203,8 +204,7 @@ object ApiLog {
     // the temp view registers the pinned plan, so the SQL catalog
     // queries and the latency rollup all hit the cache filled by the
     // fold's own materialization below.
-    val api = table.read()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val api = pins(table.read())
     // fill the cache with ONE action before the fold: the fold's six
     // union branches run inside one job, and branches racing an
     // unfilled cache each recompute the scan themselves (measured: 19
@@ -257,24 +257,12 @@ object ApiLog {
 
     // materialize the fold EAGERLY against the pinned scan (the fold
     // is O(catalog rows) — ~40 rows), then release the pin: the
-    // returned frame is the checkpointed fold, so the caller's
+    // returned frame is the collected fold, so the caller's
     // materialization never re-scans the table and the cache never
     // outlives this call
-    val folded0 = qCount.unionByName(qRecent).unionByName(qByType)
+    Pins.collected(qCount.unionByName(qRecent).unionByName(qByType)
       .unionByName(qRange).unionByName(qErrors).unionByName(qLatency)
-      .orderBy(col("q"), col("a"), col("b"), col("n"), col("v"))
-    // plan-evidence hook (never set by the driver): dump the INTERNAL
-    // fold plan — the checkpointed return hides the union-over-pinned-
-    // scan shape the optimization claims
-    sys.env.get("GRAFT_PLAN_DIR").foreach { d =>
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(d).resolve("apilog_catalog_fold_after.txt"),
-        folded0.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    }
-    val folded = folded0.localCheckpoint()
-    api.unpersist(blocking = false)
-    folded
+      .orderBy(col("q"), col("a"), col("b"), col("n"), col("v")))
   }
 
   /** The lifecycle routed through the reference's ACTUAL decoupling —

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Pins, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,14 +64,19 @@ object Dedup {
     * strings); only docs sharing a kept 5-gram are ever paired, and the
     * document-frequency cap kills hot-bucket pair explosions. */
   def ngramJaccard(s: SparkSession, dir: String): DataFrame =
-    ngramPairs(s, dir)
-      .orderBy(col("jacc").desc, col("doc_a"), col("doc_b"))
-      .limit(20)
+    Pins.scope { pins =>
+      ngramPairs(s, dir, pins.escaping(_,
+          "ngramJaccard returns a lazy top-20 plan over the n-gram census"))
+        .orderBy(col("jacc").desc, col("doc_a"), col("doc_b"))
+        .limit(20)
+    }
 
   /** All blocked candidate pairs with their Jaccard — the shared
     * kernel of ngramJaccard (top-N view) and dedupClusters
-    * (thresholded component input). */
-  private[graft] def ngramPairs(s: SparkSession, dir: String): DataFrame = {
+    * (thresholded component input). `pin` materializes the gram
+    * census, which every consumer reads. */
+  private[graft] def ngramPairs(s: SparkSession, dir: String,
+      pin: DataFrame => DataFrame): DataFrame = {
     // Native one-pass shingle hashing (no gram-string materialization);
     // spread first — shingling is CPU-bound even off a single file.
     val e = Tables.spread(docs(s, dir))
@@ -80,7 +85,7 @@ object Dedup {
     // ONE gram-census exchange, materialized ONCE: the per-gram doc
     // list and the document frequency fall out of the SAME groupBy
     // (gdf = list size — WordShingles emits DISTINCT grams per doc),
-    // and localCheckpoint pins the census for its several consumers.
+    // and `pin` checkpoints the census for its several consumers.
     // The old lazy shape (e ⋈ dfc = `kept`, then kept consumed by the
     // pair self-join's two sides AND the two per-doc count joins)
     // re-derived everything per consumer: 8 corpus scans + 8 shingle
@@ -88,11 +93,10 @@ object Dedup {
     // (plans/r21/dedup_ngram_before.txt), 1 scan + 1 explode after.
     // The df cap bounds every list at MaxGramDf, so the census rows
     // and the in-bucket pair fan-out stay bounded at any corpus size.
-    val census = e.groupBy(col("gh"))
+    val census = pin(e.groupBy(col("gh"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) <= MaxGramDf)
-      .select(col("ids"))
-      .localCheckpoint()
+      .select(col("ids")))
     // Per-doc kept-gram counts — one explode+agg over the census. No
     // broadcast hint: at billions of docs the count table exceeds
     // broadcast limits, so the join strategy is left to Spark/AQE
@@ -133,22 +137,22 @@ object Dedup {
     * construction, so this is 2-4 bounded shuffle rounds at any
     * corpus size, never a global transitive closure. The driver loop
     * only ever collects a convergence COUNT; labels stay distributed
-    * (localCheckpoint per round truncates the growing lineage).
+    * (a checkpoint per round truncates the growing lineage).
     *
     * Output: (doc_id, cluster_id, keep) for every doc in ≥1 pair,
     * cluster_id = min doc_id of the component, keep = 1 iff the doc
     * IS the canonical representative. Oracle: DuckDB recursive-CTE
     * transitive closure over the identical thresholded pair set. */
-  def dedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val pairs = ngramPairs(s, dir).filter(col("jacc") >= ClusterMinJacc)
+  def dedupClusters(s: SparkSession, dir: String): DataFrame = Pins.scope { pins =>
+    val pairs = ngramPairs(s, dir, pins.checkpoint)
+      .filter(col("jacc") >= ClusterMinJacc)
       .select(col("doc_a"), col("doc_b"))
     // undirected: propagate labels both ways. Materialized ONCE —
     // every propagation round joins against edges, and leaving them
     // lazy would re-run the whole shingle/pair pipeline per round.
-    val edges = pairs.unionByName(
+    val edges = pins.checkpoint(pairs.unionByName(
       pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("u", "v")
-      .localCheckpoint()
+      .toDF("u", "v"))
     // labels carry a CHANGED flag: (1) convergence reads the flag off
     // the just-checkpointed frame instead of re-joining new labels
     // against old (one join + one wide comparison per round gone);
@@ -159,10 +163,9 @@ object Dedup {
     // 1 marks everything changed, so every label is offered at least
     // once; convergence (zero changes) is therefore identical to the
     // full-recompute fixpoint.
-    var labels = edges.select(col("u").as("id")).distinct()
+    var labels = pins.checkpoint(edges.select(col("u").as("id")).distinct()
       .withColumn("lbl", col("id"))
-      .withColumn("chg", lit(true))
-      .localCheckpoint()
+      .withColumn("chg", lit(true)))
     var converged = false
     var rounds = 0
     val maxRounds = 50
@@ -178,12 +181,16 @@ object Dedup {
         .join(labels.filter(col("chg"))
           .select(col("id").as("v"), col("lbl").as("v_lbl")), Seq("v"))
         .groupBy(col("u").as("id")).agg(min(col("v_lbl")).as("nbr_lbl"))
-      val next = labels.select(col("id"), col("lbl")).join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"),
-          (coalesce(col("nbr_lbl"), col("lbl")) < col("lbl")).as("chg"))
-        .localCheckpoint()
+      // any round's labels may be the final ones the returned plan
+      // reads; the previous round's are released once this round's are cut
+      val next = pins.escaping(
+        labels.select(col("id"), col("lbl")).join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"),
+            (coalesce(col("nbr_lbl"), col("lbl")) < col("lbl")).as("chg")),
+        "dedupClusters returns a lazy plan over the final round's labels")
       converged = next.filter(col("chg")).isEmpty
+      pins.release(labels)
       labels = next
     }
     labels
@@ -217,7 +224,7 @@ object Dedup {
     (0 until NumHashes).map(j =>
       array_min(transform(col("ws"), w => xxhash64(lit(j), w))).as(s"h$j"))
 
-  def minhashLsh(s: SparkSession, dir: String): DataFrame = {
+  def minhashLsh(s: SparkSession, dir: String): DataFrame = Pins.scope { pins =>
     val sig = docWords(s, dir).select(col("doc_id"),
       graft.functions.MinHashSig.minhashSig(col("ws"), NumHashes).as("sig"))
     // 8 bands of 4 hashes → band key = hash of the band's signature slice.
@@ -237,32 +244,17 @@ object Dedup {
     // the top-100 materializes): the old lazy self-join recomputed the
     // full MinHash signature pass per join side (2 corpus scans + 2
     // sig passes, plans/r21/dedup_minhash_before.txt).
-    val banded = bands
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val banded = pins(bands)
     banded.count()
     val l = banded.select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
     val r = banded.select(col("doc_id").as("doc_b"), col("band"), col("bkey"))
-    val top0 = l.join(r, Seq("band", "bkey")).filter(col("doc_a") < col("doc_b"))
+    val top = l.join(r, Seq("band", "bkey")).filter(col("doc_a") < col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_bands"))
       .orderBy(col("n_bands").desc, col("doc_a"), col("doc_b"))
       .limit(100)
-    planDump("dedup_minhash_join_after", top0)
-    val top = top0.localCheckpoint()
-    banded.unpersist(blocking = false)
-    top
+    Pins.collected(top)
   }
-
-  /** Plan-evidence hook (never set by the driver): dump an INTERNAL
-    * frame's formatted plan — the checkpointed returns hide the
-    * join-over-pinned-cache shape the r21 optimizations claim. */
-  private def planDump(name: String, df: DataFrame): Unit =
-    sys.env.get("GRAFT_PLAN_DIR").foreach { d =>
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(d).resolve(s"$name.txt"),
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    }
 
   /** Bit-count accumulator for one 64-bit SimHash half: per distinct
     * word, hash with `seed`; for each of 64 bits accumulate ±1.
@@ -289,7 +281,7 @@ object Dedup {
     * stays tiny even at billions of documents (the 16-bit/65k-bucket
     * variant would go quadratic there). Output: top-100 pairs by
     * hamming distance. */
-  def simhash(s: SparkSession, dir: String): DataFrame = {
+  def simhash(s: SparkSession, dir: String): DataFrame = Pins.scope { pins =>
     import graft.functions.SimHash64.simhash64
     val fp = docWords(s, dir)
       .select(col("doc_id"),
@@ -316,24 +308,20 @@ object Dedup {
     // cache, released after the top-100 materializes) instead of
     // recomputing both SimHash64 halves per join side
     // (plans/r21/dedup_simhash_before.txt)
-    val bandedP = banded
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bandedP = pins(banded)
     bandedP.count()
     val l = bandedP.select(col("doc_id").as("doc_a"), col("fp0").as("a0"),
       col("fp1").as("a1"), col("band"), col("bkey"))
     val r = bandedP.select(col("doc_id").as("doc_b"), col("fp0").as("b0"),
       col("fp1").as("b1"), col("band"), col("bkey"))
-    val top0 = l.join(r, Seq("band", "bkey")).filter(col("doc_a") < col("doc_b"))
+    val top = l.join(r, Seq("band", "bkey")).filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         (bit_count(col("a0").bitwiseXOR(col("b0"))) +
           bit_count(col("a1").bitwiseXOR(col("b1")))).as("hamming"))
       .dropDuplicates("doc_a", "doc_b") // hamming is pair-determined
       .orderBy(col("hamming"), col("doc_a"), col("doc_b"))
       .limit(100)
-    planDump("dedup_simhash_join_after", top0)
-    val top = top0.localCheckpoint()
-    bandedP.unpersist(blocking = false)
-    top
+    Pins.collected(top)
   }
 
   /** Benchmark-contamination check — the pre-training gate that asks

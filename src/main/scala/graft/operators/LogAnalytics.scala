@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Cols, Tables}
+import graft.{Cols, Pins, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -347,34 +347,36 @@ object LogAnalytics {
     * The tie-break on event_id is unnecessary for the VALUE at a rank
     * (equal values are interchangeable), which is what lets the census
     * collapse rows. `q_approx_percentile` stays the sketch path. */
-  def logLatencyPcts(s: SparkSession, dir: String): DataFrame = {
-    val (census, res) = logLatencyPctsPlanned(s, dir)
-    // materialize the ≤ 3×types result NOW so the pinned census can be
-    // released before returning (the q_ntile lifecycle)
-    val rows = res.collect().toIndexedSeq
-    census.unpersist(blocking = false)
-    s.createDataFrame(s.sparkContext.parallelize(rows, 1), res.schema)
-  }
+  def logLatencyPcts(s: SparkSession, dir: String): DataFrame =
+    Pins.scope { pins =>
+      // materialize the ≤ 3×types result NOW so the pinned census can be
+      // released before returning (the q_ntile lifecycle)
+      Pins.collected(logLatencyPctsPlanned(latencyCensus(pins, s, dir)))
+    }
 
-  /** The distributed plan behind [[logLatencyPcts]], exposed
-    * un-collected so PlanContractSpec can assert its shape (the
-    * public operator returns a driver-materialized k-row frame).
-    * Returns (pinned census to unpersist, result plan). */
-  private[graft] def logLatencyPctsPlanned(
-      s: SparkSession, dir: String,
-      slicesOverride: Option[Int] = None): (DataFrame, DataFrame) = {
-    import s.implicits._
+  /** Steps 1-2 of [[logLatencyPcts]]: the (type, value) count census,
+    * range-sliced into `pid`s and pinned in `pins`. */
+  private[graft] def latencyCensus(pins: Pins, s: SparkSession,
+      dir: String, slicesOverride: Option[Int] = None): DataFrame = {
     // slice count is pure parallelism policy (the offset arithmetic is
     // exact for any slicing): session-derived so it tracks the cluster
     // instead of a frozen 32 (round-15's `weak`). Override is a spec
     // hook proving boundary-independence.
     val slices = slicesOverride.getOrElse(Tables.sliceCount(s))
-    val census = ev(s, dir)
+    pins(ev(s, dir)
       .groupBy(col("event_type"), col("value"))
       .agg(count(lit(1)).as("cnt"))
       .repartitionByRange(slices, col("event_type"), col("value"))
-      .withColumn("pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("pid", spark_partition_id()))
+  }
+
+  /** The distributed plan behind [[logLatencyPcts]] over a pinned
+    * [[latencyCensus]], exposed un-collected so PlanContractSpec can
+    * assert its shape (the public operator returns a
+    * driver-materialized k-row frame). */
+  private[graft] def logLatencyPctsPlanned(census: DataFrame): DataFrame = {
+    val s = census.sparkSession
+    import s.implicits._
     val subs = census.groupBy(col("pid"), col("event_type"))
       .agg(sum(col("cnt")).as("sub"))
       .collect().map(r => (r.getAs[Int]("pid"),
@@ -392,14 +394,13 @@ object LogAnalytics {
     val wCum = Window.partitionBy(col("pid"), col("event_type"))
       .orderBy(col("value"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val res = census
+    census
       .join(broadcast(offsets), Seq("pid", "event_type"))
       .withColumn("cum", col("off") + sum(col("cnt")).over(wCum))
       .join(broadcast(targets), Seq("event_type"))
       .filter(col("rk") > col("cum") - col("cnt") && col("rk") <= col("cum"))
       .select(col("event_type"), col("pct"), col("value").as("latency"))
       .orderBy(col("event_type"), col("pct"))
-    (census, res)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Pins, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.chaining._
@@ -300,10 +300,10 @@ object Pipeline {
     * divide, deterministic across engines (the ann routing-key
     * doctrine). */
   def interleave(s: SparkSession, dir: String, head: Int = 100,
-      buckets: Option[Int] = None): DataFrame = {
+      buckets: Option[Int] = None): DataFrame = Pins.scope { pins =>
     import org.apache.spark.sql.expressions.Window
-    val (pinned, ranked) = interleaveRanked(s, dir, buckets)
-    val top = ranked.orderBy(col("key"), col("source"), col("doc_id"))
+    val top = interleaveRanked(pins, s, dir, buckets)
+      .orderBy(col("key"), col("source"), col("doc_id"))
       .limit(head)
       .withColumn("pos", row_number().over(
         Window.orderBy(col("key"), col("source"), col("doc_id"))).cast("long"))
@@ -312,26 +312,22 @@ object Pipeline {
     // materialize the ≤head-row artifact NOW so the pinned bucket
     // assignment can release before returning (the curriculum
     // lifecycle); the post-cut window ranks ≤head rows — bounded
-    val rows = top.collect().toIndexedSeq
-    pinned.unpersist(blocking = false)
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.asJava, top.schema)
+    Pins.collected(top)
   }
 
   /** The interleave key frame (doc_id, source, key) with per-source
     * ranks from the bucketed census — exposed un-collected so
-    * PlanContractSpec can pin the no-per-source-window shape.
-    * Returns (pinned bucket assignment to unpersist, keyed frame). */
-  private[graft] def interleaveRanked(s: SparkSession, dir: String,
-      buckets: Option[Int] = None): (DataFrame, DataFrame) = {
+    * PlanContractSpec can pin the no-per-source-window shape. The
+    * bucket assignment is pinned in `pins`. */
+  private[graft] def interleaveRanked(pins: Pins, s: SparkSession,
+      dir: String, buckets: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables(s, dir, "documents")
       .select(col("doc_id"), col("source"))
     val b = buckets.getOrElse(Tables.sliceCount(s))
-    val bucketed = docs
+    val bucketed = pins(docs
       .repartitionByRange(b, col("source"), col("doc_id"))
-      .withColumn("bkt", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("bkt", spark_partition_id()))
     // census: per-(bucket, source) doc counts → per-source rank
     // offsets and totals (≤ B·|sources| rows to the driver)
     val counts = bucketed.groupBy(col("bkt"), col("source")).count()
@@ -348,12 +344,11 @@ object Pipeline {
     val offDf = offRows.toDF("bkt", "source", "off", "n_s")
     val w = Window.partitionBy(col("bkt"), col("source"))
       .orderBy(col("doc_id"))
-    val ranked = bucketed.join(broadcast(offDf), Seq("bkt", "source"))
+    bucketed.join(broadcast(offDf), Seq("bkt", "source"))
       .withColumn("i", row_number().over(w).cast("long") - 1L + col("off"))
       .withColumn("key",
         (col("i") * 2L + 1L).cast("double") / (col("n_s") * 2L).cast("double"))
       .select(col("doc_id"), col("source"), col("key"))
-    (bucketed, ranked)
   }
 
   /** FULL interleave SCHEDULE as sharded blocks — the consumable
@@ -373,14 +368,13 @@ object Pipeline {
     * range-partition → B-row count census → offsets broadcast →
     * within-bucket row_number + offset = exact global position). */
   def interleaveSchedule(s: SparkSession, dir: String, shards: Int = 8,
-      buckets: Option[Int] = None): DataFrame = {
+      buckets: Option[Int] = None): DataFrame = Pins.scope { pins =>
     import org.apache.spark.sql.expressions.Window
-    val (pinned, ranked) = interleaveRanked(s, dir, buckets)
+    val ranked = interleaveRanked(pins, s, dir, buckets)
     val b = buckets.getOrElse(Tables.sliceCount(s))
-    val bucketed2 = ranked
+    val bucketed2 = pins(ranked
       .repartitionByRange(b, col("key"), col("source"), col("doc_id"))
-      .withColumn("bkt2", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("bkt2", spark_partition_id()))
     val counts = bucketed2.groupBy(col("bkt2")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val n = counts.values.sum
@@ -410,11 +404,7 @@ object Pipeline {
         sum(col("doc_id")).as("id_sum"),
         countDistinct(col("source")).as("n_sources"))
       .orderBy(col("shard"))
-    val rows = agg.collect().toIndexedSeq
-    bucketed2.unpersist(blocking = false)
-    pinned.unpersist(blocking = false)
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.asJava, agg.schema)
+    Pins.collected(agg)
   }
 
   /** PACKED-WINDOW DOCUMENT SPANS — the attention-mask metadata a
@@ -806,33 +796,34 @@ object Pipeline {
     // (doc_id, source, digest) frame pins for the whole loop, so each
     // batch's probe-broadcast subtree and append read the cache
     // instead of re-hashing the corpus per consumer per batch.
-    val dp = d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    dp.count()
-    (0L until 3L).foreach { b =>
-      val batch = dp.filter(pmod(col("doc_id"), lit(3L)) === b)
-      // cross-batch exact probe builds from the BATCH's digest set —
-      // identical to the keeper's (keeper selection never drops a
-      // digest), so the broadcast-build job skips the keeper window
-      val survivors0 = ingestSurvivors(table, mv, batch)
-      // within-batch keeper: the digest's min doc_id, as a window min
-      // over ONE digest exchange — the old groupBy+join paid the same
-      // shuffle PLUS a broadcast build of the aggregate per batch
-      // (guide §2.4: operations keyed alike share one exchange)
-      val survivors = survivors0.withColumn("min_id",
-          min(col("doc_id")).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("digest"))))
-        .filter(col("doc_id") === col("min_id"))
-      // coalesce on the cached read: an un-coalesced append writes one
-      // tiny parquet per shuffle partition per batch and the footer
-      // pass dominates the loop
-      table.append(survivors
-        .select(col("doc_id"), col("digest"), col("source")).coalesce(4))
-      // O(batch) fold into the digest MV — the probe structure stays
-      // consistent with the corpus inside the MV's watermark contract
-      mv.refresh()
-      ()
+    Pins.scope { pins =>
+      val dp = pins(d)
+      dp.count()
+      (0L until 3L).foreach { b =>
+        val batch = dp.filter(pmod(col("doc_id"), lit(3L)) === b)
+        // cross-batch exact probe builds from the BATCH's digest set —
+        // identical to the keeper's (keeper selection never drops a
+        // digest), so the broadcast-build job skips the keeper window
+        val survivors0 = ingestSurvivors(table, mv, batch)
+        // within-batch keeper: the digest's min doc_id, as a window min
+        // over ONE digest exchange — the old groupBy+join paid the same
+        // shuffle PLUS a broadcast build of the aggregate per batch
+        // (guide §2.4: operations keyed alike share one exchange)
+        val survivors = survivors0.withColumn("min_id",
+            min(col("doc_id")).over(org.apache.spark.sql.expressions.Window
+              .partitionBy(col("digest"))))
+          .filter(col("doc_id") === col("min_id"))
+        // coalesce on the cached read: an un-coalesced append writes one
+        // tiny parquet per shuffle partition per batch and the footer
+        // pass dominates the loop
+        table.append(survivors
+          .select(col("doc_id"), col("digest"), col("source")).coalesce(4))
+        // O(batch) fold into the digest MV — the probe structure stays
+        // consistent with the corpus inside the MV's watermark contract
+        mv.refresh()
+        ()
+      }
     }
-    dp.unpersist()
     (table, mv)
   }
 
@@ -900,15 +891,15 @@ object Pipeline {
     * oracle replays the whole lifecycle: loop, deletion, re-probe
     * with the same exact-keeper / state-near / within-batch rules. */
   def requeueNear(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val work = graft.Scratch.dir("graft_requeue_")
     val st = nearDedupState(s, work)
-    val dp = nearSigFrame(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-    dp.count()
-    (0L until 3L).foreach { b =>
-      ingestNearStep(st, dp.filter(pmod(col("doc_id"), lit(3L)) === b))
+    Pins.scope { pins =>
+      val dp = pins(nearSigFrame(s, dir))
+      dp.count()
+      (0L until 3L).foreach { b =>
+        ingestNearStep(st, dp.filter(pmod(col("doc_id"), lit(3L)) === b))
+      }
     }
-    dp.unpersist()
     nearDelete(st,
       pmod(col("doc_id"), lit(7L)) === 0L || col("doc_id") >= 1000000L)
     requeueStep(st)
@@ -991,7 +982,6 @@ object Pipeline {
   private[graft] def ingestDedupNearLoop(s: SparkSession, d: DataFrame,
       work: java.nio.file.Path)
       : (DataFrame, graft.sources.LogTable, graft.sources.LogTable) = {
-    import org.apache.spark.storage.StorageLevel
     val st = nearDedupState(s, work)
     // ONE corpus pass total: the narrow signature frame (never text)
     // pins for the whole loop, so the per-batch probe subtrees — each
@@ -999,12 +989,13 @@ object Pipeline {
     // re-deriving 8 stripe digests per doc per subtree. At production
     // scale batches arrive already materialized; this is the harness's
     // equivalent.
-    val dp = d.persist(StorageLevel.MEMORY_AND_DISK)
-    dp.count()
-    (0L until 3L).foreach { b =>
-      ingestNearStep(st, dp.filter(pmod(col("doc_id"), lit(3L)) === b))
+    Pins.scope { pins =>
+      val dp = pins(d)
+      dp.count()
+      (0L until 3L).foreach { b =>
+        ingestNearStep(st, dp.filter(pmod(col("doc_id"), lit(3L)) === b))
+      }
     }
-    dp.unpersist()
     (st.fateLog.read().select(col("doc_id"), col("source"), col("fate")),
       st.table, st.bands)
   }
@@ -1047,11 +1038,11 @@ object Pipeline {
     * the SAME batch quarantine the younger instead of both slipping
     * in). A single when-chain names the fate, exact precedence over
     * near. Returns the batch + fate ∈ kept|exact_dup|near_dup
-    * (UNPINNED — callers persist before mutating state) and a
-    * release thunk for the probe-band pin, to call AFTER the fates
-    * materialize. */
-  private[graft] def nearFates(st: NearDedupState,
-      batch0: DataFrame): (DataFrame, () => Unit) = {
+    * (UNPINNED — callers persist before mutating state); the probe
+    * pins live in `pins`, whose scope should close right AFTER the
+    * fates materialize. */
+  private[graft] def nearFates(pins: Pins, st: NearDedupState,
+      batch0: DataFrame): DataFrame = {
     val (table, bands, mv) = (st.table, st.bands, st.mv)
     val shape = Seq("doc_id", "source", "digest", "sigs", "len").map(col)
     // PINNED: the keeper-ranked batch feeds the exact-probe build,
@@ -1064,10 +1055,9 @@ object Pipeline {
     // shape paid the same shuffle PLUS a broadcast build of the
     // aggregate per batch (guide §2.4: operations keyed alike share
     // one exchange).
-    val batch = batch0.withColumn("min_id",
+    val batch = pins(batch0.withColumn("min_id",
         min(col("doc_id")).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("digest"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .partitionBy(col("digest")))))
     val keep = batch.filter(col("doc_id") === col("min_id"))
     // cross-batch EXACT probe: the digest MV, never the corpus.
     // PINNED: two consumers (the band-frame anti-join and the exact
@@ -1075,10 +1065,9 @@ object Pipeline {
     // their own broadcast build.
     val foundExact =
       if (table.currentVersion == 0L) None
-      else Some(mv.read().select(col("digest"))
+      else Some(pins(mv.read().select(col("digest"))
         .join(broadcast(keep.select(col("digest")).distinct()),
-          Seq("digest"), "left_semi").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          Seq("digest"), "left_semi").distinct()))
     val afterExact = foundExact.fold(keep)(f =>
       keep.join(broadcast(f), Seq("digest"), "left_anti"))
     // PINNED: three consumers (the bucket-footprint collect, the
@@ -1087,8 +1076,7 @@ object Pipeline {
     // whole exact-probe subtree (the multi-consumer re-scan pitfall).
     // The bucket-footprint collect is the first action and fills the
     // cache — no separate count needed.
-    val probeBands = nearBandRows(afterExact)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val probeBands = pins(nearBandRows(afterExact))
     val nearIds =
       if (bands.currentVersion == 0L) None
       else Some(nearProbe(st, probeBands)
@@ -1117,7 +1105,7 @@ object Pipeline {
       .fold(batch.withColumn("x", lit(null).cast("int")))(f =>
         batch.join(broadcast(f.withColumn("x", lit(1))),
           Seq("digest"), "left"))
-    val fates = withX
+    withX
       .join(broadcast(nearAny.withColumn("nr", lit(1))),
         Seq("doc_id"), "left")
       .withColumn("fate",
@@ -1126,12 +1114,6 @@ object Pipeline {
           .when(col("nr") === 1, lit("near_dup"))
           .otherwise(lit("kept")))
       .select(shape :+ col("fate"): _*)
-    (fates, () => {
-      probeBands.unpersist(blocking = false)
-      foundExact.foreach(_.unpersist(blocking = false))
-      batch.unpersist(blocking = false)
-      ()
-    })
   }
 
   /** The fate-log row shape: near-dup rows carry their signature
@@ -1152,8 +1134,7 @@ object Pipeline {
     * batch loop and the streaming foreachBatch sink run. `batch0` is
     * the batch's (doc_id, source, digest, sigs, len) frame. */
   private[graft] def ingestNearStep(st: NearDedupState,
-      batch0: DataFrame, tag: String = ""): Unit = {
-    import org.apache.spark.storage.StorageLevel
+      batch0: DataFrame, tag: String = ""): Unit = Pins.scope { pins =>
     val (table, bands, fateLog, mv) = (st.table, st.bands, st.fateLog, st.mv)
     // EXACTLY-ONCE under streaming replay: the FATE LOG commits first
     // and is the authoritative record of this batch's probe verdicts.
@@ -1166,8 +1147,7 @@ object Pipeline {
       val recorded = fateLog.read().select(col("doc_id"), col("fate"))
         .join(batch0.select(col("doc_id"), col("source"), col("digest"),
           col("sigs"), col("len")), Seq("doc_id"))
-      val survivors = recorded.filter(col("fate") === "kept")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val survivors = pins(recorded.filter(col("fate") === "kept"))
       survivors.count()
       // independent tables commit CONCURRENTLY off the pinned frame
       // (guide §2.6 — the replays are per-tag idempotent either way)
@@ -1180,39 +1160,38 @@ object Pipeline {
           ()
         },
         () => { bands.append(nearBandRows(survivors).coalesce(4), tag = tag); () })
-      survivors.unpersist()
-      return
+    } else {
+      // PIN the batch's fates BEFORE any state mutation: three appends
+      // consume this frame, and an unpinned lineage would re-probe
+      // after the MV/band/table commits moved the state under it; the
+      // probe pins release as soon as the fates are materialized
+      val fate = Pins.scope { probes =>
+        val f = pins(nearFates(probes, st, batch0))
+        f.count() // materialize against the pre-mutation state
+        f
+      }
+      // appends COALESCE on the cached read (upstream probe
+      // parallelism untouched): an un-coalesced append writes one
+      // tiny parquet file per shuffle partition per table per batch —
+      // the footer-stats pass alone then dominates the loop
+      val survivors = fate.filter(col("fate") === "kept")
+      // the FATE LOG still commits FIRST — it is the authoritative
+      // replay record (see the exactly-once note above); only the
+      // INDEPENDENT state tables behind it commit concurrently
+      // (guide §2.6: overlap independent jobs — the corpus-table chain
+      // carries the MV fold, the band index rides its own thread; all
+      // consume the pinned fate frame, already materialized above)
+      fateLog.append(fateLogRows(fate, Seq("near_dup")).coalesce(4), tag = tag)
+      parallelStateCommit(
+        () => {
+          table.append(survivors
+            .select(col("doc_id"), col("digest"), col("source")).coalesce(4),
+            tag = tag)
+          mv.refresh()
+          ()
+        },
+        () => { bands.append(nearBandRows(survivors).coalesce(4), tag = tag); () })
     }
-    // PIN the batch's fates BEFORE any state mutation: three appends
-    // consume this frame, and an unpinned lineage would re-probe
-    // after the MV/band/table commits moved the state under it
-    val (fates0, release) = nearFates(st, batch0)
-    val fate = fates0.persist(StorageLevel.MEMORY_AND_DISK)
-    fate.count() // materialize against the pre-mutation state
-    release()
-    // appends COALESCE on the cached read (upstream probe
-    // parallelism untouched): an un-coalesced append writes one
-    // tiny parquet file per shuffle partition per table per batch —
-    // the footer-stats pass alone then dominates the loop
-    val survivors = fate.filter(col("fate") === "kept")
-    // the FATE LOG still commits FIRST — it is the authoritative
-    // replay record (see the exactly-once note above); only the
-    // INDEPENDENT state tables behind it commit concurrently
-    // (guide §2.6: overlap independent jobs — the corpus-table chain
-    // carries the MV fold, the band index rides its own thread; all
-    // consume the pinned fate frame, already materialized above)
-    fateLog.append(fateLogRows(fate, Seq("near_dup")).coalesce(4), tag = tag)
-    parallelStateCommit(
-      () => {
-        table.append(survivors
-          .select(col("doc_id"), col("digest"), col("source")).coalesce(4),
-          tag = tag)
-        mv.refresh()
-        ()
-      },
-      () => { bands.append(nearBandRows(survivors).coalesce(4), tag = tag); () })
-    fate.unpersist()
-    ()
   }
 
   /** Dedicated bounded pool for [[parallelStateCommit]] — blocking
@@ -1279,13 +1258,11 @@ object Pipeline {
     * rebuild survivors); exactly-once under replay via the same
     * fate-log tag contract as the ingest step. */
   private[graft] def requeueStep(st: NearDedupState,
-      tag: String = ""): Unit = {
-    import org.apache.spark.storage.StorageLevel
+      tag: String = ""): Unit = Pins.scope { pins =>
     val (table, bands, fateLog, mv) = (st.table, st.bands, st.fateLog, st.mv)
     val requeueFates = Seq("requeued", "requeue_exact", "requeue_near")
     if (tag.nonEmpty && fateLog.hasTag(tag)) {
-      val survivors = fateLog.read().filter(col("fate") === "requeued")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val survivors = pins(fateLog.read().filter(col("fate") === "requeued"))
       survivors.count()
       parallelStateCommit(
         () => {
@@ -1296,46 +1273,43 @@ object Pipeline {
           ()
         },
         () => { bands.append(nearBandRows(survivors).coalesce(4), tag = tag); () })
-      survivors.unpersist()
-      return
+    } else {
+      val fl = fateLog.read()
+      // RESOLVED = admitted ('requeued') or exact-dup at re-probe
+      // ('requeue_exact' — exact dups drop forever, like the loop's).
+      // 'requeue_near' does NOT resolve: the doc stays quarantined and
+      // every later generation re-examines it (its twin may be deleted
+      // between generations — the whole point of the lifecycle).
+      val resolved = fl
+        .filter(col("fate").isin("requeued", "requeue_exact"))
+        .select(col("doc_id"))
+      val q = fl.filter(col("fate") === "near_dup")
+        .join(resolved, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("source"), col("digest"), col("sigs"),
+          col("len"))
+      val fate = Pins.scope { probes =>
+        val f = pins(nearFates(probes, st, q)
+          .withColumn("fate",
+            when(col("fate") === "kept", lit("requeued"))
+              .when(col("fate") === "exact_dup", lit("requeue_exact"))
+              .otherwise(lit("requeue_near"))))
+        f.count() // materialize against the pre-mutation state
+        f
+      }
+      val survivors = fate.filter(col("fate") === "requeued")
+      // fate log first (the replay record), then the independent state
+      // tables concurrently — same shape as the ingest step
+      fateLog.append(fateLogRows(fate, requeueFates).coalesce(4), tag = tag)
+      parallelStateCommit(
+        () => {
+          table.append(survivors
+            .select(col("doc_id"), col("digest"), col("source")).coalesce(4),
+            tag = tag)
+          mv.refresh()
+          ()
+        },
+        () => { bands.append(nearBandRows(survivors).coalesce(4), tag = tag); () })
     }
-    val fl = fateLog.read()
-    // RESOLVED = admitted ('requeued') or exact-dup at re-probe
-    // ('requeue_exact' — exact dups drop forever, like the loop's).
-    // 'requeue_near' does NOT resolve: the doc stays quarantined and
-    // every later generation re-examines it (its twin may be deleted
-    // between generations — the whole point of the lifecycle).
-    val resolved = fl
-      .filter(col("fate").isin("requeued", "requeue_exact"))
-      .select(col("doc_id"))
-    val q = fl.filter(col("fate") === "near_dup")
-      .join(resolved, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("source"), col("digest"), col("sigs"),
-        col("len"))
-    val (fates0, release) = nearFates(st, q)
-    val fate = fates0
-      .withColumn("fate",
-        when(col("fate") === "kept", lit("requeued"))
-          .when(col("fate") === "exact_dup", lit("requeue_exact"))
-          .otherwise(lit("requeue_near")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    fate.count() // materialize against the pre-mutation state
-    release()
-    val survivors = fate.filter(col("fate") === "requeued")
-    // fate log first (the replay record), then the independent state
-    // tables concurrently — same shape as the ingest step
-    fateLog.append(fateLogRows(fate, requeueFates).coalesce(4), tag = tag)
-    parallelStateCommit(
-      () => {
-        table.append(survivors
-          .select(col("doc_id"), col("digest"), col("source")).coalesce(4),
-          tag = tag)
-        mv.refresh()
-        ()
-      },
-      () => { bands.append(nearBandRows(survivors).coalesce(4), tag = tag); () })
-    fate.unpersist()
-    ()
   }
 
   /** CURRICULUM ordering — anneal training data easy→hard: every doc
@@ -1352,7 +1326,7 @@ object Pipeline {
     * arithmetic on that rank — B-way parallel end to end; the result
     * is exact regardless of where sampling put the bucket boundaries. */
   def curriculum(s: SparkSession, dir: String, tiers: Int = 8,
-      buckets: Option[Int] = None): DataFrame = {
+      buckets: Option[Int] = None): DataFrame = Pins.scope { pins =>
     val scored = TextAnalysis
       .qualityFrame(Tables.spread(Tables(s, dir, "documents")))
       .select(col("doc_id"), col("score"))
@@ -1370,10 +1344,9 @@ object Pipeline {
     // partitions exceed the sampler's budget (the log_latency_pcts
     // doctrine) — the offsets would then disagree with the final
     // pass's bucket contents. Released after the eager tier collect.
-    val bucketed = scored
+    val bucketed = pins(scored
       .repartitionByRange(b, col("score"), col("doc_id"))
-      .withColumn("bkt", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("bkt", spark_partition_id()))
     // census: per-bucket counts → global rank offsets AND n (B rows)
     val counts = bucketed.groupBy(col("bkt")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -1403,10 +1376,7 @@ object Pipeline {
       .orderBy(col("tier"))
     // materialize the ≤tiers-row result NOW so the pinned bucket
     // assignment can release before returning (the q_ntile lifecycle)
-    val rows = agg.collect().toIndexedSeq
-    bucketed.unpersist(blocking = false)
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.asJava, agg.schema)
+    Pins.collected(agg)
   }
 
   /** TOKEN-BUDGETED quality selection — the "fit the best N tokens of
@@ -1433,22 +1403,20 @@ object Pipeline {
     * proving B=3 ≡ B=64); the corpus is read once into the pinned
     * assignment, census + final read the cache. */
   def budgetSelect(s: SparkSession, dir: String, budget: Long = 50000L,
-      buckets: Option[Int] = None, realTokens: Boolean = false): DataFrame = {
-    val (bucketed, agg) = budgetSelectPlanned(s, dir, budget, buckets, realTokens)
-    // materialize the <=|sources|-row census NOW, release the pin
-    val rows = agg.collect().toIndexedSeq
-    bucketed.unpersist(blocking = false)
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.asJava, agg.schema)
-  }
+      buckets: Option[Int] = None, realTokens: Boolean = false): DataFrame =
+    Pins.scope { pins =>
+      // materialize the <=|sources|-row census NOW, release the pin
+      Pins.collected(
+        budgetSelectPlanned(pins, s, dir, budget, buckets, realTokens))
+    }
 
   /** The distributed plan behind [[budgetSelect]], exposed un-collected
     * so PlanContractSpec can assert its shape (the public operator
-    * returns a driver-materialized census frame). Returns (pinned
-    * bucket assignment to unpersist, result plan). */
-  private[graft] def budgetSelectPlanned(s: SparkSession, dir: String,
-      budget: Long = 50000L, buckets: Option[Int] = None,
-      realTokens: Boolean = false): (DataFrame, DataFrame) = {
+    * returns a driver-materialized census frame). The bucket
+    * assignment is pinned in `pins`. */
+  private[graft] def budgetSelectPlanned(pins: Pins, s: SparkSession,
+      dir: String, budget: Long = 50000L, buckets: Option[Int] = None,
+      realTokens: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val scored = TextAnalysis
       .qualityFrame(Tables.spread(Tables(s, dir, "documents")))
@@ -1478,10 +1446,9 @@ object Pipeline {
     // unpersisted repartitionByRange re-samples boundaries per action
     // (RangePartitioner seeds with the RDD id), so the offset census
     // and the final pass must read ONE materialized assignment.
-    val bucketed = scored
+    val bucketed = pins(scored
       .repartitionByRange(b, col("source"), col("score").desc, col("doc_id"))
-      .withColumn("bkt", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("bkt", spark_partition_id()))
     // census: per-(bucket, source) token totals → per-source offsets
     // (range partitioning keeps each source's buckets contiguous and
     // score-ordered, so "earlier bucket" = "higher-scored prefix")
@@ -1501,7 +1468,7 @@ object Pipeline {
     val w = Window.partitionBy(col("bkt"), col("source"))
       .orderBy(col("score").desc, col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val agg = bucketed.join(broadcast(offDf), Seq("bkt", "source"))
+    bucketed.join(broadcast(offDf), Seq("bkt", "source"))
       .withColumn("run_toks", sum(col("n_words")).over(w) + col("off"))
       .withColumn("keep", col("run_toks") <= budget)
       .groupBy(col("source"))
@@ -1511,7 +1478,6 @@ object Pipeline {
           .cast("long").as("kept_tokens"),
         min(when(col("keep"), col("score"))).as("cut_score"))
       .orderBy(col("source"))
-    (bucketed, agg)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Pins, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -156,20 +156,17 @@ object Similarity {
     * ladder (annLsh/annIvf/annPq) supplies the vector shortlist and
     * RRF fuses top-LISTS, with absent ranks contributing nothing —
     * the fusion stage itself is already O(shortlist). */
-  def annHybrid(s: SparkSession, dir: String): DataFrame = {
-    val (fused, items) = annHybridPlan(s, dir)
+  def annHybrid(s: SparkSession, dir: String): DataFrame = Pins.scope { pins =>
     // materialize the ≤5·|queries|-row answer NOW so the persisted
     // index frame releases before returning (the q_ntile lifecycle)
-    val rows = fused.collect().toIndexedSeq
-    items.unpersist(blocking = false)
-    s.createDataFrame(s.sparkContext.parallelize(rows, 1), fused.schema)
+    Pins.collected(annHybridPlan(pins, s, dir))
   }
 
-  /** The lazy (fused-plan, persisted-index) pair behind [[annHybrid]] —
-    * separated so the plan-contract spec can assert the shape without
-    * materializing; callers own the index handle's unpersist. */
-  private[graft] def annHybridPlan(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
+  /** The lazy fused plan behind [[annHybrid]] — separated so the
+    * plan-contract spec can assert the shape without materializing;
+    * the index frame is pinned in `pins`. */
+  private[graft] def annHybridPlan(pins: Pins, s: SparkSession,
+      dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val emb = quantized(s, dir)
     val txt = Tables.spread(Tables(s, dir, "documents"))
@@ -180,10 +177,9 @@ object Similarity {
     // exchange reuse — uncached, the two-table join re-scans per
     // consumer (plan-probed: 14 FileScans). This is the "hybrid index
     // materialization" every retrieval stack performs; released below
-    // via the q_ntile collect-then-unpersist lifecycle (the result is
+    // via the q_ntile collect-then-release lifecycle (the result is
     // ≤ 5·|queries| rows).
-    val items = emb.join(txt, Seq("vec_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val items = pins(emb.join(txt, Seq("vec_id")))
     val q = items.select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
       col("nrm").as("q_nrm")).filter(col("q_id") < 10)
     val c = items.select(col("vec_id").as("n_id"), col("qv").as("n_qv"),
@@ -198,7 +194,7 @@ object Similarity {
     val overlap = lexOverlap(items)
     val wl = Window.partitionBy(col("q_id")).orderBy(col("lex_score").desc, col("n_id"))
     val wf = Window.partitionBy(col("q_id")).orderBy(col("rrf").desc, col("n_id"))
-    val fused = vrank.join(overlap, Seq("q_id", "n_id"), "left")
+    vrank.join(overlap, Seq("q_id", "n_id"), "left")
       .na.fill(0L, Seq("lex_score"))
       .withColumn("l_rank", row_number().over(wl).cast("long"))
       .withColumn("rrf",
@@ -208,7 +204,6 @@ object Similarity {
       .filter(col("rnk") <= 5)
       .select(col("q_id"), col("rnk"), col("n_id"), col("v_rank"), col("l_rank"))
       .orderBy(col("q_id"), col("rnk"))
-    (fused, items)
   }
 
   /** The lexical arm shared by [[annHybridPlan]] and
@@ -250,7 +245,7 @@ object Similarity {
     * [[annHybrid]] on the spec corpus (the honest approximation gap:
     * a candidate outside both short lists can never surface). */
   def annHybridLadder(s: SparkSession, dir: String, refine: Int = 50,
-      lexKeep: Int = 50, k: Int = 16, probes: Int = 4): DataFrame = {
+      lexKeep: Int = 50, k: Int = 16, probes: Int = 4): DataFrame = Pins.scope { pins =>
     import org.apache.spark.sql.expressions.Window
     // vector arm: ADC shortlist, exact re-rank (annRefine stage 2)
     val cand = pqCandidates(s, dir, keep = refine, k = k, probes = probes)
@@ -267,8 +262,7 @@ object Similarity {
     val emb = quantized(s, dir)
     val txt = Tables.spread(Tables(s, dir, "documents"))
       .select(col("doc_id").as("vec_id"), col("text"))
-    val items = emb.join(txt, Seq("vec_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val items = pins(emb.join(txt, Seq("vec_id")))
     val wl = Window.partitionBy(col("q_id")).orderBy(col("lex_score").desc, col("n_id"))
     val lrank = lexOverlap(items)
       .withColumn("l_rank", row_number().over(wl).cast("long"))
@@ -284,10 +278,7 @@ object Similarity {
       .filter(col("rnk") <= 5)
       .select(col("q_id"), col("rnk"), col("n_id"))
       .orderBy(col("q_id"), col("rnk"))
-    val rows = fused.collect().toIndexedSeq
-    items.unpersist(blocking = false)
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.asJava, fused.schema)
+    Pins.collected(fused)
   }
 
   // ------------------------------------------------- random-hyperplane LSH
@@ -384,7 +375,7 @@ object Similarity {
     * constant, and genuinely near-duplicate vectors (tiny angle)
     * collide in some table with probability → 1. */
   def dedupEmbed(s: SparkSession, dir: String,
-      seed: Long = 7L, tables: Int = 4, bits: Int = 8): DataFrame = {
+      seed: Long = 7L, tables: Int = 4, bits: Int = 8): DataFrame = Pins.scope { pins =>
     val dim = embeddingDim(s, dir)
     val all = withSigns(quantized(s, dir), seed, tables, bits, dim)
       .withColumn("bk", explode(bucketKeys(col("qv"), col("signs"), tables, bits)))
@@ -394,14 +385,13 @@ object Similarity {
     // vectors PINNED ONCE (filled cache, released after the top-50
     // materializes) instead of recomputing the whole signed-projection
     // pipeline per join side (plans/r21/dedup_embed_before.txt)
-    val allP = all
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val allP = pins(all)
     allP.count()
     val a = allP.select(col("vec_id").as("vec_a"), col("qv").as("a_qv"),
       col("nrm").as("a_nrm"), col("bk"))
     val b = allP.select(col("vec_id").as("vec_b"), col("qv").as("b_qv"),
       col("nrm").as("b_nrm"), col("bk"))
-    val top0 = a.join(b, Seq("bk")).filter(col("vec_a") < col("vec_b"))
+    val top = a.join(b, Seq("bk")).filter(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"), col("a_qv"), col("b_qv"),
         col("a_nrm"), col("b_nrm"))
       .dropDuplicates("vec_a", "vec_b")
@@ -410,17 +400,7 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"), col("key"))
       .orderBy(col("key").desc, col("vec_a"), col("vec_b"))
       .limit(50)
-    // plan-evidence hook (never set by the driver) — the checkpointed
-    // return hides the join-over-pinned-cache shape
-    sys.env.get("GRAFT_PLAN_DIR").foreach { d =>
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(d).resolve("dedup_embed_join_after.txt"),
-        top0.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    }
-    val top = top0.localCheckpoint()
-    allP.unpersist(blocking = false)
-    top
+    Pins.collected(top)
   }
 
   // ------------------------------------------------------------- IVF index

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Cols, Tables}
+import graft.{Cols, Pins, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -303,20 +303,18 @@ object TextAnalysis {
   /** Train on an ARBITRARY document frame (any (…, text) schema):
     * returns the merge list and the final vocab frame `(word, wc, e)`
     * — each distinct word with its fully-merged sentinel-wrapped
-    * segmentation. The returned frame is CACHED (O(vocabulary) rows);
-    * callers own the read side, the cache ages out with the session. */
+    * segmentation, read back from its scratch parquet artifact. */
   private[graft] def bpeTrainDf(docs: DataFrame, rounds: Int)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
+      : (Seq[(Int, String, String, Long)], DataFrame) = Pins.scope { pins =>
     val (sS, eE) = (BpeS, BpeE)
     // vocab census: the ONLY corpus-scale pass
-    var vocab = docs
+    var vocab = pins(docs
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) >= 1)
       .groupBy(col("word")).agg(count(lit(1)).as("wc"))
       .withColumn("e", concat_ws("",
         transform(split(col("word"), ""), c => concat(lit(sS), c, lit(eE)))))
-      .select(col("word"), col("wc"), col("e"))
-      .cache()
+      .select(col("word"), col("wc"), col("e")))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var exhausted = false
     (1 to rounds).foreach { round =>
@@ -339,11 +337,10 @@ object TextAnalysis {
           // replace call — plain string replace is left-to-right
           // NON-OVERLAPPING in Spark, DuckDB and Java alike
           val prev = vocab
-          vocab = vocab.withColumn("e",
-            replace(col("e"), lit(sS + l + eE + sS + r + eE), lit(sS + l + r + eE)))
-            .cache()
-          vocab.count() // materialize before unpersisting the parent
-          prev.unpersist()
+          vocab = pins(vocab.withColumn("e",
+            replace(col("e"), lit(sS + l + eE + sS + r + eE), lit(sS + l + r + eE))))
+          vocab.count() // materialize before releasing the parent
+          pins.release(prev)
         }
       }
     }
@@ -359,7 +356,6 @@ object TextAnalysis {
     val spark = docs.sparkSession
     val artifact = graft.Scratch.dir("graft_bpe_vocab_").toString
     vocab.write.mode("overwrite").parquet(artifact)
-    vocab.unpersist()
     (merges.result(), spark.read.parquet(artifact))
   }
 

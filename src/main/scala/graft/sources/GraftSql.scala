@@ -846,12 +846,6 @@ object GraftSql {
             IcebergExport.export(t, args(1),
               history = args.length > 2 && args(2).equalsIgnoreCase("history"))
             t.snapshot()
-          // CALL analyze(t [, 'c1,c2']) — compute per-column NDVs into
-          // the manifest (the compute_table_stats maintenance pass;
-          // feeds CBO join ordering via the scan's columnStats)
-          case "analyze" =>
-            if (args.length > 1) t.analyze(args(1).split(",").map(_.trim).toSeq)
-            else t.analyze()
           // CALL export_statistics(t, '<dest-path>') — Puffin NDV
           // statistics for the CURRENT snapshot of an already-exported
           // table ([[IcebergStatistics]]; the compute_table_stats

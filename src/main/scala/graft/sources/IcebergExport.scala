@@ -2390,7 +2390,13 @@ object IcebergRead {
     * shared with the REST-catalog read path, where the metadata came
     * over HTTP rather than from the version-hint walk. */
   private[sources] def readMeta(spark: SparkSession, m: IceMeta,
-      withLineage: Boolean = false): DataFrame = {
+      withLineage: Boolean = false): DataFrame =
+    graft.Pins.scope(scanMeta(_, spark, m, withLineage))
+
+  /** [[readMeta]]'s body: the returned plan reads equality-delete key
+    * frames checkpointed in `pins`. */
+  private def scanMeta(pins: graft.Pins, spark: SparkSession, m: IceMeta,
+      withLineage: Boolean): DataFrame = {
     val schema = m.schema
     case class IdField(pname: String, column: String, dt: DataType)
     // identity columns resolve PER SPEC (spec evolution: each entry
@@ -2545,9 +2551,9 @@ object IcebergRead {
     val eqKeysCache = scala.collection.mutable.Map[String, DataFrame]()
     def eqKeysOf(path: String, cols: Seq[String],
         joinCols: Seq[String]): DataFrame =
-      eqKeysCache.getOrElseUpdate(path, spark.read.parquet(path)
-        .select(cols.zip(joinCols).map { case (c, jc) => col(c).as(jc) }: _*)
-        .localCheckpoint())
+      eqKeysCache.getOrElseUpdate(path, pins.escaping(spark.read.parquet(path)
+        .select(cols.zip(joinCols).map { case (c, jc) => col(c).as(jc) }: _*),
+        "the spec reader's lazy scan plan anti-joins this equality-delete key frame"))
     // keys normalized like _ice_f below, so foreign file:// URIs in
     // the manifest still hit the sequence join
     val fileSeq: Map[String, Long] = m.entries.map(e =>

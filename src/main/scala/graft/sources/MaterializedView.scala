@@ -266,18 +266,15 @@ final class MaterializedView private (
     // each its own action; unpinned, every one re-runs the whole
     // changelog read (the multi-consumer re-compute pitfall; measured
     // 22 jobs → 9 on the near-dedup delete refresh at sf0.1)
-    val pinned = delta.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      table.merge(pinned, KeyCol,
+    graft.Pins.scope { pins =>
+      table.merge(pins(delta), KeyCol,
         matchedDeleteWhen =
           Some(col(cnt.name) + col(s"src_${cnt.name}") === lit(0L)),
         matchedSet = Some(set),
         insertValues = Some(insertAll),
         tag = s"$TagPrefix$to",
         sourceKeysUnique = true) // groupBy(keys) output — unique by construction
-      ()
-    } finally { pinned.unpersist(blocking = false); () }
+    }
     to
   }
 
@@ -317,17 +314,14 @@ final class MaterializedView private (
     // PINNED across the merge (cf. refreshCdc): the partial-aggregate
     // delta feeds several independent merge actions — one shuffle over
     // the delta instead of one per consumer
-    val pinned = delta.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      table.merge(pinned, KeyCol,
+    graft.Pins.scope { pins =>
+      table.merge(pins(delta), KeyCol,
         matchedSet = Some(set),
         insertValues = Some(insertAll),
         notMatchedBySourceDelete = if (full) Some(lit(true)) else None,
         tag = s"$TagPrefix$toVersion",
         sourceKeysUnique = true) // groupBy(keys) output — unique by construction
-      ()
-    } finally { pinned.unpersist(blocking = false); () }
+    }
     ()
   }
 }

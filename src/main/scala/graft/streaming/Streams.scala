@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Cols, Tables}
+import graft.{Cols, Pins, Tables}
 import graft.sources.LogTable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -146,24 +146,21 @@ object Streams {
     * Requires `key`-unique rows in the source (the same contract every
     * keyed CDC consumer assumes). Returns the applied toVersion. */
   def cdcApply(src: LogTable, dst: LogTable, key: String,
-      fromVersion: Long, toVersion: Long): Long = {
+      fromVersion: Long, toVersion: Long): Long = Pins.scope { pins =>
     import org.apache.spark.sql.expressions.Window
     val cdc = src.readCdc(fromVersion, toVersion)
     val w = Window.partitionBy(col(key)).orderBy(
       col(LogTable.CommitVersionCol).desc,
       when(col(LogTable.ChangeTypeCol) === "insert", 1).otherwise(0).desc)
-    val net = cdc.withColumn("_cdc_rn", row_number().over(w))
-      .filter(col("_cdc_rn") === 1).drop("_cdc_rn")
-      .cache()
-    try {
-      val ins = net.filter(col(LogTable.ChangeTypeCol) === "insert")
-        .drop(LogTable.ChangeTypeCol, LogTable.CommitVersionCol)
-      val del = net.filter(col(LogTable.ChangeTypeCol) === "delete")
-        .select(col(key))
-      if (!ins.isEmpty) dst.upsertEq(ins, key, tag = s"cdc-$fromVersion-$toVersion")
-      if (!del.isEmpty) dst.deleteEq(del)
-      toVersion
-    } finally { net.unpersist(); () }
+    val net = pins(cdc.withColumn("_cdc_rn", row_number().over(w))
+      .filter(col("_cdc_rn") === 1).drop("_cdc_rn"))
+    val ins = net.filter(col(LogTable.ChangeTypeCol) === "insert")
+      .drop(LogTable.ChangeTypeCol, LogTable.CommitVersionCol)
+    val del = net.filter(col(LogTable.ChangeTypeCol) === "delete")
+      .select(col(key))
+    if (!ins.isEmpty) dst.upsertEq(ins, key, tag = s"cdc-$fromVersion-$toVersion")
+    if (!del.isEmpty) dst.deleteEq(del)
+    toVersion
   }
 
   /** Continuous ROLLUP maintenance: each micro-batch lands in the
@@ -616,11 +613,12 @@ object Streams {
     import graft.operators.Pipeline
     val srcRoot = graft.Scratch.dir("graft_sdn_src_").toString
     val src = LogTable(s, srcRoot)
-    val d = Pipeline.nearSigFrame(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    d.count()
-    (0L until 3L).foreach { b =>
-      src.append(d.filter(pmod(col("doc_id"), lit(3L)) === b).coalesce(4))
+    Pins.scope { pins =>
+      val d = pins(Pipeline.nearSigFrame(s, dir))
+      d.count()
+      (0L until 3L).foreach { b =>
+        src.append(d.filter(pmod(col("doc_id"), lit(3L)) === b).coalesce(4))
+      }
     }
     val st = Pipeline.nearDedupState(s,
       graft.Scratch.dir("graft_sdn_state_"))
@@ -637,7 +635,6 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    d.unpersist()
     st.fateLog.read().select(col("doc_id"), col("source"), col("fate"))
       .orderBy(col("doc_id"))
   }

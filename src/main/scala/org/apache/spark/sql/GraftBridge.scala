@@ -41,6 +41,12 @@ object GraftBridge {
   def waitListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** Number of plans in the session's cache manager (the count is
+    * private[sql]) — what lets a spec assert that an operator left no
+    * cached plan behind. */
+  def cachedPlanCount(spark: SparkSession): Int =
+    classicSession(spark).sharedState.cacheManager.numCachedEntries
+
   /** The session's Hadoop configuration (sessionState is private[sql]
     * on the classic session) — the DSv2 source hands it to Spark's own
     * parquet reader builder. */

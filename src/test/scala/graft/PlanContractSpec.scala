@@ -322,9 +322,8 @@ class PlanContractSpec extends SparkSpec {
   test("ann_hybrid: index persists once (no re-scan per consumer); broadcasts; per-query windows") {
     // probe the LAZY plan — the public entry materializes the ≤5·Q-row
     // answer and releases the persisted index (q_ntile lifecycle)
-    val (fused, items) =
-      graft.operators.Similarity.annHybridPlan(spark, sfDir)
-    try {
+    Pins.scope { pins =>
+      val fused = graft.operators.Similarity.annHybridPlan(pins, spark, sfDir)
       val p = fused.queryExecution.executedPlan.toString
       // the seven consumers must read the CACHED index frame — an
       // uncached formulation re-scans the two-table join per consumer
@@ -343,15 +342,14 @@ class PlanContractSpec extends SparkSpec {
       // rank list never serializes onto one task with other queries'
       assert(count(p, "windowspecdefinition\\(q_id#") >= 3,
         "every rank window must partition by q_id")
-    } finally { items.unpersist(blocking = false); () }
+    }
   }
 
   test("pipeline_select: running sum is a (bucket, source)-PARTITIONED window; offsets broadcast") {
     // the public operator returns a driver-materialized census (the
     // pinned-assignment lifecycle) — probe the planned form
-    val (pinned, res) = operators.Pipeline.budgetSelectPlanned(spark, sfDir)
-    val p = try res.queryExecution.executedPlan.toString
-      finally { pinned.unpersist(blocking = false); () }
+    val p = Pins.scope(pins => operators.Pipeline
+      .budgetSelectPlanned(pins, spark, sfDir).queryExecution.executedPlan.toString)
     assert(p.contains("Window"), "the prefix cut is a window pass")
     assert(count(p, "SortMergeJoin") === 0)
     assert(count(p, "BroadcastHashJoin") >= 1,
@@ -366,11 +364,12 @@ class PlanContractSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     // the public operator returns a driver-materialized head artifact
     // (pinned-assignment lifecycle) — probe the planned form
-    val (pinned, ranked) = operators.Pipeline.interleaveRanked(spark, sfDir)
-    val top = ranked.orderBy(col("key"), col("source"), col("doc_id"))
-      .limit(100)
-    val p = try top.queryExecution.executedPlan.toString
-      finally { pinned.unpersist(blocking = false); () }
+    val p = Pins.scope { pins =>
+      val ranked = operators.Pipeline.interleaveRanked(pins, spark, sfDir)
+      val top = ranked.orderBy(col("key"), col("source"), col("doc_id"))
+        .limit(100)
+      top.queryExecution.executedPlan.toString
+    }
     assert("windowspecdefinition\\(bkt#".r.findFirstIn(p).nonEmpty,
       "the per-source rank must partition by the range bucket — " +
         "never one task per source")
@@ -405,8 +404,9 @@ class PlanContractSpec extends SparkSpec {
   }
 
   test("log_latency_pcts: no window partitions solely on event_type; census prunes the scan") {
-    val (census, res) = operators.LogAnalytics.logLatencyPctsPlanned(spark, sfDir)
-    try {
+    Pins.scope { pins =>
+      val census = operators.LogAnalytics.latencyCensus(pins, spark, sfDir)
+      val res = operators.LogAnalytics.logLatencyPctsPlanned(census)
       val p = res.queryExecution.executedPlan.toString
       assert(p.contains("Window"), "nearest-rank needs the cumulative window")
       // the 100 TB contract: every window must include the range-slice
@@ -441,16 +441,15 @@ class PlanContractSpec extends SparkSpec {
       // round-15's only `weak`
       assert(census.rdd.getNumPartitions === Tables.sliceCount(spark),
         "census must range-partition into sliceCount(session) slices")
-    } finally census.unpersist(blocking = false)
+    }
   }
 
   test("log_latency_pcts: slice count is boundary-independent (3 ≡ 64)") {
-    def at(n: Int): Seq[(String, Int, Double)] = {
-      val (c, r) = operators.LogAnalytics.logLatencyPctsPlanned(
-        spark, sfDir, Some(n))
-      try r.collect().map(x =>
+    def at(n: Int): Seq[(String, Int, Double)] = Pins.scope { pins =>
+      val r = operators.LogAnalytics.logLatencyPctsPlanned(
+        operators.LogAnalytics.latencyCensus(pins, spark, sfDir, Some(n)))
+      r.collect().map(x =>
         (x.getString(0), x.getInt(1), x.getDouble(2))).toSeq
-      finally c.unpersist(blocking = false)
     }
     assert(at(3) === at(64),
       "percentile values must not depend on where the census was sliced")

@@ -117,10 +117,16 @@ object ApiLog {
         var curNode: String = null
         var cnt = 0
         var first = 0L
+        var prev = 0L
         it.flatMap { r =>
           val node = r.getString(0)
           val t = r.getLong(1)
-          if (node != curNode) {
+          val sameNode = node == curNode
+          require(!sameNode || t != prev,
+            s"flushBuffer: duplicate ($nodeCol, $timeCol) = ($node, $t); " +
+              "flush files are assigned by time within a node, so times must be unique")
+          prev = t
+          if (!sameNode) {
             curNode = node; cnt = 1; first = t
             Some(org.apache.spark.sql.Row(node, t))
           } else if (cnt >= cl || t - first >= iv) {
@@ -131,11 +137,11 @@ object ApiLog {
       }(org.apache.spark.sql.Encoders.row(boundSchema))
       .collect()
     // per-node sorted flush-start times; a row's flush seq is the
-    // number of starts at-or-before its time minus one (times are
-    // unique within a node, so the mapping is exactly the state
-    // machine's assignment) — a pure codegen expression over a
-    // broadcast of O(nodes) rows, no wide shuffle by node, no
-    // row-at-a-time path anywhere on the payload
+    // number of starts at-or-before its time minus one (the pass
+    // above refuses a repeated time within a node, so the mapping is
+    // exactly the state machine's assignment) — a pure codegen
+    // expression over a broadcast of O(nodes) rows, no wide shuffle
+    // by node, no row-at-a-time path anywhere on the payload
     val sess = df.sparkSession
     import sess.implicits._
     val startsDf = bounds.groupBy(_.getString(0)).toSeq

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.connector.catalog.{Identifier, SupportsNamespaces, Table, TableCatalog, TableChange}
+import org.apache.spark.sql.connector.catalog.{Identifier, SupportsNamespaces, Table, TableCatalog, TableChange, TableWritePrivilege}
 import org.apache.spark.sql.connector.expressions.{Literal, NamedReference, Transform => STransform}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -29,8 +29,11 @@ import scala.jdk.CollectionConverters._
   *
   * — CREATE/CTAS/INSERT/INSERT OVERWRITE/SELECT/ALTER/DROP all run
   * through SPARK'S OWN parser, analyzer and permission seams; no
-  * bespoke SQL dialect in the path (GraftSql stays as the embedded
-  * statement surface for hosts without catalog config). Namespaces
+  * bespoke SQL dialect in the path. GraftSql's CREATE/DROP, ALTER
+  * column changes and UPDATE/DELETE/MERGE land here too: it registers this catalog under
+  * a session-scoped name and forwards each statement with its target
+  * rewritten to an absolute-root identifier (`cat.`/abs/root``,
+  * which [[tableDir]] resolves as-is). Namespaces
   * are warehouse subdirectories; a table is any directory with a
   * `_graft_log` manifest dir; the partition spec rides in the
   * manifest (persisted spec), so `loadTable` reconstructs the exact
@@ -170,6 +173,20 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     new GraftTable(root.toString, schema, writable = true)
   }
 
+  /** Statement targets (INSERT/UPDATE/DELETE/MERGE: Spark loads them
+    * with write privileges) report every column nullable. LogTable
+    * never enforces NOT NULL (appends validate types ignoring
+    * nullability, and the first writer's incidental flag sticks), so
+    * the planner must accept the NULLs LogTable does — e.g. the
+    * unlisted columns of a MERGE `INSERT (cols) VALUES (...)`. Reads
+    * keep the recorded schema. */
+  override def loadTable(ident: Identifier,
+      writePrivileges: util.Set[TableWritePrivilege]): Table =
+    loadTable(ident) match {
+      case g: GraftTable => g.nullable
+      case other => other
+    }
+
   /** SQL time travel, through Spark's own `FOR VERSION AS OF` /
     * `FOR TIMESTAMP AS OF` clauses: the returned handle is pinned to
     * ONE snapshot (batch-read only, writes refused) and carries that
@@ -236,41 +253,27 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** Spark partition transforms → LogTable's spec: identity columns
-    * become hive layout; days/hours/bucket/truncate become hidden
-    * transforms (pruned through by the scan). Spark's parser emits
-    * both the canonical forms (`days(c)`) and generic applies
-    * (`day(c)`), so match by name over the argument list. */
+    * become hive layout; the rest map through [[Transform.named]]
+    * (hidden transforms, pruned through by the scan). Spark's parser
+    * emits both the canonical forms (`days(c)`) and generic applies
+    * (`day(c)`); the shared vocabulary takes both. */
   private def parseTransforms(ts: Array[STransform]): (Seq[String], Seq[Transform]) = {
     def col(t: STransform): String = t.arguments.collectFirst {
       case r: NamedReference => r.fieldNames.mkString(".")
     }.getOrElse(throw new IllegalArgumentException(
       s"partition transform $t needs a column reference"))
-    def num(t: STransform): Long = t.arguments.collectFirst {
+    def num(t: STransform): Option[Long] = t.arguments.collectFirst {
       case l: Literal[_] if l.value().isInstanceOf[Number] =>
         l.value().asInstanceOf[Number].longValue()
-    }.getOrElse(throw new IllegalArgumentException(
-      s"partition transform $t needs a numeric argument"))
-    val partCols = scala.collection.mutable.ListBuffer[String]()
-    val hidden = scala.collection.mutable.ListBuffer[Transform]()
-    ts.foreach { t =>
-      t.name.toLowerCase match {
-        case "identity" => partCols += col(t)
-        case "days" | "day" => hidden += Transform.day(col(t))
-        case "hours" | "hour" => hidden += Transform.hour(col(t))
-        case "years" | "year" => hidden += Transform.year(col(t))
-        case "months" | "month" => hidden += Transform.month(col(t))
-        // catalog-DDL `bucket` is the Iceberg-spec murmur3 bucket
-        // (SPJ-reportable, Iceberg-exportable); `xxbucket` names the
-        // legacy xxhash64 kind explicitly
-        case "bucket" | "mbucket" => hidden += Transform.mbucket(num(t).toInt, col(t))
-        case "xxbucket" => hidden += Transform.bucket(num(t).toInt, col(t))
-        case "truncate" => hidden += Transform.truncate(num(t), col(t))
-        case other => throw new UnsupportedOperationException(
-          s"unsupported partition transform '$other' (supported: identity " +
-            "columns, days, hours, years, months, bucket, truncate)")
-      }
     }
-    (partCols.toSeq, hidden.toSeq)
+    ts.toSeq.partitionMap { t =>
+      if (t.name.equalsIgnoreCase("identity")) Left(col(t))
+      else Right(Transform.named(t.name, num(t), col(t)).getOrElse(
+        throw new UnsupportedOperationException(
+          s"unsupported partition transform $t (supported: identity " +
+            "columns, days, hours, years, months, bucket(n, c), " +
+            "xxbucket(n, c), truncate(n, c))")))
+    }
   }
 
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
@@ -456,7 +459,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     proc("evolve_spec", "table" -> StringType, "spec" -> StringType) { in =>
       val spec = in.getUTF8String(1).toString
       val (pc, tf) =
-        if (spec.trim.nonEmpty) GraftSql.parsePartitionSpecs(spec)
+        if (spec.trim.nonEmpty) Transform.parseSpecs(spec)
         else (Nil, Nil)
       resolve(in.getUTF8String(0).toString).evolveSpec(pc, tf); ()
     },

@@ -63,7 +63,7 @@ import scala.jdk.CollectionConverters._
   *     ([[LogTable.overwrite]]), never a COW scan. A fresh table takes
   *     its layout from `.partitionBy(...)` (identity hive columns)
   *     and/or `option("hiddenBy", "day(ts_us), bucket(16, id)")`
-  *     (hidden transforms, GraftSql's partition-spec grammar); an
+  *     (hidden transforms, [[Transform.parseSpecs]]'s grammar); an
   *     existing table's manifest-recorded spec drives layout and a
   *     conflicting declared spec fails loudly.
   *   - `ds.writeStream.format("graft").start(root)` — an EXACTLY-ONCE
@@ -117,7 +117,7 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister
     val params = CaseInsensitiveMap(parameters)
     val (optCols, optTrans) = params.get("hiddenBy")
       .orElse(params.get("partitioning"))
-      .map(GraftSql.parsePartitionSpecs)
+      .map(Transform.parseSpecs)
       .getOrElse((Nil, Nil))
     LogTable(spark, root,
       partitionBy = (partCols ++ optCols).distinct, hiddenBy = optTrans)
@@ -450,9 +450,8 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
     * translated condition routes into [[LogTable.delete]]'s COW
     * machinery (only files holding matching rows rewritten, delete-
     * aware, CHECK-preserving). Conditions the v1 Filter algebra can't
-    * express refuse here — Spark reports the unsupported delete
-    * instead of this table guessing (complex predicates go through
-    * LogTable.delete / GraftSql, which take arbitrary Columns). */
+    * express refuse here, and Spark plans them as a group-based
+    * row-level rewrite instead ([[newRowLevelOperationBuilder]]). */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     pinnedVersion.isEmpty && branchName.isEmpty &&
       GraftFilters.conjunction(filters.toSeq).nonEmpty
@@ -486,6 +485,11 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
     case _ => s"graft.`$root`"
   }
   override def schema(): StructType = schema0
+  /** This handle with every column nullable (see GraftCatalog's
+    * write-privileged `loadTable`). */
+  private[sources] def nullable: GraftTable =
+    new GraftTable(root, GraftBridge.asNullable(schema0), writable,
+      pinnedVersion, branchName)
   /** The recorded partition spec, surfaced through Spark's own
     * metadata commands (`DESCRIBE TABLE` shows the layout a user's
     * filters should target). */
@@ -521,9 +525,11 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
       util.EnumSet.of(TableCapability.BATCH_READ,
         TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE)
     else if (writable)
+      // AUTOMATIC_SCHEMA_EVOLUTION: `MERGE WITH SCHEMA EVOLUTION` adds
+      // the new source columns of `SET *` / `INSERT *` (alterTable)
       util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
         TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
-        TableCapability.TRUNCATE)
+        TableCapability.TRUNCATE, TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
     else
       util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
 

@@ -349,6 +349,44 @@ object Transform {
     * `bucket[n]` specs import exactly. */
   def mbucket(n: Int, source: String): Transform =
     Transform(source, "mbucket", n.toLong)
+
+  /** The one transform vocabulary of every partition-spec surface
+    * (catalog DDL, string specs): Iceberg's singular and Spark's
+    * plural time names, and `n`-parameterized bucket/truncate. `bucket`
+    * is the Iceberg-spec murmur3 bucket (SPJ-reportable,
+    * Iceberg-exportable); `xxbucket` names the legacy xxhash64 kind.
+    * None for an unknown name or a wrong arity. */
+  private[sources] def named(kind: String, n: Option[Long],
+      source: String): Option[Transform] =
+    (kind.toLowerCase, n) match {
+      case ("day" | "days", None) => Some(day(source))
+      case ("hour" | "hours", None) => Some(hour(source))
+      case ("year" | "years", None) => Some(year(source))
+      case ("month" | "months", None) => Some(month(source))
+      case ("bucket" | "mbucket", Some(k)) => Some(mbucket(k.toInt, source))
+      case ("xxbucket", Some(k)) => Some(bucket(k.toInt, source))
+      case ("truncate", Some(k)) => Some(truncate(k, source))
+      case _ => None
+    }
+
+  /** String partition specs (`CALL evolve_spec`, the `hiddenBy` write
+    * option): `day(c)`, `bucket(n, c)`, ... become hidden transforms
+    * through [[named]]; bare names become hive-style identity
+    * partition columns. */
+  def parseSpecs(specs: String): (Seq[String], Seq[Transform]) = {
+    val Applied = """(?i)^(\w+)\s*\(\s*(?:(\d+)\s*,\s*)?(\w+)\s*\)$""".r
+    // split on commas outside the parentheses of `bucket(n, c)`
+    specs.split(",(?![^(]*\\))").map(_.trim).filter(_.nonEmpty).toSeq.partitionMap {
+      case c if c.matches("\\w+") => Left(c)
+      case s => Right((s match {
+        case Applied(kind, n, c) => named(kind, Option(n).map(_.toLong), c)
+        case _ => None
+      }).getOrElse(throw new IllegalArgumentException(
+        s"unsupported partition spec '$s' (supported: day(c), hour(c), " +
+          "year(c), month(c) and their plurals, truncate(n, c), " +
+          "bucket(n, c), xxbucket(n, c), or a bare column name)")))
+    }
+  }
 }
 
 /** One committed snapshot: the COMPLETE list of data files visible at
@@ -2110,7 +2148,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
   }
 
   /** Declare an EMPTY table's schema as a metadata-only commit — the
-    * CREATE TABLE primitive behind [[GraftSql]] DDL: field ids are
+    * CREATE TABLE primitive behind [[GraftCatalog]] DDL: field ids are
     * assigned, subsequent appends validate against the declared
     * schema, and the DSv2 source / SQL views resolve it before any
     * data lands (the reference creates its table via SQL DDL too,

@@ -300,10 +300,6 @@ class SqlSurfaceSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       GraftSql.exec(spark,
         "MERGE INTO gsql_r t USING gsql_r s ON t.id = s.id WHEN MATCHED THEN UPDATE SET nope = 1") }
-    // MERGE cannot SET the merge key
-    intercept[IllegalArgumentException] {
-      GraftSql.exec(spark,
-        "MERGE INTO gsql_r t USING gsql_r s ON t.id = s.id WHEN MATCHED THEN UPDATE SET id = 1") }
     // unknown CALL
     intercept[IllegalArgumentException] {
       GraftSql.exec(spark, "CALL vacuum_everything(gsql_r)") }
@@ -564,5 +560,142 @@ class SqlSurfaceSpec extends SparkSpec {
     }
     assert(!e2.toString.contains("UNRESOLVED_ROUTINE"),
       s"iceberg_snapshots should still rewrite, got: ${e2.toString.take(200)}")
+  }
+
+  test("GraftSql MERGE evaluates WHEN MATCHED clauses in textual order") {
+    import spark.implicits._
+    import graft.sources.GraftSql
+    val t = LogTable(spark, Files.createTempDirectory("gsql_ord_").toString)
+    GraftSql.register("gsql_ord", t)
+    t.append(Seq((1L, "a", 1.0), (2L, "a", 2.0), (3L, "b", 3.0)).toDF("id", "kind", "v"))
+    Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0)).toDF("id", "kind", "v")
+      .createOrReplaceTempView("gsql_ord_src")
+    // the first matching clause wins: both kind = 'a' rows take the
+    // UPDATE, only the kind = 'b' row reaches the DELETE
+    GraftSql.exec(spark,
+      """MERGE INTO gsql_ord t USING gsql_ord_src s ON t.id = s.id
+        |WHEN MATCHED AND t.kind = 'a' THEN UPDATE SET *
+        |WHEN MATCHED AND t.id > 0 THEN DELETE""".stripMargin)
+    assert(collectSorted(t.read().select("id", "kind", "v")) ===
+      Seq("[1,a,10.0]", "[2,a,20.0]"))
+  }
+
+  test("GraftSql MERGE: a source-alias token inside a string literal is data") {
+    import spark.implicits._
+    import graft.sources.GraftSql
+    val t = LogTable(spark, Files.createTempDirectory("gsql_mlit_").toString)
+    GraftSql.register("gsql_mlit", t)
+    t.append(Seq((1L, "s.v"), (2L, "src_v"), (3L, "plain")).toDF("id", "note"))
+    Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("id", "note")
+      .createOrReplaceTempView("gsql_mlit_src")
+    GraftSql.exec(spark,
+      """MERGE INTO gsql_mlit t USING gsql_mlit_src s ON t.id = s.id
+        |WHEN MATCHED AND t.note = 's.v' THEN DELETE""".stripMargin)
+    assert(collectSorted(t.read().select("id", "note")) ===
+      Seq("[2,src_v]", "[3,plain]"))
+  }
+
+  test("GraftSql MERGE SET * / INSERT * with an extra source column adds it") {
+    import spark.implicits._
+    import graft.sources.GraftSql
+    val t = LogTable(spark, Files.createTempDirectory("gsql_mevo_").toString)
+    GraftSql.register("gsql_mevo", t)
+    t.append(Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("id", "v"))
+    Seq((1L, 10.0, "e1"), (9L, 90.0, "e9")).toDF("id", "v", "extra")
+      .createOrReplaceTempView("gsql_mevo_src")
+    GraftSql.exec(spark,
+      """MERGE INTO gsql_mevo t USING gsql_mevo_src s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    assert(t.read().columns.toSeq === Seq("id", "v", "extra"))
+    // matched and inserted rows carry the new column; untouched rows read NULL
+    assert(collectSorted(t.read()) ===
+      Seq("[1,10.0,e1]", "[2,2.0,null]", "[3,3.0,null]", "[9,90.0,e9]"))
+  }
+
+  test("GraftSql DML: unaliased target-qualified references resolve") {
+    import spark.implicits._
+    import graft.sources.GraftSql
+    val t = LogTable(spark, Files.createTempDirectory("gsql_q_").toString)
+    GraftSql.register("gsql_q", t)
+    t.append((1 to 4).map(i => (i.toLong, i * 1.0)).toDF("id", "v"))
+    GraftSql.exec(spark, "UPDATE gsql_q SET v = 0 WHERE gsql_q.id = 1")
+    GraftSql.exec(spark, "DELETE FROM gsql_q WHERE gsql_q.id = 2")
+    Seq((3L, 30.0)).toDF("id", "v").createOrReplaceTempView("gsql_q_src")
+    GraftSql.exec(spark,
+      """MERGE INTO gsql_q USING gsql_q_src s ON gsql_q.id = s.id
+        |WHEN MATCHED THEN UPDATE SET v = s.v""".stripMargin)
+    assert(collectSorted(t.read()) === Seq("[1,0.0]", "[3,30.0]", "[4,4.0]"))
+  }
+
+  test("GraftSql ALTER TABLE RENAME TO refuses and leaves the table in place") {
+    import spark.implicits._
+    import graft.sources.GraftSql
+    val root = Files.createTempDirectory("gsql_rn_").toString
+    val t = LogTable(spark, root)
+    GraftSql.register("gsql_rn", t)
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    intercept[IllegalArgumentException] {
+      GraftSql.exec(spark, "ALTER TABLE gsql_rn RENAME TO gsql_rn2") }
+    intercept[IllegalArgumentException] {
+      GraftSql.exec(spark, "ALTER TABLE gsql_rn SET LOCATION '/elsewhere'") }
+    assert(Files.isDirectory(java.nio.file.Paths.get(root, "_graft_log")))
+    assert(GraftSql.table("gsql_rn").root === root)
+    intercept[IllegalArgumentException] { GraftSql.table("gsql_rn2") }
+    assert(GraftSql.exec(spark, "SELECT count(*) FROM gsql_rn").head().getLong(0) === 2L)
+  }
+
+  test("GraftSql SET TBLPROPERTIES commits a multi-key list as one snapshot") {
+    import spark.implicits._
+    import graft.sources.GraftSql
+    val t = LogTable(spark, Files.createTempDirectory("gsql_props_").toString)
+    GraftSql.register("gsql_props", t)
+    t.append(Seq((1L, "a")).toDF("id", "v"))
+    val before = t.currentVersion
+    val r = GraftSql.exec(spark,
+      "ALTER TABLE gsql_props SET TBLPROPERTIES ('k1' = 'a', 'k2' = 'b')").head()
+    assert(t.currentVersion === before + 1)
+    assert(r.getLong(0) === before + 1)
+    GraftSql.exec(spark, "ALTER TABLE gsql_props UNSET TBLPROPERTIES ('k1', 'k2')")
+    assert(t.currentVersion === before + 2)
+  }
+
+  test("GraftSql DDL/DML work under a relative warehouse and a relative root") {
+    import spark.implicits._
+    import graft.sources.GraftSql
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    def relative(prefix: String): String =
+      cwd.relativize(Files.createTempDirectory(prefix).toAbsolutePath).toString
+    val wh = relative("gsql_relwh_")
+    assert(!java.nio.file.Paths.get(wh).isAbsolute)
+    GraftSql.setWarehouse(wh)
+    GraftSql.exec(spark, "CREATE TABLE gsql_rel (id BIGINT, v STRING)")
+    // the registered table carries the declared schema
+    assert(GraftSql.table("gsql_rel").read().columns.toSeq === Seq("id", "v"))
+    GraftSql.exec(spark,
+      "INSERT INTO gsql_rel SELECT * FROM VALUES (1L, 'a'), (2L, 'b') AS s(id, v)")
+    GraftSql.exec(spark, "UPDATE gsql_rel SET v = 'z' WHERE id = 1")
+    GraftSql.exec(spark, "ALTER TABLE gsql_rel ADD COLUMN w INT")
+    assert(collectSorted(GraftSql.table("gsql_rel").read()) ===
+      Seq("[1,z,null]", "[2,b,null]"))
+    GraftSql.exec(spark, "DROP TABLE gsql_rel")
+    assert(!Files.exists(java.nio.file.Paths.get(wh, "gsql_rel")))
+    // a LogTable registered under a relative root
+    val t = LogTable(spark, relative("gsql_relroot_"))
+    GraftSql.register("gsql_relr", t)
+    t.append(Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v"))
+    GraftSql.exec(spark, "DELETE FROM gsql_relr WHERE id = 2")
+    assert(collectSorted(t.read()) === Seq("[1,1.0]"))
+  }
+
+  test("source gate: GraftSql has no DDL/DML write path of its own") {
+    val src = new String(Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/sources/GraftSql.scala")), "UTF-8")
+    assert(!src.contains("MergeParser"))
+    val calls = Seq(".update(", ".delete(", ".merge(", ".declareSchema(",
+      ".renameField(", ".dropField(", ".widenField(", ".addField(")
+      .filter(src.contains)
+    assert(calls.isEmpty,
+      s"GraftSql forwards DDL/DML to GraftCatalog; found ${calls.mkString(", ")}")
   }
 }

@@ -76,6 +76,18 @@ class ApiLogSpec extends SparkSpec {
       "count-triggered and interval-triggered flushes must commit identical tables")
   }
 
+  test("flushBuffer: a repeated (node, time) fails loudly, naming both") {
+    import spark.implicits._
+    val df = Seq(("n1", 10L), ("n1", 20L), ("n2", 20L), ("n2", 30L), ("n2", 30L))
+      .toDF("node", "time")
+    val e = intercept[Exception] {
+      ApiLog.flushBuffer(df, "node", "time", countLimit = 3, intervalUs = 1000L)
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msgs.contains("duplicate (node, time) = (n2, 30)"), msgs)
+  }
+
   test("lifecycle: the streaming flush/commit loop loses and duplicates nothing") {
     val out = ApiLog.lifecycle(spark, sfDir).collect()
     val total = Tables.events(spark, sfDir).count()

@@ -1066,11 +1066,15 @@ class LogTableSpec extends SparkSpec {
     assert(keptM.flatMap(_.partitions.get("_p_time_month")).toSet ===
       Set("1", (54 * 12 + 2).toString))
 
-    // the SQL DDL grammar accepts the new kinds
-    val (pc, tr) = GraftSql.parsePartitionSpecs("year(a), month(b), day(c)")
-    assert(pc.isEmpty)
-    assert(tr === Seq(graft.sources.Transform.year("a"),
-      graft.sources.Transform.month("b"), graft.sources.Transform.day("c")))
+    // the SQL DDL grammar accepts the new kinds, singular and plural
+    for (spec <- Seq("year(a), month(b), day(c), hour(d)",
+        "years(a), months(b), days(c), hours(d)")) {
+      val (pc, tr) = graft.sources.Transform.parseSpecs(spec)
+      assert(pc.isEmpty)
+      assert(tr === Seq(graft.sources.Transform.year("a"),
+        graft.sources.Transform.month("b"), graft.sources.Transform.day("c"),
+        graft.sources.Transform.hour("d")))
+    }
   }
 
   test("hidden partitioning: bucket(n, id) prunes point lookups to one bucket") {

@@ -30,7 +30,7 @@ import scala.jdk.CollectionConverters._
   * — CREATE/CTAS/INSERT/INSERT OVERWRITE/SELECT/ALTER/DROP all run
   * through SPARK'S OWN parser, analyzer and permission seams; no
   * bespoke SQL dialect in the path. GraftSql's CREATE/DROP, ALTER
-  * column changes and UPDATE/DELETE/MERGE land here too: it registers this catalog under
+  * column changes, UPDATE/DELETE/MERGE and CALL land here too: it registers this catalog under
   * a session-scoped name and forwards each statement with its target
   * rewritten to an absolute-root identifier (`cat.`/abs/root``,
   * which [[tableDir]] resolves as-is). Namespaces
@@ -146,21 +146,10 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
               return new GraftChangesTable(proot.toString,
                 GraftCdcUtil.schemaWith(LogTable.parseSchema(head.schemaJson)))
           }
-          val df = ident.name.toLowerCase match {
-            case "history" => Some(t.history())
-            case "files" => Some(t.filesTable())
-            case "partitions" => Some(t.partitionsTable())
-            case "deletes" => Some(t.deletesTable())
-            case "refs" => Some(t.refsTable())
-            // the Iceberg-conventional trio every operator dashboard
-            // queries — LocalScan projections of the manifest
-            case "snapshots" => Some(t.snapshotsTable())
-            case "manifests" => Some(t.manifestsTable())
-            case "entries" => Some(t.entriesTable())
-            case _ => None
+          val suffix = ident.name.toLowerCase
+          LogTable.metadataTables.find(_._1 == suffix).foreach { m =>
+            return new GraftLocalTable(s"${parent.name}.$suffix", m._2(t))
           }
-          df.foreach(d => return new GraftLocalTable(
-            s"${parent.name}.${ident.name.toLowerCase}", d))
         }
       }
       throw new NoSuchTableException(ident)
@@ -341,32 +330,96 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   /** Maintenance procedures through SPARK'S OWN `CALL` statement
     * (`CALL <catalog>.system.compact('ns.table')`) — the planner
-    * parses, binds parameter types, and evaluates arguments; this
-    * catalog only resolves names and runs the table API (the same
-    * calls GraftSql's embedded CALL surface routes to, reference
-    * init-setup.py:159-173 drives its maintenance through catalog SQL
-    * the same way). */
+    * parses, binds parameter types, fills defaults, casts and accepts
+    * named arguments (`keep_last => 5`); this catalog only resolves
+    * names and runs the table API (reference init-setup.py:159-173
+    * drives its maintenance through catalog SQL the same way). This is
+    * the ONE procedure table: GraftSql's `CALL proc(t, ...)` forwards
+    * here with `t` rewritten to its root. The table argument is a
+    * multipart identifier (`'ns.t'`, `'ns.`t.x`'`; a backquoted
+    * absolute path names a root directly). Signatures, defaults after
+    * `=`:
+    *
+    * {{{
+    * compact(table, part_col = NULL, value = NULL)  both or neither
+    * expire(table, keep_last)
+    * expire_older_than(table, older_than_ms, keep_last = 1)
+    * expire_branch(table, branch, keep_last)
+    * rollback(table, version)
+    * remove_orphans(table, mode = NULL)             mode: 'dry_run'
+    * recluster(table, column, n_files)
+    * recluster_z(table, columns, n_files)           columns: 'c1,c2'
+    * analyze(table, columns = '')                   '' = every column
+    * set_sort_order(table, columns = '')            '' clears
+    * create_ref(table, name, version = NULL)        NULL = current
+    * create_branch(table, name)
+    * fast_forward(table, name)
+    * clone(table, dest, version = NULL)             NULL = current
+    * delete_mor(table, predicate)
+    * merge_mor(table, key, source_query)
+    * delete_eq(table, keys_query)
+    * upsert_eq(table, key, source_query)
+    * evolve_spec(table, spec)                       '' un-partitions
+    * export_iceberg(table, dest, mode = NULL)       mode: 'history'
+    * export_statistics(table, dest)
+    * import_iceberg(table, src)                     table must not exist
+    * }}}
+    *
+    * A mode a procedure does not know refuses (never a silent fallback
+    * to the default behaviour). */
   import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.types.{DataType, LongType, StringType}
 
-  private def resolve(name: String): LogTable = {
-    val parts = name.split('.')
-    val ident = Identifier.of(parts.init, parts.last)
-    if (!isTable(tableDir(ident))) throw new NoSuchTableException(ident)
-    LogTable(spark, tableDir(ident).toString)
+  /** The table argument (slot 0) as an identifier. */
+  private def ident(in: InternalRow): Identifier = {
+    val parts = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+      .parseMultipartIdentifier(str(in, 0))
+    Identifier.of(parts.init.toArray, parts.last)
   }
 
-  private def proc(name0: String, params: (String, DataType)*)(
-      run: InternalRow => Unit): UnboundProcedure = new UnboundProcedure {
+  private def resolve(in: InternalRow): LogTable = {
+    val id = ident(in)
+    if (!isTable(tableDir(id))) throw new NoSuchTableException(id)
+    LogTable(spark, tableDir(id).toString)
+  }
+
+  private def opt(in: InternalRow, i: Int): Option[String] =
+    if (in.isNullAt(i)) None else Some(in.getUTF8String(i).toString)
+  private def str(in: InternalRow, i: Int): String = opt(in, i).getOrElse(
+    throw new IllegalArgumentException(s"procedure argument ${i + 1} is NULL"))
+  private def optLong(in: InternalRow, i: Int): Option[Long] =
+    if (in.isNullAt(i)) None else Some(in.getLong(i))
+  private def cols(in: InternalRow, i: Int): Seq[String] =
+    str(in, i).split(",").map(_.trim).toSeq.filter(_.nonEmpty)
+  /** An optional mode argument: NULL is the default, `known` (any
+    * case) the one alternative, anything else refuses. */
+  private def mode(in: InternalRow, i: Int, known: String): Boolean =
+    opt(in, i).exists { m =>
+      require(m.equalsIgnoreCase(known), s"unknown mode '$m' (supported: '$known')")
+      true
+    }
+
+  private def string(n: String, default: String = null): ProcedureParameter =
+    param(n, StringType, default)
+  private def bigint(n: String, default: String = null): ProcedureParameter =
+    param(n, LongType, default)
+  private def param(n: String, t: DataType, default: String): ProcedureParameter = {
+    val b = ProcedureParameter.in(n, t)
+    Option(default).fold(b)(b.defaultValue).build()
+  }
+
+  /** A procedure over `(table, params...)`; `default` on a trailing
+    * parameter is SQL Spark evaluates when the call omits it. */
+  private def proc(name0: String, params: ProcedureParameter*)(
+      run: InternalRow => Any): UnboundProcedure = new UnboundProcedure {
     override def name(): String = name0
     override def description(): String = s"graft maintenance procedure $name0"
-    override def bind(inputType: org.apache.spark.sql.types.StructType)
-        : BoundProcedure = new BoundProcedure {
+    override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
       override def name(): String = name0
       override def description(): String = s"graft maintenance procedure $name0"
       override def parameters(): Array[ProcedureParameter] =
-        params.map { case (n, t) => ProcedureParameter.in(n, t).build() }.toArray
+        (string("table") +: params).toArray
       override def isDeterministic: Boolean = false
       override def call(input: InternalRow)
           : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
@@ -376,123 +429,108 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
   }
 
-  private def procedures: Map[String, UnboundProcedure] = Seq(
-    proc("compact", "table" -> StringType) { in =>
-      resolve(in.getUTF8String(0).toString).compact(); ()
+  private lazy val procedures: Map[String, UnboundProcedure] = Seq(
+    // the scoped form is Delta's OPTIMIZE ... WHERE: maintenance
+    // bounded to one partition value's files
+    proc("compact", string("part_col", "NULL"), string("value", "NULL")) { in =>
+      (opt(in, 1), opt(in, 2)) match {
+        case (None, None) => resolve(in).compact()
+        case (Some(c), Some(v)) =>
+          resolve(in).compact(where = Some(p => p.get(c).contains(v)))
+        case _ => throw new IllegalArgumentException(
+          "compact takes both part_col and value, or neither")
+      }
     },
-    // Delta's OPTIMIZE ... WHERE: compaction bounded to the files of
-    // one partition value
-    proc("compact_where", "table" -> StringType, "part_col" -> StringType,
-        "value" -> StringType) { in =>
-      val (c, v) = (in.getUTF8String(1).toString, in.getUTF8String(2).toString)
-      resolve(in.getUTF8String(0).toString)
-        .compact(where = Some(p => p.get(c).contains(v))); ()
+    proc("expire", bigint("keep_last")) { in =>
+      resolve(in).expire(keepLast = in.getLong(1).toInt)
     },
-    proc("expire", "table" -> StringType, "keep_last" -> LongType) { in =>
-      resolve(in.getUTF8String(0).toString)
-        .expire(keepLast = in.getLong(1).toInt); ()
+    proc("expire_older_than", bigint("older_than_ms"), bigint("keep_last", "1")) { in =>
+      resolve(in).expireOlderThan(in.getLong(1), keepLast = in.getLong(2).toInt)
     },
-    proc("expire_older_than", "table" -> StringType,
-        "older_than_ms" -> LongType, "keep_last" -> LongType) { in =>
-      resolve(in.getUTF8String(0).toString)
-        .expireOlderThan(in.getLong(1), keepLast = in.getLong(2).toInt); ()
+    // branch-scoped retention: a busy WAP branch accumulates a snapshot
+    // per audited batch; this drops its old intermediates while the
+    // fork-point base (and main's lineage) stay intact
+    proc("expire_branch", string("branch"), bigint("keep_last")) { in =>
+      resolve(in).branch(str(in, 1)).expire(keepLast = in.getLong(2).toInt)
     },
-    proc("expire_branch", "table" -> StringType, "branch" -> StringType,
-        "keep_last" -> LongType) { in =>
-      resolve(in.getUTF8String(0).toString)
-        .branch(in.getUTF8String(1).toString)
-        .expire(keepLast = in.getLong(2).toInt); ()
+    proc("rollback", bigint("version")) { in => resolve(in).rollback(in.getLong(1)) },
+    // the 'dry_run' mode is VACUUM DRY RUN: report what the sweep
+    // WOULD reclaim, touching nothing
+    proc("remove_orphans", string("mode", "NULL")) { in =>
+      resolve(in).removeOrphans(dryRun = mode(in, 1, "dry_run"))
     },
-    proc("rollback", "table" -> StringType, "version" -> LongType) { in =>
-      resolve(in.getUTF8String(0).toString).rollback(in.getLong(1)); ()
+    proc("recluster", string("column"), bigint("n_files")) { in =>
+      resolve(in).recluster(str(in, 1), in.getLong(2).toInt)
     },
-    proc("remove_orphans", "table" -> StringType) { in =>
-      resolve(in.getUTF8String(0).toString).removeOrphans(); ()
+    // n-D z-order over a comma-separated column list
+    proc("recluster_z", string("columns"), bigint("n_files")) { in =>
+      resolve(in).reclusterZ(cols(in, 1), in.getLong(2).toInt)
     },
-    // VACUUM DRY RUN: report, touch nothing
-    proc("remove_orphans_dry", "table" -> StringType) { in =>
-      resolve(in.getUTF8String(0).toString)
-        .removeOrphans(dryRun = true); ()
+    // NDV stats for the CBO
+    proc("analyze", string("columns", "''")) { in => resolve(in).analyze(cols(in, 1)) },
+    // declared write sort order
+    proc("set_sort_order", string("columns", "''")) { in =>
+      resolve(in).setSortOrder(cols(in, 1))
     },
-    proc("recluster", "table" -> StringType, "column" -> StringType,
-        "n_files" -> LongType) { in =>
-      resolve(in.getUTF8String(0).toString)
-        .recluster(in.getUTF8String(1).toString, in.getLong(2).toInt); ()
+    proc("create_ref", string("name"), bigint("version", "NULL")) { in =>
+      val t = resolve(in)
+      t.createRef(str(in, 1), optLong(in, 2).getOrElse(t.currentVersion))
     },
-    proc("analyze", "table" -> StringType) { in =>
-      resolve(in.getUTF8String(0).toString).analyze(); ()
+    proc("create_branch", string("name")) { in => resolve(in).createBranch(str(in, 1)) },
+    proc("fast_forward", string("name")) { in => resolve(in).fastForward(str(in, 1)) },
+    // shallow clone: zero-copy snapshot table at dest (LogTable.cloneTo)
+    proc("clone", string("dest"), bigint("version", "NULL")) { in =>
+      val t = resolve(in)
+      t.cloneTo(str(in, 1), optLong(in, 2).getOrElse(t.currentVersion))
     },
-    proc("recluster_z", "table" -> StringType, "columns" -> StringType,
-        "n_files" -> LongType) { in =>
-      resolve(in.getUTF8String(0).toString).reclusterZ(
-        in.getUTF8String(1).toString.split(",").map(_.trim).toSeq
-          .filter(_.nonEmpty),
-        in.getLong(2).toInt); ()
+    // merge-on-read delete: the route to position deletes (plain
+    // DELETE stays COW, the bulk-delete default; this is the
+    // frequent-small-delete path, folded later by compact)
+    proc("delete_mor", string("predicate")) { in =>
+      resolve(in).deleteMor(org.apache.spark.sql.functions.expr(str(in, 1)))
     },
-    proc("create_ref", "table" -> StringType, "name" -> StringType) { in =>
-      resolve(in.getUTF8String(0).toString)
-        .createRef(in.getUTF8String(1).toString)
+    // merge-on-read upsert: position-marks matched rows + appends the
+    // batch (plain MERGE stays COW; folded later by compact)
+    proc("merge_mor", string("key"), string("source_query")) { in =>
+      resolve(in).mergeMor(spark.sql(str(in, 2)), str(in, 1))
     },
-    proc("create_branch", "table" -> StringType, "name" -> StringType) { in =>
-      resolve(in.getUTF8String(0).toString)
-        .createBranch(in.getUTF8String(1).toString); ()
+    // equality delete: key tombstones with ZERO table I/O (the CDC
+    // shape; delete_mor scans to find positions, this does not)
+    proc("delete_eq", string("keys_query")) { in =>
+      resolve(in).deleteEq(spark.sql(str(in, 1)))
     },
-    proc("fast_forward", "table" -> StringType, "name" -> StringType) { in =>
-      resolve(in.getUTF8String(0).toString)
-        .fastForward(in.getUTF8String(1).toString); ()
+    // equality upsert: tombstone + append in one commit, O(source)
+    proc("upsert_eq", string("key"), string("source_query")) { in =>
+      resolve(in).upsertEq(spark.sql(str(in, 2)), str(in, 1))
     },
-    proc("delete_mor", "table" -> StringType, "predicate" -> StringType) { in =>
-      resolve(in.getUTF8String(0).toString)
-        .deleteMor(org.apache.spark.sql.functions.expr(
-          in.getUTF8String(1).toString)); ()
+    // partition-spec evolution, same spec grammar as CREATE TABLE
+    // PARTITIONED BY (`'day(ts_us), kind'`); old files keep their
+    // layout (conservatively scanned), later writers adopt the new one
+    proc("evolve_spec", string("spec")) { in =>
+      val spec = str(in, 1)
+      val (pc, tf) = if (spec.trim.nonEmpty) Transform.parseSpecs(spec) else (Nil, Nil)
+      resolve(in).evolveSpec(pc, tf)
     },
-    proc("delete_eq", "table" -> StringType, "keys_query" -> StringType) { in =>
-      resolve(in.getUTF8String(0).toString)
-        .deleteEq(spark.sql(in.getUTF8String(1).toString)); ()
+    // REAL Iceberg v2 metadata for the current snapshot
+    // (IcebergExport); the 'history' mode exports every live snapshot
+    // (foreign time travel); untranslatable states refuse there
+    proc("export_iceberg", string("dest"), string("mode", "NULL")) { in =>
+      IcebergExport.export(resolve(in), str(in, 1), history = mode(in, 2, "history"))
     },
-    proc("upsert_eq", "table" -> StringType, "key" -> StringType,
-        "source_query" -> StringType) { in =>
-      resolve(in.getUTF8String(0).toString)
-        .upsertEq(spark.sql(in.getUTF8String(2).toString),
-          in.getUTF8String(1).toString); ()
+    // Puffin NDV statistics for the CURRENT snapshot of an
+    // already-exported table (the compute_table_stats maintenance
+    // pass; refuses when the export lags the table — IcebergStatistics)
+    proc("export_statistics", string("dest")) { in =>
+      IcebergStatistics.exportStatistics(resolve(in), str(in, 1))
     },
-    proc("evolve_spec", "table" -> StringType, "spec" -> StringType) { in =>
-      val spec = in.getUTF8String(1).toString
-      val (pc, tf) =
-        if (spec.trim.nonEmpty) Transform.parseSpecs(spec)
-        else (Nil, Nil)
-      resolve(in.getUTF8String(0).toString).evolveSpec(pc, tf); ()
-    },
-    // CALL cat.system.export_iceberg('ns.t', '<dest>') — real Iceberg
-    // v2 metadata for the current snapshot (IcebergExport); the
-    // _history twin exports every live snapshot (foreign time travel)
-    proc("export_iceberg", "table" -> StringType, "dest" -> StringType) { in =>
-      IcebergExport.export(resolve(in.getUTF8String(0).toString),
-        in.getUTF8String(1).toString); ()
-    },
-    // Puffin NDV statistics for an already-exported table (the
-    // compute_table_stats maintenance pass; see IcebergStatistics)
-    proc("export_statistics", "table" -> StringType, "dest" -> StringType) { in =>
-      IcebergStatistics.exportStatistics(
-        resolve(in.getUTF8String(0).toString),
-        in.getUTF8String(1).toString); ()
-    },
-    proc("export_iceberg_history", "table" -> StringType, "dest" -> StringType) { in =>
-      IcebergExport.export(resolve(in.getUTF8String(0).toString),
-        in.getUTF8String(1).toString, history = true); ()
-    },
-    // CALL cat.system.import_iceberg('ns.t', '<src>') — adopt an
-    // Iceberg v2 table as catalog table ns.t (IcebergImport; the
-    // files are borrowed in place, the table root lands under the
-    // catalog warehouse like any CREATE)
-    proc("import_iceberg", "table" -> StringType, "src" -> StringType) { in =>
-      val parts = in.getUTF8String(0).toString.split('.')
-      val ident = Identifier.of(parts.init, parts.last)
-      if (isTable(tableDir(ident)))
+    // adopt an Iceberg v2 table as a fresh table (IcebergImport;
+    // zero-copy, the files are borrowed in place)
+    proc("import_iceberg", string("src")) { in =>
+      val id = ident(in)
+      if (isTable(tableDir(id)))
         throw new IllegalArgumentException(
-          s"table ${ident} already exists — import into a fresh name")
-      IcebergImport.importTable(spark, in.getUTF8String(1).toString,
-        tableDir(ident).toString); ()
+          s"table ${id} already exists — import into a fresh name")
+      IcebergImport.importTable(spark, str(in, 1), tableDir(id).toString)
     }
   ).map(p => p.name() -> p).toMap
 

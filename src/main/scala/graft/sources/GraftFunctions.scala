@@ -265,20 +265,10 @@ private[sources] object SpjLayout {
     // function — an xxhash64 layout claiming it would co-locate WRONG
     // rows. Degrade to no-claim, the rule everywhere in this file.
     if (snap.transforms.exists(_.kind == "bucket")) return None
-    val hidden: Seq[(String, DataType, VExpression)] = snap.transforms.map { t =>
-      val expr: VExpression = t.kind match {
-        // the Iceberg-spec murmur3 bucket rides Spark's special-cased
-        // `bucket` transform — the only shape that engages SPJ
-        case "mbucket" => Expressions.bucket(t.n.toInt, t.source)
-        case "hour" => Expressions.hours(t.source)
-        case "day" => Expressions.days(t.source)
-        case "year" => Expressions.years(t.source)
-        case "month" => Expressions.months(t.source)
-        case "truncate" => Expressions.apply("truncate",
-          Expressions.literal(t.n), Expressions.column(t.source))
-      }
-      (t.colName, LongType, expr)
-    }
+    // the Iceberg-spec murmur3 bucket rides Spark's special-cased
+    // `bucket` transform — the only shape that engages SPJ
+    val hidden: Seq[(String, DataType, VExpression)] =
+      snap.transforms.map(t => (t.colName, LongType, Transform.v2(t)))
     val all = identity.flatten ++ hidden
     // every live file must carry every layout value (spec evolution
     // leaves pre-evolution files without the new keys — those

@@ -497,23 +497,7 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
       : Array[org.apache.spark.sql.connector.expressions.Transform] = {
     import org.apache.spark.sql.connector.expressions.Expressions
     val t = LogTable(SparkSession.active, root)
-    (t.partitionBy.map(Expressions.identity) ++ t.hiddenBy.map { tr =>
-      tr.kind match {
-        case "day" => Expressions.days(tr.source)
-        case "hour" => Expressions.hours(tr.source)
-        case "year" => Expressions.years(tr.source)
-        case "month" => Expressions.months(tr.source)
-        // mbucket IS the bucket a DSv2 consumer understands (the
-        // murmur3 function the catalog serves under that name); the
-        // legacy xxhash64 kind describes itself as xxbucket so the
-        // two can never be confused as co-partitioned
-        case "mbucket" => Expressions.bucket(tr.n.toInt, tr.source)
-        case "bucket" => Expressions.apply("xxbucket",
-          Expressions.literal(tr.n.toInt), Expressions.column(tr.source))
-        case "truncate" => Expressions.apply("truncate",
-          Expressions.literal(tr.n), Expressions.column(tr.source))
-      }
-    }).toArray
+    (t.partitionBy.map(Expressions.identity) ++ t.hiddenBy.map(Transform.v2)).toArray
   }
   override def capabilities(): util.Set[TableCapability] =
     if (pinnedVersion.nonEmpty)

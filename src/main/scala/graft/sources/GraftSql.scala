@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions.expr
   *                                             schema (the catalog
   *                                             refuses schema-less
   *                                             tables)
-  * CALL proc(t, ...)                         kept: a bare table name
-  *                                             is not Spark CALL syntax
+  * CALL proc(t, ...)                         forwarded to the catalog's
+  *                                             procedure table
   * CREATE | DROP MATERIALIZED VIEW v,        kept: [[MaterializedView]]
   *   CALL refresh_mv(v) | refresh_mv_full(v)
   * anything else (queries)                   kept: read path below
@@ -58,11 +58,16 @@ import org.apache.spark.sql.functions.expr
   * `t.col` (it is aliased by its own name). `UPDATE SET *` / `INSERT *`
   * with a new source column add it to the table; column-level SET and
   * `INSERT (cols) VALUES` do not. Group-based rewrites commit under the
-  * catalog's `rlo-*` operation names. DML, DDL and CALL return a
-  * one-row summary (version, operation, n_files, total_rows); Spark's
-  * analysis and parse errors surface as IllegalArgumentException (the
-  * original as its cause), as do unsupported shapes here — never a
-  * silent misparse into a different statement.
+  * catalog's `rlo-*` operation names. Forwarded CALL arguments bind by
+  * Spark's rules (its binder checks types, quoted arguments follow SQL
+  * escaping, omitted trailing ones take defaults, an unknown mode
+  * refuses); the summary is always the target table's current snapshot
+  * (for clone and expire_branch too, not the clone's or the branch's).
+  * DML, DDL and CALL return a one-row summary (version, operation,
+  * n_files, total_rows); Spark's analysis and parse errors surface as
+  * IllegalArgumentException (the original as its cause), as do
+  * unsupported shapes here — never a silent misparse into a different
+  * statement.
   */
 object GraftSql {
 
@@ -92,10 +97,9 @@ object GraftSql {
     warehousePath = Some(path)
   }
 
-  /** Register `table` under a SQL name: the current snapshot becomes
-    * view `<name>` plus `<name>_history` / `<name>_files` /
-    * `<name>_partitions` metadata views, and the name becomes a valid
-    * DML target for [[exec]]. */
+  /** Register `table` under a SQL name: view `<name>` (the current
+    * snapshot) plus its `<name>_<suffix>` metadata views
+    * ([[LogTable.metadataTables]]), and a valid DML target for [[exec]]. */
   def register(name: String, table: LogTable): Unit = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"), s"invalid table name '$name'")
     registry.put(name, table)
@@ -124,7 +128,7 @@ object GraftSql {
       case AlterPropsRe(name, verb, list) => execAlterProps(spark, name, verb, list)
       case _ => stmt.takeWhile(!_.isWhitespace).toUpperCase match {
         case "INSERT" => execInsert(spark, stmt)
-        case "CALL" => execCall(spark, stmt)
+        case "CALL" => call(spark, stmt)
         case "CREATE" | "DROP" | "ALTER" | "UPDATE" | "DELETE" | "MERGE" =>
           forward(spark, stmt)
         case _ =>
@@ -330,19 +334,13 @@ object GraftSql {
     require(verb != "ALTER" || AlterColumnRe.matches(tail),
       s"unsupported ALTER shape: $stmt (expected ADD | RENAME | DROP COLUMN, " +
         "ALTER COLUMN, or SET | UNSET TBLPROPERTIES)")
-    val root =
-      if (registry.containsKey(name) || !Set("CREATE", "DROP")(verb)) table(name).root
-      else warehousePath match {
-        case Some(w) => java.nio.file.Paths.get(w).resolve(name).toString
-        case None if verb == "DROP" =>
-          // nothing registered and nowhere to look: IF EXISTS is a no-op
-          require(phrase.toUpperCase.endsWith("EXISTS"),
-            s"no such table '$name' (neither registered nor under the warehouse)")
-          return dropped(spark, name)
-        case None => throw new IllegalStateException(
-          s"no warehouse configured: GraftSql.setWarehouse(path) before $phrase")
-      }
-    val absRoot = java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString
+    if (verb == "DROP" && !registry.containsKey(name) && warehousePath.isEmpty) {
+      // nothing registered and nowhere to look: IF EXISTS is a no-op
+      require(phrase.toUpperCase.endsWith("EXISTS"),
+        s"no such table '$name' (neither registered nor under the warehouse)")
+      return dropped(spark, name)
+    }
+    val root = rootOf(name, Set("CREATE", "DROP")(verb), phrase)
     // DML written without an alias keeps resolving `name.col`
     val alias = """^\s*(\w+)""".r.findFirstMatchIn(tail).map(_.group(1).toUpperCase) match {
       case Some(w) if !Set("SET", "WHERE", "USING")(w) => ""
@@ -351,25 +349,41 @@ object GraftSql {
     }
     // `SET *` / `INSERT *` add new source columns, as the merge API did
     val head = if (verb == "MERGE") "MERGE WITH SCHEMA EVOLUTION INTO" else phrase
-    registerCatalog(spark)
-    refreshViews() // the statement (MERGE's USING source) may read a registered view
-    try spark.sql(s"$head $CatalogName.`${absRoot.replace("`", "``")}`$alias$tail")
-    catch { case e: AnalysisException => throw new IllegalArgumentException(e.getMessage, e) }
+    runOnCatalog(spark, s"$head $CatalogName.`${root.replace("`", "``")}`$alias$tail")
     verb match {
       case "DROP" => dropped(spark, name)
       case v =>
         if (v == "CREATE" && !registry.containsKey(name))
-          register(name, LogTable(spark, absRoot))
+          register(name, LogTable(spark, root))
         summarize(spark, name, table(name).snapshot())
     }
+  }
+
+  /** The absolute root `name` addresses: its registered table's, or —
+    * for a statement that may create or drop it (`orWarehouse`) —
+    * `<warehouse>/<name>`. */
+  private def rootOf(name: String, orWarehouse: Boolean, what: String): String = {
+    val root =
+      if (registry.containsKey(name) || !orWarehouse) table(name).root
+      else java.nio.file.Paths.get(warehousePath.getOrElse(throw new IllegalStateException(
+        s"no warehouse configured: GraftSql.setWarehouse(path) before $what")))
+        .resolve(name).toString
+    java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString
+  }
+
+  /** Run a rewritten statement through Spark against the catalog. */
+  private def runOnCatalog(spark: SparkSession, sql: String): Unit = {
+    registerCatalog(spark)
+    refreshViews() // MERGE's USING source or a CALL's query may read one
+    try spark.sql(sql)
+    catch { case e: AnalysisException => throw new IllegalArgumentException(e.getMessage, e) }
   }
 
   /** Forget a dropped table's name and its views. */
   private def dropped(spark: SparkSession, name: String): DataFrame = {
     unregister(name)
-    Seq("", "_history", "_files", "_partitions", "_deletes", "_refs",
-      "_snapshots", "_manifests", "_entries")
-      .foreach(s => spark.catalog.dropTempView(s"$name$s"))
+    (name +: LogTable.metadataTables.map(m => s"${name}_${m._1}"))
+      .foreach(spark.catalog.dropTempView)
     summary(spark, 0L, "drop-table", 0L, 0L)
   }
 
@@ -398,154 +412,35 @@ object GraftSql {
 
   private val CallRe = """(?is)^CALL\s+(\w+)\s*\((.*)\)$""".r
 
-  private def execCall(spark: SparkSession, stmt: String): DataFrame =
-    stmt match {
-      case CallRe(proc, argStr) =>
-        val args = splitTopLevel(argStr, ',').filter(_.nonEmpty).map(unquote)
-        def t = table(args.head)
-        // materialized-view procedures target the MV registry, not a
-        // table; summarized over the view's own state snapshot
-        proc.toLowerCase match {
-          case "refresh_mv" =>
-            mview(args.head).refreshOrFull()
-            return summarizeMv(spark, args.head)
-          case "refresh_mv_full" =>
-            mview(args.head).fullRefresh()
-            return summarizeMv(spark, args.head)
-          case _ =>
-        }
-        val snap = proc.toLowerCase match {
-          // CALL compact(t [, '<part-col>', '<value>']) — the scoped
-          // form is Delta's OPTIMIZE ... WHERE: maintenance bounded to
-          // one partition's files
-          case "compact" =>
-            if (args.length >= 3)
-              t.compact(where = Some(p => p.get(args(1)).contains(args(2))))
-            else t.compact()
-          case "expire" => t.expire(keepLast = args(1).toInt)
-          // branch-scoped retention: CALL expire_branch(t, '<branch>',
-          // <keep_last>) — a busy WAP branch accumulates a snapshot
-          // per audited batch; this drops its old intermediates while
-          // the fork-point base (and main's lineage) stay intact
-          case "expire_branch" =>
-            t.branch(args(1)).expire(keepLast = args(2).toInt)
-          case "expire_older_than" =>
-            t.expireOlderThan(args(1).toLong,
-              keepLast = if (args.length > 2) args(2).toInt else 1)
-          case "rollback" => t.rollback(args(1).toLong)
-          // CALL clone(t, '<dest-path>' [, <version>]) — shallow clone:
-          // zero-copy snapshot table at dest (see LogTable.cloneTo)
-          case "clone" =>
-            val c = t.cloneTo(args(1),
-              if (args.length > 2) args(2).toLong else t.currentVersion)
-            c.snapshot()
-          // CALL remove_orphans(t [, 'dry_run']) — the dry-run form
-          // reports what the sweep WOULD reclaim, touching nothing
-          case "remove_orphans" =>
-            t.removeOrphans(dryRun =
-              args.length > 1 && args(1).equalsIgnoreCase("dry_run"))
-            t.snapshot()
-          // merge-on-read delete: CALL delete_mor(t, '<predicate>') —
-          // the SQL route to position deletes (plain DELETE stays COW,
-          // the bulk-delete default; this is the frequent-small-delete
-          // path, folded later by CALL compact)
-          case "delete_mor" => t.deleteMor(expr(args(1)))
-          // merge-on-read upsert: CALL merge_mor(t, <key>, '<source
-          // query>') — position-marks matched rows + appends the batch
-          // (plain MERGE stays COW; this is the frequent-small-upsert
-          // path, folded later by CALL compact)
-          case "merge_mor" =>
-            refreshViews()
-            t.mergeMor(spark.sql(args(2)), args(1))
-          // equality delete: CALL delete_eq(t, '<keys query>') — key
-          // tombstones with ZERO table I/O (the CDC shape; deleteMor
-          // scans to find positions, this does not)
-          case "delete_eq" =>
-            refreshViews()
-            t.deleteEq(spark.sql(args(1)))
-          // equality upsert: CALL upsert_eq(t, <key>, '<source query>')
-          // — tombstone + append in one commit, O(source)
-          case "upsert_eq" =>
-            refreshViews()
-            t.upsertEq(spark.sql(args(2)), args(1))
-          case "recluster" => t.recluster(args(1), args(2).toInt)
-          // CALL set_sort_order(t, 'c1,c2') — declared write sort
-          // order; '' clears
-          case "set_sort_order" => t.setSortOrder(
-            if (args.length > 1)
-              args(1).split(",").map(_.trim).toSeq.filter(_.nonEmpty)
-            else Nil)
-          // CALL analyze(t [, 'c1,c2...']) — NDV stats for the CBO
-          case "analyze" => t.analyze(
-            if (args.length > 1)
-              args(1).split(",").map(_.trim).toSeq.filter(_.nonEmpty)
-            else Nil)
-          // CALL recluster_z(t, 'c1,c2[,c3...]', n)
-          case "recluster_z" => t.reclusterZ(
-            args(1).split(",").map(_.trim).toSeq.filter(_.nonEmpty),
-            args(2).toInt)
-          case "create_ref" =>
-            t.createRef(args(1),
-              if (args.length > 2) args(2).toLong else t.currentVersion)
-            t.snapshot()
-          case "create_branch" => { t.createBranch(args(1)); t.snapshot() }
-          case "fast_forward" => t.fastForward(args(1))
-          // partition-spec evolution: CALL evolve_spec(t, 'day(ts_us),
-          // kind') — same spec grammar as CREATE TABLE PARTITIONED BY;
-          // empty spec un-partitions. Old files keep their layout
-          // (conservatively scanned); the registry takes the fresh
-          // handle so later statements write the NEW layout.
-          case "evolve_spec" =>
-            val (pc, tf) =
-              if (args.length > 1 && args(1).trim.nonEmpty)
-                Transform.parseSpecs(args(1))
-              else (Nil, Nil)
-            val evolved = t.evolveSpec(pc, tf)
-            register(args.head, evolved)
-            evolved.snapshot()
-          // CALL export_iceberg(t, '<dest-path>' [, 'history']) — REAL
-          // Iceberg v2 metadata at dest ([[IcebergExport]]); the
-          // 'history' form exports every live snapshot
-          // (foreign time travel); untranslatable states refuse there
-          case "export_iceberg" =>
-            IcebergExport.export(t, args(1),
-              history = args.length > 2 && args(2).equalsIgnoreCase("history"))
-            t.snapshot()
-          // CALL export_statistics(t, '<dest-path>') — Puffin NDV
-          // statistics for the CURRENT snapshot of an already-exported
-          // table ([[IcebergStatistics]]; the compute_table_stats
-          // maintenance pass — refuses when the export lags the table)
-          case "export_statistics" =>
-            IcebergStatistics.exportStatistics(t, args(1))
-            t.snapshot()
-          // CALL import_iceberg(newName, '<src-path>') — adopt an
-          // Iceberg v2 table as a graft table under the warehouse and
-          // register it ([[IcebergImport]]; zero-copy, files borrowed
-          // in place)
-          case "import_iceberg" =>
-            val wh = warehousePath.getOrElse(throw new IllegalStateException(
-              "no warehouse configured: GraftSql.setWarehouse(path) " +
-                "before import_iceberg"))
-            val root = java.nio.file.Paths.get(wh).resolve(args.head).toString
-            require(!registry.containsKey(args.head) &&
-              !java.nio.file.Files.exists(java.nio.file.Paths.get(root)),
-              s"table '${args.head}' already exists (at $root)")
-            val imp = IcebergImport.importTable(spark, args(1), root)
-            register(args.head, imp)
-            imp.snapshot()
-          case other => throw new IllegalArgumentException(
-            s"unknown procedure '$other' (supported: analyze, compact, " +
-              "expire, expire_branch, expire_older_than, rollback, " +
-              "remove_orphans, delete_mor, merge_mor, delete_eq, " +
-              "upsert_eq, recluster, create_ref, create_branch, " +
-              "fast_forward, evolve_spec, clone, export_iceberg, " +
-              "export_statistics, import_iceberg, refresh_mv, " +
-              "refresh_mv_full)")
-        }
-        summarize(spark, args.head, snap)
+  /** `CALL proc(t, args...)`: the MV refreshes run here (they address
+    * the MV registry); any other forwards as `CALL <cat>.system.proc(
+    * '`<root of t>`', args...)` — a bare-identifier argument (merge_mor's
+    * key) as a string literal, anything else byte for byte. */
+  private def call(spark: SparkSession, stmt: String): DataFrame = {
+    val (proc, name, args) = stmt match {
+      case CallRe(p, a) if a.trim.nonEmpty =>
+        val all = splitTopLevel(a, ',')
+        (p.toLowerCase, unquote(all.head), all.tail)
       case _ => throw new IllegalArgumentException(
         s"unsupported CALL shape: $stmt (expected CALL <proc>(<table>, ...))")
     }
+    proc match {
+      case "refresh_mv" => mview(name).refreshOrFull(); summarizeMv(spark, name)
+      case "refresh_mv_full" => mview(name).fullRefresh(); summarizeMv(spark, name)
+      case _ =>
+        val root = rootOf(name, proc == "import_iceberg", proc)
+        val target = s"`${root.replace("`", "``")}`"
+          .replace("\\", "\\\\").replace("'", "\\'")
+        val lits = args.map(a =>
+          if (a.matches("[A-Za-z_]\\w*") && !a.equalsIgnoreCase("NULL")) s"'$a'" else a)
+        runOnCatalog(spark,
+          s"CALL $CatalogName.system.$proc(${(s"'$target'" +: lits).mkString(", ")})")
+        // a changed spec (or a new table) needs a handle that adopts it
+        if (proc == "evolve_spec" || proc == "import_iceberg")
+          register(name, LogTable(spark, root))
+        summarize(spark, name, table(name).snapshot())
+    }
+  }
 
   // ------------------------------------------------------------ time travel
 

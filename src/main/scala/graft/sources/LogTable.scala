@@ -369,6 +369,27 @@ object Transform {
       case _ => None
     }
 
+  /** The DSv2 transform a spec entry reports to Spark (DESCRIBE's
+    * layout, storage-partitioned joins). `mbucket` IS the bucket a DSv2
+    * consumer understands (the murmur3 function the catalog serves
+    * under that name); the legacy xxhash64 kind describes itself as
+    * `xxbucket`, so the two can never be confused as co-partitioned. */
+  private[sources] def v2(t: Transform)
+      : org.apache.spark.sql.connector.expressions.Transform = {
+    import org.apache.spark.sql.connector.expressions.Expressions
+    t.kind match {
+      case "day" => Expressions.days(t.source)
+      case "hour" => Expressions.hours(t.source)
+      case "year" => Expressions.years(t.source)
+      case "month" => Expressions.months(t.source)
+      case "mbucket" => Expressions.bucket(t.n.toInt, t.source)
+      case "bucket" => Expressions.apply("xxbucket",
+        Expressions.literal(t.n.toInt), Expressions.column(t.source))
+      case "truncate" => Expressions.apply("truncate",
+        Expressions.literal(t.n), Expressions.column(t.source))
+    }
+  }
+
   /** String partition specs (`CALL evolve_spec`, the `hiddenBy` write
     * option): `day(c)`, `bucket(n, c)`, ... become hidden transforms
     * through [[named]]; bare names become hive-style identity
@@ -1662,14 +1683,9 @@ final class LogTable private (val spark: SparkSession, val root: String,
     * re-register to observe newer commits. */
   def registerViews(name: String): Unit = {
     read().createOrReplaceTempView(name)
-    history().createOrReplaceTempView(s"${name}_history")
-    filesTable().createOrReplaceTempView(s"${name}_files")
-    partitionsTable().createOrReplaceTempView(s"${name}_partitions")
-    deletesTable().createOrReplaceTempView(s"${name}_deletes")
-    refsTable().createOrReplaceTempView(s"${name}_refs")
-    snapshotsTable().createOrReplaceTempView(s"${name}_snapshots")
-    manifestsTable().createOrReplaceTempView(s"${name}_manifests")
-    entriesTable().createOrReplaceTempView(s"${name}_entries")
+    metadataTables.foreach { case (suffix, df) =>
+      df(this).createOrReplaceTempView(s"${name}_$suffix")
+    }
   }
 
   /** Empty DataFrame with the table's schema (from any data file, or
@@ -5511,6 +5527,19 @@ object LogTable {
   private case object NoopMetadataDelete
     extends Exception("noop metadata delete", null, false, false)
   private val mapper = new ObjectMapper()
+
+  /** The metadata tables every surface serves, by suffix: the
+    * `<name>_<suffix>` views of [[LogTable.registerViews]] and the
+    * catalog's `cat.ns.t.<suffix>` tables. */
+  private[sources] val metadataTables: Seq[(String, LogTable => DataFrame)] = Seq(
+    ("history", _.history()),
+    ("files", _.filesTable()),
+    ("partitions", _.partitionsTable()),
+    ("deletes", _.deletesTable()),
+    ("refs", _.refsTable()),
+    ("snapshots", _.snapshotsTable()),
+    ("manifests", _.manifestsTable()),
+    ("entries", _.entriesTable()))
 
   /** Open (creating directories if needed) the table rooted at `root`.
     * `partitionBy` makes appends lay data out hive-style and records

@@ -688,14 +688,57 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(collectSorted(t.read()) === Seq("[1,1.0]"))
   }
 
+  test("GraftSql CALL refuses an unknown mode instead of running the default") {
+    import spark.implicits._
+    import graft.sources.GraftSql
+    val t = LogTable(spark, Files.createTempDirectory("gsql_mode_").toString)
+    GraftSql.register("gsql_mode", t)
+    t.append(Seq((1L, "a")).toDF("id", "v"))
+    val orphan = java.nio.file.Paths.get(t.root, "data", "stray.parquet")
+    Files.createFile(orphan)
+    Files.setLastModifiedTime(orphan, java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 7200000L))
+    intercept[IllegalArgumentException] {
+      GraftSql.exec(spark, "CALL remove_orphans(gsql_mode, 'dry-run')") }
+    assert(Files.exists(orphan), "an unknown mode must not run the real sweep")
+    val dest = Files.createTempDirectory("gsql_mode_ice_")
+    intercept[IllegalArgumentException] {
+      GraftSql.exec(spark, s"CALL export_iceberg(gsql_mode, '$dest', 'histroy')") }
+    assert(!Files.exists(dest.resolve("metadata")), "an unknown mode must not export")
+  }
+
+  test("GraftSql CALL addresses a registered root holding '.' and a quote") {
+    import spark.implicits._
+    import graft.sources.GraftSql
+    val t = LogTable(spark, Files.createTempDirectory("gsql.call'q_").toString)
+    GraftSql.register("gsql_dot", t)
+    (0 until 3).foreach(i => t.append(Seq((i.toLong, s"v$i")).toDF("id", "v")))
+    GraftSql.exec(spark, "CALL compact(gsql_dot)")
+    assert(t.snapshot().operation === "compact")
+    assert(t.snapshot().files.size === 1)
+    // the optional arguments GraftSql spells out reach the same table
+    GraftSql.exec(spark, "CALL create_ref(gsql_dot, 'first', 1)")
+    assert(t.refVersion("first") === 1L)
+    val summary = GraftSql.exec(spark, "CALL analyze(gsql_dot, 'id')").head()
+    assert(summary.getAs[String]("operation") === "analyze")
+    assert(t.snapshot().ndvs.keySet === Set("id"))
+  }
+
   test("source gate: GraftSql has no DDL/DML write path of its own") {
     val src = new String(Files.readAllBytes(
       java.nio.file.Paths.get("src/main/scala/graft/sources/GraftSql.scala")), "UTF-8")
     assert(!src.contains("MergeParser"))
     val calls = Seq(".update(", ".delete(", ".merge(", ".declareSchema(",
-      ".renameField(", ".dropField(", ".widenField(", ".addField(")
+      ".renameField(", ".dropField(", ".widenField(", ".addField(",
+      // maintenance: CALL forwards to the catalog's procedure table
+      ".compact(", ".expire(", ".expireOlderThan(", ".rollback(",
+      ".removeOrphans(", ".cloneTo(", ".deleteMor(", ".mergeMor(",
+      ".deleteEq(", ".upsertEq(", ".recluster(", ".reclusterZ(",
+      ".setSortOrder(", ".analyze(", ".createRef(", ".createBranch(",
+      ".fastForward(", ".evolveSpec(", "IcebergExport.export(",
+      "exportStatistics(", "importTable(")
       .filter(src.contains)
     assert(calls.isEmpty,
-      s"GraftSql forwards DDL/DML to GraftCatalog; found ${calls.mkString(", ")}")
+      s"GraftSql forwards DDL/DML/CALL to GraftCatalog; found ${calls.mkString(", ")}")
   }
 }

@@ -478,12 +478,88 @@ class GraftCatalogSpec extends SparkSpec {
     (0 until 3).foreach(i =>
       spark.sql(s"INSERT INTO gtest.cw.t VALUES ($i,'a'),(${i + 10},'b')"))
     val before = LogTable(spark, s"$warehouse/cw/t").snapshot().files
-    spark.sql("CALL gtest.system.compact_where('cw.t', 'kind', 'a')")
+    spark.sql("CALL gtest.system.compact('cw.t', 'kind', 'a')")
     val after = LogTable(spark, s"$warehouse/cw/t").snapshot().files
     assert(after.count(_.partitions.get("kind").contains("a")) === 1)
     assert(after.filter(_.partitions.get("kind").contains("b")).map(_.path).toSet
       === before.filter(_.partitions.get("kind").contains("b")).map(_.path).toSet)
     assert(spark.sql("SELECT count(*) FROM gtest.cw.t").as[Long].head() === 6L)
+  }
+
+  test("CALL resolves a quoted table name as one identifier part") {
+    warehouse
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gtest.m")
+    spark.sql("CREATE TABLE gtest.m.`t.x` (id BIGINT)")
+    spark.sql("INSERT INTO gtest.m.`t.x` VALUES (1)")
+    spark.sql("INSERT INTO gtest.m.`t.x` VALUES (2)")
+    val t = LogTable(spark, s"$warehouse/m/t.x")
+    assert(t.snapshot().files.size === 2)
+    spark.sql("CALL gtest.system.compact('m.`t.x`')")
+    assert(t.snapshot().operation === "compact")
+    assert(t.snapshot().files.size === 1)
+    assert(spark.sql("SELECT count(*) FROM gtest.m.`t.x`").as[Long].head() === 2L)
+  }
+
+  test("one procedure table: each name once, optional arguments, adopted procedures") {
+    import scala.jdk.CollectionConverters._
+    warehouse
+    val names = Set("compact", "expire", "expire_older_than", "expire_branch",
+      "rollback", "remove_orphans", "recluster", "recluster_z", "analyze",
+      "set_sort_order", "create_ref", "create_branch", "fast_forward", "clone",
+      "delete_mor", "merge_mor", "delete_eq", "upsert_eq", "evolve_spec",
+      "export_iceberg", "export_statistics", "import_iceberg")
+    val cat = new GraftCatalog
+    cat.initialize("gtest", new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      Map("warehouse" -> warehouse).asJava))
+    assert(cat.listProcedures(Array("system")).map(_.name).toSeq.sorted ===
+      names.toSeq.sorted)
+    val src = new String(Files.readAllBytes(java.nio.file.Paths.get(
+      "src/main/scala/graft/sources/GraftCatalog.scala")), "UTF-8")
+    val defined = """proc\("(\w+)"""".r.findAllMatchIn(src).map(_.group(1)).toSeq
+    assert(defined.sorted === names.toSeq.sorted, "one entry per procedure name")
+
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gtest.o")
+    spark.sql("CREATE TABLE gtest.o.t (id BIGINT, v STRING)")
+    (1 to 3).foreach(i => spark.sql(s"INSERT INTO gtest.o.t VALUES ($i, 'v$i')"))
+    val t = LogTable(spark, s"$warehouse/o/t")
+
+    // optional arguments: mode, column list, version, keep_last
+    val orphan = java.nio.file.Paths.get(t.root, "data", "stray.parquet")
+    Files.createFile(orphan)
+    Files.setLastModifiedTime(orphan, java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 7200000L))
+    spark.sql("CALL gtest.system.remove_orphans('o.t', 'dry_run')")
+    assert(Files.exists(orphan), "dry run must not delete")
+    intercept[IllegalArgumentException] {
+      spark.sql("CALL gtest.system.remove_orphans('o.t', 'dry-run')") }
+    assert(Files.exists(orphan), "an unknown mode must not sweep")
+    spark.sql("CALL gtest.system.analyze('o.t', 'id')")
+    assert(t.snapshot().operation === "analyze")
+    assert(t.snapshot().ndvs.keySet === Set("id"))
+    spark.sql("CALL gtest.system.create_ref('o.t', 'r', 1)")
+    assert(t.refVersion("r") === 1L)
+    intercept[IllegalArgumentException] {
+      spark.sql("CALL gtest.system.compact('o.t', 'id')") }
+    val versions = t.versions
+    spark.sql("CALL gtest.system.expire_older_than('o.t', 0)")
+    assert(t.versions === versions)
+    spark.sql("CALL gtest.system.expire_older_than(table => 'o.t', " +
+      s"older_than_ms => ${System.currentTimeMillis() + 60000L}, keep_last => 2)")
+    assert(t.versions === versions.takeRight(2))
+
+    // the procedures adopted from GraftSql's CALL surface
+    val dest = Files.createTempDirectory("gcat_clone_").resolve("c").toString
+    spark.sql(s"CALL gtest.system.clone('o.t', '$dest')")
+    assert(LogTable(spark, dest).read().count() === 3L)
+    Seq((2L, "UP2"), (9L, "NEW9")).toDF("id", "v").createOrReplaceTempView("gcat_mor_src")
+    spark.sql("CALL gtest.system.merge_mor('o.t', 'id', 'SELECT * FROM gcat_mor_src')")
+    assert(t.snapshot().operation === "mor-merge")
+    assert(spark.sql("SELECT v FROM gtest.o.t ORDER BY id").as[String].collect().toSeq ===
+      Seq("v1", "UP2", "v3", "NEW9"))
+    spark.sql("CALL gtest.system.set_sort_order('o.t', 'v')")
+    assert(t.snapshot().sortCols === Seq("v"))
+    spark.sql("CALL gtest.system.set_sort_order('o.t')")
+    assert(t.snapshot().sortCols.isEmpty)
   }
 
   test("catalog writes honor CHECK constraints and reject duplicate creates") {

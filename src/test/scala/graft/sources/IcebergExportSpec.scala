@@ -284,7 +284,7 @@ class IcebergExportSpec extends SparkSpec {
     val dest2 = tmp("ice_cat_out_")
     spark.sql(s"CALL gice.system.export_iceberg('ns.src', '$dest2')")
     val dest2h = tmp("ice_cat_hist_out_")
-    spark.sql(s"CALL gice.system.export_iceberg_history('ns.src', '$dest2h')")
+    spark.sql(s"CALL gice.system.export_iceberg('ns.src', '$dest2h', 'history')")
     assert(Files.exists(Paths.get(dest2h).resolve("metadata").resolve("v1.metadata.json")))
     spark.sql(s"CALL gice.system.import_iceberg('ns.back', '$dest2')")
     assert(spark.sql("SELECT count(*) FROM gice.ns.back").head().getLong(0) === 3L)

@@ -29,11 +29,13 @@ import scala.jdk.CollectionConverters._
   *
   * — CREATE/CTAS/INSERT/INSERT OVERWRITE/SELECT/ALTER/DROP all run
   * through SPARK'S OWN parser, analyzer and permission seams; no
-  * bespoke SQL dialect in the path. GraftSql's CREATE/DROP, ALTER
-  * column changes, UPDATE/DELETE/MERGE and CALL land here too: it registers this catalog under
-  * a session-scoped name and forwards each statement with its target
-  * rewritten to an absolute-root identifier (`cat.`/abs/root``,
-  * which [[tableDir]] resolves as-is). Namespaces
+  * bespoke SQL dialect in the path. GraftSql's statements land here
+  * too — CREATE/DROP, ALTER column changes, UPDATE/DELETE/MERGE, CALL,
+  * and every query's registered names with their `VERSION AS OF` /
+  * `TIMESTAMP AS OF` time travel: it registers this catalog under a
+  * session-scoped name and rewrites each registered name to an
+  * absolute-root identifier (`cat.`/abs/root``, which [[tableDir]]
+  * resolves as-is). Namespaces
   * are warehouse subdirectories; a table is any directory with a
   * `_graft_log` manifest dir; the partition spec rides in the
   * manifest (persisted spec), so `loadTable` reconstructs the exact
@@ -87,8 +89,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     namespace.foldLeft(warehouse)(_.resolve(_))
   private def tableDir(ident: Identifier): Path =
     nsDir(ident.namespace).resolve(ident.name)
-  private def isTable(p: Path): Boolean =
-    Files.isDirectory(p.resolve("_graft_log"))
+  private def isTable(p: Path): Boolean = LogTable.exists(p.toString)
 
   // ------------------------------------------------------------- tables
 
@@ -129,14 +130,10 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
           // in between)
           if (ident.name.toLowerCase.startsWith("branch_")) {
             val bname = ident.name.substring("branch_".length)
-            if (t.branches.contains(bname)) {
-              val head = t.branch(bname).snapshot()
-              val schema =
-                if (head.schemaJson.nonEmpty) LogTable.parseSchema(head.schemaJson)
-                else new StructType()
-              return new GraftTable(proot.toString, schema,
+            if (t.branches.contains(bname))
+              return new GraftTable(proot.toString,
+                schemaOf(t.branch(bname).snapshot()),
                 writable = true, branchName = Some(bname))
-            }
           }
           // the changelog handle is a REAL partitioned relation (the
           // per-commit CDC planner), not a driver-collected LocalScan
@@ -154,13 +151,15 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       }
       throw new NoSuchTableException(ident)
     }
-    val t = LogTable(spark, root.toString) // adopts the persisted spec
-    val snap = t.snapshot()
-    val schema =
-      if (snap.schemaJson.nonEmpty) LogTable.parseSchema(snap.schemaJson)
-      else new StructType()
-    new GraftTable(root.toString, schema, writable = true)
+    // adopts the persisted spec
+    new GraftTable(root.toString, schemaOf(LogTable(spark, root.toString).snapshot()),
+      writable = true)
   }
+
+  /** A snapshot's recorded schema (empty before the first commit). */
+  private def schemaOf(snap: Snapshot): StructType =
+    if (snap.schemaJson.nonEmpty) LogTable.parseSchema(snap.schemaJson)
+    else new StructType()
 
   /** Statement targets (INSERT/UPDATE/DELETE/MERGE: Spark loads them
     * with write privileges) report every column nullable. LogTable
@@ -180,26 +179,22 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     * `FOR TIMESTAMP AS OF` clauses: the returned handle is pinned to
     * ONE snapshot (batch-read only, writes refused) and carries that
     * snapshot's OWN schema — a pre-evolution version reads with its
-    * historical columns. `version` accepts a snapshot number or a
-    * named ref (Iceberg tag): `VERSION AS OF 'prod'`. */
+    * historical columns. `version` accepts a snapshot number, a named
+    * ref (Iceberg tag) or a branch: `VERSION AS OF 'prod'`. A name that
+    * is both a tag and a branch reads the tag. */
   override def loadTable(ident: Identifier, version: String): Table = {
     val root = tableDir(ident)
     if (!isTable(root)) throw new NoSuchTableException(ident)
     val t = LogTable(spark, root.toString)
+    val tagged = version.toLongOption
+      .orElse(t.refs.collectFirst { case (`version`, v) => v })
     // a BRANCH name resolves to the branch's CURRENT HEAD (a live
     // read-only view of the branch lineage, not a pinned snapshot —
     // Iceberg's `VERSION AS OF 'branch'` semantics); tags stay pinned
-    version.toLongOption match {
-      case None if t.branches.contains(version) =>
-        val head = t.branch(version).snapshot()
-        val schema =
-          if (head.schemaJson.nonEmpty) LogTable.parseSchema(head.schemaJson)
-          else new StructType()
-        return new GraftTable(root.toString, schema,
-          writable = false, branchName = Some(version))
-      case _ => ()
-    }
-    val v = version.toLongOption.getOrElse(t.refVersion(version))
+    if (tagged.isEmpty && t.branches.contains(version))
+      return new GraftTable(root.toString, schemaOf(t.branch(version).snapshot()),
+        writable = false, branchName = Some(version))
+    val v = tagged.getOrElse(t.refVersion(version))
     require(t.versions.contains(v),
       s"table ${ident.name} has no snapshot v$v (versions: ${t.versions.mkString(", ")})")
     pinned(root.toString, t, v)
@@ -207,26 +202,17 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   /** `timestamp` arrives in MICROseconds (Spark's contract for this
     * overload); resolves to the latest snapshot committed at or before
-    * it — [[LogTable.timeTravelAsOf]] semantics. */
+    * it ([[LogTable.versionAsOf]]). */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val root = tableDir(ident)
     if (!isTable(root)) throw new NoSuchTableException(ident)
     val t = LogTable(spark, root.toString)
-    val tsMs = timestamp / 1000L
-    val vs = t.versions.filter(v => v > 0L && t.snapshot(v).timestampMs <= tsMs)
-    require(vs.nonEmpty,
-      s"table ${ident.name} has no snapshot committed at or before " +
-        s"epoch-ms $tsMs")
-    pinned(root.toString, t, vs.max)
+    pinned(root.toString, t, t.versionAsOf(timestamp / 1000L))
   }
 
-  private def pinned(root: String, t: LogTable, v: Long): Table = {
-    val snap = t.snapshot(v)
-    val schema =
-      if (snap.schemaJson.nonEmpty) LogTable.parseSchema(snap.schemaJson)
-      else new StructType()
-    new GraftTable(root, schema, writable = false, pinnedVersion = Some(v))
-  }
+  private def pinned(root: String, t: LogTable, v: Long): Table =
+    new GraftTable(root, schemaOf(t.snapshot(v)), writable = false,
+      pinnedVersion = Some(v))
 
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[STransform],

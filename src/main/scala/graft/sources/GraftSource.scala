@@ -213,11 +213,8 @@ private[sources] object GraftSourceUtil {
     val v = options.get("versionAsOf")
     val ts = options.get("timestampAsOf")
     if (v != null) t.snapshot(v.toLong)
-    else if (ts != null) {
-      val vs = t.versions.filter(x => t.snapshot(x).timestampMs <= ts.toLong)
-      require(vs.nonEmpty, s"no snapshot committed at or before $ts")
-      t.snapshot(vs.max)
-    } else t.snapshot()
+    else if (ts != null) t.snapshot(t.versionAsOf(ts.toLong))
+    else t.snapshot()
   }
 
   /** Physical scan schema: every logical field plus nullable twins
@@ -2050,13 +2047,16 @@ private[sources] final class GraftBatch(root: String, logical: StructType,
     // the row-level write replaces EXACTLY the groups this scan plans:
     // record them (and the snapshot they came from) for its commit
     rowLevel.foreach(_.recordScan(snap, planned.map(_.path), pushed.toSeq))
+    // a merge-on-read snapshot ships each file's referencing delete
+    // files with its partition (manifest metadata only): the executor
+    // anti-sets the marked positions away at read time. Indexed by
+    // data file once per plan, in the snapshot's delete order.
+    val delsOf = snap.deletes
+      .flatMap(d => d.counts.keys.map(p => p -> (d.path, d.bytes)))
+      .groupMap(_._1)(_._2)
     planned
       .map { f =>
-        // a merge-on-read snapshot ships each file's referencing delete
-        // files with its partition (manifest metadata only): the
-        // executor anti-sets the marked positions away at read time
-        val dels = snap.deletes.filter(_.counts.contains(f.path))
-          .map(d => (d.path, d.bytes))
+        val dels = delsOf.getOrElse(f.path, Nil)
         // equality deletes apply under the DATA-SEQUENCE guard: only
         // tombstones NEWER than the file can mark its rows — the guard
         // is resolved here, at planning, from manifest metadata

@@ -1,7 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedRelation, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, SupervisingCommand, UnresolvedWith}
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, TimestampType}
+
+import scala.jdk.CollectionConverters._
 
 /** SQL statement surface over [[LogTable]] — the interface the
   * reference's users actually hold: its ENTIRE query catalog is Trino
@@ -11,8 +17,8 @@ import org.apache.spark.sql.functions.expr
   *
   * Every statement Spark's parser handles is FORWARDED to a
   * session-scoped [[GraftCatalog]] — Spark's parser, analyzer and
-  * row-level planner, no second dialect — with only its target name
-  * rewritten to the table's root (`<cat>.`<root>``):
+  * row-level planner, no second dialect — with only its names
+  * rewritten to the tables' roots (`<cat>.`<root>``):
   *
   * {{{
   * CREATE TABLE [IF NOT EXISTS] t (...)      forwarded (root <wh>/t),
@@ -37,20 +43,27 @@ import org.apache.spark.sql.functions.expr
   *                                             procedure table
   * CREATE | DROP MATERIALIZED VIEW v,        kept: [[MaterializedView]]
   *   CALL refresh_mv(v) | refresh_mv_full(v)
-  * anything else (queries)                   kept: read path below
+  * anything else (queries, EXPLAIN)          forwarded through the
+  *                                             resolver below
   * }}}
   *
-  * The read path refreshes the registered views to the current
-  * snapshot, answers `SELECT COUNT(*) FROM t` from the manifest, and
-  * turns `t@v3` (version), `t@<ref>` (tag), `t@<branch>` (branch head),
-  * `t VERSION AS OF 3`, `t TIMESTAMP AS OF <epoch-ms | 'yyyy-MM-dd
-  * HH:mm:ss' UTC>` (Spark reads a bare number there differently),
-  * `table_changes(t, from [, to])` (the CDC changelog) and the
-  * Iceberg-seam functions `iceberg_scan(path [, id | 'ref'])`,
-  * `iceberg_snapshots(path)`, `iceberg_stats(path)`,
-  * `iceberg_partition_stats(path)`, `iceberg_rest_scan(uri, ns, t [,
-  * id | 'ref'])`, `rest_view(uri, ns, view)` into snapshot-scoped temp
-  * views, so they compose with arbitrary SELECT syntax.
+  * Queries, INSERT's source query and every forwarded statement go
+  * through one resolver over Spark's parsed plan (subqueries and CTE
+  * bodies included): a registered table name (matched
+  * case-insensitively, unless a CTE of that name is in scope) reads
+  * the catalog's CURRENT snapshot, so `SELECT COUNT(*) FROM t` is
+  * answered from the manifest by the scan's aggregate pushdown; a
+  * materialized view's name reads the view; `t VERSION AS OF 3 |
+  * '<tag>' | '<branch>'` and `t TIMESTAMP AS OF <epoch-ms |
+  * 'yyyy-MM-dd HH:mm:ss' UTC>` (Spark reads a bare number there
+  * differently) time-travel through the catalog (a name that is both
+  * a tag and a branch reads the tag); a bare registered name as
+  * `table_changes`' first argument is its root. `t@v3` / `t@<name>` is
+  * sugar for `t VERSION AS OF 3 | '<name>'` (in a MERGE source,
+  * `(FROM t VERSION AS OF …)`), rewritten in the text outside string
+  * literals because Spark's lexer rejects `@`. The table functions are
+  * Spark's, registered with the catalog
+  * ([[graft.GraftExtensions.tableFunctions]]).
   *
   * Forwarded DML has Spark's (and Trino's) semantics: MERGE evaluates
   * its WHEN clauses in textual order, ON may be any condition, SET may
@@ -64,10 +77,10 @@ import org.apache.spark.sql.functions.expr
   * refuses); the summary is always the target table's current snapshot
   * (for clone and expire_branch too, not the clone's or the branch's).
   * DML, DDL and CALL return a one-row summary (version, operation,
-  * n_files, total_rows); Spark's analysis and parse errors surface as
+  * n_files, total_rows); their analysis and parse errors surface as
   * IllegalArgumentException (the original as its cause), as do
   * unsupported shapes here — never a silent misparse into a different
-  * statement.
+  * statement. A query's errors are Spark's own.
   */
 object GraftSql {
 
@@ -99,9 +112,12 @@ object GraftSql {
 
   /** Register `table` under a SQL name: view `<name>` (the current
     * snapshot) plus its `<name>_<suffix>` metadata views
-    * ([[LogTable.metadataTables]]), and a valid DML target for [[exec]]. */
+    * ([[LogTable.metadataTables]]) for plain `spark.sql`, and a name
+    * [[exec]] reads and writes through the catalog by its root (so a
+    * branch handle, which shares main's root, refuses). */
   def register(name: String, table: LogTable): Unit = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"), s"invalid table name '$name'")
+    require(!table.isBranchHandle, s"cannot register branch handle '$name' (register main)")
     registry.put(name, table)
     table.registerViews(name)
   }
@@ -131,49 +147,9 @@ object GraftSql {
         case "CALL" => call(spark, stmt)
         case "CREATE" | "DROP" | "ALTER" | "UPDATE" | "DELETE" | "MERGE" =>
           forward(spark, stmt)
-        case _ =>
-          // the catalog's first query (`SELECT COUNT(*) FROM api`,
-          // reference README.md:128) answers from MANIFEST ARITHMETIC —
-          // zero data files opened, zero Spark jobs; at 100 TB this is
-          // O(manifest) vs a full scan
-          metaCount(spark, stmt) match {
-            case Some(df) => df
-            case None =>
-              // query path: refresh each registered table's data view to
-              // the CURRENT snapshot (registration-time views would hide
-              // commits that happened since), then rewrite time travel
-              refreshViews()
-              spark.sql(rewriteTimeTravel(spark, stmt))
-          }
+        case _ => run(spark, stmt)
       }
     }
-  }
-
-  private val CountRe =
-    """(?is)^SELECT\s+COUNT\(\s*\*\s*\)(?:\s+AS\s+(\w+))?\s+FROM\s+(\w+)$""".r
-
-  /** Metadata fast path for the exact `SELECT COUNT(*) FROM <t>`
-    * shape over a registered table ([[LogTable.countMeta]]); the
-    * result is column-named exactly as spark.sql would name it
-    * (`count(1)`, or the alias), so callers cannot tell the fast path
-    * from the scan — except by its speed. Any other query shape (or
-    * an unregistered name) falls through to the real scan. */
-  private def metaCount(spark: SparkSession, stmt: String): Option[DataFrame] =
-    stmt match {
-      case CountRe(alias, name) if registry.containsKey(name) &&
-          table(name).snapshot().eqDeletes.isEmpty =>
-        // (outstanding equality deletes make the manifest count
-        // unknowable — fall through to the real scan)
-        import spark.implicits._
-        val colName = Option(alias).getOrElse("count(1)")
-        Some(Seq(table(name).countMeta()).toDF(colName))
-      case _ => None
-    }
-
-  /** Point every registered table's data view at its current snapshot. */
-  private def refreshViews(): Unit = {
-    registry.forEach((name, t) => t.read().createOrReplaceTempView(name))
-    mvRegistry.forEach((name, v) => v.read().createOrReplaceTempView(name))
   }
 
   // ----------------------------------------------------- materialized views
@@ -238,7 +214,6 @@ object GraftSql {
     // against the recorded schema inside MaterializedView.apply)
     val mv = MaterializedView(spark, baseT, root, keys.toSeq, aggs.toSeq)
     mvRegistry.put(name, mv)
-    mv.read().createOrReplaceTempView(name)
     summarizeMv(spark, name)
   }
 
@@ -275,10 +250,7 @@ object GraftSql {
     stmt match {
       case InsertRe(name, colList, query) =>
         val t = table(name)
-        // the query may read another registered table — see its
-        // current snapshot, not the registration-time view
-        refreshViews()
-        val df = spark.sql(query.trim)
+        val df = run(spark, query.trim)
         val renamed = Option(colList) match {
           case Some(cl) if cl.trim.nonEmpty =>
             val names = cl.split(",").map(_.trim)
@@ -300,13 +272,6 @@ object GraftSql {
     * the catalog's warehouse is never consulted. */
   private val CatalogName = "graft_sql"
 
-  private def registerCatalog(spark: SparkSession): Unit = {
-    val key = s"spark.sql.catalog.$CatalogName"
-    if (spark.conf.getOption(key).isEmpty) {
-      spark.conf.set(s"$key.warehouse", System.getProperty("java.io.tmpdir"))
-      spark.conf.set(key, classOf[GraftCatalog].getName)
-    }
-  }
 
   /** A statement Spark parses: its verb phrase, target name, and tail. */
   private val ForwardRe = ("""(?is)^(CREATE\s+TABLE(?:\s+IF\s+NOT\s+EXISTS)?|""" +
@@ -368,16 +333,17 @@ object GraftSql {
       else java.nio.file.Paths.get(warehousePath.getOrElse(throw new IllegalStateException(
         s"no warehouse configured: GraftSql.setWarehouse(path) before $what")))
         .resolve(name).toString
-    java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString
+    absolute(root)
   }
 
-  /** Run a rewritten statement through Spark against the catalog. */
-  private def runOnCatalog(spark: SparkSession, sql: String): Unit = {
-    registerCatalog(spark)
-    refreshViews() // MERGE's USING source or a CALL's query may read one
-    try spark.sql(sql)
+  private def absolute(root: String): String =
+    java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString
+
+  /** Run a rewritten statement through the resolver, Spark's errors as
+    * IllegalArgumentException. */
+  private def runOnCatalog(spark: SparkSession, sql: String): Unit =
+    try run(spark, sql)
     catch { case e: AnalysisException => throw new IllegalArgumentException(e.getMessage, e) }
-  }
 
   /** Forget a dropped table's name and its views. */
   private def dropped(spark: SparkSession, name: String): DataFrame = {
@@ -442,149 +408,98 @@ object GraftSql {
     }
   }
 
-  // ------------------------------------------------------------ time travel
+  // -------------------------------------------------------------- resolver
 
-  /** Rewrite time-travel references into snapshot-scoped temp views:
-    * `t@v3` / `t@<ref-or-branch>` / `t VERSION AS OF 3` /
-    * `t TIMESTAMP AS OF <epoch-ms | 'yyyy-MM-dd HH:mm:ss'>` (UTC).
-    * Only registered table names rewrite; anything else passes through
-    * untouched. Replacement is by MATCH SPAN, and a match STARTING
-    * inside a single-quoted string literal is data, never a table
-    * reference — `WHERE note = 'see t@v1'` survives byte-identical
-    * (a `TIMESTAMP AS OF '...'` match starts outside its literal and
-    * legitimately spans into it). */
-  private def rewriteTimeTravel(spark: SparkSession, stmt: String): String = {
-    val lits = literalSpans(stmt)
-    def inLiteral(i: Int): Boolean = lits.exists(r => i >= r._1 && i < r._2)
-    val repls = scala.collection.mutable.ListBuffer[(Int, Int, String)]()
-    // a match outside any literal becomes temp view `<prefix>__at_<hash>`
-    def bindView(m: scala.util.matching.Regex.Match, prefix: String)(
-        df: => DataFrame): Unit =
-      if (!inLiteral(m.start)) {
-        val view = s"${prefix}__at_" +
-          java.lang.Integer.toHexString(m.matched.hashCode).replace('-', 'n')
-        df.createOrReplaceTempView(view)
-        repls += ((m.start, m.end, view))
-      }
-    def bind(m: scala.util.matching.Regex.Match, name: String, df: => DataFrame): Unit =
-      if (registry.containsKey(name)) bindView(m, name)(df)
-    // t@v3 | t@name  (version / ref / branch)
-    for (m <- """(\w+)@(v(\d+)|[A-Za-z0-9._-]+)""".r.findAllMatchIn(stmt)) {
-      val (name, suffix) = (m.group(1), m.group(2))
-      bind(m, name, {
-        val t = table(name)
-        if (suffix.matches("v\\d+")) t.timeTravel(suffix.substring(1).toLong)
-        else if (t.refs.exists(_._1 == suffix)) t.readRef(suffix)
-        else if (t.branches.contains(suffix)) t.branch(suffix).read()
-        else throw new IllegalArgumentException(
-          s"'$suffix' is neither vN, a ref, nor a branch of '$name'")
-      })
+  /** Run one statement through Spark's parser with GraftSql's names
+    * resolved ([[resolveNames]]), as `spark.sql` runs its plan — after
+    * registering the catalog, and the table functions beside it, in
+    * the session (once). */
+  private def run(spark: SparkSession, sql: String): DataFrame = {
+    val key = s"spark.sql.catalog.$CatalogName"
+    if (spark.conf.getOption(key).isEmpty) {
+      spark.conf.set(s"$key.warehouse", System.getProperty("java.io.tmpdir"))
+      spark.conf.set(key, classOf[GraftCatalog].getName)
+      graft.GraftExtensions.register(spark)
     }
-    // t VERSION AS OF 3
-    for (m <- """(?i)(\w+)\s+VERSION\s+AS\s+OF\s+(\d+)""".r.findAllMatchIn(stmt))
-      bind(m, m.group(1), table(m.group(1)).timeTravel(m.group(2).toLong))
-    // table_changes(t, from [, to]) — the CDC changelog as a table
-    // function (Delta's table_changes / Iceberg's changelog view):
-    // rows + _change_type + _commit_version over (from, to]
-    for (m <- """(?i)(?<![A-Za-z0-9_])table_changes\s*\(\s*(\w+)\s*,\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)"""
-        .r.findAllMatchIn(stmt)) {
-      val name = m.group(1)
-      bind(m, name, {
-        val t = table(name)
-        t.readCdc(m.group(2).toLong,
-          Option(m.group(3)).map(_.toLong).getOrElse(t.currentVersion))
-      })
-    }
-    // iceberg_rest_scan('<uri>', '<ns>', '<table>' [, <snapshot-id>])
-    // — read a table served by an Iceberg REST catalog endpoint
-    // directly in SQL: the LoadTableResult comes over HTTP, the scan
-    // runs from the wire-carried metadata.
-    for (m <- ("""(?i)(?<![A-Za-z0-9_])iceberg_rest_scan\s*\(\s*'([^']+)'\s*,\s*'([^']+)'""" +
-        """\s*,\s*'([^']+)'\s*(?:,\s*(?:(\d+)|'([^']+)')\s*)?\)""")
-        .r.findAllMatchIn(stmt))
-      bindView(m, "iceberg_rest_scan") {
-        IcebergRead.readRest(spark, m.group(1), m.group(2), m.group(3),
-          Option(m.group(4)).map(_.toLong), refAsOf = Option(m.group(5)))
-      }
-    // iceberg_snapshots('<path>') — the snapshot log of an Iceberg
-    // table as a table function (DuckDB's convention): one row per
-    // snapshot with id/timestamp/operation/manifest-list, the
-    // discovery step before an iceberg_scan(path, id) time travel
-    for (m <- """(?i)(?<![A-Za-z0-9_])iceberg_snapshots\s*\(\s*'([^']+)'\s*\)"""
-        .r.findAllMatchIn(stmt))
-      bindView(m, "iceberg_snapshots")(IcebergRead.snapshots(spark, m.group(1)))
-    // iceberg_stats('<path>') — the current snapshot's recorded Puffin
-    // NDV statistics as (col_name, ndv) rows (empty when none)
-    for (m <- """(?i)(?<![A-Za-z0-9_])iceberg_stats\s*\(\s*'([^']+)'\s*\)"""
-        .r.findAllMatchIn(stmt))
-      bindView(m, "iceberg_stats") {
-        import spark.implicits._
-        IcebergStatistics.ndvStats(m.group(1)).toSeq.sorted.toDF("col_name", "ndv")
-      }
-    // iceberg_partition_stats('<path>') — the current snapshot's
-    // registered partition-statistics file (the spec's CBO rollup);
-    // refuses when none is registered (absence is a fact)
-    for (m <- """(?i)(?<![A-Za-z0-9_])iceberg_partition_stats\s*\(\s*'([^']+)'\s*\)"""
-        .r.findAllMatchIn(stmt))
-      bindView(m, "iceberg_pstats")(IcebergRead.partitionStats(spark, m.group(1)))
-    // rest_view('<catalog-uri>', '<namespace>', '<view>') — execute a
-    // REST-catalog view's current SQL representation (dialect-gated:
-    // spark only from this surface) as a table function
-    for (m <- """(?i)(?<![A-Za-z0-9_])rest_view\s*\(\s*'([^']+)'\s*,\s*'([^']+)'\s*,\s*'([^']+)'\s*\)"""
-        .r.findAllMatchIn(stmt))
-      bindView(m, "rest_view") {
-        IcebergRead.readRestView(spark, m.group(1), m.group(2), m.group(3))
-      }
-    // iceberg_scan('<path>' [, <snapshot-id> | '<ref>']) — read an
-    // Iceberg v2 table (an export of ours, or a foreign one within
-    // the supported subset) directly in SQL: DuckDB's iceberg_scan
-    // convention; a numeric second arg time-travels by snapshot id, a
-    // quoted one resolves through the metadata's refs map (tags)
-    for (m <- """(?i)(?<![A-Za-z0-9_])iceberg_scan\s*\(\s*'([^']+)'\s*(?:,\s*(?:(\d+)|'([^']+)')\s*)?\)"""
-        .r.findAllMatchIn(stmt))
-      bindView(m, "iceberg_scan") {
-        val snapId = Option(m.group(2)).map(_.toLong)
-          .orElse(Option(m.group(3)).map(r => IcebergRead.refSnapshot(m.group(1), r)))
-        IcebergRead.read(spark, m.group(1), snapId)
-      }
-    // t TIMESTAMP AS OF 1704067200000 | 'yyyy-MM-dd HH:mm:ss' (UTC)
-    for (m <- """(?i)(\w+)\s+TIMESTAMP\s+AS\s+OF\s+(\d+|'[^']+')""".r.findAllMatchIn(stmt)) {
-      val ts = m.group(2) match {
-        case q if q.startsWith("'") =>
-          java.time.LocalDateTime.parse(q.substring(1, q.length - 1).replace(' ', 'T'))
-            .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-        case n => n.toLong
-      }
-      bind(m, m.group(1), table(m.group(1)).timeTravelAsOf(ts))
-    }
-    // apply right-to-left so earlier spans stay valid
-    val sb = new StringBuilder(stmt)
-    repls.sortBy(-_._1).foreach { case (s0, e0, v) => sb.replace(s0, e0, v) }
-    sb.toString
+    GraftBridge.ofRows(spark,
+      resolveNames(GraftBridge.parsePlan(spark, atSugar(sql)), Set.empty))
   }
 
-  /** [start, end) spans of single-quoted string literals (`''` is the
-    * in-literal escape, as ANSI SQL). An unterminated literal extends
-    * to end-of-statement — conservatively treated as literal. */
-  private def literalSpans(s: String): Seq[(Int, Int)] = {
-    val spans = scala.collection.mutable.ListBuffer[(Int, Int)]()
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '\'') {
-        val st = i
-        i += 1
-        var done = false
-        while (i < s.length && !done) {
-          if (s.charAt(i) == '\'') {
-            if (i + 1 < s.length && s.charAt(i + 1) == '\'') i += 2
-            else { done = true; i += 1 }
-          } else i += 1
-        }
-        spans += ((st, i))
-      } else i += 1
+  /** Rewrite a parsed plan's names, into subqueries, CTE bodies and
+    * supervised plans (EXPLAIN): a registered table becomes its catalog
+    * relation (time travel kept on it), a materialized view its read
+    * plan, each aliased by its name; `table_changes`' bare registered
+    * first argument becomes its root. `ctes` (lower-cased) are the CTE
+    * names in scope, which shadow registered names. */
+  private def resolveNames(plan: LogicalPlan, ctes: Set[String]): LogicalPlan =
+    plan match {
+      case w: UnresolvedWith =>
+        val names = w.cteRelations.map(_._1.toLowerCase)
+        w.copy(child = resolveNames(w.child, ctes ++ names),
+          cteRelations = w.cteRelations.zipWithIndex.map { case ((n, body, depth), i) =>
+            val visible = if (w.allowRecursion) names else names.take(i)
+            (n, resolveNames(body, ctes ++ visible).asInstanceOf[SubqueryAlias], depth)
+          })
+      case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, _) =>
+        lookup(registry, u.multipartIdentifier, ctes).fold(tt: LogicalPlan)(t =>
+          SubqueryAlias(u.multipartIdentifier.head,
+            tt.copy(relation = onCatalog(u, t), timestamp = ts.map(utcAsOf))))
+      case u: UnresolvedRelation =>
+        lookup(registry, u.multipartIdentifier, ctes).map(onCatalog(u, _))
+          .orElse(lookup(mvRegistry, u.multipartIdentifier, ctes)
+            .map(_.read().queryExecution.analyzed))
+          .fold(u: LogicalPlan)(SubqueryAlias(u.multipartIdentifier.head, _))
+      case f @ UnresolvedTableValuedFunction(Seq(fn), (a: UnresolvedAttribute) +: rest, _)
+          if fn.equalsIgnoreCase("table_changes") =>
+        lookup(registry, a.nameParts, ctes).fold(f)(t =>
+          f.copy(functionArgs = Literal(absolute(t.root)) +: rest))
+      case c: SupervisingCommand => c.withTransformedSupervisedPlan(resolveNames(_, ctes))
+      case p => p.mapChildren(resolveNames(_, ctes)).transformExpressions {
+        case e: SubqueryExpression => e.withNewPlan(resolveNames(e.plan, ctes))
+      }
     }
-    spans.toSeq
+
+  /** The registered entry a single-part name (not a CTE in scope)
+    * names: exact spelling first, else case-insensitively. */
+  private def lookup[V](m: java.util.concurrent.ConcurrentHashMap[String, V],
+      parts: Seq[String], ctes: Set[String]): Option[V] = parts match {
+    case Seq(n) if !ctes(n.toLowerCase) => Option(m.get(n)).orElse(
+      m.asScala.collectFirst { case (k, v) if k.equalsIgnoreCase(n) => v })
+    case _ => None
   }
+
+  private def onCatalog(u: UnresolvedRelation, t: LogTable): UnresolvedRelation =
+    u.copy(multipartIdentifier = Seq(CatalogName, absolute(t.root)))
+
+  /** `TIMESTAMP AS OF` keeps GraftSql's meaning: bare digits are
+    * epoch-ms and a quoted 'yyyy-MM-dd HH:mm:ss' is UTC (Spark would
+    * read seconds, and the session zone). */
+  private def utcAsOf(e: Expression): Expression = e match {
+    case Literal(ms, IntegerType | LongType) =>
+      Literal(ms.asInstanceOf[Number].longValue * 1000L, TimestampType)
+    case Literal(s, _: StringType) =>
+      Literal(java.time.LocalDateTime.parse(s.toString.replace(' ', 'T'))
+        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L, TimestampType)
+    case other => other
+  }
+
+  /** A single-quoted literal (`''` escapes a quote; an unterminated
+    * one runs to the end), or `<name>@v<N>` / `<name>@<ref>`. Literals
+    * match first, so a token inside one is data. */
+  private val AtRe =
+    """'(?:[^']++|'')*+(?:'|\z)|(\w+)@(?:v(\d+)(?![\w.-])|([A-Za-z0-9._-]+))""".r
+  private val UsingRe = """(?i)\bUSING\s+\z""".r
+
+  /** `t@v3` / `t@<name>` → `t VERSION AS OF 3 | '<name>'` for a
+    * registered `t` outside string literals — `(FROM t VERSION AS OF
+    * …)` as a MERGE source, which takes no temporal clause. */
+  private def atSugar(sql: String): String =
+    AtRe.replaceSomeIn(sql, m =>
+      Option(m.group(1)).filter(n => lookup(registry, Seq(n), Set.empty).nonEmpty).map { n =>
+        val tt = s"$n VERSION AS OF " + Option(m.group(2)).getOrElse(s"'${m.group(3)}'")
+        scala.util.matching.Regex.quoteReplacement(
+          if (UsingRe.findFirstIn(sql.substring(0, m.start)).nonEmpty) s"(FROM $tt)" else tt)
+      })
 
   // -------------------------------------------------------------- utilities
 

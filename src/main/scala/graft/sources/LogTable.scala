@@ -794,12 +794,17 @@ final class LogTable private (val spark: SparkSession, val root: String,
     * table has no snapshot that old (same contract as Iceberg — the
     * history before the first commit, or expired history, cannot be
     * reconstructed). */
-  def timeTravelAsOf(tsMs: Long): DataFrame = {
+  def timeTravelAsOf(tsMs: Long): DataFrame = timeTravel(versionAsOf(tsMs))
+
+  /** The latest version committed at or before `tsMs` — the one
+    * timestamp rule behind [[timeTravelAsOf]], the catalog's
+    * `TIMESTAMP AS OF` and the source's `timestampAsOf` option. */
+  def versionAsOf(tsMs: Long): Long = {
     val v = versions.filter(v => snapshot(v).timestampMs <= tsMs)
     require(v.nonEmpty,
       s"no snapshot committed at or before $tsMs (oldest retained: " +
         s"${versions.headOption.map(snapshot(_).timestampMs).getOrElse("none")})")
-    timeTravel(v.max)
+    v.max
   }
 
   /** Partition-pruned scan: keep only the files whose manifest
@@ -5541,7 +5546,13 @@ object LogTable {
     ("manifests", _.manifestsTable()),
     ("entries", _.entriesTable()))
 
-  /** Open (creating directories if needed) the table rooted at `root`.
+  /** Whether `root` holds a table (its manifest directory exists). */
+  def exists(root: String): Boolean =
+    Files.isDirectory(Paths.get(root).resolve(ManifestDir))
+
+  /** Open the table rooted at `root`, creating its directories when the
+    * table is new (opening an existing table writes nothing; every
+    * writer creates its own target directory).
     * `partitionBy` makes appends lay data out hive-style and records
     * per-file partition values in the manifest for pruned scans.
     * `hiddenBy` declares HIDDEN partition transforms ([[Transform]]):
@@ -5554,8 +5565,11 @@ object LogTable {
       partitionBy: Seq[String] = Nil,
       hiddenBy: Seq[Transform] = Nil,
       io: GraftFileIO = GraftFileIO.Local): LogTable = {
-    Files.createDirectories(Paths.get(root).resolve("data"))
-    io.mkdirs(Paths.get(root).resolve(ManifestDir))
+    val logDir = Paths.get(root).resolve(ManifestDir)
+    if (!io.exists(logDir)) {
+      Files.createDirectories(Paths.get(root).resolve("data"))
+      io.mkdirs(logDir)
+    }
     // the partition spec is TABLE metadata, not handle state: commits
     // record it in the manifest, and a spec-less open of an existing
     // table adopts the recorded spec — so every handle (a fresh

@@ -87,6 +87,24 @@ object GraftBridge {
       .map(execution.datasources.DataSourceUtils.decodePartitioningColumns)
       .getOrElse(Nil)
 
+  /** Parse one statement with the session's own SQL parser (commands
+    * such as EXPLAIN included) into its unresolved plan. */
+  def parsePlan(spark: SparkSession, sql: String): catalyst.plans.logical.LogicalPlan =
+    classicSession(spark).sessionState.sqlParser.parsePlan(sql)
+
+  /** Analyze and wrap a plan as a DataFrame, exactly as `spark.sql`
+    * does with its parsed plan (commands run eagerly). */
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(classicSession(spark), plan)
+
+  /** Register a table function on an EXISTING session — the
+    * same-session complement of `injectTableFunction`. */
+  def registerTableFunction(spark: SparkSession, name: String,
+      info: catalyst.expressions.ExpressionInfo,
+      builder: Seq[Expression] => catalyst.plans.logical.LogicalPlan): Unit =
+    classicSession(spark).sessionState.tableFunctionRegistry
+      .registerFunction(catalyst.FunctionIdentifier(name), info, builder)
+
   /** Register a SQL function on an EXISTING session (the session
     * FunctionRegistry is behind private[sql] sessionState) — the
     * same-session complement of injecting through

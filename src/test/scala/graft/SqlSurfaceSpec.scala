@@ -492,6 +492,93 @@ class SqlSurfaceSpec extends SparkSpec {
       "SELECT COUNT(*) FROM gsql_cnt WHERE id >= 50").head().getLong(0) === 73L)
   }
 
+  test("a catalog SELECT COUNT(*) over a table with no data/ leaves no data/ behind") {
+    import spark.implicits._
+    val wh = Files.createTempDirectory("gsql_nodata_wh_")
+    val t = LogTable(spark, wh.resolve("t").toString)
+    t.append((0 until 7).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
+    spark.conf.set("spark.sql.catalog.gsql_nodata", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gsql_nodata.warehouse", wh.toString)
+    val data = wh.resolve("t").resolve("data")
+    val hidden = wh.resolve("t").resolve("data_x")
+    Files.move(data, hidden)
+    try {
+      // opening an existing table writes nothing to the store, and the
+      // count comes from the manifest (no data file is opened)
+      assert(spark.sql("SELECT COUNT(*) FROM gsql_nodata.t").head().getLong(0) === 7L)
+      assert(!Files.exists(data), "a catalog read created data/")
+    } finally Files.move(hidden, data)
+  }
+
+  test("GraftSql: a name that is both a tag and a branch reads the tag") {
+    import spark.implicits._
+    import graft.sources.GraftSql
+    val t = LogTable(spark, Files.createTempDirectory("gsql_tagbr_").toString)
+    GraftSql.register("gsql_tagbr", t)
+    t.append((0 until 4).map(i => (i.toLong, "a")).toDF("id", "k"))  // v1
+    t.createRef("both", 1L)
+    t.append((4 until 10).map(i => (i.toLong, "b")).toDF("id", "k")) // v2
+    t.createBranch("both").append(Seq((99L, "c")).toDF("id", "k"))
+    for (stmt <- Seq("SELECT count(*) FROM gsql_tagbr@both",
+        "SELECT count(*) FROM gsql_tagbr VERSION AS OF 'both'"))
+      assert(GraftSql.exec(spark, stmt).head().getLong(0) === 4L, stmt)
+  }
+
+  test("GraftSql time travel and table functions resolve inside INSERT and MERGE sources") {
+    import spark.implicits._
+    import graft.sources.GraftSql
+    val a = LogTable(spark, Files.createTempDirectory("gsql_ttw_a_").toString)
+    GraftSql.register("gsql_ttw_a", a)
+    a.append((0 until 5).map(i => (i.toLong, s"x$i")).toDF("id", "v"))    // v1
+    a.append((5 until 12).map(i => (i.toLong, s"x$i")).toDF("id", "v"))   // v2
+    // each statement reads a's v1 (5 rows) or its changes from v0 (12)
+    val cases = Seq(
+      "INSERT INTO gsql_ttw_b SELECT * FROM gsql_ttw_a VERSION AS OF 1" -> 5L,
+      "INSERT INTO gsql_ttw_b SELECT * FROM gsql_ttw_a@v1" -> 5L,
+      "INSERT INTO gsql_ttw_b SELECT id, v FROM table_changes(gsql_ttw_a, 0)" -> 12L,
+      """MERGE INTO gsql_ttw_b USING gsql_ttw_a@v1 s ON gsql_ttw_b.id = s.id
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin -> 5L)
+    val failed = cases.flatMap { case (stmt, rows) =>
+      val b = LogTable(spark, Files.createTempDirectory("gsql_ttw_b_").toString)
+      b.append(Seq((-1L, "seed")).toDF("id", "v"))
+      GraftSql.register("gsql_ttw_b", b)
+      try {
+        GraftSql.exec(spark, stmt)
+        val n = b.read().count() - 1
+        if (n == rows) None else Some(s"$stmt: $n rows, expected $rows")
+      } catch { case e: Exception => Some(s"$stmt: ${e.toString.take(160)}") }
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
+  test("GraftSql resolver edges: CTE shadowing, subqueries, case, EXPLAIN") {
+    import spark.implicits._
+    import graft.sources.GraftSql
+    val t = LogTable(spark, Files.createTempDirectory("gsql_edge_").toString)
+    GraftSql.register("gsql_edge", t)
+    t.append((0 until 6).map(i => (i.toLong, "a")).toDF("id", "k"))   // v1
+    t.append((6 until 10).map(i => (i.toLong, "b")).toDF("id", "k"))  // v2
+    def count(sql: String): Long = GraftSql.exec(spark, sql).head().getLong(0)
+    // a CTE named like the registered table shadows it; its own body
+    // still reads the table
+    assert(count("WITH gsql_edge AS (SELECT 1 AS id) SELECT count(*) FROM gsql_edge") === 1L)
+    assert(count("""WITH gsql_edge AS (SELECT * FROM gsql_edge WHERE id < 3)
+      |SELECT count(*) FROM gsql_edge""".stripMargin) === 3L)
+    // registered names and time travel inside IN / EXISTS / scalar subqueries
+    assert(count("""SELECT count(*) FROM gsql_edge
+      |WHERE id NOT IN (SELECT id FROM gsql_edge VERSION AS OF 1)""".stripMargin) === 4L)
+    assert(count("""SELECT count(*) FROM gsql_edge c WHERE EXISTS
+      |(SELECT 1 FROM gsql_edge VERSION AS OF 1 o WHERE o.id = c.id)""".stripMargin) === 6L)
+    assert(count("""SELECT (SELECT count(*) FROM gsql_edge VERSION AS OF 1) +
+      |(SELECT count(*) FROM gsql_edge)""".stripMargin) === 16L)
+    // an upper-case spelling names the same table
+    assert(count("SELECT count(*) FROM GSQL_EDGE WHERE k = 'b'") === 4L)
+    // EXPLAIN plans the time-travelled statement
+    val plan = GraftSql.exec(spark, "EXPLAIN SELECT count(*) FROM gsql_edge@v1")
+      .head().getString(0)
+    assert(plan.contains("Physical Plan") && !plan.toLowerCase.contains("error"), plan)
+  }
+
   test("a LogTable registers as a view and answers SQL across commits") {
     import spark.implicits._
     val t = LogTable(spark, Files.createTempDirectory("sql_table_").toString)
@@ -534,6 +621,24 @@ class SqlSurfaceSpec extends SparkSpec {
     }
     // the build-time extensions class wires the same set without error
     new GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
+    // the table functions answer plain spark.sql as they answer GraftSql
+    import spark.implicits._
+    import graft.sources.{GraftSql, IcebergExport}
+    val t = LogTable(spark, Files.createTempDirectory("gsql_tvf_").toString)
+    GraftSql.register("gsql_tvf", t)
+    t.append((0 until 5).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
+    t.append((5 until 9).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
+    t.delete(col("id") < 2)
+    val dest = Files.createTempDirectory("gsql_tvf_ice_").toString
+    IcebergExport.export(t, dest, history = true)
+    for ((plain, viaGraft) <- Seq(
+        s"SELECT * FROM iceberg_scan('$dest', 1)" ->
+          s"SELECT * FROM iceberg_scan('$dest', 1)",
+        s"SELECT * FROM table_changes('${t.root}', 0, 3)" ->
+          "SELECT * FROM table_changes(gsql_tvf, 0, 3)")) {
+      val rows = collectSorted(spark.sql(plain))
+      assert(rows.nonEmpty && rows === collectSorted(GraftSql.exec(spark, viaGraft)), plain)
+    }
   }
 
   test("table-function rewrites respect identifier boundaries") {
@@ -740,5 +845,12 @@ class SqlSurfaceSpec extends SparkSpec {
       .filter(src.contains)
     assert(calls.isEmpty,
       s"GraftSql forwards DDL/DML/CALL to GraftCatalog; found ${calls.mkString(", ")}")
+    // ... and reads through Spark's parser: no read path of its own
+    val reads = Seq("rewriteTimeTravel", "metaCount", "CountRe", "refreshViews",
+      "iceberg_", "rest_view", "table_changes\\s",
+      "AS\\s+OF", ".timeTravel", ".readCdc(", "IcebergRead")
+      .filter(src.contains)
+    assert(reads.isEmpty,
+      s"GraftSql forwards reads to GraftCatalog; found ${reads.mkString(", ")}")
   }
 }

@@ -2054,14 +2054,28 @@ private[sources] final class GraftBatch(root: String, logical: StructType,
     val delsOf = snap.deletes
       .flatMap(d => d.counts.keys.map(p => p -> (d.path, d.bytes)))
       .groupMap(_._1)(_._2)
+    // equality deletes apply under the DATA-SEQUENCE guard: only
+    // tombstones NEWER than the file can mark its rows — the guard is
+    // resolved here, at planning, from manifest metadata. Indexed once
+    // per plan: the tombstones newer than a file are a suffix of the
+    // seq-sorted order, so one binary-search cut per file picks them,
+    // and files sharing a cut share one list, in snapshot order.
+    val eqBySeq = snap.eqDeletes.zipWithIndex.sortBy(_._1.seq).toIndexedSeq
+    val eqsFrom = scala.collection.mutable.HashMap
+      .empty[Int, Seq[(String, Long, Seq[String])]]
+    def eqsNewerThan(seq: Long) = {
+      var lo = 0; var hi = eqBySeq.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (eqBySeq(mid)._1.seq <= seq) lo = mid + 1 else hi = mid
+      }
+      eqsFrom.getOrElseUpdate(lo, eqBySeq.drop(lo).sortBy(_._2)
+        .map { case (d, _) => (d.path, d.bytes, d.cols) })
+    }
     planned
       .map { f =>
         val dels = delsOf.getOrElse(f.path, Nil)
-        // equality deletes apply under the DATA-SEQUENCE guard: only
-        // tombstones NEWER than the file can mark its rows — the guard
-        // is resolved here, at planning, from manifest metadata
-        val eqs = snap.eqDeletes.filter(_.seq > f.seq)
-          .map(d => (d.path, d.bytes, d.cols))
+        val eqs = eqsNewerThan(f.seq)
         GraftInputPartition(f.path, f.bytes, f.partitions, dels, eqs,
           spj.map(_.keyRowOf(f)).orNull): InputPartition
       }

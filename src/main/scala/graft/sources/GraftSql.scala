@@ -125,12 +125,25 @@ object GraftSql {
   /** Forget a registered name (views stay until the session drops them). */
   def unregister(name: String): Unit = registry.remove(name)
 
-  /** The LogTable behind a registered name (error if absent). */
+  /** The LogTable behind a registered name (error if absent), resolved
+    * as reads resolve it ([[registeredName]]). */
   def table(name: String): LogTable = {
-    val t = registry.get(name)
+    val t = registry.get(registeredName(name))
     require(t != null, s"no registered LogTable '$name' (register(name, table) first)")
     t
   }
+
+  /** The registered spelling of `name` — exact first, else
+    * case-insensitively, the one rule every read and write target
+    * resolves by — or `name` itself when nothing is registered under
+    * it. */
+  private def registeredName(name: String): String =
+    keyOf(registry, name).getOrElse(name)
+
+  private def keyOf[V](m: java.util.concurrent.ConcurrentHashMap[String, V],
+      name: String): Option[String] =
+    if (m.containsKey(name)) Some(name)
+    else m.keySet.asScala.find(_.equalsIgnoreCase(name))
 
   /** Execute one statement. DML / DDL / CALL return a one-row summary
     * frame (version, operation, n_files, total_rows); queries return
@@ -141,7 +154,8 @@ object GraftSql {
       case CreateMvRe(ifNotExists, name, select, base, groupBy) =>
         execCreateMv(spark, ifNotExists != null, name, select, base, groupBy)
       case DropMvRe(ifExists, name) => execDropMv(spark, ifExists != null, name)
-      case AlterPropsRe(name, verb, list) => execAlterProps(spark, name, verb, list)
+      case AlterPropsRe(name, verb, list) =>
+        execAlterProps(spark, registeredName(name), verb, list)
       case _ => stmt.takeWhile(!_.isWhitespace).toUpperCase match {
         case "INSERT" => execInsert(spark, stmt)
         case "CALL" => call(spark, stmt)
@@ -248,7 +262,8 @@ object GraftSql {
 
   private def execInsert(spark: SparkSession, stmt: String): DataFrame =
     stmt match {
-      case InsertRe(name, colList, query) =>
+      case InsertRe(raw, colList, query) =>
+        val name = registeredName(raw)
         val t = table(name)
         val df = run(spark, query.trim)
         val renamed = Option(colList) match {
@@ -292,7 +307,7 @@ object GraftSql {
     * refuses DML on views. */
   private def forward(spark: SparkSession, stmt: String): DataFrame = {
     val (phrase, name, tail) = stmt match {
-      case ForwardRe(p, n, t) => (p, n, t)
+      case ForwardRe(p, n, t) => (p, registeredName(n), t)
       case _ => throw new IllegalArgumentException(s"unsupported statement shape: $stmt")
     }
     val verb = phrase.takeWhile(!_.isWhitespace).toUpperCase
@@ -386,7 +401,7 @@ object GraftSql {
     val (proc, name, args) = stmt match {
       case CallRe(p, a) if a.trim.nonEmpty =>
         val all = splitTopLevel(a, ',')
-        (p.toLowerCase, unquote(all.head), all.tail)
+        (p.toLowerCase, registeredName(unquote(all.head)), all.tail)
       case _ => throw new IllegalArgumentException(
         s"unsupported CALL shape: $stmt (expected CALL <proc>(<table>, ...))")
     }
@@ -463,8 +478,7 @@ object GraftSql {
     * names: exact spelling first, else case-insensitively. */
   private def lookup[V](m: java.util.concurrent.ConcurrentHashMap[String, V],
       parts: Seq[String], ctes: Set[String]): Option[V] = parts match {
-    case Seq(n) if !ctes(n.toLowerCase) => Option(m.get(n)).orElse(
-      m.asScala.collectFirst { case (k, v) if k.equalsIgnoreCase(n) => v })
+    case Seq(n) if !ctes(n.toLowerCase) => keyOf(m, n).flatMap(k => Option(m.get(k)))
     case _ => None
   }
 

@@ -88,7 +88,11 @@ final case class DataFile(path: String, rows: Long, bytes: Long,
   * O(changed files + segment count), never O(table files). At 1M
   * files (100 TB at 128 MB/file) an inline manifest is a ~200 MB JSON
   * rewritten by EVERY commit; with segments a steady-state append
-  * writes one ~100 KB segment plus a pointer file.
+  * writes a segment of its own entries (plus, amortized, the
+  * size-tiered fold's few rewrites of each — see
+  * [[LogTable.DefaultSegmentFiles]]) and a pointer of ~2k names. The
+  * same shape applies from [[LogTable.InlineFiles]] files up, so the
+  * bytes a commit writes never grow with the table.
   *
   * `partVals` is the segment's PARTITION-VALUE SUMMARY, carried in the
   * snapshot pointer itself (Iceberg's manifest-list partition
@@ -139,6 +143,43 @@ private[sources] object SegmentedFiles {
       Await.result(
         Future.traverse(segs)(s => Future(s.files)), Duration.Inf).flatten
     }
+}
+
+/** JVM-wide LRU over immutable values, bounded by the summed `costOf`
+  * of its entries (estimated bytes, or 1 per entry for a count
+  * bound). Loads run OUTSIDE the lock, so parallel planning over many
+  * keys actually parallelizes; a racing duplicate load of the same
+  * immutable value is benign (last put wins). */
+private[sources] class CostLru[K, V <: AnyRef](maxCost: Long, costOf: V => Long) {
+  private var cost = 0L
+  private val m = new java.util.LinkedHashMap[K, V](64, 0.75f, true)
+  def get(key: K, load: K => V): V = {
+    val hit = m.synchronized(m.get(key))
+    if (hit != null) hit
+    else {
+      val v = load(key)
+      val c = costOf(v)
+      m.synchronized {
+        val prev = m.put(key, v)
+        if (prev != null) cost -= costOf(prev)
+        cost += c
+        // evict eldest-by-access until under budget; never the entry
+        // just inserted (it is being returned — keeping it cached
+        // costs nothing extra and preserves the hot-path invariant)
+        val it = m.entrySet().iterator()
+        while (cost > maxCost && it.hasNext) {
+          val e = it.next()
+          if (e.getKey != key) { cost -= costOf(e.getValue); it.remove() }
+        }
+      }
+      v
+    }
+  }
+  private[sources] def evict(key: K): Unit = m.synchronized {
+    val prev = m.remove(key)
+    if (prev != null) cost -= costOf(prev)
+    ()
+  }
 }
 
 /** Pointer-resident READ METADATA a scan needs before it knows which
@@ -475,7 +516,16 @@ final case class Snapshot(version: Long, parent: Long, operation: String,
       * payload — never inherited by the next snapshot. Empty unless
       * the committing operation was a COW delete/update/merge on a
       * table with `write.cdc.enabled`. */
-    cdc: Seq[CdcFile] = Nil) {
+    cdc: Seq[CdcFile] = Nil,
+    /** LINEAGE ID (Iceberg's `table-uuid`, per manifest lineage): minted
+      * by the first commit on a pointer that has none (a new table's or
+      * branch's first commit), then inherited by every commit on top.
+      * Manifest paths repeat when a table or branch is dropped and
+      * re-created at the same place; (path, lineage) does not — the key
+      * under which a retained pointer's facts may be memoized across
+      * handles ([[LogTable.replayRecCache]]). Empty on pre-lineage
+      * manifests. */
+    lineage: String = "") {
   def totalRows: Long = files.map(_.rows).sum
   def totalBytes: Long = files.map(_.bytes).sum
 
@@ -516,8 +566,9 @@ final case class Snapshot(version: Long, parent: Long, operation: String,
   *
   * Design (SURVEY.md §3): the table's visible state is defined ONLY by
   * a versioned manifest `_graft_log/v{NNNNN}.manifest.json` listing
-  * every data file of that snapshot (directly, or — above the
-  * [[Segment]] cap — by re-listing immutable shared segment files, so
+  * every data file of that snapshot (directly, or — above
+  * [[LogTable.InlineFiles]] files — by re-listing immutable shared
+  * [[Segment]] files, so
   * commit metadata writes stay O(changed files), never O(table)). A
   * commit writes the new manifest to a temp name and atomically
   * hard-links it into place; readers load
@@ -1500,16 +1551,18 @@ final class LogTable private (val spark: SparkSession, val root: String,
     else s.files.map(row).toDF("path", "rows", "bytes", "partition", "ranges")
   }
 
-  /** Gate for the DISTRIBUTED `.files`/`.entries` plan: segments exist
-    * only above the inline-manifest cap (512 files by default), so a
-    * small table keeps its LocalScan (zero job, the dashboards' fast
-    * path) while a segmented one — up to the 1M-file design point —
-    * plans one executor task per segment instead of building a
-    * million-row LocalRelation on the driver. Executor-side parsing
-    * needs the plain-filesystem metadata plane; seam emulations
-    * (object-store/in-memory control planes) keep the driver path. */
+  /** Gate for the DISTRIBUTED `.files`/`.entries` plan: a table of at
+    * most one full segment (512 files by default, by its pointer's
+    * `total-data-files`) keeps its LocalScan (zero job, the
+    * dashboards' fast path) while a larger one — up to the 1M-file
+    * design point — plans one executor task per segment instead of
+    * building a million-row LocalRelation on the driver.
+    * Executor-side parsing needs the plain-filesystem metadata plane;
+    * seam emulations (object-store/in-memory control planes) keep the
+    * driver path. */
   private def distributedMetaScan(s: Snapshot): Boolean =
-    s.segs.nonEmpty && (io eq GraftFileIO.Local)
+    s.segs.nonEmpty && (io eq GraftFileIO.Local) &&
+      s.summary.get("total-data-files").forall(_.toLong > segmentCap)
 
   /** One task per segment JSON: read + parse ON THE EXECUTOR, emit
     * `toRow` per entry; the inline remainder (≤ the cap by
@@ -1798,49 +1851,70 @@ final class LogTable private (val spark: SparkSession, val root: String,
       Option(n.get("cdc")).map(_.elements().asScala.map { c =>
         CdcFile(c.get("path").asText(), c.get("rows").asLong(),
           c.get("bytes").asLong(), c.get("change").asText())
-      }.toSeq).getOrElse(Nil))
+      }.toSeq).getOrElse(Nil),
+      Option(n.get("lineage")).map(_.asText()).getOrElse(""))
   }
+
+  /** Entries per full segment: `graft.manifest.segment.files`, else
+    * [[LogTable.DefaultSegmentFiles]]. */
+  private def segmentCap: Int =
+    spark.conf.getOption("graft.manifest.segment.files")
+      .map(_.toInt).getOrElse(LogTable.DefaultSegmentFiles)
 
   /** Pack `files` into manifest segments, reusing every previous (or
     * hinted) segment whose entries survive VALUE-IDENTICAL — the
-    * structural-sharing step of commit. Tables at or under the cap
-    * stay inline (segs = Nil). Segments smaller than cap/8 dissolve
-    * into the repack pool so steady small appends coalesce instead of
-    * accumulating a micro-segment per commit. New segment files are
-    * written through the storage seam BEFORE the snapshot that
-    * references them (invisible until then, like data files); the
-    * returned `created` names must be reclaimed by the caller if the
-    * commit loses its race. */
+    * structural-sharing step of commit, so an append writes O(added)
+    * entries at every table size. Tables of at most
+    * min(cap, [[LogTable.InlineFiles]]) files stay inline (segs = Nil).
+    * Above that the rule is size-tiered (LSM-style):
+    *   - a full segment (`cap` entries) is always re-listed by name;
+    *   - a one-entry segment dissolves into the repack pool, so a
+    *     single-file tail pairs up with the next append;
+    *   - sub-cap segments sit in tiers by size (tier t holds
+    *     [F^t, F^(t+1)) entries, F = [[LogTable.SegmentFanout]]); a
+    *     tier holding F of them dissolves into the pool, which repacks
+    *     as one larger segment (or full ones).
+    * Every entry is thus rewritten about log_F(cap) times over its
+    * life, and a snapshot holds at most files/cap full segments plus
+    * F per tier. New segment files are written through the storage
+    * seam BEFORE the snapshot that references them (invisible until
+    * then, like data files); the returned `created` names must be
+    * reclaimed by the caller if the commit loses its race. */
   private def packSegments(candidates: Seq[Segment],
       files: Seq[DataFile]): (Seq[Segment], Seq[String]) = {
-    val cap = spark.conf.getOption("graft.manifest.segment.files")
-      .map(_.toInt).getOrElse(LogTable.DefaultSegmentFiles)
-    if (files.size <= cap) return (Nil, Nil)
+    val cap = segmentCap
+    if (files.size <= math.min(cap, LogTable.InlineFiles)) return (Nil, Nil)
     val byPath = files.iterator.map(f => f.path -> f).toMap
-    val minKeep = math.max(2, cap / 8)
     val covered = scala.collection.mutable.HashSet.empty[String]
-    val reused = Seq.newBuilder[Segment]
+    val validB = Seq.newBuilder[Segment]
     candidates.distinctBy(_.name).foreach { s =>
       val entries = s.files
-      if (entries.size >= minKeep &&
+      if (entries.size >= 2 &&
           entries.forall(f => !covered.contains(f.path)) &&
           entries.forall(f => byPath.get(f.path).contains(f))) {
         // legacy (pre-summary) segments upgrade in place: the entries
         // are already loaded for the reuse validation, so the pointer
         // this commit writes carries their summary from here on
-        reused += (if (s.partVals.nonEmpty) s
+        validB += (if (s.partVals.nonEmpty) s
           else Segment(s.name, LogTable.segSummary(entries))(() => entries))
         covered ++= entries.map(_.path)
       }
     }
-    val pool = files.filterNot(f => covered.contains(f.path))
+    val valid = validB.result()
+    val fanout = LogTable.SegmentFanout
+    def tier(n: Int): Int = Iterator.iterate(n)(_ / fanout).takeWhile(_ >= fanout).size
+    val crowded = valid.filter(_.files.size < cap)
+      .groupBy(s => tier(s.files.size)).valuesIterator
+      .filter(_.size >= fanout).flatten.map(_.name).toSet
+    val reused = valid.filterNot(s => crowded(s.name))
+    val kept = reused.iterator.flatMap(_.paths).toSet
+    val pool = files.filterNot(f => kept.contains(f.path))
     val created = Seq.newBuilder[String]
     val fresh = pool.grouped(cap).map { chunk =>
       val name = s"seg-${UUID.randomUUID()}.json"
       val node = mapper.createObjectNode()
       renderFilesInto(node.putArray("files"), chunk)
-      val json = mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node)
-      if (!io.publishAtomic(mainLogDir.resolve(name), json))
+      if (!io.publishAtomic(mainLogDir.resolve(name), mapper.writeValueAsString(node)))
         throw new IllegalStateException(s"segment name collision at $name")
       // prime the cache so the snapshot parse that follows never
       // re-reads what this JVM just wrote
@@ -1848,7 +1922,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
       created += name
       Segment(name, LogTable.segSummary(chunk))(() => chunk)
     }.toSeq
-    (reused.result() ++ fresh, created.result())
+    (reused ++ fresh, created.result())
   }
 
   // --------------------------------------------------------------- writes
@@ -1922,24 +1996,8 @@ final class LogTable private (val spark: SparkSession, val root: String,
     * leader likewise derives commit metadata from the flushed objects
     * themselves). Produces byte-identical entries to what
     * [[stageFlush]] returned when it wrote them. */
-  private[sources] def adoptStaged(paths: Seq[String]): Seq[DataFile] = {
-    // footer reads in parallel, exactly like writeDataFiles' own stats
-    // pass — a large marker backlog would otherwise serialize the
-    // leader round on one thread's footer round-trips
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.traverse(paths) { p =>
-      Future {
-        val abs = Paths.get(p).toAbsolutePath.normalize
-        val rel = dataDir.toAbsolutePath.normalize.relativize(abs).toString
-        val (rows, ranges, strRanges, nulls, vsets) = parquetFooterMeta(abs)
-        DataFile(abs.toString, rows, Files.size(abs),
-          partitions = LogTable.partValsOfRel(rel), ranges = ranges,
-          strRanges = strRanges, nulls = nulls, valueSets = vsets)
-      }
-    }, Duration.Inf)
-  }
+  private[sources] def adoptStaged(paths: Seq[String]): Seq[DataFile] =
+    if (paths.isEmpty) Nil else adoptStagedWithSchema(paths)._1
 
   /** [[adoptStaged]] that ALSO returns the batch's merged Spark schema
     * (as json) from the SAME footer reads — the marker leader needs
@@ -2085,16 +2143,32 @@ final class LogTable private (val spark: SparkSession, val root: String,
     // tests against byRel, never a lineage-wide path set). Post-
     // upgrade tables where every append carries the record keep the
     // O(pending + pointers) fast path.
+    //
+    // The records are memoized JVM-wide under the NEWEST pointer's
+    // lineage ([[LogTable.replayRecCache]]) — every retained pointer
+    // belongs to that table incarnation, whose history never changes —
+    // so a round re-reads only pointers committed since this JVM last
+    // probed; the newest one is already parsed by the handle's open.
     var legacy = false
-    versions.foreach { v =>
+    val vs = versions
+    val lineage = vs.lastOption.fold("")(snapshot(_).lineage)
+    def recordOf(v: Long): Option[String] = {
       val sn = snapshot(v)
-      sn.summary.get(LogTable.StagedPathsKey) match {
-        case Some(rec) => rec.split('\n').iterator.filter(_.nonEmpty)
+      sn.summary.get(LogTable.StagedPathsKey)
+        .orElse(if (sn.operation == "append") None else Some(""))
+    }
+    vs.foreach { v =>
+      val rec =
+        if (lineage.isEmpty) recordOf(v)
+        else LogTable.replayRecCache.get(
+          (manifestPath(logDir, v).toString, lineage), _ => recordOf(v))
+      rec match {
+        case Some(r) => r.split('\n').iterator.filter(_.nonEmpty)
           .foreach(r => byRel.get(r).foreach(found += _))
-        case None => if (sn.operation == "append") legacy = true
+        case None => legacy = true
       }
     }
-    if (legacy) versions.foreach { v =>
+    if (legacy) vs.foreach { v =>
       snapshot(v).files.foreach { f =>
         byRel.get(pool.relativize(
           Paths.get(f.path).toAbsolutePath.normalize).toString)
@@ -4923,7 +4997,8 @@ final class LogTable private (val spark: SparkSession, val root: String,
         System.currentTimeMillis(), files, tag, nextSchema(prev),
         nextChecks(prev), nextRetired(prev), dels, pc, tf, eqDels,
         nextBlooms(prev), nextNdvs(prev), segs, Some(meta), summary,
-        nextSortCols(prev), nextProps(prev), cdcFiles)
+        nextSortCols(prev), nextProps(prev), cdcFiles,
+        if (prev.lineage.nonEmpty) prev.lineage else UUID.randomUUID().toString)
       // ATOMIC CREATE-OR-FAIL publish through the storage seam: the
       // full manifest is visible the instant the name exists, and a
       // version collision reports failure instead of overwriting the
@@ -5137,15 +5212,25 @@ object LogTable {
     * marking pass parallel on the write side without exploding tiny
     * delete files on the read side. */
   private[sources] val DeleteShardSpan = 8
-  /** Manifest segmentation (see [[Segment]]): tables with more data
-    * files than `graft.manifest.segment.files` (default) store their
-    * file list as immutable shared segments of up to that many
-    * entries; smaller tables stay inline (one file per commit, the
-    * simplest shape). Segments under cap/8 entries dissolve back into
-    * the packing pool each commit so steady small appends coalesce
-    * (LSM-style) instead of accumulating one micro-segment per
-    * commit; the rewrite cost is O(unfrozen tail), bounded by cap. */
+  /** Manifest segmentation (see [[Segment]]): entries per FULL
+    * segment (`graft.manifest.segment.files` overrides). A table of
+    * more than min(this, [[InlineFiles]]) data files keeps its file
+    * list in immutable shared segments, so every commit writes the
+    * entries it adds plus a pointer of segment names, never the whole
+    * list. Below a full segment, [[SegmentFanout]]-way size-tiered
+    * folding (see packSegments) keeps the segment count near
+    * files/512 plus at most 8 per tier (three tiers) while rewriting
+    * each entry about log8(512) = 3 times over its life. */
   private[sources] val DefaultSegmentFiles = 512
+
+  /** Tables of at most this many files (or the segment cap, if
+    * smaller) list them inline in the pointer: one file per commit,
+    * and a rewrite bounded by this many entries. */
+  private[sources] val InlineFiles = 16
+
+  /** Size-tier width of the segment merge rule: a tier holding this
+    * many sub-cap segments folds them into one (see packSegments). */
+  private[sources] val SegmentFanout = 8
 
   /** Audit-summary key under which [[commitStagedAppend]] records its
     * batch's pool-relative paths ('\n'-joined) — the pointer-resident
@@ -5203,7 +5288,7 @@ object LogTable {
     * changes what "complete" means. */
   private[sources] def segReadMeta(s: Segment,
       keys: Seq[String]): SegReadMeta =
-    segMetaCache.get((s.name, keys), () => {
+    segMetaCache.get((s.name, keys), _ => {
       val entries = s.files
       val complete = keys.nonEmpty &&
         entries.forall(f => keys.forall(f.partitions.contains))
@@ -5216,25 +5301,8 @@ object LogTable {
           .toSeq.distinct.sorted)
     })
 
-  private[sources] object segMetaCache {
-    private val MaxEntries = 4096
-    private val m = new java.util.LinkedHashMap[(String, Seq[String]),
-        SegReadMeta](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Seq[String]), SegReadMeta]): Boolean =
-        size() > MaxEntries
-    }
-    def get(key: (String, Seq[String]),
-        load: () => SegReadMeta): SegReadMeta = {
-      val hit = m.synchronized(m.get(key))
-      if (hit != null) hit
-      else {
-        val v = load()
-        m.synchronized(m.put(key, v))
-        v
-      }
-    }
-  }
+  private[sources] object segMetaCache
+      extends CostLru[(String, Seq[String]), SegReadMeta](4096L, _ => 1L)
 
   /** JVM-wide LRU for parsed segments, keyed by absolute path:
     * segments are immutable and UUID-named, so entries can never go
@@ -5243,53 +5311,30 @@ object LogTable {
     * name-count bound either thrashes (too small) or is unbounded in
     * bytes (segments vary 1–1000s of entries). 64 MB holds ~200k
     * parsed entries — an entire 100 TB table's metadata working
-    * set — while still bounding a many-table JVM. */
-  private[sources] object segCache {
-    private[sources] val MaxBytes = 64L << 20
-    /** Estimated retained bytes of one parsed entry: object headers +
-      * path chars + ~64 B per stats-map entry (boxed longs, tuple,
-      * hash table slot). An estimate only — guards the JVM, never
-      * correctness. */
-    private def costOf(v: Seq[DataFile]): Long =
-      64L + v.iterator.map(f => 128L + 2L * f.path.length +
-        64L * (f.partitions.size + f.ranges.size + f.strRanges.size +
-          f.nulls.size + f.valueSets.valuesIterator.map(_.size).sum)).sum
-    private var bytes = 0L
-    private val m = new java.util.LinkedHashMap[String, Seq[DataFile]](
-      64, 0.75f, true)
-    def get(key: String, load: String => Seq[DataFile]): Seq[DataFile] = {
-      val hit = m.synchronized(m.get(key))
-      if (hit != null) hit
-      else {
-        // load OUTSIDE the lock so parallel planning over many
-        // segments actually parallelizes; a racing duplicate load of
-        // the same immutable segment is benign (last put wins)
-        val v = load(key)
-        val cost = costOf(v)
-        m.synchronized {
-          val prev = m.put(key, v)
-          if (prev != null) bytes -= costOf(prev)
-          bytes += cost
-          // evict eldest-by-access until under budget; never the entry
-          // just inserted (it is being returned — keeping it cached
-          // costs nothing extra and preserves the hot-path invariant)
-          val it = m.entrySet().iterator()
-          while (bytes > MaxBytes && it.hasNext) {
-            val e = it.next()
-            if (e.getKey != key) { bytes -= costOf(e.getValue); it.remove() }
-          }
-        }
-        v
-      }
-    }
-    private[sources] def estimatedBytes: Long = m.synchronized(bytes)
-    private[sources] def evict(key: String): Unit =
-      m.synchronized {
-        val prev = m.remove(key)
-        if (prev != null) bytes -= costOf(prev)
-        ()
-      }
-  }
+    * set — while still bounding a many-table JVM. The cost of one
+    * parsed entry is estimated as object headers + path chars + ~64 B
+    * per stats-map entry (boxed longs, tuple, hash table slot) — it
+    * guards the JVM, never correctness. */
+  private[sources] object segCache
+      extends CostLru[String, Seq[DataFile]](64L << 20, v =>
+        64L + v.iterator.map(f => 128L + 2L * f.path.length +
+          64L * (f.partitions.size + f.ranges.size + f.strRanges.size +
+            f.nulls.size + f.valueSets.valuesIterator.map(_.size).sum)).sum)
+
+  /** JVM-wide memo of each retained snapshot's REPLAY RECORD — what
+    * [[stagedCommittedAmong]] reads from a pointer: its staged-paths
+    * summary, `Some("")` for a record-less non-append (nothing to
+    * replay), `None` for a record-less append (the legacy fallback).
+    * Keyed by (manifest path, lineage id): a committed manifest never
+    * changes within its lineage, and a table or branch re-created at
+    * the same path mints a new lineage, so a hit can never be stale.
+    * Pre-lineage manifests are never memoized. This is what keeps a
+    * marker leader, which opens a fresh handle every round, from
+    * re-reading every retained pointer every round. */
+  private[sources] object replayRecCache
+      extends CostLru[(String, String), Option[String]](16L << 20, r =>
+        64L + 2L * r.fold(0)(_.length))
+
   /** Schema of a position-delete parquet file: the row's source data
     * file (as the scan's `_metadata.file_path` renders it) and its
     * 0-based row index within that file. */
@@ -5580,9 +5625,14 @@ object LogTable {
     val t0 = new LogTable(spark, root, partitionBy, ManifestDir, hiddenBy, io)
     val snap = t0.snapshot()
     if (partitionBy.isEmpty && hiddenBy.isEmpty &&
-        (snap.partCols.nonEmpty || snap.transforms.nonEmpty))
-      new LogTable(spark, root, snap.partCols, ManifestDir, snap.transforms, io)
-    else {
+        (snap.partCols.nonEmpty || snap.transforms.nonEmpty)) {
+      val t = new LogTable(spark, root, snap.partCols, ManifestDir,
+        snap.transforms, io)
+      // the adopted handle starts from the snapshot t0 already parsed:
+      // one pointer read per open, not two
+      t.snapCache.put(snap.version, snap)
+      t
+    } else {
       if ((snap.partCols.nonEmpty || snap.transforms.nonEmpty) &&
           (partitionBy.nonEmpty || hiddenBy.nonEmpty))
         require(partitionBy == snap.partCols && hiddenBy == snap.transforms,
@@ -5606,6 +5656,7 @@ object LogTable {
     node.put("parent", s.parent)
     node.put("operation", s.operation)
     node.put("timestampMs", s.timestampMs)
+    if (s.lineage.nonEmpty) node.put("lineage", s.lineage)
     if (s.tag.nonEmpty) node.put("tag", s.tag)
     if (s.schemaJson.nonEmpty) node.put("schema", s.schemaJson)
     if (s.retired.nonEmpty) {
@@ -5703,7 +5754,9 @@ object LogTable {
       val nn = node.putObject("ndvs")
       s.ndvs.toSeq.sortBy(_._1).foreach { case (k, v) => nn.put(k, v) }
     }
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node)
+    // compact: whitespace was ~a third of every pointer's bytes, and
+    // parseManifest reads pretty and compact alike
+    mapper.writeValueAsString(node)
   }
 
   private def renderFilesInto(arr: ArrayNode, files: Seq[DataFile]): Unit =

@@ -579,6 +579,25 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(plan.contains("Physical Plan") && !plan.toLowerCase.contains("error"), plan)
   }
 
+  test("GraftSql write targets resolve names as reads do: exact, then case-insensitively") {
+    import spark.implicits._
+    import graft.sources.GraftSql
+    val t = LogTable(spark, Files.createTempDirectory("gsql_case_").toString)
+    GraftSql.register("probe_case", t)
+    t.append((1 to 4).map(i => (i.toLong, s"v$i")).toDF("id", "v"))
+    def count(sql: String): Long = GraftSql.exec(spark, sql).head().getLong(0)
+    GraftSql.exec(spark, "DELETE FROM PROBE_CASE WHERE id = 1")
+    assert(count("SELECT count(*) FROM probe_case") === 3L)
+    GraftSql.exec(spark,
+      "INSERT INTO PROBE_CASE SELECT id + 10 AS id, v FROM probe_case WHERE id <= 3")
+    assert(count("SELECT count(*) FROM probe_case") === 5L)
+    assert(count("SELECT count(*) FROM probe_case WHERE id > 10") === 2L)
+    // the registered table took both writes; the name stays as registered
+    assert(t.snapshot().liveRows === 5L)
+    assert(GraftSql.table("Probe_Case") eq t)
+    GraftSql.unregister("probe_case")
+  }
+
   test("a LogTable registers as a view and answers SQL across commits") {
     import spark.implicits._
     val t = LogTable(spark, Files.createTempDirectory("sql_table_").toString)

@@ -182,7 +182,7 @@ private[sources] final class GraftStageDataWriter(stageDir: String,
   private var rows = 0L
 
   private def ensureOpen(): Unit = if (writer == null) {
-    val conf = new Configuration()
+    val conf = new Configuration(HadoopConf.loaded)
     confPairs.foreach { case (k, v) => conf.set(k, v) }
     ParquetWriteSupport.setSchema(schema, conf)
     path = new HadoopPath(s"$stageDir/part-$partitionId-$taskId.parquet")

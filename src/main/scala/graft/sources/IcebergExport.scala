@@ -105,10 +105,7 @@ object IcebergExport {
     * no Spark job (the manifest entry's record_count source for the
     * sharded delete-parquet writes). */
   private[sources] def parquetRowCount(p: Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri),
-      new org.apache.hadoop.conf.Configuration())
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val reader = HadoopConf.openParquet(new org.apache.hadoop.fs.Path(p.toUri))
     try reader.getRecordCount finally reader.close()
   }
 
@@ -117,10 +114,7 @@ object IcebergExport {
     * row group lacks stats for it. */
   private[sources] def parquetStringBounds(p: Path,
       column: String): Option[(String, String)] = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri),
-      new org.apache.hadoop.conf.Configuration())
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val reader = HadoopConf.openParquet(new org.apache.hadoop.fs.Path(p.toUri))
     try {
       val per = reader.getFooter.getBlocks.asScala.toSeq.map { b =>
         b.getColumns.asScala
@@ -2181,10 +2175,7 @@ object IcebergRead {
     * written after may hold genuine nulls). Driver-side metadata read,
     * no Spark job. */
   private[sources] def footerTopLevelColumns(path: String): Set[String] = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.conf.Configuration())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = HadoopConf.openParquet(new org.apache.hadoop.fs.Path(path))
     try r.getFooter.getFileMetaData.getSchema.getFields.asScala
       .map(_.getName).toSet
     finally r.close()

@@ -2,9 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, In,
@@ -610,10 +608,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
     * — through the storage seam (the manifest layer never touches the
     * filesystem directly). */
   private def listManifests(dir: Path): Seq[(Long, Path)] =
-    io.list(dir).flatMap {
-      case n @ ManifestRe(v) => Some((v.toLong, dir.resolve(n)))
-      case _ => None
-    }.sortBy(_._1)
+    LogTable.listManifests(io, dir)
 
   // ---------------------------------------------------------------- reads
 
@@ -1978,7 +1973,10 @@ final class LogTable private (val spark: SparkSession, val root: String,
     * data files land in this table's pool at their FINAL names with
     * the declared layout/sort/blooms/stats, but no manifest references
     * them — invisible to every reader, reclaimable only by the
-    * age-guarded orphan sweep if never committed. Returns the manifest
+    * age-guarded orphan sweep if never committed. A driver-local
+    * buffer (`createDataFrame` over the node's rows) is written by one
+    * task with no shuffle, one file per layout tuple (see
+    * [[writeDataFiles]]). Returns the manifest
     * entries a later [[commitStagedAppend]] (or [[MarkerCommit]]'s
     * footer-reconstructing leader) publishes atomically. */
   private[sources] def stageFlush(df: DataFrame): Seq[DataFile] = {
@@ -2013,9 +2011,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
       Future {
         val abs = Paths.get(p).toAbsolutePath.normalize
         val rel = dataDir.toAbsolutePath.normalize.relativize(abs).toString
-        val in = HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(abs.toUri), new Configuration())
-        val r = ParquetFileReader.open(in)
+        val r = HadoopConf.openParquet(new org.apache.hadoop.fs.Path(abs.toUri))
         val (meta, schema) =
           try (footerMetaOf(r),
             new org.apache.spark.sql.execution.datasources.parquet
@@ -2097,9 +2093,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
     * files; the marker leader reads these same footers anyway). */
   private[sources] def footerSparkSchema(p: String)
       : org.apache.spark.sql.types.StructType = {
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(Paths.get(p).toUri), new Configuration())
-    val r = ParquetFileReader.open(in)
+    val r = HadoopConf.openParquet(new org.apache.hadoop.fs.Path(Paths.get(p).toUri))
     try new org.apache.spark.sql.execution.datasources.parquet
       .ParquetToSparkSchemaConverter()
       .convert(r.getFooter.getFileMetaData.getSchema)
@@ -4709,17 +4703,23 @@ final class LogTable private (val spark: SparkSession, val root: String,
     val partCols = partitionBy ++
       hiddenBy.filter(t => laid.columns.contains(t.colName)).map(_.colName)
     // CLUSTERED INGEST (Iceberg's hash write-distribution mode), opted
-    // into by append/overwrite: without it, EVERY input task opens a
-    // writer for EVERY partition tuple it holds — tasks × tuples tiny
-    // files, and a single-task source writes hundreds of directories
-    // sequentially. One hash shuffle on the layout key bounds it at
-    // one file per tuple, written in parallel across the cluster.
-    // Rewrite paths keep their own deliberate arrangements (compact's
-    // bin coalesce, recluster's range+sort).
+    // into by append/overwrite/stageFlush: without it, EVERY input task
+    // opens a writer for EVERY partition tuple it holds — tasks × tuples
+    // tiny files, and a single-task source writes hundreds of
+    // directories sequentially. One hash shuffle on the layout key
+    // bounds it at one file per tuple, written in parallel across the
+    // cluster. A DRIVER-LOCAL frame (a flush buffer's `createDataFrame`
+    // over rows already in driver memory) is written by ONE task
+    // instead, with no shuffle: its rows are all on the driver anyway,
+    // and the write's sort on the layout columns (the declared sort's
+    // prefix below, or the file writer's own) still closes one file
+    // per tuple — one job, one stage, one task where the shuffle cost
+    // two jobs and a map stage. Rewrite paths keep their own deliberate
+    // arrangements (compact's bin coalesce, recluster's range+sort).
     val distributed =
-      if (distribute && partCols.nonEmpty)
-        laid.repartition(partCols.map(org.apache.spark.sql.functions.col): _*)
-      else laid
+      if (!distribute || partCols.isEmpty) laid
+      else if (df.isLocal) laid.coalesce(1)
+      else laid.repartition(partCols.map(org.apache.spark.sql.functions.col): _*)
     // DECLARED SORT ORDER (see setSortOrder): a task-local sort just
     // before the write — no extra shuffle — leaves every data file
     // internally ordered. Columns absent from this frame (a narrow
@@ -5030,9 +5030,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
   private def parquetFooterMeta(p: Path):
       (Long, Map[String, (Long, Long)], Map[String, (String, String)],
         Map[String, Long], Map[String, Seq[String]]) = {
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri), new Configuration())
-    val reader = ParquetFileReader.open(in)
+    val reader = HadoopConf.openParquet(new org.apache.hadoop.fs.Path(p.toUri))
     try footerMetaOf(reader) finally reader.close()
   }
 
@@ -5649,6 +5647,20 @@ object LogTable {
     logDir.resolve(f"v$version%05d.manifest.json")
 
   private val ManifestRe = """v(\d+)\.manifest\.json""".r
+
+  private def listManifests(io: GraftFileIO, dir: Path): Seq[(Long, Path)] =
+    io.list(dir).flatMap {
+      case n @ ManifestRe(v) => Some((v.toLong, dir.resolve(n)))
+      case _ => None
+    }.sortBy(_._1)
+
+  /** The main branch's latest committed version at `root` (0 = no
+    * commits) from ONE listing of its manifest directory — the
+    * handle's [[LogTable.currentVersion]] without opening a handle
+    * (no pointer read, no directory creation). */
+  private[sources] def currentVersion(root: String, io: GraftFileIO): Long =
+    listManifests(io, Paths.get(root).resolve(ManifestDir))
+      .lastOption.fold(0L)(_._1)
 
   private def renderManifest(s: Snapshot): String = {
     val node: ObjectNode = mapper.createObjectNode()

@@ -202,7 +202,9 @@ object MarkerCommit {
 
   /** COMMITTER: one leader-elected commit round (the reference runs
     * this on its `ICEBERG_COMMIT_INTERVAL` cadence; [[runUntilDrained]]
-    * is the loop). `maxMarkers` bounds one round's batch (0 = all).
+    * is the loop). A round that finds nothing pending answers
+    * `Led(0, 0, 0, <current version>)` without taking the lease.
+    * `maxMarkers` bounds one round's batch (0 = all).
     * `crashAfterCommit` is the SPEC's fault-injection hook: return
     * right after the atomic commit, skipping marker cleanup AND lease
     * release — the crashed-leader shape the protocol must absorb. */
@@ -213,6 +215,13 @@ object MarkerCommit {
       nowMs: () => Long = () => System.currentTimeMillis(),
       crashAfterCommit: Boolean = false): Outcome = {
     val pd = pendingDir(root)
+    // an IDLE round (most rounds of a back-to-back leader) is one
+    // pending LIST plus one manifest LIST: no lease CAS, no table open.
+    // Answering it without the lease loses nothing — a marker
+    // published after this LIST is the next round's, as one published
+    // after the leased LIST below would be.
+    if (pending(root, io).isEmpty)
+      return Led(0, 0, 0, LogTable.currentVersion(root, io))
     val token = acquireLease(pd, io, leaseMs, nowMs) match {
       case None => return NotLeader
       case Some(t) => t

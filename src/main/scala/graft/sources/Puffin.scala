@@ -497,7 +497,7 @@ private[sources] object PuffinDv {
     val buf = new Array[Byte](size.toInt)
     if (path.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:/.*")) {
       val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val fs = p.getFileSystem(HadoopConf.loaded)
       val in = fs.open(p)
       try in.readFully(offset, buf) finally in.close()
     } else {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{And, DataSourceRegister, EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or, StringContains, StringEndsWith, StringStartsWith}
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -190,6 +190,11 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister
 }
 
 private[sources] object GraftSourceUtil {
+  /** A whole data file as one Spark split. */
+  def wholeFile(path: String, bytes: Long): PartitionedFile =
+    PartitionedFile(InternalRow.empty,
+      SparkPath.fromPathString(path), 0L, bytes, Array.empty, 0L, bytes)
+
   /** The `_file` METADATA COLUMN (Iceberg's name for the same thing):
     * the manifest path of the row's data file. Resolvable in any
     * query (`SELECT _file, * FROM t`) and the GROUP IDENTITY of the
@@ -846,11 +851,17 @@ private[sources] final class GraftScan(root: String, schema: StructType,
     * rewrite, and a stale claim there rewrites wrong groups. CDC
     * scans skip it too: their partitions are change/replay reads (no
     * per-partition key rows), so a layout claim would make Spark sort
-    * partitions by a key that is not there. */
+    * partitions by a key that is not there. A scan whose read schema
+    * lacks a layout key's source column skips it as well: Spark keeps
+    * a reported layout only when its references are scan output
+    * (V2ScanPartitioningAndOrdering), so the claim would be dropped
+    * and would only cost the scan its file packing. */
   private lazy val spjLayout: Option[SpjLayout] =
     if (rowLevel.nonEmpty || options.getBoolean("readChanges", false)) None
     else SpjLayout.of(GraftSourceUtil.snapshotFor(
-      LogTable(SparkSession.active, root), options))
+      LogTable(SparkSession.active, root), options)).filter(_.keys.forall(
+        _.references.forall(r =>
+          schema.fieldNames.exists(_.equalsIgnoreCase(r.fieldNames.head)))))
 
   override def outputPartitioning()
       : org.apache.spark.sql.connector.read.partitioning.Partitioning =
@@ -1410,9 +1421,10 @@ private[sources] final class GraftWriteBuilder(root: String,
     }
 }
 
-/** One appended data file = one InputPartition: split planning is
-  * manifest metadata only. `parts` carries the file's hive-partition
-  * values (directory layout, not file data); `deletes` the snapshot's
+/** One appended data file, the unit of split planning (a batch scan
+  * packs several into a [[GraftFilePack]]): manifest metadata only.
+  * `parts` carries the file's hive-partition values (directory
+  * layout, not file data); `deletes` the snapshot's
   * position-delete files referencing this data file as (path, bytes)
   * — also pure manifest metadata ([[DeleteFile.counts]] keys say which
   * data files a delete file touches without opening it). */
@@ -1435,6 +1447,58 @@ private[sources] final case class GraftInputPartition(path: String,
     selectDeleted: Boolean = false) extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow = pkey
+}
+
+/** Several planned files read by ONE scan task, one after another.
+  * Each file stays a [[GraftInputPartition]] with its own deletes,
+  * partition values and `_file` value. */
+private[sources] final case class GraftFilePack(
+    files: Array[GraftInputPartition]) extends InputPartition
+
+private[sources] object GraftFilePack {
+  def filesOf(p: InputPartition): Seq[GraftInputPartition] = p match {
+    case pack: GraftFilePack => pack.files.toSeq
+    case gp: GraftInputPartition => Seq(gp)
+  }
+
+  /** Spark's own split-packing rule, on Spark's own confs: the split
+    * target is `FilePartition.maxSplitBytes` (maxPartitionBytes capped,
+    * openCostInBytes floored, total bytes over minPartitionNum or the
+    * leaf parallelism), and `FilePartition.getFilePartitions` fills
+    * bins next-fit. Next-fit keeps the planned order, so each bin is
+    * the next run of `files`. */
+  def pack(spark: SparkSession, files: Seq[GraftInputPartition])
+      : Array[InputPartition] = {
+    val openCost = org.apache.spark.sql.internal.SQLConf.get.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      files.map(_.bytes + openCost).sum)
+    val bins = FilePartition.getFilePartitions(spark,
+      files.map(f => GraftSourceUtil.wholeFile(f.path, f.bytes)), maxSplit)
+    val it = files.iterator
+    bins.map(b =>
+      GraftFilePack(Array.fill(b.files.length)(it.next())): InputPartition)
+      .toArray
+  }
+}
+
+/** One task's reader over a partition's files: opens each file's
+  * reader when the previous one is drained, and closes it then. */
+private[sources] final class ChainedReader[T](
+    files: Iterator[GraftInputPartition],
+    open: GraftInputPartition => PartitionReader[T])
+    extends PartitionReader[T] {
+  private var cur: PartitionReader[T] = _
+  override def next(): Boolean = {
+    while (cur == null || !cur.next()) {
+      close()
+      if (!files.hasNext) return false
+      cur = open(files.next())
+    }
+    true
+  }
+  override def get(): T = cur.get()
+  override def close(): Unit =
+    if (cur != null) { cur.close(); cur = null }
 }
 
 /** Executor-side readers for MERGE-ON-READ snapshots, built only when
@@ -2072,14 +2136,18 @@ private[sources] final class GraftBatch(root: String, logical: StructType,
       eqsFrom.getOrElseUpdate(lo, eqBySeq.drop(lo).sortBy(_._2)
         .map { case (d, _) => (d.path, d.bytes, d.cols) })
     }
-    planned
-      .map { f =>
-        val dels = delsOf.getOrElse(f.path, Nil)
-        val eqs = eqsNewerThan(f.seq)
-        GraftInputPartition(f.path, f.bytes, f.partitions, dels, eqs,
-          spj.map(_.keyRowOf(f)).orNull): InputPartition
-      }
-      .toArray
+    val files = planned.map { f =>
+      val dels = delsOf.getOrElse(f.path, Nil)
+      val eqs = eqsNewerThan(f.seq)
+      GraftInputPartition(f.path, f.bytes, f.partitions, dels, eqs,
+        spj.map(_.keyRowOf(f)).orNull)
+    }
+    // small files share a task under Spark's packing rule, except
+    // where the partition IS the unit: a key-grouped scan (Spark
+    // merges same-key partitions itself) and a row-level rewrite
+    // (its staged output files follow its scan tasks)
+    if (spj.nonEmpty || rowLevel.nonEmpty) files.toArray
+    else GraftFilePack.pack(spark, files)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -2133,10 +2201,7 @@ private[sources] final class GraftReaderFactory(
     eq: Option[(Map[String, org.apache.spark.sql.types.DataType],
       Map[Seq[String], PartitionedFile => Iterator[InternalRow]])] = None)
     extends PartitionReaderFactory {
-
-  private def wholeFile(path: String, bytes: Long): PartitionedFile =
-    PartitionedFile(InternalRow.empty,
-      SparkPath.fromPathString(path), 0L, bytes, Array.empty, 0L, bytes)
+  import GraftSourceUtil.wholeFile
 
   /** The deleted-position set for one data file, from every delete
     * file referencing it (a delete file may mark many data files;
@@ -2237,18 +2302,23 @@ private[sources] final class GraftReaderFactory(
     * into a LOUD plan error rather than a silent null column. */
   override def supportColumnarReads(p: InputPartition): Boolean =
     columnar.exists { plan =>
-      val gp = p.asInstanceOf[GraftInputPartition]
-      !gp.selectDeleted &&
+      GraftFilePack.filesOf(p).forall(gp => !gp.selectDeleted &&
         logical.fieldNames.filter(n =>
           gp.parts.keys.exists(_.equalsIgnoreCase(n))).toSet ==
-        plan.partS.fieldNames.toSet
+        plan.partS.fieldNames.toSet)
     }
 
   override def createColumnarReader(p: InputPartition)
+      : PartitionReader[ColumnarBatch] =
+    new ChainedReader(GraftFilePack.filesOf(p).iterator, columnarReader)
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new ChainedReader(GraftFilePack.filesOf(p).iterator, rowReader)
+
+  private def columnarReader(gp: GraftInputPartition)
       : PartitionReader[ColumnarBatch] = {
     val plan = columnar.getOrElse(
       throw new IllegalStateException("columnar read without a columnar plan"))
-    val gp = p.asInstanceOf[GraftInputPartition]
     // partition values for THIS file, in partitionSchema order — the
     // reader turns them into constant column vectors
     val vals: Array[Any] = plan.partS.fields.map { f =>
@@ -2358,8 +2428,7 @@ private[sources] final class GraftReaderFactory(
       case r: InternalRow => Iterator(r)
     }
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val gp = p.asInstanceOf[GraftInputPartition]
+  private def rowReader(gp: GraftInputPartition): PartitionReader[InternalRow] = {
     val physIdx = phys.fieldNames.map(_.toLowerCase).zipWithIndex.toMap
     val exprs: Seq[Expression] = logical.map { f =>
       // the `_file` metadata column: this partition's own manifest

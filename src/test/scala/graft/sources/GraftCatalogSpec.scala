@@ -29,7 +29,7 @@ class GraftCatalogSpec extends SparkSpec {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
           scans(a.executedPlan)
       }.flatten
-    scans(df.queryExecution.executedPlan).head.inputPartitions.size
+    ScanPlans.plannedFiles(scans(df.queryExecution.executedPlan).head.inputPartitions)
   }
 
   test("CREATE TABLE with transforms + INSERT INTO + pruned SELECT, all via Spark SQL") {

@@ -180,7 +180,8 @@ class GraftSourceSpec extends SparkSpec {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }
     assert(scans.size === 1, "expected exactly one graft scan")
-    (scans.head.inputPartitions.size, scans.head.scan.readSchema().fieldNames.toSeq)
+    (ScanPlans.plannedFiles(scans.head.inputPartitions),
+      scans.head.scan.readSchema().fieldNames.toSeq)
   }
 
   test("pushdown: filters skip files via manifest stats, partitions, and hidden transforms") {
@@ -488,7 +489,7 @@ class GraftSourceSpec extends SparkSpec {
     val scans = limited.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }
-    assert(scans.head.inputPartitions.size === 2,
+    assert(ScanPlans.plannedFiles(scans.head.inputPartitions) === 2,
       "12 rows over 10-row files must plan exactly 2 files")
     assert(limited.collect().length === 12)
 
@@ -518,7 +519,7 @@ class GraftSourceSpec extends SparkSpec {
     val scans = recent.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }
-    assert(scans.head.inputPartitions.size === 2,
+    assert(ScanPlans.plannedFiles(scans.head.inputPartitions) === 2,
       "the 12 most recent rows live provably in the 2 newest slabs")
     assert(recent.select("ts").as[Long].collect().toSeq ===
       (4000L to 4009L).reverse ++ Seq(3009L, 3008L))
@@ -529,7 +530,7 @@ class GraftSourceSpec extends SparkSpec {
     val ascScans = oldest.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }
-    assert(ascScans.head.inputPartitions.size === 1)
+    assert(ScanPlans.plannedFiles(ascScans.head.inputPartitions) === 1)
     assert(oldest.select("ts").as[Long].collect().toSeq === (0L until 10L))
 
     // NULLs in the sort column: counts are in the manifest, nulls sort
@@ -562,8 +563,8 @@ class GraftSourceSpec extends SparkSpec {
     }
     // bounded file set: slab 4 provably supplies 10−8 = 2 live values,
     // slab 3 adds 10 → 12 covered by TWO files; slabs 0..2 never plan
-    assert(scans.head.inputPartitions.size === 2,
-      s"expected 2 planned files, got ${scans.head.inputPartitions.size}")
+    assert(ScanPlans.plannedFiles(scans.head.inputPartitions) === 2,
+      s"expected 2 planned files, got ${ScanPlans.plannedFiles(scans.head.inputPartitions)}")
 
     // equality deletes still refuse (match counts unknown): all files
     t.deleteEq(Seq(2500L).toDF("ts")) // matches nothing, still unknowable
@@ -572,7 +573,7 @@ class GraftSourceSpec extends SparkSpec {
     val eqScans = eqRecent.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }
-    assert(eqScans.head.inputPartitions.size === 5)
+    assert(ScanPlans.plannedFiles(eqScans.head.inputPartitions) === 5)
     assert(eqRecent.select("ts").as[Long].collect().toSeq ===
       Seq(4001L, 4000L, 3009L))
   }
@@ -593,9 +594,10 @@ class GraftSourceSpec extends SparkSpec {
     assert(t.snapshot().files.forall(_.valueSets.contains("op")),
       "commit should harvest complete dictionaries for a low-NDV string column")
 
-    def planned(df: DataFrame): Int = df.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.head.inputPartitions.size
+    def planned(df: DataFrame): Int = ScanPlans.plannedFiles(
+      df.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }.head.inputPartitions)
 
     val hit = spark.read.format("graft").load(root).where($"op" === "del")
     assert(planned(hit) === 1,
@@ -752,8 +754,8 @@ class GraftSourceSpec extends SparkSpec {
     val done = joined.queryExecution.executedPlan
     val scan = scans(done).head
     assert(scan.runtimeFilters.nonEmpty, "expected a dynamic pruning filter")
-    assert(scan.inputRDD.getNumPartitions < totalFiles,
-      s"expected runtime-pruned scan, got ${scan.inputRDD.getNumPartitions} partitions")
+    assert(ScanPlans.plannedFiles(scan.inputRDD) < totalFiles,
+      s"expected runtime-pruned scan, got ${ScanPlans.plannedFiles(scan.inputRDD)} files")
   }
 
   test("batch read: merge-on-read position deletes are applied, filters stay exact") {

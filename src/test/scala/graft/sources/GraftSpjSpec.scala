@@ -232,6 +232,65 @@ class GraftSpjSpec extends SparkSpec {
     }
   }
 
+  test("a key-less aggregate over a days(time) table reports no layout and packs its files") {
+    warehouse
+    spark.sql(
+      """CREATE TABLE spj.db.kfacts (time TIMESTAMP, v BIGINT)
+        |PARTITIONED BY (days(time))""".stripMargin)
+    spark.sql(
+      """CREATE TABLE spj.db.kdims (time TIMESTAMP, w BIGINT)
+        |PARTITIONED BY (days(time))""".stripMargin)
+    // 3 inserts × 4 days = 12 small fact files
+    (0 until 3).foreach { b =>
+      (0L until 20L).map(i => (java.sql.Timestamp.from(
+          java.time.Instant.ofEpochSecond((i % 4) * 86400L + b)), i % 5))
+        .toDF("time", "v").createOrReplaceTempView("spj_kf")
+      spark.sql("INSERT INTO spj.db.kfacts SELECT * FROM spj_kf")
+    }
+    (0L until 4L).map(i => (java.sql.Timestamp.from(
+        java.time.Instant.ofEpochSecond(i * 86400L)), i))
+      .toDF("time", "w").createOrReplaceTempView("spj_kd")
+    spark.sql("INSERT INTO spj.db.kdims SELECT * FROM spj_kd")
+    assert(LogTable(spark, s"$warehouse/db/kfacts").snapshot().files.size === 12)
+    def scanOf(df: DataFrame) = {
+      def walk(p: SparkPlan): Seq[org.apache.spark.sql.execution.datasources
+          .v2.BatchScanExec] = p.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          Seq(b)
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => walk(q.plan)
+      }.flatten
+      walk(df.queryExecution.executedPlan)
+    }
+    withSpj {
+      // `time` is not read: Spark would drop a days(time) claim
+      val agg = spark.sql(
+        "SELECT v, count(*) AS n FROM spj.db.kfacts GROUP BY v")
+      assert(agg.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        (0L until 5L).map(_ -> 12L).toMap)
+      val scan = scanOf(agg).head
+      assert(scan.scan.asInstanceOf[org.apache.spark.sql.connector.read
+        .SupportsReportPartitioning].outputPartitioning()
+        .isInstanceOf[org.apache.spark.sql.connector.read.partitioning
+          .UnknownPartitioning])
+      assert(ScanPlans.plannedFiles(scan.inputPartitions) === 12)
+      assert(scan.inputPartitions.size < 12 &&
+        scan.inputPartitions.forall(_.isInstanceOf[GraftFilePack]),
+        s"expected packed partitions, got ${scan.inputPartitions.size}")
+      // a query reading the key still reports the layout and joins
+      // partition-by-partition
+      val j = spark.sql(
+        """SELECT f.v, d.w FROM spj.db.kfacts f
+          |JOIN spj.db.kdims d ON f.time = d.time""".stripMargin)
+      assert(j.collect().length === 20)
+      assert(shuffles(j) === 0,
+        s"expected a storage-partitioned join with zero exchanges:\n" +
+          j.queryExecution.executedPlan)
+      assert(scanOf(j).forall(_.inputPartitions.forall(
+        _.isInstanceOf[GraftInputPartition])))
+    }
+  }
+
   test("YEARS layout (calendar transform) reports SPJ: same-years join plans ZERO shuffles") {
     warehouse
     spark.sql(

@@ -1,14 +1,17 @@
 package graft.sources
 
+import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 
 import scala.collection.mutable.ListBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 
 /** Zero-rename write commit: tasks write data files STRAIGHT to their
@@ -27,11 +30,13 @@ import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtoc
   * the writer a final `data/[k=v/...]uuid.parquet` path; the task
   * commit message carries the (partition-dir, path) list; job commit
   * writes the aggregated list as a `_graft_committed` sidecar in the
-  * (otherwise empty) staging dir for the driver to read. Files from
-  * task attempts that never commit — speculation losers, retries —
-  * are deleted by `abortTask` when the attempt dies cleanly, and are
-  * invisible orphans (no manifest references them) reaped by
-  * `removeOrphans` otherwise, exactly like a crashed append's output.
+  * (otherwise empty) staging dir for [[DirectCommitProtocol.land]] to
+  * read. Files from task attempts that never commit — speculation
+  * losers, retries — are deleted by `abortTask` when the attempt dies
+  * cleanly; a failed job's `abortJob` deletes the files its committed
+  * tasks wrote. Anything else (a crashed driver) is an invisible orphan
+  * (no manifest references it) reaped by `removeOrphans`, exactly like
+  * a crashed append's output.
   *
   * Without the target option every override delegates to the default
   * [[SQLHadoopMapReduceCommitProtocol]], so installing this class as
@@ -47,8 +52,24 @@ class DirectCommitProtocol(jobId: String, path: String,
     * file this attempt opened. */
   @transient private var written: ListBuffer[(String, String)] = _
 
+  /** Driver-side: this job's target dir and the files its committed
+    * tasks reported, deleted again if the job aborts. */
+  @transient private var jobTarget = ""
+  @transient private var committed: List[String] = Nil
+
   private def target(conf: Configuration): String =
     conf.get(DirectCommitProtocol.TargetKey, "")
+
+  override def setupJob(jobContext: JobContext): Unit = {
+    jobTarget = target(jobContext.getConfiguration)
+    committed = Nil
+    super.setupJob(jobContext)
+  }
+
+  override def onTaskCommit(taskCommit: TaskCommitMessage): Unit =
+    if (jobTarget.nonEmpty) committed :::=
+      taskCommit.obj.asInstanceOf[List[(String, String)]].map(_._2)
+    else super.onTaskCommit(taskCommit)
 
   override def setupTask(taskContext: TaskAttemptContext): Unit = {
     written = ListBuffer.empty
@@ -96,6 +117,18 @@ class DirectCommitProtocol(jobId: String, path: String,
     super.abortTask(taskContext)
   }
 
+  override def abortJob(jobContext: JobContext): Unit = {
+    if (jobTarget.nonEmpty) {
+      val fs = new HPath(jobTarget).getFileSystem(jobContext.getConfiguration)
+      committed.foreach { p =>
+        try fs.delete(new HPath(p), false)
+        catch { case _: Exception => () }
+      }
+      committed = Nil
+    }
+    super.abortJob(jobContext)
+  }
+
   override def commitJob(jobContext: JobContext,
       taskCommits: Seq[TaskCommitMessage]): Unit = {
     if (target(jobContext.getConfiguration).isEmpty)
@@ -119,8 +152,9 @@ object DirectCommitProtocol {
   /** Write option naming the final data dir; absent = vanilla commit. */
   val TargetKey = "graft.direct.target"
   /** Sidecar file job commit leaves in the staging dir: one
-    * `partitionDir TAB absolutePath` line per committed data file. */
-  val Sidecar = "_graft_committed"
+    * `partitionDir TAB absolutePath` line per committed data file.
+    * Read only by [[land]]. */
+  private[sources] val Sidecar = "_graft_committed"
   /** Session conf that routes batch file writes through this class. */
   val ConfKey = "spark.sql.sources.commitProtocolClass"
 
@@ -129,5 +163,63 @@ object DirectCommitProtocol {
     val cls = classOf[DirectCommitProtocol].getName
     if (!spark.conf.getOption(ConfKey).contains(cls))
       spark.conf.set(ConfKey, cls)
+  }
+
+  /** THE landing path for every Spark-written parquet graft keeps:
+    * write `df` as parquet straight into `dir` (final UUID names, no
+    * rename, `shape` adds partitionBy / writer options) and return the
+    * committed `(partition dir, final path)` pairs sorted by path. The
+    * protocol is installed on the frame's OWN session, so the sidecar
+    * is always there — a missing one means some other protocol ran the
+    * write and throws instead of guessing at its output. The session
+    * also gets [[LogTable.ensureMicrosTimestamps]]. The job's scratch
+    * dir (a `stage-<uuid>` sibling of `dir` holding the sidecar and
+    * `_SUCCESS`) is deleted on success and failure alike, and the
+    * checksum siblings local-FS writers leave next to each file are
+    * cleared (the manifest is the integrity layer).
+    *
+    * With a `prefix`, each file is renamed within `dir` to
+    * `<prefix>-<uuid>.parquet` (a partitioned write's `k=v` directories
+    * are emptied and removed; the returned partition dir still names
+    * the one the writer chose) — the export's naming for delete,
+    * partition-stats and default-fill files. */
+  private[sources] def land(df: DataFrame, dir: Path, prefix: String = "")(
+      shape: DataFrameWriter[Row] => DataFrameWriter[Row] = identity)
+      : Seq[(String, Path)] = {
+    install(df.sparkSession)
+    LogTable.ensureMicrosTimestamps(df.sparkSession)
+    val target = dir.toAbsolutePath
+    Files.createDirectories(target)
+    val scratch = target.resolveSibling(s"stage-${UUID.randomUUID()}")
+    try {
+      shape(df.write.option(TargetKey, target.toString))
+        .parquet(scratch.toString)
+      val sidecar = scratch.resolve(Sidecar)
+      if (!Files.exists(sidecar)) throw new IllegalStateException(
+        s"parquet write into $dir left no $Sidecar list: the write did " +
+          s"not run under ${classOf[DirectCommitProtocol].getName}")
+      val placed = Files.readAllLines(sidecar).asScala.toSeq
+        .filter(_.nonEmpty).map { line =>
+          val cut = line.indexOf('\t')
+          val f = Paths.get(line.substring(cut + 1))
+          Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+          (line.substring(0, cut), f)
+        }
+      val named =
+        if (prefix.isEmpty) placed
+        else {
+          val out = placed.map { case (part, f) =>
+            (part, Files.move(f,
+              target.resolve(s"$prefix-${UUID.randomUUID()}.parquet")))
+          }
+          // deepest first, so a nested k1=a/k2=b empties bottom-up
+          placed.flatMap { case (_, f) =>
+            Iterator.iterate(f.getParent)(_.getParent)
+              .takeWhile(d => d != null && d.startsWith(target) && d != target)
+          }.distinct.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
+          out
+        }
+      named.sortBy(_._2.toString)
+    } finally LogTable.deleteRecursively(scratch)
   }
 }

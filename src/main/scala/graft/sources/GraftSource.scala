@@ -107,7 +107,7 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister
   override def getTable(schema: StructType,
       partitioning: Array[org.apache.spark.sql.connector.expressions.Transform],
       properties: util.Map[String, String]): Table =
-    new GraftTable(properties.get("path"), schema)
+    new GraftTable(properties.get("path"), schema, byPath = true)
 
   /** Open the write-target table: explicit layout options (+
     * `.partitionBy`) for fresh tables, the manifest-recorded spec
@@ -399,7 +399,7 @@ private[sources] final case class ColumnarPlan(partS: StructType,
   * pre-evolution version sees that version's columns. */
 private[sources] final class GraftTable(root: String, schema0: StructType,
     writable: Boolean = false, pinnedVersion: Option[Long] = None,
-    branchName: Option[String] = None)
+    branchName: Option[String] = None, byPath: Boolean = false)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -491,7 +491,7 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
     * write-privileged `loadTable`). */
   private[sources] def nullable: GraftTable =
     new GraftTable(root, GraftBridge.asNullable(schema0), writable,
-      pinnedVersion, branchName)
+      pinnedVersion, branchName, byPath)
   /** The recorded partition spec, surfaced through Spark's own
     * metadata commands (`DESCRIBE TABLE` shows the layout a user's
     * filters should target). */
@@ -542,7 +542,7 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
         new CaseInsensitiveStringMap(m)
       case _ => options
     }
-    new GraftScanBuilder(root, schema0, opts)
+    new GraftScanBuilder(root, schema0, opts, byPath = byPath)
   }
 }
 
@@ -572,7 +572,7 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
   * to the normal scan, never to a wrong answer. */
 private[sources] final class GraftScanBuilder(root: String,
     fullSchema: StructType, options: CaseInsensitiveStringMap,
-    rowLevel: Option[GraftRowLevelOperation] = None)
+    rowLevel: Option[GraftRowLevelOperation] = None, byPath: Boolean = false)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -707,7 +707,7 @@ private[sources] final class GraftScanBuilder(root: String,
       new GraftMetaAggScan(root, schema, values)
     case _ => new GraftScan(root, required, options, pushed,
       if (rowLevel.isEmpty) limit else None,
-      if (rowLevel.isEmpty) topN else None, rowLevel)
+      if (rowLevel.isEmpty) topN else None, rowLevel, byPath)
   }
 }
 
@@ -758,7 +758,8 @@ private[sources] final class GraftScan(root: String, schema: StructType,
     options: CaseInsensitiveStringMap, pushed: Array[Filter],
     limit: Option[Int] = None,
     topN: Option[(String, Boolean, Boolean, Int)] = None,
-    rowLevel: Option[GraftRowLevelOperation] = None) extends Scan
+    rowLevel: Option[GraftRowLevelOperation] = None,
+    byPath: Boolean = false) extends Scan
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
@@ -855,13 +856,22 @@ private[sources] final class GraftScan(root: String, schema: StructType,
     * lacks a layout key's source column skips it as well: Spark keeps
     * a reported layout only when its references are scan output
     * (V2ScanPartitioningAndOrdering), so the claim would be dropped
-    * and would only cost the scan its file packing. */
+    * and would only cost the scan its file packing. A PATH relation
+    * (`format("graft").load(root)`, opened by [[GraftTableProvider]])
+    * has no function catalog to resolve a transform key (`days`,
+    * `bucket`, ...) through, so Spark drops such a claim the same way:
+    * read by path, only an all-identity layout is reported. */
   private lazy val spjLayout: Option[SpjLayout] =
     if (rowLevel.nonEmpty || options.getBoolean("readChanges", false)) None
     else SpjLayout.of(GraftSourceUtil.snapshotFor(
-      LogTable(SparkSession.active, root), options)).filter(_.keys.forall(
-        _.references.forall(r =>
-          schema.fieldNames.exists(_.equalsIgnoreCase(r.fieldNames.head)))))
+      LogTable(SparkSession.active, root), options)).filter(_.keys.forall(k =>
+        k.references.forall(r =>
+          schema.fieldNames.exists(_.equalsIgnoreCase(r.fieldNames.head))) &&
+        (!byPath || (k match {
+          case t: org.apache.spark.sql.connector.expressions.Transform =>
+            t.name == "identity"
+          case _ => false
+        }))))
 
   override def outputPartitioning()
       : org.apache.spark.sql.connector.read.partitioning.Partitioning =

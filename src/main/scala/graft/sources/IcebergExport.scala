@@ -5,7 +5,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types._
 
@@ -73,10 +73,36 @@ import scala.jdk.CollectionConverters._
 object IcebergExport {
 
   /** Serializes the field-id-conf set/write/restore window in
-    * `writeDeleteParquet` (the conf is session-scoped, not a writer
+    * [[landWithFieldIds]] (the conf is session-scoped, not a writer
     * option) — concurrent exports on one session can't restore each
     * other's stale value. */
   private[sources] val fieldIdConfLock = new Object
+
+  /** [[DirectCommitProtocol.land]] with Iceberg parquet FIELD IDS
+    * stamped in the footers (column metadata key `parquet.field.id`):
+    * foreign engines project delete and stats files by field id. The
+    * field-id conf is session-scoped (ParquetWriteSupport reads it from
+    * the session's SQLConf, not from writer options), so the
+    * set/write/restore window is serialized under a JVM-wide lock: two
+    * concurrent exports can never restore each other's stale value. An
+    * unrelated write on the same session that races the window merely
+    * sees the conf enabled, a no-op for schemas that carry no
+    * `parquet.field.id` column metadata. */
+  private[sources] def landWithFieldIds(df: DataFrame, dir: Path,
+      prefix: String)(shape: DataFrameWriter[Row] => DataFrameWriter[Row] =
+        identity): Seq[(String, Path)] = {
+    val sess = df.sparkSession
+    val key = "spark.sql.parquet.fieldId.write.enabled"
+    fieldIdConfLock.synchronized {
+      val prev = sess.conf.getOption(key)
+      sess.conf.set(key, "true")
+      try DirectCommitProtocol.land(df, dir, prefix)(shape)
+      finally prev match {
+        case Some(v) => sess.conf.set(key, v)
+        case None => sess.conf.unset(key)
+      }
+    }
+  }
 
   /** (min, max) of `ss` as UTF-8 byte arrays under Iceberg's UNSIGNED
     * byte order — the order foreign engines apply to manifest-list
@@ -582,61 +608,29 @@ object IcebergExport {
     val partSchema = manifestSchema.getField("data_file").schema()
       .getField("partition").schema()
 
-    /** Write `df` as ONE parquet file under dest/data/ with Iceberg
-      * parquet FIELD IDS stamped in the footer (column metadata key
-      * `parquet.field.id` + the field-id write conf): foreign engines
-      * project delete files by field id, and `schema.name-mapping
-      * .default` is not reliably applied to delete files — id-less
-      * footers would make a real Iceberg engine fail to read them. */
     /** Write `df` as `shards` Iceberg delete parquets under dest/data/
       * (each a spec-legal delete file — the spec permits any number of
-      * `content=deletes` entries per manifest). `arrange` pre-shapes
+      * `content=deletes` entries per manifest), with parquet FIELD IDS
+      * in the footers ([[IcebergExport.landWithFieldIds]]):
+      * `schema.name-mapping.default` is not reliably applied to delete
+      * files, so id-less footers would make a real Iceberg engine fail
+      * to read them. `arrange` pre-shapes
       * the frame per shard (the position path repartitions by
       * file_path and spec-sorts within each shard; the eq path is a
       * single pre-shaped file). Returns (path, rowCount) per written
       * file, counts from the parquet footers (metadata, no job). */
     def writeDeleteParquets(df: DataFrame, prefix: String,
         arrange: DataFrame => DataFrame): Seq[(Path, Long)] = {
-      val dataDir = Paths.get(dest).resolve("data")
-      Files.createDirectories(dataDir)
-      val stage = Files.createTempDirectory("ice_del_stage_")
-      val sess = df.sparkSession
-      LogTable.ensureMicrosTimestamps(sess)
-      val key = "spark.sql.parquet.fieldId.write.enabled"
-      // the field-id conf is session-scoped (ParquetWriteSupport reads
-      // it from the session's SQLConf, not from writer options), so the
-      // set/write/restore window is serialized under a JVM-wide lock:
-      // two concurrent exports can no longer restore each other's stale
-      // value. An unrelated write on the same session that races the
-      // window merely sees the conf enabled, which is a no-op for
-      // schemas that carry no `parquet.field.id` column metadata.
-      IcebergExport.fieldIdConfLock.synchronized {
-        val prev = sess.conf.getOption(key)
-        sess.conf.set(key, "true")
-        try arrange(df).write.mode("overwrite").parquet(stage.toString)
-        finally prev match {
-          case Some(v) => sess.conf.set(key, v)
-          case None => sess.conf.unset(key)
-        }
-      }
-      val srcs = scala.util.Using.resource(Files.walk(stage)) { ws =>
-        ws.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-          .sortBy(_.toString)
-      }
-      require(srcs.nonEmpty, "delete stage empty")
-      val out = srcs.flatMap { src =>
-        val target = dataDir.resolve(
-          s"$prefix-${java.util.UUID.randomUUID()}.parquet")
-        Files.move(src, target)
+      val landed = IcebergExport.landWithFieldIds(arrange(df),
+        Paths.get(dest).resolve("data"), prefix)()
+      require(landed.nonEmpty, "delete write landed no file")
+      landed.flatMap { case (_, target) =>
         val rows = IcebergExport.parquetRowCount(target)
         // an empty shard (hash skew left it rowless) is not a delete
         // file — drop it rather than emit a 0-row manifest entry
         if (rows == 0L) { Files.delete(target); None }
         else Some((target, rows))
       }
-      LogTable.deleteRecursively(stage)
-      out
     }
     def writeDeleteParquet(df: DataFrame, prefix: String): Path = {
       val one = writeDeleteParquets(df, prefix, _.coalesce(1))
@@ -813,8 +807,9 @@ object IcebergExport {
       * parquet: the union tags each source with a literal index,
       * repartitions on it (a source's rows always hash to one task)
       * and writes `partitionBy` the tag, so the tag itself is never
-      * stored; each staged directory's single file then moves to its
-      * final eq-delete name and lands in [[eqExportCache]], from which
+      * stored; each tag's single file is renamed to its final
+      * eq-delete name (no tag directory stays behind) and lands in
+      * [[eqExportCache]], from which
       * [[eqExport]] serves every manifest entry. A many-tombstone
       * history export re-encodes in O(groups) jobs, not O(files);
       * physical shapes come from driver-side footer reads (no job). */
@@ -842,35 +837,13 @@ object IcebergExport {
             sess.read.schema(phys(e.path)).parquet(e.path)
               .select(proj :+ lit(i).as("_graft_src"): _*)
           }.reduce(_ unionByName _)
-          val dataDir = Paths.get(dest).resolve("data")
-          Files.createDirectories(dataDir)
-          val stage = Files.createTempDirectory("ice_eq_stage_")
-          LogTable.ensureMicrosTimestamps(sess)
-          val key = "spark.sql.parquet.fieldId.write.enabled"
-          IcebergExport.fieldIdConfLock.synchronized {
-            val prev = sess.conf.getOption(key)
-            sess.conf.set(key, "true")
-            try tagged.repartition(group.size, col("_graft_src"))
-              .write.mode("overwrite").partitionBy("_graft_src")
-              .parquet(stage.toString)
-            finally prev match {
-              case Some(v) => sess.conf.set(key, v)
-              case None => sess.conf.unset(key)
-            }
-          }
+          val landed = IcebergExport.landWithFieldIds(
+            tagged.repartition(group.size, col("_graft_src")),
+            Paths.get(dest).resolve("data"), "eq-delete")(
+            _.partitionBy("_graft_src")).groupBy(_._1)
           group.zipWithIndex.foreach { case (e, i) =>
-            val dir = stage.resolve(s"_graft_src=$i")
-            val parts =
-              if (!Files.isDirectory(dir)) Nil
-              else scala.util.Using.resource(Files.list(dir)) { s =>
-                s.iterator().asScala
-                  .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-              }
-            parts match {
-              case Seq(one) =>
-                val target = dataDir.resolve(
-                  s"eq-delete-${java.util.UUID.randomUUID()}.parquet")
-                Files.move(one, target)
+            landed.getOrElse(s"_graft_src=$i", Nil) match {
+              case Seq((_, target)) =>
                 eqExportCache(e.path) = (target.toString, Files.size(target),
                   eqIds, e.rows, e.seq)
               case Nil =>
@@ -883,7 +856,6 @@ object IcebergExport {
                   "must place one source in one task")
             }
           }
-          LogTable.deleteRecursively(stage)
         }
       }
     }
@@ -1462,31 +1434,13 @@ object IcebergExport {
           fidMeta(4L)),
         StructField("total_data_file_size_in_bytes", LongType,
           nullable = false, fidMeta(5L))))
-      val sess = table.spark
-      val stage = Files.createTempDirectory("ice_pstats_stage_")
-      val key = "spark.sql.parquet.fieldId.write.enabled"
-      IcebergExport.fieldIdConfLock.synchronized {
-        val prev = sess.conf.getOption(key)
-        sess.conf.set(key, "true")
-        try sess.createDataFrame(statRows.asJava, statsSchema).coalesce(1)
-          .write.mode("overwrite").parquet(stage.toString)
-        finally prev match {
-          case Some(v) => sess.conf.set(key, v)
-          case None => sess.conf.unset(key)
+      val target = IcebergExport.landWithFieldIds(
+        table.spark.createDataFrame(statRows.asJava, statsSchema).coalesce(1),
+        metaDir, s"partition-stats-${cur.version}")() match {
+          case Seq((_, one)) => one
+          case other => throw new IllegalStateException(
+            s"expected one partition-stats parquet, got ${other.size}")
         }
-      }
-      val src = scala.util.Using.resource(Files.walk(stage)) { ws =>
-        ws.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq match {
-            case Seq(one) => one
-            case other => throw new IllegalStateException(
-              s"expected one partition-stats parquet, got ${other.size}")
-          }
-      }
-      val target = metaDir.resolve(
-        s"partition-stats-${cur.version}-${java.util.UUID.randomUUID()}.parquet")
-      Files.move(src, target)
-      LogTable.deleteRecursively(stage)
       val ps = root.putArray("partition-statistics").addObject()
       ps.put("snapshot-id", cur.version)
       ps.put("statistics-path", target.toString)
@@ -3094,7 +3048,6 @@ object IcebergImport {
                 "but the identity hive-path layout cannot be reproduced " +
                 "for rewritten files — read via IcebergRead/iceberg_scan " +
                 "instead")
-            Files.createDirectories(dataDir)
             val raw = spark.read.parquet(f.path)
             val rawCols = raw.columns.toSet
             val outCols: Seq[Column] = m.schema.fields.toSeq.map { sf =>
@@ -3109,18 +3062,9 @@ object IcebergImport {
                 raw0.cast(sf.dataType).as(sf.name)
               }
             }
-            val stage = Files.createTempDirectory("ice_default_fill_")
-            LogTable.ensureMicrosTimestamps(spark)
-            raw.select(outCols: _*).coalesce(1)
-              .write.mode("overwrite").parquet(stage.toString)
-            val src = scala.util.Using.resource(Files.list(stage)) { s =>
-              s.iterator().asScala
-                .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-            }.head
-            val target = dataDir.resolve(
-              s"default-fill-${java.util.UUID.randomUUID()}.parquet")
-            Files.move(src, target)
-            LogTable.deleteRecursively(stage)
+            val target = DirectCommitProtocol.land(
+              raw.select(outCols: _*).coalesce(1), dataDir, "default-fill")()
+              .head._2
             f.copy(path = target.toString, bytes = Files.size(target))
           }
         }

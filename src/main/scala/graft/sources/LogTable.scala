@@ -1995,7 +1995,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
     * themselves). Produces byte-identical entries to what
     * [[stageFlush]] returned when it wrote them. */
   private[sources] def adoptStaged(paths: Seq[String]): Seq[DataFile] =
-    if (paths.isEmpty) Nil else adoptStagedWithSchema(paths)._1
+    footerEntries(paths, withSchema = false).map(_._1)
 
   /** [[adoptStaged]] that ALSO returns the batch's merged Spark schema
     * (as json) from the SAME footer reads — the marker leader needs
@@ -2004,28 +2004,38 @@ final class LogTable private (val spark: SparkSession, val root: String,
     * pure metadata I/O; halving its footer reads halves it). */
   private[sources] def adoptStagedWithSchema(paths: Seq[String])
       : (Seq[DataFile], String) = {
+    val (files, schemas) = footerEntries(paths, withSchema = true).unzip
+    (files, schemas.flatten.reduce((a, b) => LogTable.mergeStructs(a, b)).json)
+  }
+
+  /** The one footer → [[DataFile]] builder: one parallel pass, each
+    * footer opened once; partition values come from the path's hive
+    * segments under data/. With `withSchema`, the file's Spark schema
+    * is converted from the same open footer. */
+  private def footerEntries(paths: Seq[String], withSchema: Boolean)
+      : Seq[(DataFile, Option[org.apache.spark.sql.types.StructType])] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val both = Await.result(Future.traverse(paths) { p =>
+    val pool = dataDir.toAbsolutePath.normalize
+    Await.result(Future.traverse(paths) { p =>
       Future {
         val abs = Paths.get(p).toAbsolutePath.normalize
-        val rel = dataDir.toAbsolutePath.normalize.relativize(abs).toString
         val r = HadoopConf.openParquet(new org.apache.hadoop.fs.Path(abs.toUri))
         val (meta, schema) =
           try (footerMetaOf(r),
-            new org.apache.spark.sql.execution.datasources.parquet
-              .ParquetToSparkSchemaConverter()
-              .convert(r.getFooter.getFileMetaData.getSchema))
+            Option.when(withSchema)(
+              new org.apache.spark.sql.execution.datasources.parquet
+                .ParquetToSparkSchemaConverter()
+                .convert(r.getFooter.getFileMetaData.getSchema)))
           finally r.close()
         val (rows, ranges, strRanges, nulls, vsets) = meta
         (DataFile(abs.toString, rows, Files.size(abs),
-          partitions = LogTable.partValsOfRel(rel), ranges = ranges,
-          strRanges = strRanges, nulls = nulls, valueSets = vsets), schema)
+          partitions = LogTable.partValsOfRel(pool.relativize(abs).toString),
+          ranges = ranges, strRanges = strRanges, nulls = nulls,
+          valueSets = vsets), schema)
       }
     }, Duration.Inf)
-    val (files, schemas) = both.unzip
-    (files, schemas.reduce((a, b) => LogTable.mergeStructs(a, b)).json)
   }
 
   /** Commit already-staged data files as one atomic append — the
@@ -3005,10 +3015,10 @@ final class LogTable private (val spark: SparkSession, val root: String,
 
   /** Adopt already-written UNPARTITIONED parquet files (a row-level
     * write's staged task outputs) as table data files: same-filesystem
-    * move into the data pool + one parallel footer-stats pass — the
-    * tail of [[writeDataFiles]] without the second Spark write.
-    * Partitioned tables cannot adopt (staged files carry no layout);
-    * their caller restages through writeDataFiles. */
+    * move into the data pool, then [[adoptStaged]] — the tail of
+    * [[writeDataFiles]] without the second Spark write. Partitioned
+    * tables cannot adopt (staged files carry no layout); their caller
+    * restages through writeDataFiles. */
   private[sources] def adoptStagedFiles(staged: Seq[Path]): Seq[DataFile] = {
     require(partitionBy.isEmpty && hiddenBy.isEmpty,
       "adoptStagedFiles is for unpartitioned tables only")
@@ -3016,18 +3026,9 @@ final class LogTable private (val spark: SparkSession, val root: String,
     val placed = staged.map { p =>
       val dest = dataDir.resolve(s"${UUID.randomUUID()}.parquet")
       Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-      dest
+      dest.toString
     }
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.traverse(placed) { dest =>
-      Future {
-        val (rows, ranges, strRanges, nulls, vsets) = parquetFooterMeta(dest)
-        DataFile(dest.toString, rows, Files.size(dest), Map.empty,
-          ranges, strRanges, nulls = nulls, valueSets = vsets)
-      }
-    }, Duration.Inf).filter(_.rows > 0L)
+    adoptStaged(placed).filter(_.rows > 0L)
   }
 
   /** Bin-pack data files smaller than `smallBytes` into ~`targetBytes`
@@ -3583,41 +3584,15 @@ final class LogTable private (val spark: SparkSession, val root: String,
       .map(_.toLong).getOrElse(1000000L)
     val n = knownCount.getOrElse(keys.count())
     if (n == 0L) return Nil
-    LogTable.ensureMicrosTimestamps(keys.sparkSession)
     val shards = math.min((n + perShard - 1) / perShard, 64L).toInt
-    val stage = rootPath.resolve(s"stage-${UUID.randomUUID()}")
-    val delDir = rootPath.resolve("deletes")
-    Files.createDirectories(delDir)
     // zero-rename commit into deletes/ (cf. writeDataFiles)
-    DirectCommitProtocol.install(spark)
-    keys.repartition(shards, cols.map(col): _*).write
-      .option(DirectCommitProtocol.TargetKey, delDir.toAbsolutePath.toString)
-      .parquet(stage.toString)
-    val sidecar = stage.resolve(DirectCommitProtocol.Sidecar)
-    val parts =
-      if (Files.exists(sidecar))
-        Files.readAllLines(sidecar).asScala.toSeq.filter(_.nonEmpty)
-          .map(line => Paths.get(line.substring(line.indexOf('\t') + 1)))
-          .sortBy(_.toString)
-      else {
-        val walk = Files.walk(stage)
-        val staged = try walk.iterator().asScala
-          .filter(p => p.getFileName.toString.endsWith(".parquet")).toSeq
-          finally walk.close()
-        staged.map { part =>
-          val dest = delDir.resolve(s"${UUID.randomUUID()}.parquet")
-          Files.move(part, dest, StandardCopyOption.ATOMIC_MOVE)
-          dest
-        }
-      }
-    val out = parts.flatMap { dest =>
-      Files.deleteIfExists(dest.resolveSibling(s".${dest.getFileName}.crc"))
+    val parts = DirectCommitProtocol.land(
+      keys.repartition(shards, cols.map(col): _*), rootPath.resolve("deletes"))()
+    parts.flatMap { case (_, dest) =>
       val (rows, _, _, _, _) = parquetFooterMeta(dest)
       if (rows == 0L) { Files.deleteIfExists(dest); None }
       else Some(EqDeleteFile(dest.toString, Files.size(dest), cols, rows, 0L))
     }
-    LogTable.deleteRecursively(stage)
-    out
   }
 
   /** `write.cdc.enabled` gate: COW delete/update/merge additionally
@@ -3635,38 +3610,12 @@ final class LogTable private (val spark: SparkSession, val root: String,
     * until the manifest lands; a lost race deletes them
     * ([[commitOrCleanup]]). Nil for an empty frame. */
   private def writeCdcFiles(df: DataFrame, change: String): Seq[CdcFile] = {
-    LogTable.ensureMicrosTimestamps(df.sparkSession)
-    val stage = rootPath.resolve(s"stage-${UUID.randomUUID()}")
-    val chDir = rootPath.resolve("changes")
-    Files.createDirectories(chDir)
-    DirectCommitProtocol.install(spark)
-    df.write.option(DirectCommitProtocol.TargetKey, chDir.toAbsolutePath.toString)
-      .parquet(stage.toString)
-    val sidecar = stage.resolve(DirectCommitProtocol.Sidecar)
-    val parts =
-      if (Files.exists(sidecar))
-        Files.readAllLines(sidecar).asScala.toSeq.filter(_.nonEmpty)
-          .map(line => Paths.get(line.substring(line.indexOf('\t') + 1)))
-          .sortBy(_.toString)
-      else {
-        val walk = Files.walk(stage)
-        val staged = try walk.iterator().asScala
-          .filter(p => p.getFileName.toString.endsWith(".parquet")).toSeq
-          finally walk.close()
-        staged.map { part =>
-          val dest = chDir.resolve(s"${UUID.randomUUID()}.parquet")
-          Files.move(part, dest, StandardCopyOption.ATOMIC_MOVE)
-          dest
-        }
-      }
-    val out = parts.flatMap { dest =>
-      Files.deleteIfExists(dest.resolveSibling(s".${dest.getFileName}.crc"))
-      val (rows, _, _, _, _) = parquetFooterMeta(dest)
-      if (rows == 0L) { Files.deleteIfExists(dest); None }
-      else Some(CdcFile(dest.toString, rows, Files.size(dest), change))
+    DirectCommitProtocol.land(df, rootPath.resolve("changes"))().flatMap {
+      case (_, dest) =>
+        val (rows, _, _, _, _) = parquetFooterMeta(dest)
+        if (rows == 0L) { Files.deleteIfExists(dest); None }
+        else Some(CdcFile(dest.toString, rows, Files.size(dest), change))
     }
-    LogTable.deleteRecursively(stage)
-    out
   }
 
   /** Write `(file_path, pos)` marks as SHARDED position-delete parquet
@@ -4660,7 +4609,6 @@ final class LogTable private (val spark: SparkSession, val root: String,
       blooms: Option[Seq[BloomCol]] = None,
       sort: Option[Seq[String]] = None,
       props: Option[Map[String, String]] = None): Seq[DataFile] = {
-    LogTable.ensureMicrosTimestamps(df.sparkSession)
     // MATERIALIZED ROW LINEAGE (see [[readLiveRw]]): when the rewrite
     // frame carries the lineage columns, store them physically under
     // the Iceberg-reserved parquet field ids (Spark's writer emits a
@@ -4680,7 +4628,6 @@ final class LogTable private (val spark: SparkSession, val root: String,
           df(LogTable.LuSeqCol).as(LogTable.LuSeqCol,
             fid(LogTable.LuSeqFieldId)))
     }
-    val stage = rootPath.resolve(s"stage-${UUID.randomUUID()}")
     // hidden transforms: derive the layout keys from row data — every
     // write path (append, compact, recluster, COW rewrites) re-derives
     // them, so rewritten rows always land in the correct partition.
@@ -4709,16 +4656,19 @@ final class LogTable private (val spark: SparkSession, val root: String,
     // directories sequentially. One hash shuffle on the layout key
     // bounds it at one file per tuple, written in parallel across the
     // cluster. A DRIVER-LOCAL frame (a flush buffer's `createDataFrame`
-    // over rows already in driver memory) is written by ONE task
-    // instead, with no shuffle: its rows are all on the driver anyway,
-    // and the write's sort on the layout columns (the declared sort's
-    // prefix below, or the file writer's own) still closes one file
-    // per tuple — one job, one stage, one task where the shuffle cost
-    // two jobs and a map stage. Rewrite paths keep their own deliberate
-    // arrangements (compact's bin coalesce, recluster's range+sort).
+    // or a `Seq.toDF` over rows already in driver memory) is written by
+    // ONE task instead, partitioned or not, with no shuffle: its rows
+    // are all on the driver anyway, and the write's sort on the layout
+    // columns (the declared sort's prefix below, or the file writer's
+    // own) still closes one file per tuple (one file on an
+    // unpartitioned table) — one job, one stage, one task where the
+    // shuffle costs two jobs and a map stage. Rewrite paths keep their
+    // own deliberate arrangements (compact's bin coalesce, recluster's
+    // range+sort).
     val distributed =
-      if (!distribute || partCols.isEmpty) laid
-      else if (df.isLocal) laid.coalesce(1)
+      if (!distribute) laid
+      else if (LogTable.driverLocal(df)) laid.coalesce(1)
+      else if (partCols.isEmpty) laid
       else laid.repartition(partCols.map(org.apache.spark.sql.functions.col): _*)
     // DECLARED SORT ORDER (see setSortOrder): a task-local sort just
     // before the write — no extra shuffle — leaves every data file
@@ -4738,31 +4688,28 @@ final class LogTable private (val spark: SparkSession, val root: String,
       else distributed.sortWithinPartitions(
         (partCols ++ declaredSort).map(org.apache.spark.sql.functions.col): _*)
     // zero-rename commit: tasks write final UUID names under data/
-    // directly and job commit leaves a sidecar file list in the stage
-    // dir — no per-file task-commit rename, no driver-side move. On an
-    // object store that deletes the only O(data) copy in the commit.
-    DirectCommitProtocol.install(df.sparkSession)
-    var w = arranged.write
-      .option(DirectCommitProtocol.TargetKey, dataDir.toAbsolutePath.toString)
+    // directly (DirectCommitProtocol.land) — no per-file task-commit
+    // rename, no driver-side move. On an object store that deletes the
+    // only O(data) copy in the commit.
+    val tableProps = props.getOrElse(snapshot().props)
     // honored table property: roll to a new file past N rows — the
     // target-file-size knob. A wide ingest task otherwise writes ONE
     // file however large its slice is; unsplittable multi-GB parquet
     // is the classic self-inflicted scan-skew at 100 TB. Spark's own
     // writer does the rolling; the sidecar lists every rolled file.
-    props.getOrElse(snapshot().props).get(LogTable.MaxRecordsProp)
-      .flatMap(_.toLongOption).foreach(n =>
-        w = w.option("maxRecordsPerFile", n.toString))
+    val rolling = tableProps.get(LogTable.MaxRecordsProp)
+      .flatMap(_.toLongOption).map(n => "maxRecordsPerFile" -> n.toString)
     // manifest-declared bloom columns ride into the write job's hadoop
     // conf (parquet-mr writes the filters; pushed equality/IN filters
     // consult them at read) — every write path inherits the property,
     // so compact/recluster retrofit older files automatically. The
     // caller threads its own snapshot when it has one (one manifest
     // read saved per write, and no race with a concurrent set-bloom).
-    blooms.getOrElse(snapshot().bloomCols).foreach { b =>
-      if (arranged.columns.exists(_.equalsIgnoreCase(b.col)))
-        w = w.option(s"parquet.bloom.filter.enabled#${b.col}", "true")
-          .option(s"parquet.bloom.filter.expected.ndv#${b.col}", b.ndv.toString)
-    }
+    val bloomOpts = blooms.getOrElse(snapshot().bloomCols)
+      .filter(b => arranged.columns.exists(_.equalsIgnoreCase(b.col)))
+      .flatMap(b => Seq(s"parquet.bloom.filter.enabled#${b.col}" -> "true",
+        s"parquet.bloom.filter.expected.ndv#${b.col}" -> b.ndv.toString))
+    val writeOpts = (rolling.toSeq ++ bloomOpts).toMap
     // honored table property: pin VARIANT physical layout (see
     // VariantShredProp — Spark's writer shreds by default; the
     // property forces shredded or twin-binary regardless of the
@@ -4772,14 +4719,14 @@ final class LogTable private (val spark: SparkSession, val root: String,
     // pinned values for the duration — benign: both layouts (and any
     // mix) read exactly; the pin guarantees THIS table's files, not
     // session isolation.
-    val shredProp = props.getOrElse(snapshot().props)
-      .get(LogTable.VariantShredProp)
+    val shredProp = tableProps.get(LogTable.VariantShredProp)
       .filter(_ => arranged.schema.exists(f =>
         IcebergExport.containsVariant(f.dataType)))
-    val doWrite = () =>
-      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-        .parquet(stage.toString)
-    shredProp match {
+    val doWrite = () => DirectCommitProtocol.land(arranged, dataDir) { w =>
+      val o = w.options(writeOpts)
+      if (partCols.nonEmpty) o.partitionBy(partCols: _*) else o
+    }
+    val placed = shredProp match {
       case None => doWrite()
       case Some(v) =>
         val conf = df.sparkSession.conf
@@ -4792,64 +4739,15 @@ final class LogTable private (val spark: SparkSession, val root: String,
         finally prev.foreach { case (k, pv) =>
           pv.fold(conf.unset(k))(conf.set(k, _)) }
     }
-    def partValsOf(rel: String): Map[String, String] =
-      LogTable.partValsOfRel(rel)
-    val sidecar = stage.resolve(DirectCommitProtocol.Sidecar)
-    val placed =
-      if (Files.exists(sidecar)) {
-        // direct commit engaged: data files are already at their final
-        // names; the sidecar is the committed list (empty write → no
-        // lines). Sorted for deterministic manifest order.
-        Files.readAllLines(sidecar).asScala.toSeq.filter(_.nonEmpty)
-          .map { line =>
-            val cut = line.indexOf('\t')
-            (java.nio.file.Paths.get(line.substring(cut + 1)),
-              partValsOf(line.substring(0, cut)))
-          }.sortBy(_._1.toString)
-      } else {
-        // fallback (another protocol active on the session): walk the
-        // stage job output and move each file into place
-        val walk1 = Files.walk(stage)
-        val parts = try walk1.iterator().asScala
-          .filter(p => p.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-          finally walk1.close()
-        parts.map { p =>
-          val rel = stage.relativize(p.getParent)
-          val destDir = dataDir.resolve(rel)
-          Files.createDirectories(destDir)
-          val dest = destDir.resolve(s"${UUID.randomUUID()}.parquet")
-          Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-          (dest, partValsOf(rel.toString))
-        }
-      }
-    // footer stats in parallel: each is an independent ~KB footer read,
-    // and a partitioned append lands O(partition tuples) files — read
-    // sequentially this is the commit's dominant driver-side cost
-    val moved = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(Future.traverse(placed) { case (dest, partVals) =>
-        Future {
-          // local-FS writers (ChecksumFileSystem) drop a `.f.crc`
-          // sibling next to direct-written files; the manifest is the
-          // integrity layer here (footer-exact stats), so clear it
-          Files.deleteIfExists(
-            dest.resolveSibling(s".${dest.getFileName}.crc"))
-          val (rows, ranges, strRanges, nulls, vsets) = parquetFooterMeta(dest)
-          DataFile(dest.toString, rows, Files.size(dest), partVals,
-            ranges, strRanges, nulls = nulls, valueSets = vsets)
-        }
-      }, Duration.Inf)
-    }
-    // best-effort cleanup of the staging dir (_SUCCESS, .crc files)
-    LogTable.deleteRecursively(stage)
+    // footer-exact entries, one parallel footer pass (the marker
+    // leader's own builder, so both halves of a flush agree)
+    val written = adoptStaged(placed.map(_._2.toString))
     // FileFormatWriter always opens task 0's writer so an all-empty
     // result still records a schema — that leaves a zero-row file
     // when task 0 holds no rows (e.g. a repartition that hashed every
     // row elsewhere). The manifest never needs it: drop it from disk
     // and from the returned list.
-    val (live, empty) = moved.partition(_.rows > 0L)
+    val (live, empty) = written.partition(_.rows > 0L)
     empty.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
     // lineage-carrying rewrites flag their outputs so a SECOND
     // rewrite knows to read the stored ids, the v3 export assigns
@@ -5410,6 +5308,22 @@ object LogTable {
     if (t.kind == "mbucket") " (or StringType/TimestampType)"
     else if (t.monotonic) " (or TimestampType)"
     else ""
+
+  /** Every row of `df` already sits in driver memory: Spark's own
+    * `isLocal` (a bare `LocalRelation`: a flush buffer's
+    * `createDataFrame`), or renames, casts and filters over one —
+    * `Seq(...).toDF("a", "b")` analyzes to a Project over it. */
+  private[sources] def driverLocal(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical
+    def local(p: logical.LogicalPlan): Boolean = p match {
+      case _: logical.LocalRelation => true
+      case logical.Project(_, c) => local(c)
+      case logical.Filter(_, c) => local(c)
+      case logical.SubqueryAlias(_, c) => local(c)
+      case _ => false
+    }
+    df.isLocal || local(df.queryExecution.analyzed)
+  }
 
   /** "" or k=v[/k2=v2...] path segments → manifest partition values.
     * Spark escapes partition dirs with its OWN escaping (%XX for

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, max}
 
 import java.nio.file.Files
 
@@ -73,6 +73,27 @@ class ScanPackingSpec extends SparkSpec {
     assert(planned.size <= 4, s"expected ≤ 4 packed partitions, got ${planned.size}")
     val paths = planned.flatten.map(_.path)
     assert(paths.sorted === live.sorted, "every live file planned exactly once")
+  }
+
+  test("a path read of the days(time) table reports no transform layout and packs its 44 files") {
+    val t = LogTable(spark, logs)
+    val live = t.snapshot().files.map(_.path)
+    val byPath = spark.read.format("graft").load(logs)
+      .groupBy("name").agg(max("time"))
+    byPath.collect()
+    val planned = packs(byPath)
+    assert(scans(byPath).head.keyGroupedPartitioning.isEmpty)
+    assert(planned.size <= 4, s"expected ≤ 4 packed partitions, got ${planned.size}")
+    assert(planned.flatten.map(_.path).sorted === live.sorted,
+      "every live file planned exactly once")
+    // the catalog read resolves days() and keeps one group per day
+    val byName = spark.sql(
+      "SELECT name, MAX(time) FROM gpack.db.logs GROUP BY name")
+    assert(byName.collect().map(_.toString).sorted ===
+      byPath.collect().map(_.toString).sorted)
+    val scan = scans(byName).head
+    assert(scan.keyGroupedPartitioning.nonEmpty)
+    assert(scan.inputRDD.getNumPartitions === 4)
   }
 
   test("GROUP BY name and the errors query match a readFiles scan") {

@@ -131,9 +131,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
           if (ident.name.toLowerCase.startsWith("branch_")) {
             val bname = ident.name.substring("branch_".length)
             if (t.branches.contains(bname))
-              return new GraftTable(proot.toString,
-                schemaOf(t.branch(bname).snapshot()),
-                writable = true, branchName = Some(bname))
+              return handle(proot, t.branch(bname).snapshot(),
+                writable = true, branch = Some(bname))
           }
           // the changelog handle is a REAL partitioned relation (the
           // per-commit CDC planner), not a driver-collected LocalScan
@@ -151,15 +150,16 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       }
       throw new NoSuchTableException(ident)
     }
-    // adopts the persisted spec
-    new GraftTable(root.toString, schemaOf(LogTable(spark, root.toString).snapshot()),
-      writable = true)
+    handle(root, LogTable(spark, root.toString).snapshot(), writable = true)
   }
 
-  /** A snapshot's recorded schema (empty before the first commit). */
-  private def schemaOf(snap: Snapshot): StructType =
-    if (snap.schemaJson.nonEmpty) LogTable.parseSchema(snap.schemaJson)
-    else new StructType()
+  /** A handle reading `snap`, typed by that snapshot's recorded schema
+    * (empty before the first commit). */
+  private def handle(root: Path, snap: Snapshot, writable: Boolean = false,
+      pinned: Boolean = false, branch: Option[String] = None): Table =
+    new GraftTable(root.toString,
+      if (snap.schemaJson.nonEmpty) LogTable.parseSchema(snap.schemaJson)
+      else new StructType(), snap, writable, pinned, branch)
 
   /** Statement targets (INSERT/UPDATE/DELETE/MERGE: Spark loads them
     * with write privileges) report every column nullable. LogTable
@@ -192,12 +192,11 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     // read-only view of the branch lineage, not a pinned snapshot —
     // Iceberg's `VERSION AS OF 'branch'` semantics); tags stay pinned
     if (tagged.isEmpty && t.branches.contains(version))
-      return new GraftTable(root.toString, schemaOf(t.branch(version).snapshot()),
-        writable = false, branchName = Some(version))
+      return handle(root, t.branch(version).snapshot(), branch = Some(version))
     val v = tagged.getOrElse(t.refVersion(version))
     require(t.versions.contains(v),
       s"table ${ident.name} has no snapshot v$v (versions: ${t.versions.mkString(", ")})")
-    pinned(root.toString, t, v)
+    handle(root, t.snapshot(v), pinned = true)
   }
 
   /** `timestamp` arrives in MICROseconds (Spark's contract for this
@@ -207,12 +206,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     val root = tableDir(ident)
     if (!isTable(root)) throw new NoSuchTableException(ident)
     val t = LogTable(spark, root.toString)
-    pinned(root.toString, t, t.versionAsOf(timestamp / 1000L))
+    handle(root, t.snapshot(t.versionAsOf(timestamp / 1000L)), pinned = true)
   }
-
-  private def pinned(root: String, t: LogTable, v: Long): Table =
-    new GraftTable(root, schemaOf(t.snapshot(v)), writable = false,
-      pinnedVersion = Some(v))
 
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[STransform],

@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.parquet.hadoop.ParquetOutputFormat
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
@@ -49,7 +49,8 @@ import java.util.UUID
   *     groups — bounded by the rewrite's own blast radius, never by
   *     table size). */
 private[sources] final class GraftRowLevelOperation(root: String,
-    fullSchema: StructType, cmd: Command) extends RowLevelOperation {
+    fullSchema: StructType, snap: Snapshot, cmd: Command)
+    extends RowLevelOperation {
 
   /** Set by the scan's `planInputPartitions` (after runtime group
     * filtering): the snapshot it planned against, the exact file set
@@ -69,7 +70,8 @@ private[sources] final class GraftRowLevelOperation(root: String,
   override def description(): String = s"graft row-level $cmd on $root"
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(root, fullSchema, options, rowLevel = Some(this))
+    new GraftScanBuilder(root, fullSchema, options, Some(snap),
+      rowLevel = Some(this))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftRowLevelWrite(root, this, info)
@@ -133,7 +135,7 @@ private[sources] final class GraftRowLevelWrite(root: String,
               t.adoptStagedFiles(staged.map(Paths.get(_)))
             else if (staged.isEmpty) Nil
             else t.restageFiles(spark.read
-              .schema(GraftBridgeSchemas.asNullable(info.schema()))
+              .schema(GraftBridge.asNullable(info.schema()))
               .parquet(staged: _*))
           if (removed.nonEmpty || newFiles.nonEmpty) {
             t.commitReplaceGroups(removed, newFiles,
@@ -151,11 +153,6 @@ private[sources] final class GraftRowLevelWrite(root: String,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     LogTable.deleteRecursively(stageDir)
-}
-
-private object GraftBridgeSchemas {
-  def asNullable(s: StructType): StructType =
-    StructType(s.fields.map(_.copy(nullable = true)))
 }
 
 private[sources] final class GraftStageWriterFactory(stageDir: String,

@@ -37,7 +37,9 @@ import scala.jdk.CollectionConverters._
   *     (delete / update / merge) fail the stream loudly at the
   *     maintenance boundary.
   *   - `spark.read.format("graft").load(root)` — a batch scan of the
-  *     current snapshot; `option("versionAsOf", v)` /
+  *     snapshot current at `load` (the frame keeps reading it while
+  *     later commits land; load again to see them);
+  *     `option("versionAsOf", v)` /
   *     `option("timestampAsOf", epochMs)` time travel. MERGE-ON-READ
   *     snapshots read correctly: each partition carries its
   *     referencing position-delete files (manifest metadata) and the
@@ -88,9 +90,20 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister
     p
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val snap = GraftSourceUtil.snapshotFor(
-      LogTable(SparkSession.active, rootOf(options)), options)
+  /** The batch-read snapshot: branch > versionAsOf > timestampAsOf >
+    * head. */
+  private def readSnapshot(options: CaseInsensitiveStringMap): Snapshot = {
+    val t0 = LogTable(SparkSession.active, rootOf(options))
+    val t = Option(options.get("branch")).map(t0.branch).getOrElse(t0)
+    val v = options.get("versionAsOf")
+    val ts = options.get("timestampAsOf")
+    if (v != null) t.snapshot(v.toLong)
+    else if (ts != null) t.snapshot(t.versionAsOf(ts.toLong))
+    else t.snapshot()
+  }
+
+  private def schemaOf(snap: Snapshot, options: CaseInsensitiveStringMap)
+      : StructType =
     // empty = no commits yet: write paths (fresh-table creation) need
     // the provider to resolve; READS of a schema-less table fail
     // loudly at scan creation (GraftTable.newScanBuilder)
@@ -102,12 +115,19 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister
         GraftCdcUtil.schemaWith(base)
       else base
     }
-  }
 
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    schemaOf(readSnapshot(options), options)
+
+  /** The handle reads the snapshot resolved here, and takes its schema
+    * from that same snapshot. */
   override def getTable(schema: StructType,
       partitioning: Array[org.apache.spark.sql.connector.expressions.Transform],
-      properties: util.Map[String, String]): Table =
-    new GraftTable(properties.get("path"), schema, byPath = true)
+      properties: util.Map[String, String]): Table = {
+    val options = new CaseInsensitiveStringMap(properties)
+    val snap = readSnapshot(options)
+    new GraftTable(rootOf(options), schemaOf(snap, options), snap, byPath = true)
+  }
 
   /** Open the write-target table: explicit layout options (+
     * `.partitionBy`) for fresh tables, the manifest-recorded spec
@@ -204,23 +224,6 @@ private[sources] object GraftSourceUtil {
     * same name shadows it (Spark hides the metadata column; the
     * reader prefers the physical field). */
   val FileColName = "_file"
-
-  /** The lineage a scan reads: the branch's (option "branch" — set by
-    * branch handles) or main's. */
-  def tableFor(t: LogTable, options: CaseInsensitiveStringMap): LogTable =
-    if (t.isBranchHandle) t
-    else Option(options.get("branch")).map(t.branch).getOrElse(t)
-
-  /** Resolve the batch-read snapshot: branch > versionAsOf >
-    * timestampAsOf > current. */
-  def snapshotFor(t0: LogTable, options: CaseInsensitiveStringMap): Snapshot = {
-    val t = tableFor(t0, options)
-    val v = options.get("versionAsOf")
-    val ts = options.get("timestampAsOf")
-    if (v != null) t.snapshot(v.toLong)
-    else if (ts != null) t.snapshot(t.versionAsOf(ts.toLong))
-    else t.snapshot()
-  }
 
   /** Physical scan schema: every logical field plus nullable twins
     * under its historical names (a pre-rename file stores the field's
@@ -391,14 +394,17 @@ private[sources] final case class ColumnarPlan(partS: StructType,
   * CreatableRelationProvider, which also handles fresh-table creation
   * and all four SaveModes.
   *
-  * `pinnedVersion` (catalog time travel — `VERSION AS OF` /
-  * `TIMESTAMP AS OF` resolve to it) pins every scan of this handle to
-  * one snapshot: batch-read only, writes refused (writing "into the
-  * past" is Iceberg's rollback, a different operation), and the
-  * handle's schema is the SNAPSHOT's schema — a query over a
-  * pre-evolution version sees that version's columns. */
+  * `snap` is the snapshot resolved when the handle was loaded (the
+  * head, a branch head or a time-travel version): every scan of the
+  * handle plans, reports statistics and layout from it, so one query
+  * reads one committed version. `pinned` (catalog time travel —
+  * `VERSION AS OF` / `TIMESTAMP AS OF`) makes the handle batch-read
+  * only, writes refused (writing "into the past" is Iceberg's
+  * rollback, a different operation), and the handle's schema is the
+  * SNAPSHOT's schema — a query over a pre-evolution version sees that
+  * version's columns. */
 private[sources] final class GraftTable(root: String, schema0: StructType,
-    writable: Boolean = false, pinnedVersion: Option[Long] = None,
+    snap: Snapshot, writable: Boolean = false, pinned: Boolean = false,
     branchName: Option[String] = None, byPath: Boolean = false)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
@@ -411,8 +417,7 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
     * same map the Scala API and ALTER TABLE SET TBLPROPERTIES write. */
   override def properties(): java.util.Map[String, String] = {
     val m = new java.util.HashMap[String, String]()
-    LogTable(org.apache.spark.sql.SparkSession.active, root)
-      .properties.foreach { case (k, v) => m.put(k, v) }
+    snap.props.foreach { case (k, v) => m.put(k, v) }
     m
   }
 
@@ -440,12 +445,12 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
-    require(pinnedVersion.isEmpty,
+    require(!pinned,
       s"cannot modify $name — it is a time-travel handle pinned to a snapshot")
     require(branchName.isEmpty,
       s"row-level DML on branch handle $name is not supported — publish " +
         "the branch (CALL fast_forward) or use the Scala branch API")
-    () => new GraftRowLevelOperation(root, schema0, info.command)
+    () => new GraftRowLevelOperation(root, schema0, snap, info.command)
   }
 
   /** SQL `DELETE FROM t WHERE cond` through Spark's own planner: the
@@ -455,7 +460,7 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
     * express refuse here, and Spark plans them as a group-based
     * row-level rewrite instead ([[newRowLevelOperationBuilder]]). */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    pinnedVersion.isEmpty && branchName.isEmpty &&
+    !pinned && branchName.isEmpty &&
       GraftFilters.conjunction(filters.toSeq).nonEmpty
   override def deleteWhere(filters: Array[Filter]): Unit = {
     val t = LogTable(SparkSession.active, root)
@@ -474,35 +479,34 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
   /** SQL `TRUNCATE TABLE`: a COW delete-everything — the old snapshot
     * stays time-travelable, exactly as INSERT OVERWRITE's swap does. */
   override def truncateTable(): Boolean = {
-    require(pinnedVersion.isEmpty, s"cannot truncate time-travel handle $name")
+    require(!pinned, s"cannot truncate time-travel handle $name")
     require(branchName.isEmpty,
       s"cannot truncate branch handle $name — drop the branch instead")
     LogTable(SparkSession.active, root)
       .delete(org.apache.spark.sql.functions.lit(true))
     true
   }
-  override def name(): String = (pinnedVersion, branchName) match {
-    case (Some(v), _) => s"graft.`$root`@v$v"
-    case (_, Some(b)) => s"graft.`$root`@branch-$b"
-    case _ => s"graft.`$root`"
+  override def name(): String = branchName match {
+    case _ if pinned => s"graft.`$root`@v${snap.version}"
+    case Some(b) => s"graft.`$root`@branch-$b"
+    case None => s"graft.`$root`"
   }
   override def schema(): StructType = schema0
   /** This handle with every column nullable (see GraftCatalog's
     * write-privileged `loadTable`). */
   private[sources] def nullable: GraftTable =
-    new GraftTable(root, GraftBridge.asNullable(schema0), writable,
-      pinnedVersion, branchName, byPath)
+    new GraftTable(root, GraftBridge.asNullable(schema0), snap, writable,
+      pinned, branchName, byPath)
   /** The recorded partition spec, surfaced through Spark's own
     * metadata commands (`DESCRIBE TABLE` shows the layout a user's
     * filters should target). */
   override def partitioning()
       : Array[org.apache.spark.sql.connector.expressions.Transform] = {
     import org.apache.spark.sql.connector.expressions.Expressions
-    val t = LogTable(SparkSession.active, root)
-    (t.partitionBy.map(Expressions.identity) ++ t.hiddenBy.map(Transform.v2)).toArray
+    (snap.partCols.map(Expressions.identity) ++ snap.transforms.map(Transform.v2)).toArray
   }
   override def capabilities(): util.Set[TableCapability] =
-    if (pinnedVersion.nonEmpty)
+    if (pinned)
       util.EnumSet.of(TableCapability.BATCH_READ)
     else if (branchName.nonEmpty)
       // a branch handle reads its head and takes INSERT INTO (the
@@ -522,7 +526,7 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
-    require(pinnedVersion.isEmpty,
+    require(!pinned,
       s"cannot write to $name — it is a time-travel handle pinned to a " +
         "snapshot (to restore an old snapshot, CALL rollback)")
     new GraftWriteBuilder(root, branchName)
@@ -531,18 +535,10 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
     require(schema0.nonEmpty,
       s"LogTable at $root has no manifest-recorded schema — nothing has " +
         "been committed there yet (wrong path? pre-schema legacy table?)")
-    val opts = (pinnedVersion, branchName) match {
-      case (Some(v), _) =>
-        val m = new util.HashMap[String, String](options)
-        m.put("versionAsOf", v.toString)
-        new CaseInsensitiveStringMap(m)
-      case (None, Some(b)) =>
-        val m = new util.HashMap[String, String](options)
-        m.put("branch", b)
-        new CaseInsensitiveStringMap(m)
-      case _ => options
-    }
-    new GraftScanBuilder(root, schema0, opts, byPath = byPath)
+    // a change-feed read has no one snapshot: CDC plans commit ranges
+    // off the moving head
+    val read = if (options.getBoolean("readChanges", false)) None else Some(snap)
+    new GraftScanBuilder(root, schema0, options, read, byPath = byPath)
   }
 }
 
@@ -567,11 +563,15 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
   * Pushdown is all-or-nothing and EXACT-OR-REFUSE: count subtracts
   * live MoR delete marks; min/max answer only when every data file
   * carries footer stats for the column and no position delete is
-  * outstanding ([[LogTable.minMaxMeta]]'s contract). Anything else —
+  * outstanding ([[Snapshot.minMaxMeta]]'s contract). Anything else —
   * filters, GROUP BY, other aggregates, non-INT64 columns — degrades
-  * to the normal scan, never to a wrong answer. */
+  * to the normal scan, never to a wrong answer.
+  *
+  * `snap` is the handle's load-time snapshot; a change-feed scan has
+  * none, and so never answers from metadata. */
 private[sources] final class GraftScanBuilder(root: String,
     fullSchema: StructType, options: CaseInsensitiveStringMap,
+    snap: Option[Snapshot],
     rowLevel: Option[GraftRowLevelOperation] = None, byPath: Boolean = false)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
@@ -669,9 +669,7 @@ private[sources] final class GraftScanBuilder(root: String,
     // residual filters would re-filter the already-aggregated row;
     // group-by needs per-group metadata the manifest doesn't keep
     if (pushed.nonEmpty || agg.groupByExpressions.nonEmpty) return false
-    val t = GraftSourceUtil.tableFor(
-      LogTable(SparkSession.active, root), options)
-    val snap = GraftSourceUtil.snapshotFor(t, options)
+    val snap = this.snap.getOrElse(return false)
     // equality deletes tombstone by key — unanswerable from metadata
     if (snap.eqDeletes.nonEmpty) return false
     // a LONG column of the table, in the schema's own spelling (the
@@ -687,10 +685,10 @@ private[sources] final class GraftScanBuilder(root: String,
         Some((StructField("count_star", LongType, nullable = false),
           snap.liveRows))
       case m: Min => longCol(m.column).flatMap(c =>
-        t.minMaxMeta(c, snap.version).map { case (mn, _) =>
+        snap.minMaxMeta(c).map { case (mn, _) =>
           (StructField(s"min_$c", LongType, nullable = true), mn) })
       case m: Max => longCol(m.column).flatMap(c =>
-        t.minMaxMeta(c, snap.version).map { case (_, mx) =>
+        snap.minMaxMeta(c).map { case (_, mx) =>
           (StructField(s"max_$c", LongType, nullable = true), mx) })
       case _ => None
     }
@@ -705,7 +703,7 @@ private[sources] final class GraftScanBuilder(root: String,
   override def build(): Scan = metaAgg match {
     case Some((schema, values)) if rowLevel.isEmpty =>
       new GraftMetaAggScan(root, schema, values)
-    case _ => new GraftScan(root, required, options, pushed,
+    case _ => new GraftScan(root, required, options, snap, pushed,
       if (rowLevel.isEmpty) limit else None,
       if (rowLevel.isEmpty) topN else None, rowLevel, byPath)
   }
@@ -755,7 +753,8 @@ private[sources] final class GraftMetaAggReaderFactory
   * difference between scanning one partition and scanning the table,
   * decided at runtime with zero user hints. */
 private[sources] final class GraftScan(root: String, schema: StructType,
-    options: CaseInsensitiveStringMap, pushed: Array[Filter],
+    options: CaseInsensitiveStringMap, snap: Option[Snapshot],
+    pushed: Array[Filter],
     limit: Option[Int] = None,
     topN: Option[(String, Boolean, Boolean, Int)] = None,
     rowLevel: Option[GraftRowLevelOperation] = None,
@@ -784,62 +783,66 @@ private[sources] final class GraftScan(root: String, schema: StructType,
     * sort-merge join is decided by THESE numbers, and a manifest
     * answers them without opening a file. */
   override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val snap = GraftSourceUtil.snapshotFor(
-      LogTable(SparkSession.active, root), options)
-    // prunedFiles: on a segmented snapshot, pointer-resident partition
-    // summaries refute whole segments before their entries ever load
-    val kept = snap.prunedFiles((pushed ++ runtime).toSeq)
-    // position-delete marks subtract exactly per kept file (the same
-    // arithmetic as Snapshot.liveRows): these numbers decide
-    // broadcast-vs-sort-merge, so an overstated MoR table could push a
-    // genuinely broadcastable side over the threshold. Equality
-    // tombstones have unknowable match counts — left in (conservative
-    // overestimate, never an understatement that could mis-broadcast).
-    val marks = snap.deletes.flatMap(_.counts)
-      .groupBy(_._1).map { case (p, cs) => p -> cs.map(_._2).sum }
-    val liveRows = kept.map(f =>
-      math.max(0L, f.rows - marks.getOrElse(f.path, 0L))).sum
-    // PER-COLUMN stats for the CBO: distinct counts from the manifest's
-    // analyze-computed NDVs (capped at the scan's own row estimate —
-    // pruning can only shrink cardinality) and null counts summed from
-    // per-file footer stats when EVERY kept file reports the column.
-    // With these, a 3-way join plans by key cardinality instead of
-    // running blind (Iceberg surfaces puffin NDVs the same way).
-    val colStats = new java.util.HashMap[
-      org.apache.spark.sql.connector.expressions.NamedReference,
-      org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-    schema.fields.foreach { f =>
-      val ndv = snap.ndvs.get(f.name.toLowerCase)
-        .map(n => math.min(n, liveRows))
-      val nulls =
-        if (kept.nonEmpty && kept.forall(_.nulls.exists(
-            _._1.equalsIgnoreCase(f.name))))
-          Some(kept.map(k => k.nulls.find(
-            _._1.equalsIgnoreCase(f.name)).get._2).sum)
-        else None
-      if (ndv.nonEmpty || nulls.nonEmpty)
-        colStats.put(
-          org.apache.spark.sql.connector.expressions.Expressions.column(f.name),
-          new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
-            override def distinctCount(): java.util.OptionalLong =
-              ndv.map(java.util.OptionalLong.of)
-                .getOrElse(java.util.OptionalLong.empty())
-            override def nullCount(): java.util.OptionalLong =
-              nulls.map(java.util.OptionalLong.of)
-                .getOrElse(java.util.OptionalLong.empty())
-          })
+      : org.apache.spark.sql.connector.read.Statistics = snap match {
+    // a change feed's size is its commit range's, unknown before planning
+    case None => new org.apache.spark.sql.connector.read.Statistics {
+      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.empty()
+      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
     }
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(kept.map(_.bytes).sum)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(liveRows)
-      override def columnStats(): java.util.Map[
+    case Some(snap) =>
+      // prunedFiles: on a segmented snapshot, pointer-resident partition
+      // summaries refute whole segments before their entries ever load
+      val kept = snap.prunedFiles((pushed ++ runtime).toSeq)
+      // position-delete marks subtract exactly per kept file (the same
+      // arithmetic as Snapshot.liveRows): these numbers decide
+      // broadcast-vs-sort-merge, so an overstated MoR table could push a
+      // genuinely broadcastable side over the threshold. Equality
+      // tombstones have unknowable match counts — left in (conservative
+      // overestimate, never an understatement that could mis-broadcast).
+      val marks = snap.deletes.flatMap(_.counts)
+        .groupBy(_._1).map { case (p, cs) => p -> cs.map(_._2).sum }
+      val liveRows = kept.map(f =>
+        math.max(0L, f.rows - marks.getOrElse(f.path, 0L))).sum
+      // PER-COLUMN stats for the CBO: distinct counts from the manifest's
+      // analyze-computed NDVs (capped at the scan's own row estimate —
+      // pruning can only shrink cardinality) and null counts summed from
+      // per-file footer stats when EVERY kept file reports the column.
+      // With these, a 3-way join plans by key cardinality instead of
+      // running blind (Iceberg surfaces puffin NDVs the same way).
+      val colStats = new java.util.HashMap[
         org.apache.spark.sql.connector.expressions.NamedReference,
-        org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
-        colStats
-    }
+        org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
+      schema.fields.foreach { f =>
+        val ndv = snap.ndvs.get(f.name.toLowerCase)
+          .map(n => math.min(n, liveRows))
+        val nulls =
+          if (kept.nonEmpty && kept.forall(_.nulls.exists(
+              _._1.equalsIgnoreCase(f.name))))
+            Some(kept.map(k => k.nulls.find(
+              _._1.equalsIgnoreCase(f.name)).get._2).sum)
+          else None
+        if (ndv.nonEmpty || nulls.nonEmpty)
+          colStats.put(
+            org.apache.spark.sql.connector.expressions.Expressions.column(f.name),
+            new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
+              override def distinctCount(): java.util.OptionalLong =
+                ndv.map(java.util.OptionalLong.of)
+                  .getOrElse(java.util.OptionalLong.empty())
+              override def nullCount(): java.util.OptionalLong =
+                nulls.map(java.util.OptionalLong.of)
+                  .getOrElse(java.util.OptionalLong.empty())
+            })
+      }
+      new org.apache.spark.sql.connector.read.Statistics {
+        override def sizeInBytes(): java.util.OptionalLong =
+          java.util.OptionalLong.of(kept.map(_.bytes).sum)
+        override def numRows(): java.util.OptionalLong =
+          java.util.OptionalLong.of(liveRows)
+        override def columnStats(): java.util.Map[
+          org.apache.spark.sql.connector.expressions.NamedReference,
+          org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
+          colStats
+      }
   }
   /** STORAGE-PARTITIONED JOINS: report the table's layout as
     * `KeyGroupedPartitioning` so Spark joins two graft tables with the
@@ -862,9 +865,8 @@ private[sources] final class GraftScan(root: String, schema: StructType,
     * `bucket`, ...) through, so Spark drops such a claim the same way:
     * read by path, only an all-identity layout is reported. */
   private lazy val spjLayout: Option[SpjLayout] =
-    if (rowLevel.nonEmpty || options.getBoolean("readChanges", false)) None
-    else SpjLayout.of(GraftSourceUtil.snapshotFor(
-      LogTable(SparkSession.active, root), options)).filter(_.keys.forall(k =>
+    if (rowLevel.nonEmpty) None
+    else snap.flatMap(SpjLayout.of).filter(_.keys.forall(k =>
         k.references.forall(r =>
           schema.fieldNames.exists(_.equalsIgnoreCase(r.fieldNames.head))) &&
         (!byPath || (k match {
@@ -884,14 +886,13 @@ private[sources] final class GraftScan(root: String, schema: StructType,
           .UnknownPartitioning(0)
     }
 
-  override def toBatch: Batch =
-    if (options.getBoolean("readChanges", false))
-      new GraftCdcBatch(root, schema, options, pushed ++ runtime)
-    else
-      new GraftBatch(root, schema, options, pushed ++ runtime, limit, topN,
-        fileSet, rowLevel, spjLayout)
+  override def toBatch: Batch = snap match {
+    case None => new GraftCdcBatch(root, schema, options, pushed ++ runtime)
+    case Some(snap) => new GraftBatch(schema, snap, pushed ++ runtime,
+      limit, topN, fileSet, rowLevel, spjLayout)
+  }
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    if (options.getBoolean("readChanges", false))
+    if (snap.isEmpty)
       new GraftCdcMicroBatchStream(root, schema, options, pushed)
     else new GraftMicroBatchStream(root, schema, options, pushed)
 
@@ -904,8 +905,8 @@ private[sources] final class GraftScan(root: String, schema: StructType,
     if (rowLevel.nonEmpty)
       return Array(org.apache.spark.sql.connector.expressions.Expressions
         .column(GraftSourceUtil.FileColName))
-    val snap = GraftSourceUtil.snapshotFor(
-      LogTable(SparkSession.active, root), options)
+    // a change feed prunes commit ranges, not one snapshot's files
+    val snap = this.snap.getOrElse(return Array.empty)
     // the union of range-stats columns answers from the pointer's
     // ReadMeta when present — advertising runtime-filter leverage must
     // not force a million-file segmented list to materialize
@@ -1828,11 +1829,8 @@ private[sources] final class GraftChangesTable(root: String,
   override def schema(): StructType = schema0
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val m = new util.HashMap[String, String](options)
-    m.put("readChanges", "true")
-    new GraftScanBuilder(root, schema0, new CaseInsensitiveStringMap(m))
-  }
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new GraftScanBuilder(root, schema0, options, None)
 }
 
 /** The CDC twin of [[GraftMicroBatchStream]]: offsets ARE manifest
@@ -1997,8 +1995,7 @@ private[sources] final class GraftMicroBatchStream(root: String,
   override def stop(): Unit = ()
 }
 
-private[sources] final class GraftBatch(root: String, logical: StructType,
-    options: CaseInsensitiveStringMap,
+private[sources] final class GraftBatch(logical: StructType, snap: Snapshot,
     pushed: Array[Filter] = Array.empty,
     limit: Option[Int] = None,
     topN: Option[(String, Boolean, Boolean, Int)] = None,
@@ -2011,11 +2008,6 @@ private[sources] final class GraftBatch(root: String, logical: StructType,
   private val physLogical = StructType(logical.fields.filterNot(
     _.name.equalsIgnoreCase(GraftSourceUtil.FileColName)))
   private val phys = GraftSourceUtil.physicalSchema(physLogical)
-  // resolved ONCE: planInputPartitions and createReaderFactory must see
-  // the SAME snapshot, or a commit racing between the two calls could
-  // plan delete-carrying partitions without their MoR readers
-  private lazy val snap =
-    GraftSourceUtil.snapshotFor(LogTable(spark, root), options)
 
   // equality-delete key columns must be READABLE even when the query
   // pruned them away (they only drive filtering, never output). The

@@ -553,6 +553,21 @@ final case class Snapshot(version: Long, parent: Long, operation: String,
     totalRows - deletes.flatMap(_.counts).collect {
       case (p, n) if live.contains(p) => n }.sum
   }
+  /** min/max of an INT64 column from manifest column stats alone —
+    * `Some((min, max))` ONLY when the answer is provably exact: every
+    * data file with rows carries footer stats for the column and no
+    * position delete is outstanding (a marked row could be the
+    * extremum, which file-level stats cannot see). `None` means "run
+    * the query" — never a silently wrong answer. Nulls are no
+    * obstacle: parquet stats bound the non-null values, which is what
+    * SQL min/max aggregate. */
+  def minMaxMeta(column: String): Option[(Long, Long)] = {
+    val withRows = files.filter(_.rows > 0)
+    if (deletes.nonEmpty || eqDeletes.nonEmpty || withRows.isEmpty ||
+        !withRows.forall(_.ranges.contains(column))) None
+    else Some((withRows.map(_.ranges(column)._1).min,
+      withRows.map(_.ranges(column)._2).max))
+  }
 }
 
 /** A manifest-versioned parquet table — the Spark-native re-expression
@@ -1497,23 +1512,10 @@ final class LogTable private (val spark: SparkSession, val root: String,
     s.liveRows
   }
 
-  /** min/max of an INT64 column from manifest column stats alone —
-    * `Some((min, max))` ONLY when the answer is provably exact: every
-    * data file with rows carries footer stats for the column and no
-    * position delete is outstanding (a marked row could be the
-    * extremum, which file-level stats cannot see). `None` means "run
-    * the query" — never a silently wrong answer. Nulls are no
-    * obstacle: parquet stats bound the non-null values, which is what
-    * SQL min/max aggregate. */
+  /** [[Snapshot.minMaxMeta]] of a committed version. */
   def minMaxMeta(column: String,
-      version: Long = currentVersion): Option[(Long, Long)] = {
-    val s = snapshot(version)
-    val withRows = s.files.filter(_.rows > 0)
-    if (s.deletes.nonEmpty || s.eqDeletes.nonEmpty || withRows.isEmpty ||
-        !withRows.forall(_.ranges.contains(column))) None
-    else Some((withRows.map(_.ranges(column)._1).min,
-      withRows.map(_.ranges(column)._2).max))
-  }
+      version: Long = currentVersion): Option[(Long, Long)] =
+    snapshot(version).minMaxMeta(column)
 
   /** Snapshot-history metadata table (Iceberg's `snapshots` analog):
     * one row per committed version, from manifest metadata only. */

@@ -2,8 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 
-import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicLong
+import java.nio.file.Files
 
 /** Commit metadata stays O(added) at every table size, at default
   * settings: a marker leader's useful round reads the newest pointer
@@ -13,34 +12,6 @@ import java.util.concurrent.atomic.AtomicLong
   * single-file appends at or below files/64. */
 class CommitMetadataScaleSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Seam wrapper counting control-plane bytes read and published, and
-    * the manifest pointers read. */
-  private final class CountingIO extends GraftFileIO {
-    private val d = GraftFileIO.Local
-    val readBytes = new AtomicLong
-    val writtenBytes = new AtomicLong
-    val manifestReads = new AtomicLong
-    def reset(): Unit = {
-      readBytes.set(0L); writtenBytes.set(0L); manifestReads.set(0L)
-    }
-    override def readString(p: Path): String = {
-      val s = d.readString(p)
-      readBytes.addAndGet(s.length.toLong)
-      if (p.getFileName.toString.endsWith(".manifest.json"))
-        manifestReads.incrementAndGet()
-      s
-    }
-    override def publishAtomic(p: Path, c: String): Boolean = {
-      writtenBytes.addAndGet(c.length.toLong); d.publishAtomic(p, c)
-    }
-    override def exists(p: Path): Boolean = d.exists(p)
-    override def list(dir: Path): Seq[String] = d.list(dir)
-    override def listDirs(dir: Path): Seq[String] = d.listDirs(dir)
-    override def delete(p: Path): Unit = d.delete(p)
-    override def deleteTree(dir: Path): Unit = d.deleteTree(dir)
-    override def mkdirs(dir: Path): Unit = d.mkdirs(dir)
-  }
 
   private val Day = 86400000000L
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.{col, concat, lit, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType, TimestampType}
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
@@ -89,27 +89,6 @@ class FlushCostSpec extends SparkSpec {
     assert(entries.map(_.rows).sum === 400L)
     assert(stages >= 2L && tasks > 1L,
       "a distributed frame keeps the hash shuffle on the layout key")
-  }
-
-  /** Seam wrapper counting every call a leader round makes. */
-  private final class CountingIO extends GraftFileIO {
-    private val d = GraftFileIO.Local
-    val reads, publishes, deletes, lists = new AtomicLong
-    def reset(): Unit = Seq(reads, publishes, deletes, lists).foreach(_.set(0L))
-    override def readString(p: Path): String = {
-      reads.incrementAndGet(); d.readString(p)
-    }
-    override def publishAtomic(p: Path, c: String): Boolean = {
-      publishes.incrementAndGet(); d.publishAtomic(p, c)
-    }
-    override def exists(p: Path): Boolean = d.exists(p)
-    override def list(dir: Path): Seq[String] = {
-      lists.incrementAndGet(); d.list(dir)
-    }
-    override def listDirs(dir: Path): Seq[String] = d.listDirs(dir)
-    override def delete(p: Path): Unit = { deletes.incrementAndGet(); d.delete(p) }
-    override def deleteTree(dir: Path): Unit = d.deleteTree(dir)
-    override def mkdirs(dir: Path): Unit = d.mkdirs(dir)
   }
 
   test("an idle leader round lists twice and takes no lease, reads nothing and deletes nothing") {

@@ -319,27 +319,6 @@ class MarkerCommitSpec extends SparkSpec {
       assert(t.snapshot(v).operation === "append"))
   }
 
-  /** Control-plane read instrument (the SegmentedManifestSpec pattern):
-    * every readString through the seam is recorded by file name, so
-    * "the leader round loads zero segments" is a counted fact. */
-  private class CountingIO extends GraftFileIO {
-    val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    def segReads: Seq[String] =
-      reads.iterator().asScala.toSeq.filter(_.startsWith("seg-"))
-    private val d = GraftFileIO.Local
-    override def readString(p: java.nio.file.Path): String = {
-      reads.add(p.getFileName.toString); d.readString(p)
-    }
-    override def publishAtomic(p: java.nio.file.Path, c: String): Boolean =
-      d.publishAtomic(p, c)
-    override def exists(p: java.nio.file.Path): Boolean = d.exists(p)
-    override def list(dir: java.nio.file.Path): Seq[String] = d.list(dir)
-    override def listDirs(dir: java.nio.file.Path): Seq[String] = d.listDirs(dir)
-    override def delete(p: java.nio.file.Path): Unit = d.delete(p)
-    override def deleteTree(dir: java.nio.file.Path): Unit = d.deleteTree(dir)
-    override def mkdirs(dir: java.nio.file.Path): Unit = d.mkdirs(dir)
-  }
-
   test("leader rounds are O(pending) at 100k files: replay probe reads pointers only, never segments; expire refuses while markers pend") {
     val root = tmp("marker_scale_") + "/t"
     val cio = new CountingIO
@@ -361,7 +340,7 @@ class MarkerCommitSpec extends SparkSpec {
     // the (cached) 100k-entry file list
     val staged1 = MarkerCommit.flush(t,
       Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("s", "v"))
-    cio.reads.clear()
+    cio.reset()
     MarkerCommit.runOnce(spark, root, cio) match {
       case MarkerCommit.Led(committed, cleaned, skipped, _) =>
         assert(committed === staged1.size && cleaned === staged1.size &&
@@ -393,7 +372,7 @@ class MarkerCommitSpec extends SparkSpec {
     tt.versions.flatMap(v => tt.snapshot(v).segs.map(_.name)).distinct
       .foreach(n => LogTable.segCache.evict(logDir.resolve(n).toString))
     clock.addAndGet(6000L)
-    cio.reads.clear()
+    cio.reset()
     MarkerCommit.runOnce(spark, root, cio, leaseMs = 5000L,
       nowMs = () => clock.get()) match {
       case MarkerCommit.Led(committed, cleaned, skipped, _) =>
@@ -403,7 +382,7 @@ class MarkerCommitSpec extends SparkSpec {
     }
     assert(cio.segReads.isEmpty,
       s"a COLD stale-marker round must still load zero segments: ${cio.segReads}")
-    val names = cio.reads.iterator().asScala.toSeq
+    val names = cio.readNames.iterator().asScala.toSeq
     assert(names.forall(n => n.contains(".manifest.json") || n == "_lease"),
       s"the round may read only snapshot pointers and the lease: $names")
     assert(names.size <= 2 * LogTable(spark, root).versions.size + 4,

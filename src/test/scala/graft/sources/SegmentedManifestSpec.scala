@@ -236,25 +236,6 @@ class SegmentedManifestSpec extends SparkSpec {
 
   private val NullDir = "__HIVE_DEFAULT_PARTITION__"
 
-  /** GraftFileIO wrapper that records every control-plane read — the
-    * instrument for "a selective scan loads ONLY matching segments". */
-  private class CountingIO extends GraftFileIO {
-    val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    def segReads: Seq[String] =
-      reads.iterator().asScala.toSeq.filter(_.startsWith("seg-"))
-    private val d = GraftFileIO.Local
-    override def readString(p: Path): String = {
-      reads.add(p.getFileName.toString); d.readString(p)
-    }
-    override def publishAtomic(p: Path, c: String): Boolean = d.publishAtomic(p, c)
-    override def exists(p: Path): Boolean = d.exists(p)
-    override def list(dir: Path): Seq[String] = d.list(dir)
-    override def listDirs(dir: Path): Seq[String] = d.listDirs(dir)
-    override def delete(p: Path): Unit = d.delete(p)
-    override def deleteTree(dir: Path): Unit = d.deleteTree(dir)
-    override def mkdirs(dir: Path): Unit = d.mkdirs(dir)
-  }
-
   /** A segmented, partitioned table whose segments are homogeneous per
     * (k, day, bucket) — k=a on day 0, b on day 1, null-k on day 2 —
     * so each pointer summary pins one value per layout key. */
@@ -284,7 +265,7 @@ class SegmentedManifestSpec extends SparkSpec {
       // the CountingIO sees are exactly the probe's segment loads
       def freshSnap(): Snapshot = {
         segNames.foreach(n => LogTable.segCache.evict(logDir.resolve(n).toString))
-        cio.reads.clear()
+        cio.reset()
         LogTable(spark, root.toString, io = cio).snapshot()
       }
       // point lookup on the identity partition column: ONE segment read
@@ -542,7 +523,7 @@ class SegmentedManifestSpec extends SparkSpec {
       def freshSnap(): Snapshot = {
         segNames.foreach(nm =>
           LogTable.segCache.evict(logDir.resolve(nm).toString))
-        cio.reads.clear()
+        cio.reset()
         LogTable(spark, root.toString, io = cio).snapshot()
       }
       val tPlan0 = System.nanoTime()

@@ -1180,7 +1180,7 @@ object Lakehouse {
   }
 
   /** ROW LINEAGE THROUGH REWRITES as an ORACLE query (the v3 spec's
-    * rewrite rule, [[graft.sources.LogTable]]'s readLiveRw seam): the
+    * rewrite rule, [[graft.sources.LogTable]]'s rewriteRead seam): the
     * two-epoch lineage exports v3, IMPORTS (ids adopt), then runs the
     * two maintenance operations a migrated 100 TB table cannot live
     * without — COMPACT (all adopted files fold into one, every

@@ -4,25 +4,15 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, Data
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{coalesce, col, lit, not, regexp_replace}
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
-
 /** PERSISTED DELETION VECTORS — the compact position-delete encoding
   * (Iceberg v3 deletion vectors / Delta DVs, in spirit): one small
   * binary blob per delete COMMIT holding, per referenced data file,
   * its sorted deleted row indexes. Compared to the parquet
   * `(file_path, pos)` row encoding this removes the per-row columnar
   * framing (a DV of a few thousand positions is one buffer read, no
-  * footer/row-group machinery) and — the real win — lets the READ
-  * side drop the anti-JOIN entirely: positions load into sorted
-  * arrays and each scanned row pays one binary search inside
-  * whole-stage codegen ([[DvDeleted]]), no shuffle, no per-batch
-  * hash-table build.
+  * footer/row-group machinery), and the scan reads only the section
+  * of the data file it is reading ([[readFor]], one per task) — no
+  * join, no shuffle.
   *
   * Wire format (`*.dv`, version tag in the magic):
   * {{{
@@ -42,8 +32,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[DeleteFile]] (path, bytes, per-file counts) — expire / orphan
   * GC / metadata tables / commit guards all key on path and counts
   * and never open the blob. Readers dispatch on the `.dv` suffix;
-  * parquet-encoded position deletes from older commits keep their
-  * anti-join path, and the two forms coexist in one snapshot.
+  * parquet-encoded position deletes from older commits read through
+  * the same per-file mark set, and the two forms coexist in one
+  * snapshot.
   */
 private[sources] object DeletionVectors {
 
@@ -116,88 +107,4 @@ private[sources] object DeletionVectors {
       Array.emptyLongArray
     } finally in.close()
   }
-
-  /** Load + merge several blobs (positions across commits are disjoint
-    * per file — concat + sort is the exact union). */
-  def readAll(paths: Seq[String]): java.util.HashMap[String, Array[Long]] = {
-    val acc = new java.util.HashMap[String, Array[Long]]()
-    paths.foreach(p => read(p).foreach { case (f, ps) =>
-      val prev = acc.get(f)
-      acc.put(f, if (prev == null) ps else (prev ++ ps).sorted)
-    })
-    acc
-  }
-
-  /** Filter `df`'s DV-marked rows away in-plan: the df must carry
-    * [[LogTable.FileCol]] (scan-URI rendering) and [[LogTable.PosCol]];
-    * the vectors ride the serialized plan to executors and each row
-    * pays one codegen'd binary search — no join, no shuffle. */
-  def filterDeleted(df: DataFrame,
-      vectors: java.util.HashMap[String, Array[Long]]): DataFrame = {
-    // FileCol carries the scan's URI rendering ("file:///abs/…"); the
-    // manifest records plain paths — same normalization as the
-    // equality-delete seq map join
-    val norm = regexp_replace(col(LogTable.FileCol),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-    val deleted = GraftBridge.column(DvDeleted(vectors,
-      GraftBridge.expression(norm),
-      GraftBridge.expression(col(LogTable.PosCol))))
-    // null-parity with left_anti: a null (file, pos) key matches no
-    // delete and the row SURVIVES
-    df.filter(not(coalesce(deleted, lit(false))))
-  }
-
-  /** Complement of [[filterDeleted]]: KEEP exactly the DV-marked rows.
-    * The CDC fast path's "what did this commit delete" read — same
-    * codegen'd binary search, same normalization, inverted verdict
-    * (null keys match no delete and are dropped). */
-  def keepDeleted(df: DataFrame,
-      vectors: java.util.HashMap[String, Array[Long]]): DataFrame = {
-    val norm = regexp_replace(col(LogTable.FileCol),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-    val deleted = GraftBridge.column(DvDeleted(vectors,
-      GraftBridge.expression(norm),
-      GraftBridge.expression(col(LogTable.PosCol))))
-    df.filter(coalesce(deleted, lit(false)))
-  }
-}
-
-/** `(path, pos) ∈ vectors` — one plan-resident binary search per row,
-  * inside whole-stage codegen. The vector map is a plan reference
-  * (serialized once per task, like any literal); budget-gated by the
-  * caller exactly as the broadcast anti-join it replaces. */
-private[sources] final case class DvDeleted(
-    vectors: java.util.HashMap[String, Array[Long]],
-    left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dv_deleted expects (STRING, BIGINT), got " +
-        s"(${left.dataType.sql}, ${right.dataType.sql})")
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "dv_deleted"
-
-  override protected def nullSafeEval(p: Any, q: Any): Any = {
-    val arr = vectors.get(p.asInstanceOf[UTF8String].toString)
-    arr != null &&
-      java.util.Arrays.binarySearch(arr, q.asInstanceOf[Long]) >= 0
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val mapRef = ctx.addReferenceObj("dvs", vectors, "java.util.HashMap")
-    val arr = ctx.freshName("dvArr")
-    nullSafeCodeGen(ctx, ev, (p, q) =>
-      s"""
-         |long[] $arr = (long[]) $mapRef.get($p.toString());
-         |${ev.value} = $arr != null &&
-         |  java.util.Arrays.binarySearch($arr, $q) >= 0;
-       """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }

@@ -220,10 +220,57 @@ private[sources] object GraftSourceUtil {
     * query (`SELECT _file, * FROM t`) and the GROUP IDENTITY of the
     * row-level-operation seam — runtime group filtering narrows a
     * catalog UPDATE/MERGE/DELETE to the files that actually hold
-    * matching rows by IN-filtering on it. A real data column of the
-    * same name shadows it (Spark hides the metadata column; the
-    * reader prefers the physical field). */
+    * matching rows by IN-filtering on it. */
   val FileColName = "_file"
+  /** `_pos`: the row's index within its data file (Iceberg's name).
+    * Reading it reads files unfiltered — a pushed filter's row-group
+    * skipping would shift the indexes. */
+  val PosColName = "_pos"
+
+  /** The scan's metadata columns, Iceberg v3's names and rules: `_file`,
+    * `_pos`, and the row-lineage pair — `_row_id` is the file's stored
+    * physical value where one is materialized, else `first_row_id +
+    * _pos`; `_last_updated_sequence_number` is the stored value, else
+    * the file's data sequence. A data column of the same name wins its
+    * name; Spark then renames the metadata column (`__pos`, …) and
+    * `Dataset.metadataColumn("_pos")` still reaches it. */
+  val MetaCols: Seq[(String, org.apache.spark.sql.types.DataType, String)] = {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    Seq((FileColName, StringType, "manifest path of the row's data file"),
+      (PosColName, LongType, "row index within the data file"),
+      (LogTable.RowIdCol, LongType, "v3 row id"),
+      (LogTable.LuSeqCol, LongType, "v3 last-updated sequence number"))
+  }
+
+  private val MetaKey = "graft.metadata_column"
+
+  /** The metadata column a pruned read-schema name asks for — its own
+    * name, or that name under the underscores Spark prefixes when a
+    * data column shadows it — as a tagged field the reader recognizes. */
+  def metaField(name: String): Option[StructField] = {
+    val kind = Iterator.iterate(name)(_.drop(1)).takeWhile(_.startsWith("_"))
+      .flatMap(n => MetaCols.find(_._1.equalsIgnoreCase(n))).nextOption()
+    kind.map { case (k, dt, _) =>
+      StructField(name, dt, nullable = k != FileColName,
+        new org.apache.spark.sql.types.MetadataBuilder().putString(MetaKey, k).build())
+    }
+  }
+
+  /** Which metadata column a read-schema field is, if any. */
+  def metaKind(f: StructField): Option[String] =
+    if (f.metadata.contains(MetaKey)) Some(f.metadata.getString(MetaKey)) else None
+
+  /** Whether a read needs each row's index (`_pos`, or the `_row_id`
+    * inherited from it): such reads count every row of a file, so
+    * their parquet reader skips no row group. */
+  def positional(logical: StructType): Boolean =
+    logical.fields.flatMap(metaKind).exists(k =>
+      k == PosColName || k == LogTable.RowIdCol)
+
+  /** The read-schema fields a data file supplies (metadata columns
+    * excluded; the reader derives those). */
+  def dataFields(logical: StructType): StructType =
+    StructType(logical.fields.filter(metaKind(_).isEmpty))
 
   /** Physical scan schema: every logical field plus nullable twins
     * under its historical names (a pre-rename file stores the field's
@@ -293,7 +340,7 @@ private[sources] object GraftSourceUtil {
     * is an O(columns) vector reorder, not per-row work) — native
     * parquet scan speed through `format("graft")`. Requirements, each
     * checked here driver-side:
-    *   - no rename history on the selected fields OR on any
+    *   - no metadata column, and no rename history on the selected fields OR on any
     *     equality-delete key column (coalescing historical names is a
     *     per-row expression);
     *   - every equality-delete key column resolves in the manifest
@@ -316,7 +363,7 @@ private[sources] object GraftSourceUtil {
   def columnarPlan(spark: SparkSession, logical: StructType,
       snap: Snapshot, filters: Seq[Filter]): Option[ColumnarPlan] = {
     if (logical.exists(f => LogTable.prevNames(f).nonEmpty ||
-        LogTable.hasNestedRenames(f.dataType))) return None
+        LogTable.hasNestedRenames(f.dataType) || metaKind(f).nonEmpty)) return None
     // equality-delete key columns must be readable and rename-free
     val eqCols = snap.eqDeletes.flatMap(_.cols).distinct
     val eqFields =
@@ -366,8 +413,14 @@ private[sources] object GraftSourceUtil {
       options = Map(org.apache.spark.sql.execution.datasources.FileFormat
         .OPTION_RETURNING_BATCH -> "true"),
       hadoopConf = GraftBridge.hadoopConf(spark))
+    // a partition column is a per-file constant the manifest already
+    // pruned on; the reader fills it from the partition value, so a
+    // parquet predicate on it would test a column it does not read (a
+    // foreign file that also stores it physically loses every row)
+    val dataFilters = filters.filterNot(_.references.exists(r =>
+      partS.fieldNames.exists(_.equalsIgnoreCase(r))))
     Some(ColumnarPlan(partS, StructType(dataS.fields ++ partS.fields),
-      reorder, build(filters),
+      reorder, build(dataFilters),
       readRaw = if (snap.deletes.isEmpty) null else build(Nil)))
   }
 }
@@ -405,7 +458,11 @@ private[sources] final case class ColumnarPlan(partS: StructType,
   * version's columns. */
 private[sources] final class GraftTable(root: String, schema0: StructType,
     snap: Snapshot, writable: Boolean = false, pinned: Boolean = false,
-    branchName: Option[String] = None, byPath: Boolean = false)
+    branchName: Option[String] = None, byPath: Boolean = false,
+    /** Accept Spark's variant pushdown ([[GraftScanBuilder
+      * .pushVariantExtractions]]): only for reads that never ask for a
+      * metadata column, which Spark's rewrite of the scan output drops. */
+    pushVariants: Boolean = false)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -421,17 +478,19 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
     m
   }
 
-  /** `_file` — resolvable in queries and the group identity of the
-    * row-level seam below. */
+  /** [[GraftSourceUtil.MetaCols]] — `_file` is also the group identity
+    * of the row-level seam below. */
   override def metadataColumns()
-      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = Array(
-    new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name: String = GraftSourceUtil.FileColName
-      override def dataType: org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.StringType
-      override def isNullable: Boolean = false
-      override def comment: String = "manifest path of the row's data file"
-    })
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    GraftSourceUtil.MetaCols.map { case (n, dt, doc) =>
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name: String = n
+        override def dataType: org.apache.spark.sql.types.DataType = dt
+        override def isNullable: Boolean = n != GraftSourceUtil.FileColName
+        override def comment: String = doc
+      }: org.apache.spark.sql.connector.catalog.MetadataColumn
+    }.toArray
+  override def canRenameConflictingMetadataColumns(): Boolean = true
 
   /** Catalog SQL `UPDATE` / `MERGE INTO` / arbitrary-predicate
     * `DELETE` through Spark's OWN row-level planner (the last SQL seam
@@ -496,7 +555,7 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
     * write-privileged `loadTable`). */
   private[sources] def nullable: GraftTable =
     new GraftTable(root, GraftBridge.asNullable(schema0), snap, writable,
-      pinned, branchName, byPath)
+      pinned, branchName, byPath, pushVariants)
   /** The recorded partition spec, surfaced through Spark's own
     * metadata commands (`DESCRIBE TABLE` shows the layout a user's
     * filters should target). */
@@ -538,7 +597,8 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
     // a change-feed read has no one snapshot: CDC plans commit ranges
     // off the moving head
     val read = if (options.getBoolean("readChanges", false)) None else Some(snap)
-    new GraftScanBuilder(root, schema0, options, read, byPath = byPath)
+    new GraftScanBuilder(root, schema0, options, read, byPath = byPath,
+      pushVariants = pushVariants)
   }
 }
 
@@ -572,12 +632,14 @@ private[sources] final class GraftTable(root: String, schema0: StructType,
 private[sources] final class GraftScanBuilder(root: String,
     fullSchema: StructType, options: CaseInsensitiveStringMap,
     snap: Option[Snapshot],
-    rowLevel: Option[GraftRowLevelOperation] = None, byPath: Boolean = false)
+    rowLevel: Option[GraftRowLevelOperation] = None, byPath: Boolean = false,
+    changes: Option[LogTable] = None, pushVariants: Boolean = false)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit
-    with org.apache.spark.sql.connector.read.SupportsPushDownTopN {
+    with org.apache.spark.sql.connector.read.SupportsPushDownTopN
+    with org.apache.spark.sql.connector.read.SupportsPushDownVariantExtractions {
   // map required names back to the table's own StructFields: the field
   // id / prev-name metadata MUST survive pruning or renamed columns
   // would lose their historical physical names in the scan
@@ -636,19 +698,16 @@ private[sources] final class GraftScanBuilder(root: String,
     val byName = fullSchema.fields.map(f => f.name.toLowerCase -> f).toMap
     required = StructType(
       requiredSchema.fields.flatMap { f =>
-        byName.get(f.name.toLowerCase).orElse {
-          // the `_file` METADATA column (no physical twin — the reader
-          // materializes it from the partition's own path)
-          if (f.name.equalsIgnoreCase(GraftSourceUtil.FileColName))
-            Some(StructField(GraftSourceUtil.FileColName,
-              org.apache.spark.sql.types.StringType, nullable = false))
-          else None
-        }
+        // a metadata column has no physical twin — the reader derives it
+        byName.get(f.name.toLowerCase).orElse(GraftSourceUtil.metaField(f.name))
       })
   }
+  /** Every filter reaches manifest pruning (which keeps a file on any
+    * filter it cannot refute) and parquet's row-group pruning; none is
+    * exact, so Spark re-applies everything post-scan. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(GraftPrune.usable)
-    filters // never exact: Spark re-applies everything post-scan
+    pushed = filters
+    filters
   }
   override def pushedFilters(): Array[Filter] = pushed
 
@@ -700,12 +759,47 @@ private[sources] final class GraftScanBuilder(root: String,
     true
   }
 
+  private var variants: Seq[org.apache.spark.sql.connector.read.VariantExtraction] = Nil
+
+  /** VARIANT pushdown (Spark's pushVariantIntoScan, on the DSv2 seam):
+    * the `variant_get`s over a top-level variant column become the
+    * fields of a variant struct in the read schema, which Spark's
+    * parquet reader fills from the shredded `typed_value` subcolumns —
+    * never the full binary — and comparisons on them reach row-group
+    * stats as pushed filters ([[GraftLateFilters]]). */
+  override def pushVariantExtractions(
+      es: Array[org.apache.spark.sql.connector.read.VariantExtraction]): Array[Boolean] = {
+    // a column read whole (an extraction typed VARIANT) stays unshredded
+    val whole = es.filter(_.expectedDataType.isInstanceOf[
+        org.apache.spark.sql.types.VariantType])
+      .map(_.columnName.toSeq.map(_.toLowerCase)).toSet
+    val ok = es.map(e => pushVariants && e.columnName.length == 1 &&
+      !whole.contains(e.columnName.toSeq.map(_.toLowerCase)) &&
+      fullSchema.fields.exists(f => f.name.equalsIgnoreCase(e.columnName()(0)) &&
+        f.dataType.isInstanceOf[org.apache.spark.sql.types.VariantType]))
+    variants = es.toSeq.zip(ok).collect { case (e, true) => e }
+    ok
+  }
+
+  /** `required` with each pushed variant column read as the struct of
+    * its extractions, one field per extraction named by its ordinal
+    * (the layout Spark's rewrite binds to, as for a parquet scan). */
+  private def readSchema: StructType = {
+    val byCol = variants.groupBy(_.columnName()(0).toLowerCase)
+    StructType(required.fields.map(f => byCol.get(f.name.toLowerCase) match {
+      case Some(es) if f.dataType.isInstanceOf[org.apache.spark.sql.types.VariantType] =>
+        f.copy(dataType = StructType(es.zipWithIndex.map { case (e, i) =>
+          StructField(i.toString, e.expectedDataType, nullable = true, e.metadata) }))
+      case _ => f
+    }))
+  }
+
   override def build(): Scan = metaAgg match {
     case Some((schema, values)) if rowLevel.isEmpty =>
       new GraftMetaAggScan(root, schema, values)
-    case _ => new GraftScan(root, required, options, snap, pushed,
+    case _ => new GraftScan(root, readSchema, options, snap, pushed,
       if (rowLevel.isEmpty) limit else None,
-      if (rowLevel.isEmpty) topN else None, rowLevel, byPath)
+      if (rowLevel.isEmpty) topN else None, rowLevel, byPath, changes)
   }
 }
 
@@ -758,11 +852,17 @@ private[sources] final class GraftScan(root: String, schema: StructType,
     limit: Option[Int] = None,
     topN: Option[(String, Boolean, Boolean, Int)] = None,
     rowLevel: Option[GraftRowLevelOperation] = None,
-    byPath: Boolean = false) extends Scan
+    byPath: Boolean = false,
+    /** The handle a change-feed scan replays (default: the root's main). */
+    changes: Option[LogTable] = None) extends Scan
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
   @volatile private var runtime: Array[Filter] = Array.empty
+  /** Filters Spark writes only after its pushdown ran ([[GraftLateFilters]]). */
+  @volatile private var late: Array[Filter] = Array.empty
+  private[sources] def pushLate(fs: Seq[Filter]): Unit =
+    late = fs.filterNot(pushed.contains).toArray
   /** Runtime GROUP filter (row-level operations): the exact data files
     * holding rows the command matches, delivered as `_file IN (...)`
     * by Spark's RowLevelOperationRuntimeGroupFiltering subquery. */
@@ -770,7 +870,7 @@ private[sources] final class GraftScan(root: String, schema: StructType,
 
   override def readSchema(): StructType = schema
   override def description(): String =
-    s"graft $root, PushedFilters: [${pushed.mkString(", ")}], " +
+    s"graft $root, PushedFilters: [${(pushed ++ late).mkString(", ")}], " +
       limit.map(l => s"PushedLimit: $l, ").getOrElse("") +
       topN.map { case (c, d, _, n) =>
         s"PushedTopN: $n BY $c${if (d) " DESC" else ""}, " }.getOrElse("") +
@@ -887,8 +987,8 @@ private[sources] final class GraftScan(root: String, schema: StructType,
     }
 
   override def toBatch: Batch = snap match {
-    case None => new GraftCdcBatch(root, schema, options, pushed ++ runtime)
-    case Some(snap) => new GraftBatch(schema, snap, pushed ++ runtime,
+    case None => new GraftCdcBatch(root, changes, schema, options, pushed ++ runtime)
+    case Some(snap) => new GraftBatch(schema, snap, pushed ++ late ++ runtime,
       limit, topN, fileSet, rowLevel, spjLayout)
   }
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
@@ -932,6 +1032,32 @@ private[sources] final class GraftScan(root: String, schema: StructType,
         vs.flatMap(Option(_)).map(v => LogTable.localPath(v.toString)).toSet }
       fileSet = Some(sets.reduce(_ intersect _))
     }
+  }
+}
+
+/** The filters Spark writes above a graft scan only after its DSv2
+  * pushdown ran — the struct-field comparisons its variant pushdown
+  * leaves (`v.0 = 7` for `variant_get(v, '$.a', 'long') = 7`) — handed
+  * to that scan for manifest and parquet row-group pruning, where
+  * Spark's own parquet file source gets them too. Never exact: the
+  * Filter stays above the scan. Registered by every LogTable read. */
+private[sources] object GraftLateFilters
+    extends org.apache.spark.sql.catalyst.rules.Rule[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
+    with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
+  override def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    plan.foreach {
+      case org.apache.spark.sql.catalyst.plans.logical.Filter(cond,
+          s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation) =>
+        s.scan match {
+          case g: GraftScan => g.pushLate(splitConjunctivePredicates(cond)
+            .flatMap(GraftBridge.translateFilter(_, nested = true)))
+          case _ => ()
+        }
+      case _ => ()
+    }
+    plan
   }
 }
 
@@ -1009,7 +1135,7 @@ private[sources] final class GraftLocalTable(name0: String,
 private[sources] object GraftPrune {
   private val NullDir = "__HIVE_DEFAULT_PARTITION__"
 
-  /** Filters the pruner can get leverage from (what we report pushed). */
+  /** Filters the pruner can get leverage from (the runtime filters kept). */
   def usable(f: Filter): Boolean = f match {
     case _: EqualTo | _: GreaterThan | _: GreaterThanOrEqual |
          _: LessThan | _: LessThanOrEqual | _: In => true
@@ -1455,7 +1581,11 @@ private[sources] final case class GraftInputPartition(path: String,
       * commit): emit ONLY the rows at `deletes`' marked positions —
       * the rows that commit made invisible — instead of everything
       * else. Row path only; batch scans never set it. */
-    selectDeleted: Boolean = false) extends InputPartition
+    selectDeleted: Boolean = false,
+    /** The file's row-lineage inputs ([[DataFile.firstRowId]], its
+      * data sequence): what `_row_id` / `_last_updated_sequence_number`
+      * inherit when the file stores no value. */
+    firstRowId: Option[Long] = None, seq: Long = 0L) extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow = pkey
 }
@@ -1587,6 +1717,13 @@ private[sources] object GraftCdcUtil {
 
   private val RowPreserving = Set("compact", "recluster", "set-check",
     "set-bloom", "set-sort", "set-props", "evolve-schema", "evolve-spec")
+
+  /** The physical read schema of a change-feed scan: the change tags
+    * ride the partition-value channel, metadata columns are derived. */
+  def physicalSchema(logical: StructType): StructType =
+    GraftSourceUtil.physicalSchema(StructType(
+      GraftSourceUtil.dataFields(logical).fields.filterNot(f =>
+        f.name.equalsIgnoreCase(TypeCol) || f.name.equalsIgnoreCase(VerCol))))
 
   def partitions(table: LogTable, from: Long, to: Long,
       pushed: Seq[Filter]): Seq[InputPartition] =
@@ -1760,15 +1897,11 @@ private[sources] object GraftCdcUtil {
   * tail, so the two surfaces can never drift. Defaults: the full
   * retained history (0, currentVersion]. */
 private[sources] final class GraftCdcBatch(root: String,
-    logical: StructType, options: CaseInsensitiveStringMap,
-    pushed: Array[Filter]) extends Batch {
+    handle: Option[LogTable], logical: StructType,
+    options: CaseInsensitiveStringMap, pushed: Array[Filter]) extends Batch {
   private val spark = SparkSession.active
-  private val table = LogTable(spark, root)
-  private val physLogical = StructType(logical.fields.filterNot(f =>
-    f.name.equalsIgnoreCase(GraftCdcUtil.TypeCol) ||
-      f.name.equalsIgnoreCase(GraftCdcUtil.VerCol) ||
-      f.name.equalsIgnoreCase(GraftSourceUtil.FileColName)))
-  private val phys = GraftSourceUtil.physicalSchema(physLogical)
+  private val table = handle.getOrElse(LogTable(spark, root))
+  private val phys = GraftCdcUtil.physicalSchema(logical)
 
   override def planInputPartitions(): Array[InputPartition] = {
     val floor = GraftCdcUtil.replayFloor(table)
@@ -1824,13 +1957,14 @@ private[sources] final class GraftCdcBatch(root: String,
   * Version windows stay on the options surface of `format("graft")`;
   * SQL slices with `WHERE _commit_version > x`. */
 private[sources] final class GraftChangesTable(root: String,
-    schema0: StructType) extends Table with SupportsRead {
+    schema0: StructType, handle: Option[LogTable] = None)
+    extends Table with SupportsRead {
   override def name(): String = s"graft changes $root"
   override def schema(): StructType = schema0
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(root, schema0, options, None)
+    new GraftScanBuilder(root, schema0, options, None, changes = handle)
 }
 
 /** The CDC twin of [[GraftMicroBatchStream]]: offsets ARE manifest
@@ -1841,14 +1975,7 @@ private[sources] final class GraftCdcMicroBatchStream(root: String,
     extends MicroBatchStream with SupportsTriggerAvailableNow {
   private val spark = SparkSession.active
   private val table = LogTable(spark, root)
-  // the CDC tags have no physical twin — keep them (and `_file`) out
-  // of the parquet read schema; the reader projects them from the
-  // partition-value channel
-  private val physLogical = StructType(logical.fields.filterNot(f =>
-    f.name.equalsIgnoreCase(GraftCdcUtil.TypeCol) ||
-      f.name.equalsIgnoreCase(GraftCdcUtil.VerCol) ||
-      f.name.equalsIgnoreCase(GraftSourceUtil.FileColName)))
-  private val phys = GraftSourceUtil.physicalSchema(physLogical)
+  private val phys = GraftCdcUtil.physicalSchema(logical)
   private lazy val readFunc = GraftSourceUtil.buildReadFunc(spark, phys)
   @volatile private var availableNowCap: Long = -1L
   private val maxVersions: Long =
@@ -1926,10 +2053,11 @@ private[sources] final class GraftMicroBatchStream(root: String,
     extends MicroBatchStream with SupportsTriggerAvailableNow {
   private val spark = SparkSession.active
   private val table = LogTable(spark, root)
-  private val phys = GraftSourceUtil.physicalSchema(logical)
+  private val phys =
+    GraftSourceUtil.physicalSchema(GraftSourceUtil.dataFields(logical))
   // one reader build (and conf broadcast) per stream, not per batch
-  private lazy val readFunc =
-    GraftSourceUtil.buildReadFunc(spark, phys, pushed.toSeq)
+  private lazy val readFunc = GraftSourceUtil.buildReadFunc(spark, phys,
+    if (GraftSourceUtil.positional(logical)) Nil else pushed.toSeq)
   // AvailableNow pins the end offset at trigger start (native support —
   // no engine-side wrapper, no "uncommitted batch" caveat)
   @volatile private var availableNowCap: Long = -1L
@@ -2003,11 +2131,11 @@ private[sources] final class GraftBatch(logical: StructType, snap: Snapshot,
     rowLevel: Option[GraftRowLevelOperation] = None,
     spj: Option[SpjLayout] = None) extends Batch {
   private val spark = SparkSession.active
-  // `_file` is metadata — the reader materializes it from the
-  // partition's own path; it has no physical twin to read
-  private val physLogical = StructType(logical.fields.filterNot(
-    _.name.equalsIgnoreCase(GraftSourceUtil.FileColName)))
-  private val phys = GraftSourceUtil.physicalSchema(physLogical)
+  // metadata columns are derived by the reader, never read as data
+  private val phys =
+    GraftSourceUtil.physicalSchema(GraftSourceUtil.dataFields(logical))
+  private val meta = logical.fields.flatMap(GraftSourceUtil.metaKind).toSet
+  private val positional = GraftSourceUtil.positional(logical)
 
   // equality-delete key columns must be READABLE even when the query
   // pruned them away (they only drive filtering, never output). The
@@ -2016,19 +2144,24 @@ private[sources] final class GraftBatch(logical: StructType, snap: Snapshot,
   // key under an old physical name, and the key projection coalesces
   // exactly as the logical projection would; dropping the metadata
   // here let rows in pre-rename files project NULL keys and silently
-  // escape their tombstones.
+  // escape their tombstones. A requested lineage column also reads
+  // its stored physical twin (null in files that store none).
   private lazy val physAll: StructType = {
     val extra = snap.eqDeletes.flatMap(_.cols).distinct
       .filterNot(c => phys.fieldNames.exists(_.equalsIgnoreCase(c)))
-    if (extra.isEmpty || snap.schemaJson.isEmpty) phys
-    else {
-      val full = LogTable.parseSchema(snap.schemaJson)
-      StructType(phys.fields ++ extra.flatMap(c =>
-        full.fields.find(_.name.equalsIgnoreCase(c)).toSeq.flatMap(f =>
-          StructField(f.name, f.dataType, nullable = true, f.metadata) +:
-            LogTable.prevNames(f).map(p =>
-              StructField(p, f.dataType, nullable = true)))))
-    }
+    val keys =
+      if (extra.isEmpty || snap.schemaJson.isEmpty) Nil
+      else {
+        val full = LogTable.parseSchema(snap.schemaJson)
+        extra.flatMap(c =>
+          full.fields.find(_.name.equalsIgnoreCase(c)).toSeq.flatMap(f =>
+            StructField(f.name, f.dataType, nullable = true, f.metadata) +:
+              LogTable.prevNames(f).map(p =>
+                StructField(p, f.dataType, nullable = true))))
+      }
+    val lineage = Seq(LogTable.RowIdCol, LogTable.LuSeqCol).filter(meta.contains)
+      .map(StructField(_, org.apache.spark.sql.types.LongType, nullable = true))
+    StructType(phys.fields ++ keys ++ lineage)
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -2142,7 +2275,7 @@ private[sources] final class GraftBatch(logical: StructType, snap: Snapshot,
       val dels = delsOf.getOrElse(f.path, Nil)
       val eqs = eqsNewerThan(f.seq)
       GraftInputPartition(f.path, f.bytes, f.partitions, dels, eqs,
-        spj.map(_.keyRowOf(f)).orNull)
+        spj.map(_.keyRowOf(f)).orNull, firstRowId = f.firstRowId, seq = f.seq)
     }
     // small files share a task under Spark's packing rule, except
     // where the partition IS the unit: a key-grouped scan (Spark
@@ -2157,7 +2290,7 @@ private[sources] final class GraftBatch(logical: StructType, snap: Snapshot,
     // planned file must come back, so parquet row-group/page skipping
     // from the command condition would silently drop the non-matching
     // rows of a matched file — no data filters, no columnar shortcut
-    val dataFilters = if (rowLevel.isEmpty) pushed.toSeq else Nil
+    val dataFilters = if (rowLevel.isEmpty && !positional) pushed.toSeq else Nil
     val mor =
       if (snap.deletes.isEmpty) None
       else Some(GraftMorReaders(
@@ -2179,9 +2312,7 @@ private[sources] final class GraftBatch(logical: StructType, snap: Snapshot,
     new GraftReaderFactory(
       GraftSourceUtil.buildReadFunc(spark, physAll, dataFilters), physAll,
       logical, mor,
-      if (rowLevel.nonEmpty ||
-          logical.fieldNames.exists(_.equalsIgnoreCase(GraftSourceUtil.FileColName)))
-        None
+      if (rowLevel.nonEmpty) None
       else GraftSourceUtil.columnarPlan(spark, logical, snap, pushed.toSeq),
       eq)
   }
@@ -2204,6 +2335,8 @@ private[sources] final class GraftReaderFactory(
       Map[Seq[String], PartitionedFile => Iterator[InternalRow]])] = None)
     extends PartitionReaderFactory {
   import GraftSourceUtil.wholeFile
+  // `readFunc` is unfiltered for such scans ([[GraftSourceUtil.positional]])
+  private val positional = GraftSourceUtil.positional(logical)
 
   /** The deleted-position set for one data file, from every delete
     * file referencing it (a delete file may mark many data files;
@@ -2431,48 +2564,60 @@ private[sources] final class GraftReaderFactory(
     }
 
   private def rowReader(gp: GraftInputPartition): PartitionReader[InternalRow] = {
+    import org.apache.spark.sql.types.{LongType, StringType}
     val physIdx = phys.fieldNames.map(_.toLowerCase).zipWithIndex.toMap
+    // the row index rides one slot past the physical row
+    val pos = BoundReference(phys.length, LongType, nullable = false)
+    def stored(c: String): Seq[Expression] =
+      physIdx.get(c.toLowerCase).map(BoundReference(_, LongType, nullable = true)).toSeq
     val exprs: Seq[Expression] = logical.map { f =>
-      // the `_file` metadata column: this partition's own manifest
-      // path as a per-file constant (a real data column shadows it)
-      if (f.name.equalsIgnoreCase(GraftSourceUtil.FileColName) &&
-          !physIdx.contains(f.name.toLowerCase))
-        Literal(org.apache.spark.unsafe.types.UTF8String.fromString(gp.path),
-          org.apache.spark.sql.types.StringType)
-      else gp.parts.find(_._1.equalsIgnoreCase(f.name)).map(_._2) match {
-        case Some(v) =>
-          // Spark's null-partition sentinel directory name
-          if (v == "__HIVE_DEFAULT_PARTITION__") Literal(null, f.dataType)
-          else Literal.create(
-            Cast(Literal(v), f.dataType, Some("UTC")).eval(null), f.dataType)
-        case None =>
-          val names = f.name +: LogTable.prevNames(f)
-          val physDt = LogTable.physicalType(f.dataType)
-          val refs = names.map(n =>
-            BoundReference(physIdx(n.toLowerCase), physDt, nullable = true))
-          val base = if (refs.size == 1) refs.head else Coalesce(refs)
-          // nested rename history: rebuild the physically-read struct
-          // back to its logical shape (per-field coalesce of
-          // historical names); identity for types without history
-          GraftSourceUtil.renameFixExpr(base, f.dataType)
+      GraftSourceUtil.metaKind(f) match {
+        // per-file constants and the row index (Iceberg v3's rules)
+        case Some(GraftSourceUtil.FileColName) =>
+          Literal(org.apache.spark.unsafe.types.UTF8String.fromString(gp.path), StringType)
+        case Some(GraftSourceUtil.PosColName) => pos
+        case Some(LogTable.RowIdCol) =>
+          Coalesce(stored(LogTable.RowIdCol) :+ gp.firstRowId
+            .map(id => org.apache.spark.sql.catalyst.expressions.Add(Literal(id), pos))
+            .getOrElse(Literal(null, LongType)))
+        case Some(_) => Coalesce(stored(LogTable.LuSeqCol) :+ Literal(gp.seq))
+        case None => gp.parts.find(_._1.equalsIgnoreCase(f.name)).map(_._2) match {
+          case Some(v) =>
+            // Spark's null-partition sentinel directory name
+            if (v == "__HIVE_DEFAULT_PARTITION__") Literal(null, f.dataType)
+            else Literal.create(
+              Cast(Literal(v), f.dataType, Some("UTC")).eval(null), f.dataType)
+          case None =>
+            val names = f.name +: LogTable.prevNames(f)
+            val physDt = LogTable.physicalType(f.dataType)
+            val refs = names.map(n =>
+              BoundReference(physIdx(n.toLowerCase), physDt, nullable = true))
+            val base = if (refs.size == 1) refs.head else Coalesce(refs)
+            // nested rename history: rebuild the physically-read struct
+            // back to its logical shape (per-field coalesce of
+            // historical names); identity for types without history
+            GraftSourceUtil.renameFixExpr(base, f.dataType)
+        }
       }
     }
     val proj = UnsafeProjection.create(exprs)
+    // row indexes count every row of the file: position-marked files
+    // and positional scans read unfiltered (row-group pruning would
+    // shift them)
+    var at = -1L
     val rows0: Iterator[InternalRow] =
-      if (gp.deletes.isEmpty)
-        unwrap(readFunc(wholeFile(gp.path, gp.bytes)))
-      else {
+      if (gp.deletes.isEmpty) {
+        val it = unwrap(readFunc(wholeFile(gp.path, gp.bytes)))
+        if (positional) it.map { r => at += 1; r } else it
+      } else {
         val mr = mor.getOrElse(throw new IllegalStateException(
           s"partition for ${gp.path} carries position deletes but the " +
             "factory has no MoR readers — planner/factory snapshot drift"))
         val deleted = deletedPositions(gp)
-        // raw (unfiltered) read: positions are row indexes within the
-        // file, so row-group pruning would shift them
-        var pos = -1L
         unwrap(mr.raw(wholeFile(gp.path, gp.bytes)))
-          .filter { _ => pos += 1
-            if (gp.selectDeleted) deleted.contains(pos)
-            else !deleted.contains(pos) }
+          .filter { _ => at += 1
+            if (gp.selectDeleted) deleted.contains(at)
+            else !deleted.contains(at) }
       }
     val rows: Iterator[InternalRow] =
       if (gp.eqDels.isEmpty) rows0
@@ -2480,10 +2625,17 @@ private[sources] final class GraftReaderFactory(
         val groups = eqGroups(gp, phys.fields, physIdx)
         rows0.filter(r => !eqMarked(groups, r))
       }
+    val slot = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
+    val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow()
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _
       override def next(): Boolean =
-        if (rows.hasNext) { cur = proj(rows.next()); true } else false
+        if (!rows.hasNext) false
+        else {
+          val r = rows.next()
+          cur = if (!positional) proj(r) else { slot.setLong(0, at); proj(joined(r, slot)) }
+          true
+        }
       override def get(): InternalRow = cur
       override def close(): Unit = ()
     }

@@ -654,7 +654,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
   def timeTravel(version: Long): DataFrame = {
     val snap = snapshot(version)
     if (snap.files.isEmpty) emptyLike()
-    else readLive(snap, snap.files)
+    else scan(snap, snap.files)
   }
 
   /** Pin a NAMED REF to a snapshot version (Iceberg tags: `prod`,
@@ -888,7 +888,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
         "read().filter / readRange (row-exact), or migrate the layout " +
         "with compact(smallBytes = Long.MaxValue)")
     val keep = snap.files.filter(f => pred(f.partitions))
-    if (keep.isEmpty) emptyLike() else readLive(snap, keep)
+    if (keep.isEmpty) emptyLike() else scan(snap, keep)
   }
 
   /** The current snapshot and the files `filters` (built from that
@@ -903,7 +903,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
   private def readPruned(filters: Snapshot => Seq[Filter],
       residual: Option[Column] = None): DataFrame = {
     val (snap, keep) = pruned(filters)
-    val base = if (keep.isEmpty) emptyLike() else readLive(snap, keep)
+    val base = if (keep.isEmpty) emptyLike() else scan(snap, keep)
     // a never-committed table has no schema to resolve the residual
     // filter against — its empty frame is already the right answer;
     // on a table WITH a schema a bad column name still fails loudly
@@ -1008,7 +1008,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
     val before = snapshot(fromVersion).files.map(_.path).toSet
     val to = snapshot(toVersion)
     val added = to.files.filterNot(f => before.contains(f.path))
-    if (added.isEmpty) emptyLike() else readLive(to, added)
+    if (added.isEmpty) emptyLike() else scan(to, added)
   }
 
   /** Incremental APPEND scan with maintenance tolerance — the tailing
@@ -1027,7 +1027,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
   def readAppends(fromVersion: Long, toVersion: Long = currentVersion): DataFrame = {
     val added = appendedFilesBetween(fromVersion, toVersion)
     if (added.isEmpty) emptyLike()
-    else readFiles(added, snapshot(toVersion).schemaJson)
+    else scan(snapshot(toVersion).copy(deletes = Nil, eqDeletes = Nil), added)
   }
 
   /** The data files APPENDED in (fromVersion, toVersion] — the manifest
@@ -1116,7 +1116,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
           val parPaths = par.files.map(_.path).toSet
           val added = cur.files.filterNot(f => parPaths.contains(f.path))
           if (added.isEmpty) empty
-          else stamp(conform(readLive(cur, added)), "insert", v)
+          else stamp(conform(scan(cur, added)), "insert", v)
         case "compact" | "recluster" | "analyze" | "set-check" |
              "set-bloom" | "set-sort" | "set-props" | "drop-lineage" |
              "evolve-schema" | "evolve-spec" =>
@@ -1124,51 +1124,20 @@ final class LogTable private (val spark: SparkSession, val root: String,
         // A MoR delete is a VISIBILITY-only commit: no data file is
         // added or removed, and the delta is exactly "the rows at the
         // newly added position marks" (deleteMor marks only rows live
-        // under the parent snapshot). Read ONLY the files the new
-        // marks reference and keep the marked rows — O(marked files)
-        // with no exceptAll, where the generic rewrite diff below
-        // reads every affected file TWICE and runs two full-width
-        // exceptAll shuffles for the same answer (measured 4.2 s →
-        // sub-second on the near-dedup MV refresh at sf0.1). Mixed
-        // mark encodings in one commit never happen (writeDeleteFiles
-        // emits one form per commit) — fall through defensively.
-        case "mor-delete"
-            if {
-              val parDelPaths = par.deletes.map(_.path).toSet
-              val nd = cur.deletes.filterNot(d => parDelPaths.contains(d.path))
-              val (dvs, pqs) = nd.partition(d => DeletionVectors.isVector(d.path))
-              val budget = spark.conf.getOption("graft.deletes.broadcast.bytes")
-                .map(_.toLong).getOrElse(64L << 20)
-              (dvs.isEmpty || pqs.isEmpty) && nd.map(_.bytes).sum <= budget
-            } =>
-          val parDelPaths = par.deletes.map(_.path).toSet
-          val newDel = cur.deletes.filterNot(d => parDelPaths.contains(d.path))
-          if (newDel.isEmpty) empty
-          else {
-            val refd = newDel.flatMap(_.refPaths).toSet
-            val files = par.files.filter(f => refd.contains(f.path))
-            // rows VISIBLE UNDER THE PARENT (pre-delete), position-tagged;
-            // new marks only ever target these by construction, and the
-            // visibility read keeps an already-dead row from re-reporting
-            val live = readLivePos(par, files)
-            val (dvs, pqs) = newDel.partition(d =>
-              DeletionVectors.isVector(d.path))
-            val marked =
-              if (pqs.isEmpty)
-                DeletionVectors.keepDeleted(live,
-                  DeletionVectors.readAll(dvs.map(_.path)))
-              else {
-                import org.apache.spark.sql.functions.broadcast
-                val dels = spark.read.schema(LogTable.DeleteSchema)
-                  .parquet(pqs.map(_.path): _*)
-                  .withColumnRenamed("file_path", LogTable.FileCol)
-                  .withColumnRenamed("pos", LogTable.PosCol)
-                live.join(broadcast(dels),
-                  Seq(LogTable.FileCol, LogTable.PosCol), "left_semi")
-              }
-            stamp(conform(
-              marked.drop(LogTable.FileCol, LogTable.PosCol)), "delete", v)
-          }
+        // under the parent snapshot). The change-feed scan plans ONLY
+        // the files the new marks reference and reads back the marked
+        // rows ([[GraftCdcUtil.partitions]]' inverted position reads) —
+        // O(marked files) with no exceptAll, where the generic rewrite
+        // diff below reads every affected file TWICE and runs two
+        // full-width exceptAll shuffles for the same answer.
+        case "mor-delete" =>
+          val changes = new GraftChangesTable(root,
+            GraftCdcUtil.schemaWith(schemaOf(cur)), handle = Some(this))
+          stamp(conform(org.apache.spark.sql.GraftBridge.ofRows(spark,
+            org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+              changes, None, None, new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+                java.util.Map.of("startingVersion", (v - 1).toString,
+                  "endingVersion", v.toString))))), "delete", v)
         case _ =>
           val parPaths = par.files.map(_.path).toSet
           val curPaths = cur.files.map(_.path).toSet
@@ -1191,9 +1160,9 @@ final class LogTable private (val spark: SparkSession, val root: String,
           if (beforeFiles.isEmpty && afterFiles.isEmpty) empty
           else {
             val before = conform(
-              if (beforeFiles.isEmpty) emptyLike() else readLive(par, beforeFiles))
+              if (beforeFiles.isEmpty) emptyLike() else scan(par, beforeFiles))
             val after = conform(
-              if (afterFiles.isEmpty) emptyLike() else readLive(cur, afterFiles))
+              if (afterFiles.isEmpty) emptyLike() else scan(cur, afterFiles))
             stamp(after.exceptAll(before), "insert", v)
               .unionByName(stamp(before.exceptAll(after), "delete", v))
           }
@@ -1202,293 +1171,62 @@ final class LogTable private (val spark: SparkSession, val root: String,
     frames.reduceOption(_ unionByName _).getOrElse(empty)
   }
 
-  /** Read a concrete file list; basePath lets Spark re-derive the
-    * hive-style partition columns from the data paths. When the
-    * snapshot carries its schema (`schemaJson`), the scan gets it
-    * EXPLICITLY — no footer-merge job, files missing newer columns
-    * read them as null (add-column evolution), and planning cost stops
-    * growing with file count. Legacy snapshots without a recorded
-    * schema fall back to mergeSchema footer unioning. With `withPos`,
-    * the frame additionally carries [[LogTable.FileCol]] /
-    * [[LogTable.PosCol]] — each row's source file and row index,
-    * straight from the scan's `_metadata` column (the join axes of
-    * position deletes, and the file-discovery tag of the COW paths). */
-  private def readFiles(files: Seq[DataFile], schemaJson: String = "",
-      withPos: Boolean = false,
-      /** Extra PHYSICAL columns to surface from the files beyond the
-        * table schema — the materialized row-lineage columns of the
-        * rewrite read path. Explicit-schema scans only: files lacking
-        * a requested column read it as null (the same add-column
-        * evolution contract the schema'd scan already relies on). */
-      extraPhys: Seq[org.apache.spark.sql.types.StructField] = Nil): DataFrame = {
-    require(extraPhys.isEmpty || schemaJson.nonEmpty,
-      "physical extra columns need an explicit snapshot schema")
-    // PARTITION-SPEC EVOLUTION: files written under different specs
-    // have different directory shapes (a file from before `evolveSpec`
-    // may sit at data/ while newer ones sit under k=v/ dirs) — Spark's
-    // partition discovery rejects mixed depths ("conflicting directory
-    // structures"). Scan each layout group separately (groups share a
-    // directory shape by construction) and union; single-spec tables
-    // take zero extra work (one group = the plain path below).
-    // ... and SHALLOW CLONES borrow files under OTHER tables' roots:
-    // Spark validates that basePath is an ancestor of every scanned
-    // file, so groups additionally split by each file's own data-pool
-    // root (the borrowed files' source dataDir vs this table's own)
-    val layouts = files.groupBy(f =>
-      (f.partitions.keySet, LogTable.dataBaseOf(f.path)))
-    if (layouts.size > 1)
-      return layouts.toSeq.sortBy(_._2.head.path)
-        .map { case ((_, base), g) =>
-          readFilesUniform(g, schemaJson, withPos, base, extraPhys) }
-        // schema'd groups project identical columns; the legacy
-        // footer-merge path may not — null-fill rather than fail
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-    readFilesUniform(files, schemaJson, withPos,
-      layouts.keysIterator.nextOption().map(_._2)
-        .getOrElse(dataDir.toString), extraPhys)
+  /** THE read: `files` — a subset of `snap.files`, or files a writer
+    * just landed — through the DSv2 scan of a [[GraftTable]] pinned to
+    * `snap.copy(files = files)`, the scan SQL runs. Position and
+    * equality deletes apply per file inside the scan task, small files
+    * pack into shared tasks and pushed filters prune. A raw read of
+    * fresh files passes a snapshot without deletes. `meta` appends scan
+    * metadata columns ([[GraftSourceUtil.MetaCols]]) under
+    * [[metaName]]s, so a data column named `_file` or `_pos` never
+    * meets the plumbing. Columns are nullable, as in a parquet file
+    * scan. */
+  private def scan(snap: Snapshot, files: Seq[DataFile], meta: String*): DataFrame = {
+    val pinned = snap.copy(files = files, segs = Nil, readMeta = None)
+    val table = new GraftTable(root,
+      org.apache.spark.sql.GraftBridge.asNullable(schemaOf(pinned)), pinned,
+      pinned = true, byPath = true, pushVariants = meta.isEmpty)
+    org.apache.spark.sql.GraftBridge.addOptimization(spark, GraftLateFilters)
+    val df = org.apache.spark.sql.GraftBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        table, None, None))
+    if (meta.isEmpty) df
+    else df.select(col("*") +: meta.map(m =>
+      df.metadataColumn(m).as(metaName(table.schema(), m))): _*)
   }
 
-  private def readFilesUniform(files: Seq[DataFile], schemaJson: String,
-      withPos: Boolean, basePath: String,
-      extraPhys: Seq[org.apache.spark.sql.types.StructField] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col}
-    def posCols: Seq[org.apache.spark.sql.Column] =
-      if (!withPos) Nil
-      else Seq(col("_metadata.file_path").as(LogTable.FileCol),
-        col("_metadata.row_index").as(LogTable.PosCol))
-    val r = spark.read.option("basePath", basePath)
-    if (schemaJson.isEmpty) {
-      // legacy footer-merge path: partition DISCOVERY would surface the
-      // hidden `_p_*` directory keys as columns — project them out
-      val raw = r.option("mergeSchema", "true").parquet(files.map(_.path): _*)
-      val keep = raw.columns.filterNot(_.startsWith("_p_"))
-      return raw.select(keep.toIndexedSeq.map(col) ++ posCols: _*)
-    }
-    val schema = LogTable.parseSchema(schemaJson)
-    if (schema.forall(f => LogTable.prevNames(f).isEmpty &&
-        !LogTable.hasNestedRenames(f.dataType))) {
-      val fast = r.schema(org.apache.spark.sql.types.StructType(
-          schema.fields ++ extraPhys))
-        .parquet(files.map(_.path): _*)
-      // defensive: if partition discovery surfaces hidden keys anyway,
-      // project them out — they are layout, not data
-      val keep = fast.columns.filterNot(_.startsWith("_p_"))
-      return fast.select(keep.toIndexedSeq.map(col) ++ posCols: _*)
-    }
-    // RENAME-AWARE scan: a renamed field's values live under its OLD
-    // name in files written before the rename and under the new name
-    // after — no file was rewritten (rename is metadata-only, as
-    // Iceberg). Scan the physical-name union (each file supplies at
-    // most one of a field's names; the others read as null) and
-    // coalesce per field back to the logical schema — per top-level
-    // column, and through [[LogTable.renameFixCol]]'s struct rebuild
-    // for NESTED rename history. Only tables with rename history pay
-    // this projection; everyone else stays on the fast path above.
-    import org.apache.spark.sql.types.{StructField, StructType}
-    val phys = StructType(schema.flatMap { f =>
-      val pdt = LogTable.physicalType(f.dataType)
-      f.copy(dataType = pdt) +:
-        LogTable.prevNames(f).map(p => StructField(p, pdt, nullable = true))
-    } ++ extraPhys)
-    r.schema(phys).parquet(files.map(_.path): _*)
-      .select(schema.map { f =>
-        val names = f.name +: LogTable.prevNames(f)
-        val base =
-          if (names.size == 1) col(f.name)
-          else coalesce(names.map(col): _*)
-        LogTable.renameFixCol(base, f.dataType).as(f.name, f.metadata)
-      } ++ extraPhys.map(f => col(f.name)) ++ posCols: _*)
-  }
+  /** The column name [[scan]] gives metadata column `m` over `schema`:
+    * `m` itself, or — when a data column already has that name — `m`
+    * prefixed with underscores until it is free (Spark's own renaming
+    * rule for shadowed metadata columns). The reserved lineage names
+    * are never data columns. */
+  private def metaName(schema: org.apache.spark.sql.types.StructType,
+      m: String): String =
+    Iterator.iterate(m)("_" + _)
+      .find(n => !schema.fieldNames.exists(_.equalsIgnoreCase(n))).get
 
-  /** Snapshot-scoped DELETE-AWARE read of `files` (any subset of
-    * `snap.files`): rows marked in the snapshot's position-delete
-    * files are anti-joined away. Tables without merge-on-read deletes
-    * (and file subsets no delete file touches) stay on the plain
-    * multi-file parquet scan — zero overhead. The anti-join build side
-    * is the delete files, explicitly broadcast while small (the
-    * steady state between compactions); past the broadcast budget the
-    * planner's shuffled anti-join takes over, which still scales —
-    * the join key (file, pos) is perfectly distributable. */
-  private def readLive(snap: Snapshot, files: Seq[DataFile]): DataFrame = {
-    // outstanding EQUALITY deletes need per-row file identity for the
-    // sequence guard — route through the pos-carrying read
-    if (snap.eqDeletes.nonEmpty)
-      return readLivePos(snap, files).drop(LogTable.FileCol, LogTable.PosCol)
-    val refd = files.map(_.path).toSet & snap.deletes.flatMap(_.refPaths).toSet
-    if (refd.isEmpty) return readFiles(files, snap.schemaJson)
-    val (dirty, clean) = files.partition(f => refd.contains(f.path))
-    val cleaned = antiJoinDeletes(snap,
-        readFiles(dirty, snap.schemaJson, withPos = true), refd)
-      .drop(LogTable.FileCol, LogTable.PosCol)
-    if (clean.isEmpty) cleaned
-    else cleaned.unionByName(readFiles(clean, snap.schemaJson))
-  }
+  /** The rewrite paths' read (compact / recluster / COW
+    * delete-update-merge): the live rows (plus any `meta` columns) and
+    * — when an input file carries v3 row lineage — each row's
+    * `_row_id` and `_last_updated_sequence_number` scan metadata
+    * columns, which [[writeDataFiles]] stores physically under the
+    * Iceberg-reserved field ids. The rewrite output so keeps serving
+    * identical ids on the next v3 export (Iceberg table spec, "Row
+    * Lineage": rewritten data files must preserve `_row_id`).
+    * Positions come from the delete-aware scan, so MoR-deleted rows
+    * leave id gaps, as the spec requires. */
+  private def rewriteRead(snap: Snapshot, files: Seq[DataFile],
+      meta: String*): DataFrame =
+    scan(snap, files, (if (!files.exists(_.hasLineage)) meta
+      else meta ++ Seq(LogTable.RowIdCol, LogTable.LuSeqCol)): _*)
 
-  /** Delete-aware read that KEEPS the FileCol/PosCol metadata columns
-    * (each live row's source file and row index) — the core the COW
-    * discovery paths and the MoR delete writer share: both must see
-    * post-delete rows (or they would resurrect MoR-deleted rows), and
-    * both need to know where every surviving row lives. */
-  private def readLivePos(snap: Snapshot, files: Seq[DataFile],
-      extraPhys: Seq[org.apache.spark.sql.types.StructField] = Nil): DataFrame = {
-    val refd = files.map(_.path).toSet & snap.deletes.flatMap(_.refPaths).toSet
-    val (dirty, clean) = files.partition(f => refd.contains(f.path))
-    val parts = Seq(
-      if (dirty.isEmpty) None
-      else Some(antiJoinDeletes(snap,
-        readFiles(dirty, snap.schemaJson, withPos = true, extraPhys), refd)),
-      if (clean.isEmpty) None
-      else Some(readFiles(clean, snap.schemaJson, withPos = true,
-        extraPhys))).flatten
-    applyEqDeletes(snap, parts.reduce(_ unionByName _), files)
-  }
-
-  /** Anti-join `df` (carrying FileCol) against the snapshot's
-    * EQUALITY-delete files, under the data-sequence guard: a delete
-    * marks only rows of files OLDER than it (DataFile.seq <
-    * EqDeleteFile.seq) — rows appended after the delete survive. The
-    * per-row sequence comes from a tiny broadcast (path → seq) map;
-    * key sets build-side broadcast under the same budget as position
-    * deletes. */
-  private def applyEqDeletes(snap: Snapshot, df: DataFrame,
-      files: Seq[DataFile]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_replace}
-    if (snap.eqDeletes.isEmpty) return df
-    import spark.implicits._
-    val seqMap = broadcast(
-      files.map(f => (f.path, f.seq)).toDF("_graft_path", "_graft_seq"))
-    // FileCol carries the scan's URI rendering ("file:///abs/...");
-    // the manifest records plain paths — strip the scheme prefix
-    val withSeq = df.withColumn("_graft_path",
-        regexp_replace(col(LogTable.FileCol),
-          "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
-      .join(seqMap, Seq("_graft_path"), "left")
-    val cleaned = snap.eqDeletes.groupBy(_.cols.map(_.toLowerCase))
-      .values.foldLeft(withSeq) { case (acc, dels) =>
-        val keys = dels.map(d => spark.read.parquet(d.path)
-            .withColumn("_graft_dseq", lit(d.seq)))
-          .reduce(_ unionByName _)
-        val names = dels.head.cols
-        val renamed = names.foldLeft(keys)((k, c) =>
-          k.withColumnRenamed(c, s"_gq_$c"))
-        val cond = names.map(c => acc(c) === renamed(s"_gq_$c"))
-          .reduce(_ && _) && acc("_graft_seq") < renamed("_graft_dseq")
-        val build =
-          if (dels.map(_.bytes).sum <= (64L << 20)) broadcast(renamed)
-          else renamed
-        acc.join(build, cond, "left_anti")
-      }
-    cleaned.drop("_graft_path", "_graft_seq")
-  }
-
-  /** Delete-aware read tagged with a `_file` column (the row's source
-    * data file) — the COW rewrite paths' discovery primitive. */
-  private def readLiveTagged(snap: Snapshot, files: Seq[DataFile]): DataFrame =
-    readLivePos(snap, files).drop(LogTable.PosCol)
-      .withColumnRenamed(LogTable.FileCol, "_file")
-
-  /** The REWRITE paths' delete-aware read (compact / recluster / COW
-    * delete-update-merge): identical to [[readLive]] — UNLESS an
-    * input file carries v3 row lineage, in which case the frame
-    * additionally carries each surviving row's stable `_row_id` and
-    * `_last_updated_sequence_number`, computed by the spec's uniform
-    * rule: the file's MATERIALIZED value when stored (a prior rewrite
-    * wrote it explicitly), else `first_row_id + position` /
-    * the file's data sequence (inheritance). [[writeDataFiles]]
-    * recognizes the two columns and stores them physically under the
-    * Iceberg-reserved field ids, so the rewrite output keeps serving
-    * identical ids on the next v3 export — the spec's rewrite rule
-    * (Iceberg table spec, "Row Lineage": rewritten data files must
-    * preserve `_row_id`; the reference's Iceberg tables — README.md:
-    * 26-29, 197-211 — are exactly the kind a migration adopts and
-    * then has to keep compacting). Positions come from
-    * the delete-aware scan, so MoR-deleted rows leave id gaps exactly
-    * as the spec requires. `keepFile` retains [[LogTable.FileCol]]
-    * for callers that route rows by source file (compact's binned
-    * shuffle). */
-  private def readLiveRw(snap: Snapshot, files: Seq[DataFile],
-      keepFile: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, regexp_replace}
-    import org.apache.spark.sql.types.{LongType, StructField}
-    if (!files.exists(_.hasLineage))
-      return if (!keepFile) readLive(snap, files)
-        else readLivePos(snap, files).drop(LogTable.PosCol)
-    val lower = schemaOf(snap).fieldNames.map(_.toLowerCase).toSet
-    require(!lower.contains(LogTable.RowIdCol) &&
-        !lower.contains(LogTable.LuSeqCol),
-      s"cannot carry row lineage through a rewrite: the table schema " +
-        s"itself has a ${LogTable.RowIdCol}/${LogTable.LuSeqCol} column " +
-        "(Iceberg reserves those names for lineage metadata)")
-    val extra = Seq(StructField(LogTable.RowIdCol, LongType),
-      StructField(LogTable.LuSeqCol, LongType))
-    val sess = spark
-    import sess.implicits._
-    // (path → adopted first_row_id, data sequence): a tiny broadcast,
-    // one row per input FILE — never a per-row structure
-    val m = broadcast(files.map(f =>
-        (f.path, f.firstRowId.map(Long.box).orNull, f.seq))
-      .toDF("_g_lpath", "_g_lfrid", "_g_lseq"))
-    val out = readLivePos(snap, files, extra)
-      .withColumn("_g_lpath", regexp_replace(col(LogTable.FileCol),
-        "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
-      .join(m, Seq("_g_lpath"), "left")
-      .withColumn(LogTable.RowIdCol, coalesce(col(LogTable.RowIdCol),
-        col("_g_lfrid") + col(LogTable.PosCol)))
-      .withColumn(LogTable.LuSeqCol, coalesce(col(LogTable.LuSeqCol),
-        col("_g_lseq")))
-      .drop("_g_lpath", "_g_lfrid", "_g_lseq", LogTable.PosCol)
-    if (keepFile) out else out.drop(LogTable.FileCol)
-  }
-
-  /** Anti-join `df` (carrying FileCol/PosCol) against the snapshot's
-    * delete files that reference any path in `refd`. */
-  private def antiJoinDeletes(snap: Snapshot, df: DataFrame,
-      refd: Set[String]): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    val rel = snap.deletes.filter(_.refPaths.exists(refd.contains))
-    val (dvs, pqs) = rel.partition(d => DeletionVectors.isVector(d.path))
-    // a delete backlog past the budget must not land whole on the
-    // driver/executors — both forms degrade to a distributed anti-join
-    val budget = spark.conf.getOption("graft.deletes.broadcast.bytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    // legacy parquet-encoded position deletes: broadcast anti-join
-    // while small; past the budget the planner picks the join
-    // (shuffled anti-join) rather than OOMing on a forced broadcast
-    val afterPq =
-      if (pqs.isEmpty) df
-      else {
-        val dels = spark.read.schema(LogTable.DeleteSchema)
-          .parquet(pqs.map(_.path): _*)
-          .withColumnRenamed("file_path", LogTable.FileCol)
-          .withColumnRenamed("pos", LogTable.PosCol)
-        val build =
-          if (pqs.map(_.bytes).sum <= budget) broadcast(dels) else dels
-        df.join(build, Seq(LogTable.FileCol, LogTable.PosCol), "left_anti")
-      }
-    // deletion vectors: in-plan codegen'd binary search under the same
-    // byte budget; past it, decode DISTRIBUTED into (file, pos) rows
-    // and anti-join like the parquet form
-    if (dvs.isEmpty) afterPq
-    else if (dvs.map(_.bytes).sum <= budget)
-      DeletionVectors.filterDeleted(afterPq,
-        DeletionVectors.readAll(dvs.map(_.path)))
-    else {
-      val sess = spark
-      import sess.implicits._
-      val rows = spark.sparkContext
-        .parallelize(dvs.map(_.path), math.min(dvs.size, 64))
-        .flatMap(p => DeletionVectors.read(p).iterator.flatMap {
-          case (f, ps) => ps.iterator.map(f -> _)
-        })
-        .toDF("_graft_dvf", LogTable.PosCol)
-      // blob keys are manifest plain paths; FileCol is URI-rendered
-      val keyed = afterPq.withColumn("_graft_dvf",
-        org.apache.spark.sql.functions.regexp_replace(
-          org.apache.spark.sql.functions.col(LogTable.FileCol),
-          "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
-      keyed.join(rows, Seq("_graft_dvf", LogTable.PosCol), "left_anti")
-        .drop("_graft_dvf")
-    }
+  /** The manifest paths of the files holding a row of the live scan
+    * that `keep` selects — COW discovery's one pass. */
+  private def filesHolding(snap: Snapshot)(
+      keep: DataFrame => DataFrame): Set[String] = {
+    val f = metaName(schemaOf(snap), GraftSourceUtil.FileColName)
+    keep(scan(snap, snap.files, GraftSourceUtil.FileColName)).select(col(f)).distinct()
+      .collect().map(_.getString(0)).toSet
   }
 
   /** Per-snapshot stats from manifest metadata ONLY (no data I/O). */
@@ -1757,7 +1495,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
     val any = listManifests(logDir).reverseIterator
       .map(m => parseManifest(io.readString(m._2))).find(_.files.nonEmpty)
     any match {
-      case Some(s) => readFiles(s.files.take(1), s.schemaJson).limit(0)
+      case Some(s) => scan(s, s.files.take(1)).limit(0)
       case None => spark.emptyDataFrame
     }
   }
@@ -2218,8 +1956,14 @@ final class LogTable private (val spark: SparkSession, val root: String,
     * legacy snapshots) derived once from a footer-merge read. */
   private def schemaOf(snap: Snapshot): org.apache.spark.sql.types.StructType =
     if (snap.schemaJson.nonEmpty) LogTable.parseSchema(snap.schemaJson)
-    else if (snap.files.nonEmpty) readFiles(snap.files).schema
-    else new org.apache.spark.sql.types.StructType()
+    else if (snap.files.nonEmpty) {
+      // partition discovery would surface the hidden `_p_*` directory
+      // keys as columns — they are layout, not data
+      val merged = spark.read.option("mergeSchema", "true")
+        .option("basePath", LogTable.dataBaseOf(snap.files.head.path))
+        .parquet(snap.files.map(_.path): _*).schema
+      org.apache.spark.sql.types.StructType(merged.filterNot(_.name.startsWith("_p_")))
+    } else new org.apache.spark.sql.types.StructType()
 
   /** The snapshot's authoritative schema merged with an incoming
     * write's (validating no column is retyped, and no new column takes
@@ -2233,7 +1977,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
       add: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType = {
     // Iceberg RESERVES the row-lineage column names, and graft's
     // rewrite paths use them as the physical materialization channel
-    // ([[readLiveRw]]/[[writeDataFiles]]) — a user DATA column under
+    // ([[rewriteRead]]/[[writeDataFiles]]) — a user DATA column under
     // either name would be indistinguishable from materialized
     // lineage (and a v3 reader would serve it as row ids). Writers
     // reject colliding user columns loudly, like the _del_ plumbing.
@@ -2633,7 +2377,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
       }
     if (targets.isEmpty) return snap
     val aggs = targets.map(c => approx_count_distinct(col(c)).as(c))
-    val row = readLive(snap, snap.files).agg(aggs.head, aggs.tail: _*).head()
+    val row = scan(snap, snap.files).agg(aggs.head, aggs.tail: _*).head()
     val computed = targets.zipWithIndex
       .map { case (c, i) => c.toLowerCase -> row.getLong(i) }.toMap
     commit("analyze", nextNdvs = prev => prev.ndvs ++ computed)(_.files)
@@ -2660,7 +2404,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
       // must also satisfy the new constraint (same closure-level
       // re-validation the writers do for late checks)
       if (prev.version != validatedVersion && prev.files.nonEmpty) {
-        enforceChecks(readFiles(prev.files, prev.schemaJson),
+        enforceChecks(scan(prev.copy(deletes = Nil, eqDeletes = Nil), prev.files),
           Map(name -> predicateSql), "concurrently committed rows")
         validatedVersion = prev.version
       }
@@ -2834,12 +2578,13 @@ final class LogTable private (val spark: SparkSession, val root: String,
     * error propagates — nothing leaks, nothing was ever readable. */
   private def enforceChecksOnWritten(written: Seq[DataFile],
       checks: Map[String, String], what: String,
-      schemaJson: String = ""): Unit =
+      schemaJson: String): Unit =
     if (checks.nonEmpty && written.nonEmpty) {
       // the post-write TABLE schema, not the files' own: a narrow
       // insert file materializes its missing checked columns as NULL,
       // exactly as every later table read will see them
-      try enforceChecks(readFiles(written, schemaJson), checks, what)
+      try enforceChecks(scan(Snapshot(0L, 0L, "written", 0L, written,
+          schemaJson = schemaJson), written), checks, what)
       catch {
         case e: Throwable =>
           written.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
@@ -2939,7 +2684,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
     // `_row_id` through — committing it would silently re-id the
     // surviving rows of a lineage-carrying file on the next v3
     // export. The Scala COW surfaces (delete/update/merge) DO carry
-    // lineage through rewrites ([[readLiveRw]]); route lineage
+    // lineage through rewrites ([[rewriteRead]]); route lineage
     // tables there, or deliberately sever continuity with
     // [[dropLineage]] first.
     locally {
@@ -2971,10 +2716,10 @@ final class LogTable private (val spark: SparkSession, val root: String,
       else {
         val before =
           if (removed.isEmpty) emptyLike()
-          else readLive(scanned, scanned.files.filter(f => removed.contains(f.path)))
+          else scan(scanned, scanned.files.filter(f => removed.contains(f.path)))
         val after =
           if (rewritten.isEmpty) emptyLike()
-          else readFiles(rewritten, scanned.schemaJson)
+          else scan(scanned.copy(deletes = Nil, eqDeletes = Nil), rewritten)
         if (LogTable.setOpComparable(schemaOf(scanned)))
           writeCdcFiles(before.exceptAll(after), "delete") ++
             writeCdcFiles(after.exceptAll(before), "insert")
@@ -3081,8 +2826,8 @@ final class LogTable private (val spark: SparkSession, val root: String,
     // SEQUENTIAL Spark jobs — on a 100 TB table a small-file sweep
     // serializes thousands of single-task rounds through the driver.
     // Instead: one delete-aware scan of all source files, each row
-    // routed to its bin through a broadcast (path → bin) map (the
-    // same scan-URI normalization applyEqDeletes joins through), then
+    // routed to its bin through a broadcast (path → bin) map on the
+    // scan's `_file` metadata column, then
     // pre-arranged so ONE task holds one (layout tuple, bin) and
     // writes exactly one file — the per-bin `coalesce(1)` shape, in
     // parallel. Hash collisions between pairs only merge two bins of
@@ -3095,20 +2840,20 @@ final class LogTable private (val spark: SparkSession, val root: String,
     val rewritten =
       if (rewriteBins.size <= 2)
         rewriteBins.flatMap { bin =>
-          writeDataFiles(readLiveRw(snap, bin.toSeq).coalesce(1),
+          writeDataFiles(rewriteRead(snap, bin.toSeq).coalesce(1),
             blooms = Some(snap.bloomCols), sort = Some(snap.sortCols), props = Some(snap.props))
         }
       else {
-        import org.apache.spark.sql.functions.{broadcast, col, regexp_replace}
+        import org.apache.spark.sql.functions.{broadcast, col}
         import spark.implicits._
         val binMap = broadcast(rewriteBins.zipWithIndex.flatMap { case (b, i) =>
           b.map(f => (f.path, i))
         }.toDF("_graft_path", "_graft_bin"))
-        val routed = readLiveRw(snap, small2, keepFile = true)
-          .withColumn("_graft_path", regexp_replace(col(LogTable.FileCol),
-            "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
-          .join(binMap, Seq("_graft_path"))
-          .drop("_graft_path", LogTable.FileCol)
+        // `_file` is the manifest path: the bin map's own key
+        val f = metaName(schemaOf(snap), GraftSourceUtil.FileColName)
+        val routed = rewriteRead(snap, small2, GraftSourceUtil.FileColName)
+          .join(binMap, col(f) === col("_graft_path"))
+          .drop(f, "_graft_path")
         val arrangeKeys = partitionBy.map(col) ++
           hiddenBy.filter(t =>
             routed.columns.exists(_.equalsIgnoreCase(t.source)))
@@ -3183,7 +2928,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
         }
       catch { case _: org.apache.spark.sql.AnalysisException => None }
-    resolved.flatMap(org.apache.spark.sql.GraftBridge.translateFilter)
+    resolved.flatMap(org.apache.spark.sql.GraftBridge.translateFilter(_))
       .exists(f => deleteMetadataOnly(Seq(f)))
   }
 
@@ -3191,9 +2936,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
     if (metadataFirst(condition)) return snapshot()
     val snap = snapshot()
     if (snap.files.isEmpty) return snap
-    val hit = readLiveTagged(snap, snap.files).filter(condition)
-      .select(org.apache.spark.sql.functions.col("_file")).distinct()
-      .collect().map(r => LogTable.localPath(r.getString(0))).toSet
+    val hit = filesHolding(snap)(_.filter(condition))
     if (hit.isEmpty) return snap
     val affected = snap.files.filter(f => hit.contains(f.path))
     // SQL DELETE semantics: remove ONLY condition=TRUE rows. A bare
@@ -3202,9 +2945,9 @@ final class LogTable private (val spark: SparkSession, val root: String,
     // read is delete-aware: rewriting an affected file FOLDS any of
     // its outstanding position deletes in (never resurrects them).
     // Lineage-carrying inputs thread each survivor's `_row_id`
-    // through the rewrite ([[readLiveRw]]) — deleted rows leave id
+    // through the rewrite ([[rewriteRead]]) — deleted rows leave id
     // gaps, surviving rows keep theirs, exactly the v3 spec rule.
-    val keepRows = readLiveRw(snap, affected).filter(
+    val keepRows = rewriteRead(snap, affected).filter(
       !org.apache.spark.sql.functions.coalesce(
         condition, org.apache.spark.sql.functions.lit(false)))
     // CDC change files (opt-in): the deleted rows' pre-images ride the
@@ -3212,7 +2955,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
     // instead of refusing the mixed add+remove file change
     val cdcFiles =
       if (!cdcEnabled(snap)) Nil
-      else writeCdcFiles(readLive(snap, affected).filter(
+      else writeCdcFiles(scan(snap, affected).filter(
         org.apache.spark.sql.functions.coalesce(
           condition, org.apache.spark.sql.functions.lit(false))), "delete")
     val rewritten = writeDataFiles(keepRows, blooms = Some(snap.bloomCols), sort = Some(snap.sortCols), props = Some(snap.props))
@@ -3324,6 +3067,18 @@ final class LogTable private (val spark: SparkSession, val root: String,
   def deleteMor(condition: org.apache.spark.sql.Column): Snapshot =
     withStaleRetry { () => deleteMorOnce(condition) }
 
+  /** The `(file_path, pos)` marks of the live rows `keep` selects —
+    * the MoR writers' one scan. It is delete-aware, so a marked
+    * position never matches again. */
+  private def markedPositions(snap: Snapshot)(
+      keep: DataFrame => DataFrame): DataFrame = {
+    import GraftSourceUtil.{FileColName, PosColName}
+    val schema = schemaOf(snap)
+    keep(scan(snap, snap.files, FileColName, PosColName)).select(
+      col(metaName(schema, FileColName)).as("file_path"),
+      col(metaName(schema, PosColName)).as("pos"))
+  }
+
   private def deleteMorOnce(condition: org.apache.spark.sql.Column): Snapshot = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     // dropping a strictly-matched file beats marking every row in it —
@@ -3331,13 +3086,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
     if (metadataFirst(condition)) return snapshot()
     val snap = snapshot()
     if (snap.files.isEmpty) return snap
-    val cols = schemaOf(snap).fieldNames.map(_.toLowerCase).toSet
-    require(!cols.contains(LogTable.FileCol) && !cols.contains(LogTable.PosCol),
-      s"deleteMor cannot target tables with a ${LogTable.FileCol}/" +
-        s"${LogTable.PosCol} column (they collide with the position plumbing)")
-    val marked = readLivePos(snap, snap.files)
-      .filter(coalesce(condition, lit(false)))
-      .select(col(LogTable.FileCol).as("file_path"), col(LogTable.PosCol).as("pos"))
+    val marked = markedPositions(snap)(_.filter(coalesce(condition, lit(false))))
     val written = writeDeleteFiles(marked, snap.files.size)
     if (written.isEmpty) return snap
     commit("mor-delete", nextDeletes = prev => prev.deletes ++ written) { prev =>
@@ -3379,9 +3128,6 @@ final class LogTable private (val spark: SparkSession, val root: String,
     val cols = schemaOf(snap).fieldNames.map(_.toLowerCase).toSet
     require(cols.contains(key.toLowerCase),
       s"merge key '$key' is not a table column")
-    require(!cols.contains(LogTable.FileCol) && !cols.contains(LogTable.PosCol),
-      s"mergeMor cannot target tables with a ${LogTable.FileCol}/" +
-        s"${LogTable.PosCol} column (they collide with the position plumbing)")
     // duplicate source keys would resurrect as duplicate table rows —
     // same enforced contract as merge (one limit-1 aggregation)
     val dup = updates.groupBy(col(key)).agg(count(lit(1)).as("_n"))
@@ -3392,10 +3138,8 @@ final class LogTable private (val spark: SparkSession, val root: String,
     val mergedNow = mergedSchemaWith(snap, updates.schema)
     // positions of matched target rows, delete-aware (a row already
     // marked by an earlier MoR delete is never double-marked)
-    val marked = readLivePos(snap, snap.files)
-      .join(updates.select(col(key)).distinct(), Seq(key), "left_semi")
-      .select(col(LogTable.FileCol).as("file_path"),
-        col(LogTable.PosCol).as("pos"))
+    val marked = markedPositions(snap)(
+      _.join(updates.select(col(key)).distinct(), Seq(key), "left_semi"))
     val del = writeDeleteFiles(marked, snap.files.size)
     val newFiles = writeDataFiles(conformTypes(updates, mergedNow),
       distribute = true, blooms = Some(snap.bloomCols), sort = Some(snap.sortCols), props = Some(snap.props))
@@ -3646,8 +3390,8 @@ final class LogTable private (val spark: SparkSession, val root: String,
     val stageStr = stage.toString
     // DELETION VECTORS by default (see [[DeletionVectors]]): each
     // shard task accumulates its marks per data file and writes one
-    // compact sorted-positions blob — reads then filter by codegen'd
-    // binary search instead of an anti-join. `graft.deletes.vector`
+    // compact sorted-positions blob, which each scan task reads its
+    // own file's section of. `graft.deletes.vector`
     // = false keeps the legacy parquet row encoding (readers support
     // both forever; old snapshots' parquet deletes read unchanged).
     val useDv = spark.conf.getOption("graft.deletes.vector")
@@ -3661,8 +3405,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
               val acc = scala.collection.mutable
                 .HashMap.empty[String, scala.collection.mutable.ArrayBuffer[Long]]
               it.foreach { r =>
-                acc.getOrElseUpdate(LogTable.localPath(
-                  r.getUTF8String(0).toString),
+                acc.getOrElseUpdate(r.getUTF8String(0).toString,
                   scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
               }
               val p = Paths.get(stageStr, s"dv-$pid.dv")
@@ -3704,8 +3447,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
       }
     val delDir = rootPath.resolve("deletes")
     Files.createDirectories(delDir)
-    val out = perShard.toSeq.map { case (part, rawCounts) =>
-      val counts = rawCounts.map { case (p, n) => LogTable.localPath(p) -> n }
+    val out = perShard.toSeq.map { case (part, counts) =>
       val dest = delDir.resolve(
         s"${UUID.randomUUID()}.${if (useDv) "dv" else "parquet"}")
       Files.move(Paths.get(part), dest, StandardCopyOption.ATOMIC_MOVE)
@@ -3739,9 +3481,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
     val allCols = schemaOf(snap).fieldNames.toSeq
     sets.keys.foreach(k => require(allCols.contains(k),
       s"unknown SET column '$k' (table has ${allCols.mkString(", ")})"))
-    val hit = readLiveTagged(snap, snap.files).filter(condition)
-      .select(col("_file")).distinct()
-      .collect().map(r => LogTable.localPath(r.getString(0))).toSet
+    val hit = filesHolding(snap)(_.filter(condition))
     if (hit.isEmpty) return snap
     val affected = snap.files.filter(f => hit.contains(f.path))
     // delete-aware: rewriting an affected file folds its outstanding
@@ -3753,7 +3493,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
     // update rule. SET cannot name the lineage columns (set keys
     // validate against the table schema above, which never holds
     // them).
-    val src = readLiveRw(snap, affected)
+    val src = rewriteRead(snap, affected)
     val cols = src.columns.toSeq
     val cond = coalesce(condition, lit(false))
     val rewrittenRows = src.select(cols.map { c =>
@@ -3917,26 +3657,20 @@ final class LogTable private (val spark: SparkSession, val root: String,
             "target columns; use whole-row INSERT * to widen the schema)")))
     }
     val keys = updates.select(col(key))
-    // rows are tagged with their source file by the delete-aware scan
-    // (`_metadata`-derived) BEFORE the semi join against the updates
-    // source; MoR-deleted rows never match (they are gone).
-    val tagged = readLiveTagged(snap, snap.files).select(col(key), col("_file"))
-    // the not-matched-by-source clause widens the rewrite set to files
-    // holding unmatched rows it deletes. ONE discovery pass either way
-    // (file names only — never a data collect): with the clause, a
-    // left join marks matched rows and the same scan evaluates the
-    // NMBS condition on the unmatched ones.
-    val hit = notMatchedBySourceDelete match {
-      case None =>
-        tagged.join(keys, Seq(key), "left_semi")
-          .select(col("_file")).distinct()
-          .collect().map(r => LogTable.localPath(r.getString(0))).toSet
-      case Some(cond) =>
-        readLiveTagged(snap, snap.files)
-          .join(keys.withColumn("_matched", lit(true)), Seq(key), "left")
-          .filter(col("_matched").isNotNull || coalesce(cond, lit(false)))
-          .select(col("_file")).distinct()
-          .collect().map(r => LogTable.localPath(r.getString(0))).toSet
+    // rows carry their source file (the scan's `_file`) through the
+    // semi join against the updates source; MoR-deleted rows never
+    // match (they are gone). The not-matched-by-source clause widens
+    // the rewrite set to files holding unmatched rows it deletes. ONE
+    // discovery pass either way (file names only — never a data
+    // collect): with the clause, a left join marks matched rows and the
+    // same scan evaluates the NMBS condition on the unmatched ones.
+    val hit = filesHolding(snap) { live =>
+      notMatchedBySourceDelete match {
+        case None => live.join(keys, Seq(key), "left_semi")
+        case Some(cond) =>
+          live.join(keys.withColumn("_matched", lit(true)), Seq(key), "left")
+            .filter(col("_matched").isNotNull || coalesce(cond, lit(false)))
+      }
     }
     val affected = snap.files.filter(f => hit.contains(f.path))
     // lineage-carrying targets thread `_row_id` through the rewrite
@@ -3966,14 +3700,14 @@ final class LogTable private (val spark: SparkSession, val root: String,
     // for WHEN NOT MATCHED THEN INSERT scans just those.
     val inserts =
       if (affected.isEmpty) updates
-      else updates.join(readLive(snap, affected).select(col(key)),
+      else updates.join(scan(snap, affected).select(col(key)),
         Seq(key), "left_anti")
     // (surviving rows to rewrite, CDC pre-images, CDC update post-images)
     val (survivors, cdcPre, cdcPost) =
       if (affected.isEmpty)
         (spark.emptyDataFrame, Option.empty[DataFrame], Option.empty[DataFrame])
       else {
-        val src = readLiveRw(snap, affected)
+        val src = rewriteRead(snap, affected)
         val cols = src.columns.toSeq
         require(!cols.contains("_matched") && !cols.exists(_.startsWith("src_")),
           "merge cannot target tables with a _matched or src_-prefixed column " +
@@ -4147,7 +3881,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
       else {
         import org.apache.spark.sql.functions.col
         val rewritten = writeDataFiles(
-          readLiveRw(snap, snap.files)
+          rewriteRead(snap, snap.files)
             .repartitionByRange(nFiles, col(column))
             .sortWithinPartitions(column),
           blooms = Some(snap.bloomCols), sort = Some(Nil),
@@ -4195,7 +3929,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
       if (snap.files.isEmpty) snap
       else {
         import org.apache.spark.sql.functions.{col, max, min}
-        val df = readLiveRw(snap, snap.files)
+        val df = rewriteRead(snap, snap.files)
         cols.foreach { c =>
           val f = df.schema.fields.find(_.name.equalsIgnoreCase(c))
           require(f.nonEmpty, s"no such column '$c'")
@@ -4400,7 +4134,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
     * audited `drop-lineage` commit. Afterwards v3 exports assign
     * fresh ids from graft's own version order, exactly as for a
     * native table. NOT needed for maintenance (compact/recluster/COW
-    * DML all carry lineage through rewrites via [[readLiveRw]]) —
+    * DML all carry lineage through rewrites via [[rewriteRead]]) —
     * this is the deliberate "sever the imported continuity" tool.
     *
     * Files that carry MATERIALIZED lineage columns must be
@@ -4423,7 +4157,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
     else {
       // plain delete-aware read never surfaces the stored lineage
       // columns, so the rewrite output is physically clean
-      val rewritten = writeDataFiles(readLive(snap, mat),
+      val rewritten = writeDataFiles(scan(snap, mat),
         blooms = Some(snap.bloomCols), sort = Some(snap.sortCols),
         props = Some(snap.props))
       commitOrCleanup(rewritten, "drop-lineage",
@@ -4611,7 +4345,7 @@ final class LogTable private (val spark: SparkSession, val root: String,
       blooms: Option[Seq[BloomCol]] = None,
       sort: Option[Seq[String]] = None,
       props: Option[Map[String, String]] = None): Seq[DataFile] = {
-    // MATERIALIZED ROW LINEAGE (see [[readLiveRw]]): when the rewrite
+    // MATERIALIZED ROW LINEAGE (see [[rewriteRead]]): when the rewrite
     // frame carries the lineage columns, store them physically under
     // the Iceberg-reserved parquet field ids (Spark's writer emits a
     // field id for any column whose metadata declares one) so a
@@ -5064,11 +4798,6 @@ final class LogTable private (val spark: SparkSession, val root: String,
 object LogTable {
   private val ManifestDir = "_graft_log"
   private val MaxCommitRetries = 20
-  /** Internal column names for position-delete plumbing ("_del_"
-    * prefix keeps them out of any user schema's way; writers reject
-    * colliding user columns loudly). */
-  private[sources] val FileCol = "_del_file"
-  private[sources] val PosCol = "_del_pos"
   /** CDC output columns (Delta CDF naming; see [[LogTable.readCdc]]). */
   val ChangeTypeCol = "_change_type"
   val CommitVersionCol = "_commit_version"
@@ -5364,11 +5093,12 @@ object LogTable {
       spark.conf.set(key, "TIMESTAMP_MICROS")
   }
 
-  /** A scan-rendered file reference (`_metadata.file_path` /
-    * `input_file_name` URI form) as the local filesystem path the
-    * manifest records. */
+  /** A file reference as the local filesystem path the manifest
+    * records: a URI rendering (`file:///…`, what position-delete files
+    * written before the `_file` scan column hold) is decoded, a plain
+    * path is already one. */
   private[sources] def localPath(uri: String): String =
-    java.net.URI.create(uri).getPath
+    if (uri.startsWith("/")) uri else java.net.URI.create(uri).getPath
 
   /** The data-pool root of a manifest path: its nearest ancestor dir
     * named `data` (every table lays files out as

@@ -28,11 +28,21 @@ object GraftBridge {
     * (Spark's own pushdown translator; exact when Some — the returned
     * Filter is equivalent to the expression, never an approximation).
     * None for anything the v1 Filter algebra can't express. Nested
-    * attribute pushdown stays off: dotted names would be ambiguous
-    * against the manifest's flat partition/stats keys. */
-  def translateFilter(e: Expression): Option[sources.Filter] =
+    * attribute pushdown stays off by default: dotted names would be
+    * ambiguous against the manifest's flat partition/stats keys. */
+  def translateFilter(e: Expression, nested: Boolean = false): Option[sources.Filter] =
     execution.datasources.DataSourceStrategy.translateFilter(
-      e, supportNestedPredicatePushdown = false)
+      e, supportNestedPredicatePushdown = nested)
+
+  /** Add an optimizer rule to the session's extra optimizations (the
+    * "User Provided Optimizers" batch), once. */
+  def addOptimization(spark: SparkSession,
+      rule: catalyst.rules.Rule[catalyst.plans.logical.LogicalPlan]): Unit = {
+    val x = classicSession(spark).experimental
+    x.synchronized {
+      if (!x.extraOptimizations.contains(rule)) x.extraOptimizations :+= rule
+    }
+  }
 
   /** Flush the event bus so a test's SparkListener has seen every
     * already-posted event (listenerBus is private[spark]) — what lets

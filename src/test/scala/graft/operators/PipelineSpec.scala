@@ -256,7 +256,7 @@ class PipelineSpec extends SparkSpec {
     val survivors = Pipeline.ingestSurvivors(table, mv, nextBatch)
     val corpusData = work.resolve("t").resolve("data").toAbsolutePath.toString
     val mvData = work.resolve("mv").resolve("data").toAbsolutePath.toString
-    val inputs = survivors.inputFiles.toSeq
+    val inputs = graft.sources.ScanPlans.paths(survivors)
     assert(inputs.exists(_.contains(mvData)),
       s"the probe must read the digest MV, inputs: $inputs")
     assert(!inputs.exists(_.contains(corpusData)),
@@ -321,7 +321,7 @@ class PipelineSpec extends SparkSpec {
     val probe = Pipeline.nearProbe(st, nextBands)
     val corpusData = work.resolve("t").resolve("data").toAbsolutePath.toString
     val bandData = work.resolve("bands").resolve("data").toAbsolutePath.toString
-    val inputs = probe.inputFiles.toSeq
+    val inputs = graft.sources.ScanPlans.paths(probe)
     assert(inputs.exists(_.contains(bandData)),
       s"the near probe must read the band index, inputs: $inputs")
     assert(!inputs.exists(_.contains(corpusData)),

@@ -7,8 +7,8 @@ import java.nio.file.Files
 
 /** The persisted deletion-vector encoding ([[DeletionVectors]]):
   * wire-format round-trips, section skipping, multi-blob union, the
-  * in-plan codegen'd filter, the over-budget distributed fallback,
-  * and end-to-end parity with the legacy parquet encoding. */
+  * in-scan application at any size, and end-to-end parity with the
+  * legacy parquet encoding. */
 class DeletionVectorSpec extends SparkSpec {
   import spark.implicits._
 
@@ -36,8 +36,10 @@ class DeletionVectorSpec extends SparkSpec {
     // disjoint positions by the delete-aware-marking invariant)
     val blob2 = d.resolve("b.dv")
     DeletionVectors.write(blob2, Map("/data/f1.parquet" -> Array(3L, 11L)))
-    val merged = DeletionVectors.readAll(Seq(blob1.toString, blob2.toString))
-    assert(merged.get("/data/f1.parquet").toSeq === Seq(1L, 3L, 5L, 9L, 11L))
+    // the scan reads one data file's section from every blob marking it
+    val merged = Seq(blob1, blob2).flatMap(b =>
+      DeletionVectors.readFor(b.toString, "/data/f1.parquet")).sorted
+    assert(merged === Seq(1L, 3L, 5L, 9L, 11L))
     // a non-DV file refuses loudly
     val junk = d.resolve("junk.dv")
     Files.write(junk, Array[Byte](1, 2, 3, 4, 5, 6, 7, 8))
@@ -67,14 +69,13 @@ class DeletionVectorSpec extends SparkSpec {
     val t = freshTable()
     t.append(df(0 until 500).repartition(2))
     t.deleteMor(col("id") % 7 === 0)
-    val expected = t.read().orderBy("id").as[Long].collect().toSeq
-    spark.conf.set("graft.deletes.broadcast.bytes", "0")
-    try {
-      val p = t.read().queryExecution.executedPlan.toString
-      assert(p.contains("LeftAnti") && !p.contains("dv_deleted"),
-        "past the budget the plan must anti-join, not embed vectors: " + p.take(500))
-      assert(t.read().orderBy("id").as[Long].collect().toSeq === expected)
-    } finally spark.conf.unset("graft.deletes.broadcast.bytes")
+    val expected = (0 until 500).filter(_ % 7 != 0).map(_.toLong)
+    // each scan task reads its own file's DV section: no budget, no join
+    val p = t.read().queryExecution.executedPlan.toString
+    assert(p.contains("BatchScan graft") &&
+      !p.contains("Join") && !p.contains("Exchange") && !p.contains("Sort"),
+      "the marks apply inside the scan: " + p.take(500))
+    assert(t.read().orderBy("id").as[Long].collect().toSeq === expected)
   }
 
   test("DV and parquet encodings are row-for-row equivalent across the API surface") {

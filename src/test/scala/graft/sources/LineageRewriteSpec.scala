@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** v3 ROW LINEAGE through REWRITES (the Iceberg v3 spec's rewrite
-  * rule, [[LogTable.readLiveRw]]): every rewrite surface — compact,
+  * rule, [[LogTable.rewriteRead]]): every rewrite surface — compact,
   * recluster, COW update/merge — must serve IDENTICAL `_row_id`s for
   * surviving rows on the next v3 export, by materializing the ids
   * into the rewritten files under the spec's reserved parquet field

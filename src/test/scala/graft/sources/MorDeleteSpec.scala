@@ -237,9 +237,8 @@ class MorDeleteSpec extends SparkSpec {
     t.append(df(0 until 1000).repartition(4))
     t.deleteMor(col("id") % 10 === 0)
     val p = t.read().queryExecution.executedPlan.toString
-    // deletion vectors kill the anti-join outright: marked positions
-    // filter via one in-plan binary search per row
-    assert(p.contains("dv_deleted"), p.take(800))
+    // marked positions apply inside the scan task: no join at all
+    assert(p.contains("BatchScan graft"), p.take(800))
     assert(!p.contains("Join") && !p.contains("Exchange") && !p.contains("Sort"))
     assert(t.read().count() === 900L)
   }
@@ -252,15 +251,16 @@ class MorDeleteSpec extends SparkSpec {
     finally spark.conf.unset("graft.deletes.vector")
     assert(t.snapshot().deletes.forall(_.path.endsWith(".parquet")))
     val p = t.read().queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"), p.take(800))
-    assert(!p.contains("SortMergeJoin"))
+    assert(p.contains("BatchScan graft") &&
+      !p.contains("Join") && !p.contains("Exchange") && !p.contains("Sort"), p.take(800))
     assert(t.read().count() === 900L)
     // a second, DV-encoded delete lands on top: BOTH forms apply in one read
     t.deleteMor(col("id") === 1L)
     assert(t.snapshot().deletes.exists(_.path.endsWith(".dv")))
     assert(t.snapshot().deletes.exists(_.path.endsWith(".parquet")))
     val p2 = t.read().queryExecution.executedPlan.toString
-    assert(p2.contains("dv_deleted") && p2.contains("LeftAnti"))
+    assert(p2.contains("BatchScan graft") &&
+      !p2.contains("Join") && !p2.contains("Exchange") && !p2.contains("Sort"))
     assert(t.read().count() === 899L)
     assert(t.read().where("id = 1").count() === 0L)
     assert(t.read().where("id = 11").count() === 1L)
